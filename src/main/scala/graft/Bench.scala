@@ -155,15 +155,7 @@ object Bench {
     // ("XBM0X: Supplied locale description '' is invalid"), which
     // silently failed io_jdbc_roundtrip when tried
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     // Teardown hygiene (VERDICT r18 — clean artifact tail): stopping a
     // wall-clock-triggered query (streaming_proc_time, the suite's last
     // op) can kill an in-flight measurement-sink batch, and the
@@ -194,7 +186,7 @@ object Bench {
     Seq("lineitem", "orders", "customer", "supplier", "part", "nation",
       "region", "events", "documents", "embeddings").foreach { t =>
       try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => () }
+      catch { case e: Throwable => warmupFailed(t, e) }
     }
     // plan/codegen warmup at the smallest SF (untimed): Catalyst
     // analysis + Janino compilation of each query's generated code
@@ -202,7 +194,7 @@ object Bench {
     // measures steady-state execution — the quantity that scales.
     names.foreach { name =>
       try all(name)(spark, "/root/testdata/sf0.001").count()
-      catch { case _: Throwable => () }
+      catch { case e: Throwable => warmupFailed(name, e) }
     }
     dropCaches(spark)
     // Each query is timed `reps` times and the BEST run reported:
@@ -289,45 +281,12 @@ object Bench {
     // replay collect).
     val streaming: Seq[(String, Double, StreamingBench.OpBreakdown)] =
       if (sys.env.getOrElse("SPARK_GRAFT_STREAMING", "1") == "0") Seq.empty
-      else {
-        // Streaming-section tuning (measured on sf0.1, each worth
-        // 1.3-2x): RocksDB + changelog checkpointing (per-batch commit
-        // ships the delta, not a full snapshot), 8 state partitions
-        // (32 RocksDB instances paying per-batch commit overhead
-        // dwarfed the actual work at this key cardinality), and no
-        // no-data micro-batches (timers fire during the data batches;
-        // the sentinel batches deliver the final flushes).
-        val tuned = Seq(
-          "spark.sql.streaming.stateStore.providerClass" ->
-            graft.streaming.StatefulV2.RocksDbProvider,
-          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
-          // r18 (GlobalProfile track sweep): maintaining the
-          // numRowsTotal metric costs a RocksDB point-get per
-          // put/delete — at P=8 that DOUBLED per-key tdigest commit
-          // wall (18.9 s → 6.0 s per 10 batches, 13.4k → 27.2k ev/s);
-          // neutral at P=2. The metric is observability, not
-          // correctness (numRowsUpdated/Removed stay exact); probes
-          // that gate on resident state (ScaleProbe) keep it ON in
-          // their own sessions.
-          "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" -> "false",
-          "spark.sql.streaming.noDataMicroBatches.enabled" -> "false",
-          // the breakdown sums recentProgress, a ring buffer that
-          // defaults to 100 entries — keep it above any op's batch
-          // count or the totals silently undercount
-          "spark.sql.streaming.numRecentProgressUpdates" -> "1000",
-          "spark.sql.shuffle.partitions" -> "8")
-        val prev = tuned.map { case (k, _) => k -> spark.conf.getOption(k) }
-        tuned.foreach { case (k, v) => spark.conf.set(k, v) }
+      else
         try StreamingBench.run(spark, sfDir)
         catch { case _: Throwable =>
           // -1 sentinels, NOT zeros: an all-zeros breakdown is
           // indistinguishable from "ran with zero state traffic"
           Seq(("streaming_suite", -1.0, StreamingBench.failedBreakdown)) }
-        finally prev.foreach {
-          case (k, Some(v)) => spark.conf.set(k, v)
-          case (k, None) => spark.conf.unset(k)
-        }
-      }
     val streamingJson = streaming
       .map { case (k, v, _) => "\"" + k + "\":" + num("%.1f", v) }
       .mkString("{", ",", "}")
@@ -370,6 +329,13 @@ object Bench {
       nAnchors = guaranteed.size,
       subsetOf = only.map(_ => names.size)))
   }
+
+  /** One stderr line per failed (untimed) warmup step: a broken table
+    * or query must not pass silently. `print`, not a line print: the
+    * metric line is this file's only one (BenchLineSpec). */
+  private def warmupFailed(what: String, e: Throwable): Unit =
+    System.err.print(s"[bench] warmup $what: ${e.getClass.getName}: " +
+      Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("") + "\n")
 
   /** Best-effort startup sweep of STALE temp trees from prior bench
     * runs (ADVICE r18: halt(0) skips the shutdown hooks that would

@@ -24,6 +24,44 @@ object StreamingBench {
 
   private val Chunks = 10
 
+  /** The streaming section's session confs (measured on sf0.1, each
+    * worth 1.3-2x): RocksDB + changelog checkpointing (per-batch commit
+    * ships the delta, not a full snapshot), 8 state partitions (32
+    * RocksDB instances paying per-batch commit overhead dwarfed the
+    * actual work at this key cardinality), and no no-data
+    * micro-batches (timers fire during the data batches; the sentinel
+    * batches deliver the final flushes). [[run]] applies them. */
+  private[graft] val confs: Seq[(String, String)] = Seq(
+    "spark.sql.streaming.stateStore.providerClass" -> StatefulV2.RocksDbProvider,
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
+    // r18 track sweep (tdigest per-key vs global, P 8/2): maintaining
+    // the numRowsTotal metric costs a RocksDB point-get per put/delete
+    // — at P=8 that DOUBLED per-key tdigest commit wall (18.9 s → 6.0 s
+    // per 10 batches, 13.4k → 27.2k ev/s); neutral at P=2. The metric
+    // is observability, not correctness (numRowsUpdated/Removed stay
+    // exact); probes that gate on resident state (ScaleProbe) turn it
+    // back ON.
+    "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" -> "false",
+    "spark.sql.streaming.noDataMicroBatches.enabled" -> "false",
+    // the breakdown sums recentProgress, a ring buffer that defaults to
+    // 100 entries — keep it above any op's batch count or the totals
+    // silently undercount
+    "spark.sql.streaming.numRecentProgressUpdates" -> "1000",
+    "spark.sql.shuffle.partitions" -> "8")
+
+  /** Run `body` with `confs` set on the session, then restore each
+    * key's previous value (unset if it had none). */
+  private[graft] def withConfs[A](spark: SparkSession,
+      confs: Seq[(String, String)])(body: => A): A = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Per-op cost breakdown from the query's progress telemetry — the
     * state-read/-write vs processing split NexmarkPerf tracks as
     * separate rates (the reference publishes per-query time AND
@@ -253,7 +291,7 @@ object StreamingBench {
       confs: Seq[(String, String)] = Nil)
 
   /** The GLOBAL two-stage ops run their queries at 2 shuffle
-    * partitions: tools.GlobalProfile's sweep measured the RocksDB
+    * partitions: the r16 P × changelog sweep measured the RocksDB
     * commit as a PER-INSTANCE PER-BATCH FLOOR (~55 ms/instance/batch
     * with changelog on — stage-2's commit time equals stage-1's
     * despite holding 9 rows vs 8 live sketches, and total commit wall
@@ -332,7 +370,7 @@ object StreamingBench {
     // the per-item counts folded into the HotItemAgg map buffer
     // (state rows = windows; 2,927 RocksDB writes per 100k events vs
     // 385k for the textbook groupBy(window, item) + re-agg chain,
-    // which measured 7.6–9.2k ev/s — tools.Q5Profile r19). This row
+    // which measured 7.6–9.2k ev/s in the r19 sweep). This row
     // replaces r17/r18's fixed-window proxy as the BASELINE.md Q5
     // comparison; `streaming_triggered_windows` below remains as the
     // trigger-machinery row.
@@ -426,7 +464,7 @@ object StreamingBench {
       // accumulation folded into the NewUsersAgg buffer so state rows
       // = windows: 731 RocksDB writes per 100k events vs 39,489 for
       // the per-(user, window) grain, 23.2k → 28.7k ev/s in the r19
-      // same-host paired sweep (tools.Q8Profile).
+      // same-host paired sweep.
       bench(spark, name, r.named,
         Seq((-1L, r.lateTs(3), "view", 0.0), (-1L, r.lateTs(4), "view", 0.0))) { ds =>
         StreamOps.newUsersJoinPacked(
@@ -434,7 +472,7 @@ object StreamingBench {
           windowSize = "1 hour", lateness = "0 seconds",
           leftType = "signup", rightType = "view")
       }
-      // P=1 (r20; Q8Profile sweeps): packed P=1 beat P=2 in BOTH
+      // P=1 (r20 P sweeps): packed P=1 beat P=2 in BOTH
       // same-host paired sweeps — 33.6k vs 32.9k (r19 host) and 27.4k
       // vs 22.2k (r20 host) — with ~720 window-grain state rows the
       // per-RocksDB-instance commit floor plus per-partition partial-
@@ -674,16 +712,27 @@ object StreamingBench {
     * passes — streaming ops are single queries (no per-query best-of-3
     * like the batch rows), so one noisy-host burst during a pass would
     * otherwise halve an op's reported throughput. The breakdown comes
-    * from the winning pass. Caller is expected to have set the RocksDB
-    * state-store provider (transformWithState requires it). */
-  def run(spark: SparkSession, sfDir: String): Seq[(String, Double, OpBreakdown)] = {
-    val reps = sys.env.getOrElse("SPARK_GRAFT_STREAMING_REPS", "2")
-      .toInt.max(1)
-    val passes = (1 to reps).map(_ => runOnce(spark, sfDir))
-    passes.head.indices.map { i =>
-      val name = passes.head(i)._1
-      passes.map(p => (name, p(i)._2, p(i)._3)).maxBy(_._2) // -1.0 loses
+    * from the winning pass. Runs under [[confs]], restored after. */
+  def run(spark: SparkSession, sfDir: String): Seq[(String, Double, OpBreakdown)] =
+    withConfs(spark, confs) {
+      val reps = sys.env.getOrElse("SPARK_GRAFT_STREAMING_REPS", "2")
+        .toInt.max(1)
+      val passes = (1 to reps).map(_ => runOnce(spark, sfDir))
+      passes.head.indices.map { i =>
+        val name = passes.head(i)._1
+        passes.map(p => (name, p(i)._2, p(i)._3)).maxBy(_._2) // -1.0 loses
+      }
     }
+
+  /** The streaming section alone, one line per op: events/s and its
+    * breakdown. Usage:
+    *   [SBENCH_OPS=op,...] sbt "runMain graft.StreamingBench [sfDir]" */
+  def main(args: Array[String]): Unit = {
+    val spark = Session.local(Session.cpus)
+    run(spark, args.headOption.getOrElse("/root/testdata/sf0.1")).foreach {
+      case (n, eps, b) => println(f"SBENCH $n%-34s $eps%.1f events/s  ${b.json}")
+    }
+    spark.stop()
   }
 
   private def runOnce(spark: SparkSession, sfDir: String): Seq[(String, Double, OpBreakdown)] = {
@@ -701,15 +750,8 @@ object StreamingBench {
     // driver sets no env) — mirrors Verify's GRAFT_VERIFY_ONLY
     val only = sys.env.get("SBENCH_OPS").map(_.split(",").map(_.trim).toSet)
     ops.filter(op => only.forall(_.contains(op.name))).map { op =>
-      val prev = op.confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-      op.confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      try {
-        val (evs, bd) = op.run(spark, replay, op.name)
-        (op.name, evs, bd)
-      } finally prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
+      val (evs, bd) = withConfs(spark, op.confs)(op.run(spark, replay, op.name))
+      (op.name, evs, bd)
     }
   }
 }

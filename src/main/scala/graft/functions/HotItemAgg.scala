@@ -19,7 +19,7 @@ import org.apache.spark.sql.types._
   * textbook plan, but in STREAMING it keeps one durable state row per
   * (item, window) — at 1 h / 15 m sliding that is size/slide = 4 rows
   * per touched item per window set, measured 385k RocksDB writes per
-  * 100k events (tools.Q5Profile). Folding the per-item counts INTO the
+  * 100k events (r19 sf0.1 replay). Folding the per-item counts INTO the
   * aggregation buffer flips the state grain to one row per WINDOW:
   * touched-window count per micro-batch is bounded by the stream's
   * time progress (~hundreds), not by item cardinality.

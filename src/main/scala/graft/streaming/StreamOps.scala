@@ -56,7 +56,7 @@ object StreamOps {
     * per-window fan-out). The naive streaming form writes size/slide
     * durable state rows per touched (key, window) per batch (4× write
     * amplification at 1 h / 15 m — measured 385k RocksDB writes per
-    * 100k events, tools.Q5Profile); this form cuts it to ~1×:
+    * 100k events in the r19 sf0.1 replay); this form cuts it to ~1×:
     *
     *  1. partial-aggregate per SLIDE-GRAIN TUMBLING PANE — one state
     *     row per (key, pane), written once per touched key per batch
@@ -105,7 +105,7 @@ object StreamOps {
     * plan keeps one DURABLE state row per (item, window) — size/slide
     * amplification on every touched item — and a second stateful
     * operator for the argmax; measured 7.6–9.2k ev/s vs this form
-    * (tools.Q5Profile, sf0.1, where distinct (item, window) ≈ events
+    * (r19 replay, sf0.1, where distinct (item, window) ≈ events
     * so pane pre-aggregation has nothing to combine). Here state rows
     * = windows and per-batch writes = windows TOUCHED by the batch's
     * time span (time-ordered streams touch a bounded frontier);
@@ -263,7 +263,7 @@ object StreamOps {
     * window close. Output ≡ `newUsersJoin(emitPerRight = true)`
     * (spec'd); state rows = windows instead of (user, window) —
     * measured 39,489 → ~900 RocksDB writes per 100k events on data
-    * where distinct (user, window) ≈ events (tools.Q8Profile r19).
+    * where distinct (user, window) ≈ events (r19 replay sweep).
     * Scale trade: one window's state row is O(its active users); for
     * pathologically hot windows use [[newUsersJoin]] (O(1) rows).
     * Same watermark contract as [[newUsersJoin]]: the type filter

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only: run every registry query against the three degenerate
   * table variants ([[DegenerateTables]]) — empty (the empty-partition
   * case — at 100 TB some split is always empty), single-row (n=1 fit
@@ -10,13 +8,7 @@ import org.apache.spark.sql.SparkSession
   * degenerate specs. */
 object EmptyProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(graft.Session.cpus)
     val src = "/root/testdata/sf0.001"
     DegenerateTables.enableNanos(spark)
 

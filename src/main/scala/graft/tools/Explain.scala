@@ -1,21 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Print the formatted physical plan of registry queries.
   * Usage: sbt "runMain graft.tools.Explain <sfDir> <queryName>..."
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(graft.Session.cpus)
     val all = graft.SparkEntry.queries
     // GRAFT_EXPLAIN_EXEC=1: run the query first so the printed plan is
     // the FINAL adaptive plan (isFinalPlan=true) — AQE join-strategy

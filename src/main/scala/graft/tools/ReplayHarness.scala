@@ -5,11 +5,10 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryProgress}
 
 /** The ONE MemoryStream replay-and-measure core shared by
-  * StreamingBench, ScaleProbe, and GlobalProfile — extracted (r16
-  * review) after the numRecentProgressUpdates ring-buffer undercount
-  * and the RocksDB checkpoint-tree accumulation fix each had to be
-  * discovered once and pasted three times into near-identical
-  * hand-rolled harnesses.
+  * StreamingBench and ScaleProbe — extracted (r16 review) after the
+  * numRecentProgressUpdates ring-buffer undercount and the RocksDB
+  * checkpoint-tree accumulation fix each had to be discovered once
+  * and pasted three times into near-identical hand-rolled harnesses.
   *
   * Feeds `rows` through `f`'s query as `chunks` micro-batches into a
   * noop sink on a throwaway checkpoint (state commits, watermark

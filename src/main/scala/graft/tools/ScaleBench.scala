@@ -36,23 +36,19 @@ object ScaleBench {
   // ~60M-row, 64-file lineitem (~sf10) where per-row work dominates.
   private val scanDefaults = Seq("agg_tpch_q1", "agg_tpch_q6")
 
-  private def session(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
+  // local-mode sessions share one JVM: clear the stopped session so
+  // the next builder call honours the new master
+  private def stop(spark: SparkSession): Unit = {
+    spark.stop()
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
   }
 
   private def generate(): Unit = {
     val done = new java.io.File(s"$genDir/_DONE")
     if (done.exists()) { println(s"[gen] reusing $genDir"); return }
     println(s"[gen] writing ~10x sf0.1 to $genDir")
-    val spark = session(32)
+    val spark = graft.Session.local(32)
     // key-shifted 10x upsample: each copy shifts every *key* column by
     // i * 10^9 so per-key cardinalities (orders per customer, lines
     // per order) match sf1's, not a 10x-hotter sf0.1
@@ -75,14 +71,14 @@ object ScaleBench {
       println(s"[gen] $t x$copies")
     }
     done.createNewFile()
-    spark.stop()
+    stop(spark)
   }
 
   private def generateScan(): Unit = {
     val done = new java.io.File(s"$scanDir/_DONE")
     if (done.exists()) { println(s"[gen] reusing $scanDir"); return }
     println(s"[gen] writing ~100x sf0.1 lineitem to $scanDir")
-    val spark = session(32)
+    val spark = graft.Session.local(32)
     val shift = 1000000000L
     val base = spark.read.parquet(s"$srcDir/lineitem.parquet")
     val out = (0 until 100).map { i =>
@@ -95,20 +91,21 @@ object ScaleBench {
     out.repartition(64).write.mode("overwrite")
       .parquet(s"$scanDir/lineitem.parquet")
     done.createNewFile()
-    spark.stop()
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
+    stop(spark)
   }
 
   private def timeBlock(names: Seq[String], dir: String,
       times: scala.collection.mutable.Map[(String, Int), Double]): Unit = {
     val all = graft.SparkEntry.queries
     for (cpus <- Seq(8, 32)) {
-      val spark = session(cpus)
+      val spark = graft.Session.local(cpus)
       // plan/codegen warmup at the smallest SF (untimed)
       names.foreach { n =>
         try all(n)(spark, "/root/testdata/sf0.001").count()
-        catch { case _: Throwable => () }
+        catch { case e: Throwable =>
+          System.err.println(s"[warmup $n] ${e.getClass.getName}: " +
+            Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse(""))
+        }
       }
       for (rep <- 1 to 2; n <- names) {
         val t0 = System.nanoTime()
@@ -122,11 +119,7 @@ object ScaleBench {
           times(k) = math.min(times.getOrElse(k, Double.MaxValue), dt)
         }
       }
-      spark.stop()
-      // local-mode sessions share one JVM: clear the stopped session so
-      // the next builder call honours the new master
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
+      stop(spark)
     }
   }
 

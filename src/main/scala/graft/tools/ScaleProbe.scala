@@ -121,28 +121,19 @@ object ScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val base = sys.env.getOrElse("SCALE_PROBE_BASE", "100000").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SCALE_PROBE_PARTS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        StatefulV2.RocksDbProvider)
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-      // default ON: the resident-state gates read numRowsTotal, and the
-      // bookkeeping cost is paid uniformly at every scale point so the
-      // exponents are unaffected. SCALE_PROBE_TRACK_ROWS=false is the
-      // A/B knob for the r18 long-list finding (see SCALE.md §3b): with
-      // tracking on, every ListState append pays a point-get that must
-      // fold ALL accumulated merge operands — O(list length) per
-      // element once a key's list grows long.
-      .config("spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
-        sys.env.getOrElse("SCALE_PROBE_TRACK_ROWS", "true"))
-      .config("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      .config("spark.sql.streaming.numRecentProgressUpdates", "1000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(graft.Session.cpus,
+      graft.StreamingBench.confs ++ Seq(
+        "spark.sql.shuffle.partitions" ->
+          sys.env.getOrElse("SCALE_PROBE_PARTS", "8"),
+        // default ON: the resident-state gates read numRowsTotal, and the
+        // bookkeeping cost is paid uniformly at every scale point so the
+        // exponents are unaffected. SCALE_PROBE_TRACK_ROWS=false is the
+        // A/B knob for the r18 long-list finding (see SCALE.md §3b): with
+        // tracking on, every ListState append pays a point-get that must
+        // fold ALL accumulated merge operands — O(list length) per
+        // element once a key's list grows long.
+        "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" ->
+          sys.env.getOrElse("SCALE_PROBE_TRACK_ROWS", "true")): _*)
     import spark.implicits._
 
     val failures = scala.collection.mutable.ArrayBuffer[String]()

@@ -81,6 +81,29 @@ class ScaleLintSpec extends SparkSpec {
       s"stale allowlist entries: ${allow.keySet -- known}")
   }
 
+  /** Every Scala source under src/main with its lines. */
+  private def mainSources: Seq[(java.nio.file.Path, IndexedSeq[String])] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root),
+      s"lint must run from the repo root; cwd=${System.getProperty("user.dir")}")
+    java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .map(p => p -> java.nio.file.Files.readAllLines(p).asScala.toIndexedSeq)
+  }
+
+  test("SparkSession.builder() appears only in graft/Session.scala") {
+    // one builder, so every main and probe measures the bench's config
+    // (master, partitions, time zone, timestamp inference)
+    val calls = mainSources.flatMap { case (p, lines) =>
+      lines.zipWithIndex.collect {
+        case (line, i) if line.contains("SparkSession.builder()") => s"$p:${i + 1}"
+      }
+    }
+    assert(calls.size == 1 && calls.head.startsWith("src/main/scala/graft/Session.scala:"),
+      s"build sessions through graft.Session.local; builder calls:\n${calls.mkString("\n")}")
+  }
+
   test("every driver-side collect in main sources declares its bound") {
     // 4th job-killer: .collect()/.head()/.first() materializes to the
     // driver — fine ONLY for provably bounded fit artifacts (a 1-row
@@ -89,17 +112,11 @@ class ScaleLintSpec extends SparkSpec {
     // the same or one of the 3 preceding lines stating the bound, so a
     // new unbounded collect cannot land silently. tools/ (dev probes,
     // never on a query path) is excluded.
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main/scala/graft")
-    assert(java.nio.file.Files.isDirectory(root),
-      s"lint must run from the repo root; cwd=${System.getProperty("user.dir")}")
     val call = java.util.regex.Pattern.compile(
       """\.(collect\(\)|head\(\)|first\(\)|collectAsList\(\))""")
-    val offenders = java.nio.file.Files.walk(root).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala"))
-      .filterNot(_.toString.contains("/tools/"))
-      .flatMap { p =>
-        val lines = java.nio.file.Files.readAllLines(p).asScala.toIndexedSeq
+    val offenders = mainSources
+      .filterNot(_._1.toString.contains("/tools/"))
+      .flatMap { case (p, lines) =>
         lines.zipWithIndex.collect {
           case (line, i)
               if call.matcher(line).find() &&
@@ -107,7 +124,7 @@ class ScaleLintSpec extends SparkSpec {
                   j >= 0 && lines(j).contains("bounded:")) =>
             s"$p:${i + 1}: ${line.trim.take(80)}"
         }
-      }.toSeq
+      }
     assert(offenders.isEmpty,
       "driver-side collect without a `bounded:` justification (state the " +
         s"bound or distribute the work):\n${offenders.mkString("\n")}")

@@ -11,17 +11,10 @@ import org.scalatest.BeforeAndAfterAll
   */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
+    val s = Session.local(4,
+      "spark.app.name" -> "graft-test",
+      "spark.sql.warehouse.dir" ->
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
     graft.functions.GraftFunctions.register(s)
     s
   }
