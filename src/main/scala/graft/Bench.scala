@@ -1,112 +1,16 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** Benchmark main: times the headline queries at SPARK_GRAFT_SF_DIR and
+/** Benchmark main: times the [[timed]] queries at SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric":...,"queries":{...}}. Each query is
   * forced with a count() after a warmup of the table reads (so parquet
   * footer/OS-cache effects don't dominate the first query measured).
   */
 object Bench {
-  // Headline set: one representative per operator family; excludes the
-  // intentionally-quadratic small-data oracles (ngram pairwise jaccard)
-  // that are not the scale path.
-  private[graft] val headline = Seq(
-    "agg_tpch_q1", "agg_stats", "agg_shape_stats", "agg_to_dict", "agg_cube", "agg_rollup",
-    "join_multiway", "join_inner_broadcast", "cogroup_by_key", "join_asof",
-    "topk_per_key", "window_running", "distinct_rows", "batch_per_key",
-    "batch_per_key_sharded",
-    "win_tumbling", "win_sliding", "win_session", "win_session_dynamic_gap", "gap_fill_hours", "gap_fill_locf", "gap_fill_interpolate",
-    "dedup_events_first", "text_stats", "text_quality", "text_simhash",
-    "dedup_minhash_pairs", "dedup_exact_docs", "dedup_simhash_pairs", "text_token_bpe",
-    "dedup_clusters", "pipeline_curation",
-    "vec_cosine_topk", "vec_centroids", "dedup_embedding_cosine",
-    "vec_ann_lsh", "vec_ann_ivf", "explode_word_counts", "json_extract",
-    "agg_approx_distinct", "agg_hll_sketch", "agg_hll_rollup", "agg_approx_quantiles",
-    "agg_tdigest_quantiles", "agg_tdigest_rollup",
-    "countmin_freq", "ml_inference", "ml_inference_per_key",
-    "win_tumbling_offset", "anomaly_zscore", "pattern_match",
-    "rag_chunking", "rag_chunk_sentences", "multimodal_meta", "sortvalues_secondary",
-    "sortvalues_streamed",
-    "agg_salted_fanout", "sql_front_door", "text_tfidf", "ml_minmax_scale",
-    "pattern_down_run", "pattern_sql_clause", "cogroup_3way", "sql_udaf_geomean",
-    "agg_tpch_q2", "agg_tpch_q3", "agg_tpch_q4", "agg_tpch_q5", "agg_tpch_q6",
-    "agg_tpch_q7", "agg_tpch_q8", "agg_tpch_q9", "agg_tpch_q10", "agg_tpch_q11",
-    "agg_tpch_q12", "agg_tpch_q13", "agg_tpch_q14", "agg_tpch_q15", "agg_tpch_q16",
-    "agg_tpch_q17", "agg_tpch_q18", "agg_tpch_q19", "agg_tpch_q20", "agg_tpch_q21",
-    "agg_tpch_q22",
-    "win_merge_intervals", "text_repetition", "sample_stratified",
-    "text_dup_ngram_fraction", "pipeline_decontaminate", "pipeline_source_mix",
-    "text_normalize_entropy", "sample_weighted", "pipeline_seq_packing",
-    "pivot_wide", "unpivot_long", "udtf_stack", "udtf_posexplode_outer",
-    "text_pii_redact", "text_gopher_filters", "pattern_skip_next",
-    "vec_quantize_int8", "anomaly_robust_zscore", "anomaly_iqr",
-    "anomaly_sliding",
-    "join_skew_salted", "join_skew_hybrid", "join_fuzzy_editdist", "global_row_index",
-    "profile_columns", "profile_histogram", "text_bm25_search",
-    "ml_zscore_scale", "ml_buckets_interp", "ml_ngrams_bow",
-    "ml_dedupe_row_tokens",
-    // Nexmark analogs (BASELINE.md comparison: events at sf0.1 ≈ the
-    // published SMOKE suite's 100k-event scale)
-    "win_hot_items", "win_highest_value", "win_new_users",
-    "nexmark_q3_join", "nexmark_q9_winning_bid", "nexmark_q4_avg_price",
-    "nexmark_q1_convert", "nexmark_q2_filter",
-    "nexmark_q0_passthrough", "nexmark_q6_avg_last10",
-    "nexmark_q10_shard",
-    "bloom_prune", "distinct_representative", "agg_median_mode",
-    "scalar_hof_arrays", "sql_session_tvf",
-    "pipeline_decontaminate_fuzzy", "pipeline_token_quantiles",
-    "layout_zorder", "dedup_semantic_keep", "anomaly_ensemble_vote",
-    "anomaly_sliding_quantile", "vec_random_projection",
-    "io_tfrecord_roundtrip", "io_avro_roundtrip", "io_jdbc_roundtrip",
-    "pipeline_cdc_apply", "agg_approx_topk",
-    "pipeline_split_assign", "pipeline_dsir_weights", "text_dup_span_max",
-    "pattern_measures_agg", "pattern_all_rows", "agg_theta_overlap",
-    "window_ewma", "pipeline_temperature_mix", "text_perplexity_unigram",
-    "pattern_all_rows_running", "multimodal_decode_bmp",
-    "text_c4_span_dedup",
-    // round 8 additions: real-codec multimodal family + URL
-    // canonicalization + arithmetic measures
-    "multimodal_decode_image", "multimodal_video_frames",
-    "multimodal_audio_meta", "multimodal_resize",
-    "text_url_canonicalize", "pattern_measure_arith",
-    "pattern_nav_offsets", "vec_ann_ivfpq", "pattern_sql_statement",
-    "text_bpe_tokens", "pattern_define_agg", "pattern_exclusion",
-    "join_interval", "text_perplexity_bigram", "dedup_admit_novel",
-    // round 9 additions: TPC-DS analog shapes
-    "agg_tpcds_q3", "agg_tpcds_q5", "agg_tpcds_q14", "agg_tpcds_q38",
-    "agg_tpcds_q47", "agg_tpcds_q51", "agg_tpcds_q67", "agg_tpcds_q73",
-    "agg_tpcds_q74", "agg_tpcds_q88", "agg_tpcds_q9", "agg_tpcds_q23",
-    "agg_tpcds_q28",
-    "agg_tpcds_q1", "agg_tpcds_q2", "agg_tpcds_q17", "agg_tpcds_q25",
-    "agg_tpcds_q29", "agg_tpcds_q49", "agg_tpcds_q59", "agg_tpcds_q62",
-    "agg_tpcds_q78",
-    // round 11 additions
-    "agg_tpcds_q31", "agg_tpcds_q89", "agg_tpcds_q98",
-    "agg_tpcds_q21", "agg_tpcds_q35", "agg_tpcds_q39",
-    "agg_tpcds_q75", "agg_tpcds_q95", "agg_tpcds_q4",
-    // round 13 addition
-    "agg_tpcds_q64",
-    // round 14 additions
-    "agg_tpcds_q65", "agg_tpcds_q41", "changelog_latest_by_rev",
-    "agg_cohort_retention", "scd2_history", "pipeline_data_quality",
-    "pipeline_stratified_sample", "rag_rrf_fusion",
-    "dedup_admit_novel_embedding", "agg_basket_lift",
-    "agg_funnel_steps",
-    // round 17 additions
-    "agg_tpcds_q77", "agg_tpcds_q57", "agg_tpcds_q10",
-    "agg_tpcds_q54", "agg_tpcds_q70", "agg_tpcds_q44",
-    "agg_tpcds_q22", "agg_tpcds_q36", "agg_tpcds_q68",
-    "agg_tpcds_q87", "agg_tpcds_q97", "agg_tpcds_q45", "agg_tpcds_q66",
-    // round 18 additions
-    "agg_tpcds_q11", "agg_tpcds_q30", "agg_tpcds_q93", "agg_tpcds_q99",
-    "agg_tpcds_q58", "agg_tpcds_q92", "agg_tpcds_q13", "agg_tpcds_q61", "agg_tpcds_q6", "win_new_users_pairs",
-    // round 19 additions
-    "win_hot_items_sliding", "win_new_users_packed",
-    "agg_tpcds_q14b", "agg_tpcds_q15", "agg_tpcds_q16", "agg_tpcds_q18",
-    "agg_tpcds_q24", "agg_tpcds_q33", "agg_tpcds_q34", "agg_tpcds_q40",
-    "agg_tpcds_q43", "agg_tpcds_q46", "agg_tpcds_q56", "agg_tpcds_q69",
-    "agg_tpcds_q72", "agg_tpcds_q90", "ordered_replay_events",
-    "agg_hll_zetasketch", "multimodal_mp4_meta")
+  /** The timed set: every registry query not marked `timed = false`,
+    * in registry order. */
+  private[graft] def timed: Seq[String] =
+    graft.queries.Registry.all.filter(_.timed).map(_.name)
 
   /** Drop every cached Dataset and persisted/localCheckpointed RDD. */
   private def dropCaches(spark: SparkSession): Unit = {
@@ -180,8 +84,7 @@ object Bench {
     // methodology (warmup + interleaved best-of-reps + dropCaches)
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    val names = headline.filter(all.contains)
-      .filter(n => only.forall(_.contains(n)))
+    val names = timed.filter(n => only.forall(_.contains(n)))
     // warmup: touch every table once so IO cache state is uniform
     Seq("lineitem", "orders", "customer", "supplier", "part", "nation",
       "region", "events", "documents", "embeddings").foreach { t =>

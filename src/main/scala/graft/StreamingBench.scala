@@ -92,6 +92,14 @@ object StreamingBench {
     * be misread as "ran with zero state traffic". */
   val failedBreakdown: OpBreakdown = OpBreakdown(-1, -1, -1, -1, -1, -1, -1)
 
+  /** A failed op: one `[sbench] op: class: message` line on stderr,
+    * then the -1.0 sentinel row. */
+  private def failed(op: String, e: Throwable): (Double, OpBreakdown) = {
+    System.err.println(s"[sbench] $op: ${e.getClass.getName}: " +
+      Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse(""))
+    (-1.0, failedBreakdown)
+  }
+
   private def breakdownOf(
       prog: Array[org.apache.spark.sql.streaming.StreamingQueryProgress]): OpBreakdown = {
     val ops = prog.flatMap(_.stateOperators)
@@ -120,7 +128,7 @@ object StreamingBench {
         sentinels, Chunks, sinkFormat, sinkPath, sinkPartitionBy)(f)
       (rows.size / dt, breakdownOf(prog))
     } catch {
-      case _: Throwable => (-1.0, failedBreakdown)
+      case e: Throwable => failed(name, e)
     }
 
   /** Cumulative progress accumulator (ADVICE r17): `recentProgress` is
@@ -187,7 +195,7 @@ object StreamingBench {
     * denominator. The drain tail (the last panes' delayMs) stays IN
     * the measurement: pane latency is the operator's contract, and the
     * published 3.5 s Q12 wall includes its pipeline drain too. */
-  private def benchProcTime(spark: SparkSession,
+  private def benchProcTime(spark: SparkSession, name: String,
       rows: IndexedSeq[(Long, Double)], delayMs: Long,
       triggerMs: Long): (Double, OpBreakdown) =
     try {
@@ -260,7 +268,7 @@ object StreamingBench {
             .foreach(p => java.nio.file.Files.deleteIfExists(p))
         } catch { case _: Throwable => () }
       }
-    } catch { case _: Throwable => (-1.0, failedBreakdown) }
+    } catch { case e: Throwable => failed(name, e) }
 
   /** The events replay feeding every op: (user_id, ts, event_type,
     * value, event_id) sorted by event time, plus the max event time
@@ -510,7 +518,7 @@ object StreamingBench {
               .foreach(p => java.nio.file.Files.deleteIfExists(p))
           } catch { case _: Throwable => () }
         }
-      } catch { case _: Throwable => (-1.0, failedBreakdown) }
+      } catch { case e: Throwable => failed(name, e) }
     }),
     // native session_window aggregation (the Catalyst-planned path,
     // as a floor/reference for the custom processors above)
@@ -698,7 +706,7 @@ object StreamingBench {
     // [[benchProcTime]]'s telemetry wall clock. Needs no-data
     // micro-batches ON: the final panes fire after input stops.
     OpDef("streaming_proc_time", (spark, r, name) => {
-      benchProcTime(spark, r.ev.map(e => (e._1, e._4)),
+      benchProcTime(spark, name, r.ev.map(e => (e._1, e._4)),
         delayMs = 250L, triggerMs = 250L)
     }, confs = Seq(
       "spark.sql.streaming.noDataMicroBatches.enabled" -> "true")))

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -158,11 +158,6 @@ object Bpe {
       .collect().toSeq // bounded: topWords-row histogram fit artifact
     train(hist, nMerges)
   }
-
-  /** Column form: `bpe_encode(word)` over a learned merge table. */
-  def encodeCol(word: Column, merges: Seq[(String, String)]): Column =
-    call_function("bpe_encode", word,
-      typedLit(merges.map(p => Seq(p._1, p._2))))
 }
 
 /** `bpe_encode(word, merges)` → array<string>: BPE subword pieces of

@@ -23,14 +23,7 @@ object PortableHash {
   def md5Long(c: Column): Column =
     conv(substring(md5(c.cast("string")), 1, 15), 16, 10).cast("long")
 
-  /** Seeded variant: independent hash family member i (for MinHash). */
-  def md5LongSeeded(c: Column, seed: Int): Column =
-    md5Long(concat(lit(seed.toString), lit(":"), c.cast("string")))
-
   /** DuckDB SQL equivalent of [[md5Long]], for oracle construction. */
   def md5LongSql(expr: String): String =
     s"CAST('0x' || substr(md5(CAST($expr AS VARCHAR)), 1, 15) AS BIGINT)"
-
-  def md5LongSeededSql(expr: String, seed: Int): String =
-    md5LongSql(s"'$seed' || ':' || ($expr)")
 }

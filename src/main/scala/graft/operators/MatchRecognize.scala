@@ -17,7 +17,8 @@ import org.apache.spark.sql.{Dataset, Encoder}
   * Scale: one shuffle on the key; group size is bounded by per-key
   * activity (not dataset size), which is the same contract as Beam's
   * per-key-and-window NFA state. For streaming, the identical matcher
-  * runs inside flatMapGroupsWithState on window-closed groups.
+  * ([[matchRows]]) runs on the session groups that
+  * `StatefulV2.eventTimeGapFlush` (transformWithState) closes.
   *
   * Semantics implemented (the MATCH_RECOGNIZE core):
   *  - quantifiers `{min,max}` per step (greedy, with backtracking — a
@@ -408,20 +409,6 @@ object MatchRecognize {
     ds.groupByKey(key).flatMapSortedGroups(sortCols: _*) {
       (k: K, it: Iterator[T]) =>
         matchRows(k, it.toIndexedSeq, steps, skip)(measure).iterator
-    }
-  }
-
-  /** [[matchRecognize]] with a multi-row measure — the ALL ROWS PER
-    * MATCH execution shape (one output row per matched input row). */
-  def matchRecognizeFlat[K: Encoder, T: Encoder, O: Encoder](
-      ds: Dataset[T], key: T => K,
-      sortCols: Seq[org.apache.spark.sql.Column],
-      steps: Seq[Elem[T]],
-      skip: SkipMode = SkipPastLastRow)(
-      measure: Match[K, T] => Seq[O]): Dataset[O] = {
-    ds.groupByKey(key).flatMapSortedGroups(sortCols: _*) {
-      (k: K, it: Iterator[T]) =>
-        matchRows(k, it.toIndexedSeq, steps, skip)(measure).flatten.iterator
     }
   }
 }

@@ -780,20 +780,4 @@ object Similarity {
       .agg(countDistinct(col("query_id")).as("n_queries"),
         sum(coalesce(col("sz"), lit(0L))).as("candidates"))
   }
-
-  /** Recall of an ANN result against the exact top-k: how many of the
-    * brute-force (query, match) pairs the ANN search recovered. Both
-    * inputs are deterministic (portable hashing, (sim desc, id) tie
-    * break), so (hits, possible) are exact reproducible numbers — an
-    * oracle can assert `hits >= threshold · possible` as a hard
-    * correctness gate for an approximate operator (the right contract:
-    * verify the RECALL BOUND, not the engine-specific estimates).
-    * Returns one row: (possible, hits). */
-  def annRecall(ann: DataFrame, exact: DataFrame): DataFrame = {
-    val hits = exact.select("query_id", "match_id")
-      .join(ann.select("query_id", "match_id"),
-        Seq("query_id", "match_id"), "left_semi")
-    exact.agg(count(lit(1)).as("possible"))
-      .crossJoin(hits.agg(count(lit(1)).as("hits")))
-  }
 }

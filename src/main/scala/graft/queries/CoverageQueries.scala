@@ -45,7 +45,7 @@ object CoverageQueries {
         CAST(len(string_split(p_name, ' ')) AS BIGINT) AS n_words,
         regexp_replace(p_name, '[aeiou]', '_', 'g') AS devoweled,
         CAST(regexp_extract(p_brand, '([0-9]+)', 1) AS BIGINT) AS brand_num
-        FROM part""")),
+        FROM part"""), timed = false),
 
     // ===== Beam ToJson / JsonToRow (transforms/ToJson.java:38,
     // JsonToRow.java:83): serialize a struct to JSON text and parse it
@@ -66,7 +66,7 @@ object CoverageQueries {
         to_json(struct_pack(o_orderkey := o_orderkey,
                             o_orderstatus := o_orderstatus)) AS js,
         o_orderkey AS rt_key, o_orderstatus AS rt_status
-        FROM orders""")),
+        FROM orders"""), timed = false),
 
     // ===== Beam Partition (transforms/Partition.java:83): split into N
     // disjoint outputs by predicate; recombined with a part tag so the
@@ -88,7 +88,7 @@ object CoverageQueries {
                     WHEN o_totalprice > 100000 THEN 1
                     ELSE 2 END AS BIGINT) AS part_id, o_totalprice
               FROM orders) t
-        GROUP BY part_id""")),
+        GROUP BY part_id"""), timed = false),
 
     // ===== Beam WithFailures (transforms/WithFailures.java:73):
     // dead-letter split on a failing parse (try_cast), success and
@@ -118,12 +118,12 @@ object CoverageQueries {
                      THEN 'x' || CAST(o_orderkey AS VARCHAR)
                      ELSE CAST(o_orderkey AS VARCHAR) END AS BIGINT) AS parsed
               FROM orders) t
-        GROUP BY branch""")),
+        GROUP BY branch"""), timed = false),
 
     // ===== Beam GroupIntoBatches (transforms/GroupIntoBatches.java:108),
     // batch form: deterministic per-key batches of 5 in event order
-    // (streaming form with state+timeout flush: Stateful.groupIntoBatches,
-    // exercised in StreamingSpec).
+    // (streaming form with state+timer flush:
+    // StatefulV2.groupIntoBatchesTws, exercised in StatefulV2Spec).
     Q("batch_per_key",
       (s, d) => {
         val w = Window.partitionBy(col("o_custkey"))
@@ -251,7 +251,7 @@ object CoverageQueries {
         CAST(len(([p_size, p_size * 2, p_size + 1])[1:2]) AS BIGINT) AS slice_n,
         CAST(map_extract(map(['sz', 'dbl'], [p_size, p_size * 2]), 'sz')[1] AS BIGINT) AS m_sz,
         CAST(cardinality(map(['sz', 'dbl'], [p_size, p_size * 2])) AS BIGINT) AS m_n
-        FROM part""")),
+        FROM part"""), timed = false),
 
     // ===== Nested-row schema transforms (schemas/transforms/: AddFields/
     // DropFields/RenameFields/nested Select — SURVEY M3): build a nested
@@ -274,7 +274,7 @@ object CoverageQueries {
       },
       Some("""SELECT o_orderkey AS id, round(o_totalprice, 2) AS amt,
         CASE WHEN o_totalprice > 200000 THEN 'big' ELSE 'small' END AS tier
-        FROM orders""")),
+        FROM orders"""), timed = false),
 
     // ===== SchemaOps facade end-to-end (schemas/transforms/
     // RenameFields.java:64, AddFields.java:65, Cast.java:60,
@@ -305,7 +305,7 @@ object CoverageQueries {
           CAST(trunc(o_totalprice) AS BIGINT) AS fin_amount,
           CASE WHEN o_totalprice > 200000 THEN 'big' ELSE 'small' END
             AS fin_tier
-        FROM orders""")),
+        FROM orders"""), timed = false),
 
     // ===== As-of join (SURVEY §2.4 capability bonus; absent in Beam):
     // each purchase matched to the user's latest click at-or-before it.
@@ -373,7 +373,7 @@ object CoverageQueries {
         .groupBy("value").agg(round(sum("key"), 4).as("sum_key")),
       Some("""SELECT 'c' || CAST(o_custkey AS VARCHAR) AS value,
         round(sum(o_totalprice * 2), 4) AS sum_key
-        FROM orders GROUP BY 1""")),
+        FROM orders GROUP BY 1"""), timed = false),
 
     // ===== Reshuffle / Reshuffle.viaRandomKey (transforms/
     // Reshuffle.java:62): values pass through a keyed redistribution
@@ -389,7 +389,7 @@ object CoverageQueries {
           round(col("value"), 4).as("value")),
       Some("""SELECT event_id, user_id, event_type,
           round(value, 4) AS value
-        FROM events""")),
+        FROM events"""), timed = false),
 
     // ===== Tee / LogElements (transforms/Tee.java:40): a side
     // observation attached to the main path — `observe` registers
@@ -401,7 +401,7 @@ object CoverageQueries {
         .observe("tee_stats", count(lit(1)).as("n"),
           round(sum(col("o_totalprice")), 2).as("sum_tp"))
         .select(col("o_orderkey"), col("o_orderstatus")),
-      Some("SELECT o_orderkey, o_orderstatus FROM orders")),
+      Some("SELECT o_orderkey, o_orderstatus FROM orders"), timed = false),
 
     // ===== Sample.fixedSizeGlobally (transforms/Sample.java:50):
     // exact-size deterministic sample — smallest n by portable hash
@@ -415,7 +415,7 @@ object CoverageQueries {
         .select("o_orderkey", "o_custkey"),
       Some(s"""SELECT o_orderkey, o_custkey FROM orders
         ORDER BY ${graft.functions.PortableHash.md5LongSql(
-          "CAST(o_orderkey AS VARCHAR)")} ASC, o_orderkey ASC LIMIT 100""")),
+          "CAST(o_orderkey AS VARCHAR)")} ASC, o_orderkey ASC LIMIT 100"""), timed = false),
 
     // ===== Combine.withFanout (transforms/Combine.java — hot-key
     // fanout): two-stage salted aggregation over a 3-distinct-value key
@@ -473,7 +473,7 @@ object CoverageQueries {
       },
       Some("""SELECT CAST(floor(epoch(ts) / 3600) * 3600 AS BIGINT) AS win_start,
         event_type, count(*) AS n, round(sum(value), 4) AS sum_value
-        FROM events GROUP BY 1, 2""")),
+        FROM events GROUP BY 1, 2"""), timed = false),
 
     // ===== User CombineFn → SQL UDAF (transforms/Combine.java:88
     // CombineFn contract; SQL wrap ≡ impl/UdafImpl.java): a user
@@ -559,7 +559,7 @@ object CoverageQueries {
         CASE WHEN value < 0.2
           THEN 'java.lang.IllegalArgumentException: too_small:' || event_id
         END AS err
-        FROM events""")),
+        FROM events"""), timed = false),
 
     // ===== DDL/catalog front door (SURVEY §2.8 — Beam SQL's
     // CREATE EXTERNAL TABLE / Calcite catalog, parser/.../SqlDdlNodes):
@@ -576,7 +576,7 @@ object CoverageQueries {
           GROUP BY n_regionkey""")
       },
       Some("""SELECT n_regionkey, count(*) AS n, min(n_name) AS first_name
-        FROM nation WHERE n_regionkey IN (1, 3) GROUP BY n_regionkey""")),
+        FROM nation WHERE n_regionkey IN (1, 3) GROUP BY n_regionkey"""), timed = false),
 
     // ===== GroupByEncryptedKey (transforms/GroupByEncryptedKey.java:52):
     // group on an HMAC'd key so the plaintext never crosses the shuffle.
@@ -586,7 +586,7 @@ object CoverageQueries {
         .agg(count(lit(1)).as("n"), round(sum("c_acctbal"), 4).as("bal")),
       Some("""SELECT sha256(c_mktsegment || ':pepper') AS ek,
         count(*) AS n, round(sum(c_acctbal), 4) AS bal
-        FROM customer GROUP BY 1""")),
+        FROM customer GROUP BY 1"""), timed = false),
 
     // ===== Reify (transforms/Reify.java:45): expose element timestamp
     // and assigned window as ordinary values.
@@ -601,7 +601,7 @@ object CoverageQueries {
       Some("""SELECT event_id, epoch_us(make_timestamp(epoch_us(ts))) AS ts_us,
         CAST(floor(epoch(ts) / 3600) * 3600 AS BIGINT) AS win_start,
         CAST(floor(epoch(ts) / 3600) * 3600 + 3600 AS BIGINT) AS win_end
-        FROM events""")),
+        FROM events"""), timed = false),
 
     // ===== ApproximateQuantiles / TDigestQuantiles (sketching ext):
     // the approximate VALUES are engine-specific, but the RANK-ERROR

@@ -214,7 +214,7 @@ object EventTimeQueries {
       Some("""SELECT CAST(floor(epoch(date_trunc('month', ts))) AS BIGINT)
           AS month_start,
         count(*) AS n, round(sum(value), 4) AS sum_value
-        FROM events GROUP BY 1""")),
+        FROM events GROUP BY 1"""), timed = false),
 
     // Beam CalendarWindows (windowing/CalendarWindows.java:47) — window()
     // can't express variable-length calendar units; date_trunc keys can.
@@ -226,7 +226,7 @@ object EventTimeQueries {
           col("n"), col("n_users")),
       Some("""SELECT CAST(floor(epoch(date_trunc('day', ts))) AS BIGINT) AS day_start,
         count(*) AS n, count(DISTINCT user_id) AS n_users
-        FROM events GROUP BY 1""")),
+        FROM events GROUP BY 1"""), timed = false),
 
     // CalendarWindows.weeks / .years (windowing/CalendarWindows.java:47
     // exposes days/weeks/months/years as first-class factories):
@@ -240,7 +240,7 @@ object EventTimeQueries {
       Some("""SELECT CAST(floor(epoch(date_trunc('week', ts))) AS BIGINT)
           AS week_start,
         count(*) AS n, round(avg(value), 4) AS avg_value
-        FROM events GROUP BY 1""")),
+        FROM events GROUP BY 1"""), timed = false),
 
     Q("win_calendar_year",
       (s, d) => Windowing.calendar(ev(s, d), "ts", "year")
@@ -251,7 +251,7 @@ object EventTimeQueries {
       Some("""SELECT CAST(floor(epoch(date_trunc('year', ts))) AS BIGINT)
           AS year_start,
         count(*) AS n, count(DISTINCT user_id) AS n_users
-        FROM events GROUP BY 1""")),
+        FROM events GROUP BY 1"""), timed = false),
 
     // Nexmark Q5 "hot items" (reference: sdks/java/testing/nexmark/
     // .../queries/Query5.java — highest-count auction per sliding
@@ -710,7 +710,7 @@ object EventTimeQueries {
       Some("""SELECT user_id, event_id AS last_event,
         event_type AS last_type, value AS last_value FROM events
         QUALIFY row_number() OVER (PARTITION BY user_id
-          ORDER BY ts DESC, event_id DESC) = 1""")),
+          ORDER BY ts DESC, event_id DESC) = 1"""), timed = false),
 
     // Beam FillGaps (extensions/timeseries/.../FillGaps.java): zero-fill
     // missing hours per user between their first and last active hour.

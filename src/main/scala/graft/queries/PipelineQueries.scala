@@ -496,7 +496,7 @@ object PipelineQueries {
         SELECT doc_id, t.term, coalesce(min(v.vocab_id), -1) AS vocab_id,
           count(*) AS n
         FROM terms t LEFT JOIN vocab v ON t.term = v.term
-        GROUP BY doc_id, t.term""")),
+        GROUP BY doc_id, t.term"""), timed = false),
 
     // ===== tft.bucketize: quantile-boundary discretization — exact
     // quartile boundaries fit in one agg (plan-time artifact), applied
@@ -524,7 +524,7 @@ object PipelineQueries {
           CAST(CASE WHEN o_totalprice < q1 THEN 0
                WHEN o_totalprice < q2 THEN 1
                WHEN o_totalprice < q3 THEN 2 ELSE 3 END AS BIGINT) AS bucket
-        FROM orders CROSS JOIN qs""")),
+        FROM orders CROSS JOIN qs"""), timed = false),
 
     // ===== Feature hashing (the hashing trick): term → fixed-width
     // feature index via the portable hash — no vocab artifact at all,
@@ -541,7 +541,7 @@ object PipelineQueries {
         FROM (SELECT doc_id,
               unnest(string_split_regex(trim(text), '\\s+')) AS term
               FROM documents WHERE length(trim(text)) > 0) t
-        GROUP BY 1, 2""")),
+        GROUP BY 1, 2"""), timed = false),
 
     // ===== Anomaly detection (ml/anomaly/): per-type z-score against
     // fitted mean/stddev (one agg pass, broadcast back), flag |z|>2.5.
@@ -769,7 +769,7 @@ object PipelineQueries {
           .select(col("c_custkey"), col("nation_name"))
       },
       Some("""SELECT c_custkey, n_name AS nation_name
-        FROM customer JOIN nation ON c_nationkey = n_nationkey""")),
+        FROM customer JOIN nation ON c_nationkey = n_nationkey"""), timed = false),
 
     // ===== MATCH_RECOGNIZE (rel/BeamMatchRel.java:76 — NFA over keyed
     // time-sorted rows): pattern (V:view)+ (P:purchase), AFTER MATCH
@@ -846,7 +846,7 @@ object PipelineQueries {
           min(value) AS worst_drop
         FROM ordered
         WHERE prev_v IS NOT NULL AND value < prev_v * 0.95
-        GROUP BY user_id""")),
+        GROUP BY user_id"""), timed = false),
 
     // ===== MATCH_RECOGNIZE arithmetic MEASURES (SQL:2016 value
     // expressions over navigations/aggregates — Calcite compiles the

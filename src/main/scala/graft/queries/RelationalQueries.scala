@@ -205,7 +205,7 @@ object RelationalQueries {
       Some("""SELECT count(*) AS n_rows, sum(l_quantity) AS total_qty,
         avg(l_extendedprice) AS avg_price, min(l_shipdate) AS min_ship,
         max(l_shipdate) AS max_ship,
-        count(DISTINCT l_orderkey) AS n_orders FROM lineitem""")),
+        count(DISTINCT l_orderkey) AS n_orders FROM lineitem"""), timed = false),
 
     // Extended aggregate surface: median (continuous interpolation in
     // both engines) + the SQL:2003 linear-regression family. Skewness/
@@ -227,7 +227,7 @@ object RelationalQueries {
         round(regr_intercept(l_extendedprice, l_quantity), 6) AS intercept,
         round(regr_r2(l_extendedprice, l_quantity), 6) AS r2,
         regr_count(l_extendedprice, l_quantity) AS n
-        FROM lineitem GROUP BY l_returnflag""")),
+        FROM lineitem GROUP BY l_returnflag"""), timed = false),
 
     Q("agg_stats",
       (s, d) => li(s, d).groupBy("l_returnflag").agg(
@@ -257,7 +257,7 @@ object RelationalQueries {
         CAST(bit_and(CAST(l_linenumber AS BIGINT)) AS BIGINT) AS band,
         CAST(bit_or(CAST(l_linenumber AS BIGINT)) AS BIGINT) AS bor,
         CAST(bit_xor(CAST(l_linenumber AS BIGINT)) AS BIGINT) AS bxor
-        FROM lineitem GROUP BY l_returnflag""")),
+        FROM lineitem GROUP BY l_returnflag"""), timed = false),
 
     Q("agg_collect",
       (s, d) => ord(s, d).groupBy("o_orderpriority").agg(
@@ -265,7 +265,7 @@ object RelationalQueries {
         count(lit(1)).as("n")),
       Some("""SELECT o_orderpriority,
         array_to_string(list_sort(list(DISTINCT o_orderstatus)), ',') AS statuses,
-        count(*) AS n FROM orders GROUP BY o_orderpriority""")),
+        count(*) AS n FROM orders GROUP BY o_orderpriority"""), timed = false),
 
     // Distribution-shape aggregates (the stats.py/combiners surface
     // beyond mean/var): skewness + excess kurtosis. ESTIMATOR NOTE:
@@ -320,7 +320,7 @@ object RelationalQueries {
         round(quantile_cont(l_quantity, 0.25), 6) AS p25,
         round(quantile_cont(l_quantity, 0.5), 6) AS p50,
         round(quantile_cont(l_quantity, 0.75), 6) AS p75
-        FROM lineitem GROUP BY l_linestatus""")),
+        FROM lineitem GROUP BY l_linestatus"""), timed = false),
 
     Q("agg_cube",
       (s, d) => li(s, d).cube("l_returnflag", "l_linestatus")
@@ -342,7 +342,7 @@ object RelationalQueries {
       Some("""SELECT count(DISTINCT l_partkey) AS n_parts,
         count(DISTINCT l_suppkey) AS n_supps,
         count(DISTINCT (l_returnflag, l_linestatus)) AS n_flag_status
-        FROM lineitem""")),
+        FROM lineitem"""), timed = false),
 
     // Beam ApproximateDistinct/HllCount (sketches) — approximate values
     // are engine-specific, so this entry is rows-only checked.
@@ -420,7 +420,7 @@ object RelationalQueries {
       Some("""SELECT o_custkey, o_orderkey AS latest_order,
         o_orderdate AS latest_date FROM orders
         QUALIFY row_number() OVER (PARTITION BY o_custkey
-          ORDER BY o_orderdate DESC, o_orderkey DESC) = 1""")),
+          ORDER BY o_orderdate DESC, o_orderkey DESC) = 1"""), timed = false),
 
     // Latest-snapshot view of a rev-stamped changelog — the documented
     // consumption idiom for every streaming (key, rev, …) snapshot op
@@ -445,7 +445,7 @@ object RelationalQueries {
           col("o_totalprice").desc, col("o_orderkey").asc)
         .select("o_orderkey", "o_custkey", "o_totalprice"),
       Some("""SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10""")),
+        ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10"""), timed = false),
 
     Q("topk_per_key",
       (s, d) => Relational.topKPerKey(ord(s, d), Seq(col("o_custkey")),
@@ -464,7 +464,7 @@ object RelationalQueries {
         .offset(10).limit(20)
         .select("o_orderkey", "o_totalprice"),
       Some("""SELECT o_orderkey, o_totalprice FROM orders
-        ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 20 OFFSET 10""")),
+        ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 20 OFFSET 10"""), timed = false),
 
     // ===== Distinct / dedup (Beam Distinct.java:67)
     Q("distinct_rows",
@@ -478,7 +478,7 @@ object RelationalQueries {
         .select("l_orderkey", "l_linenumber", "l_quantity"),
       Some(s"""SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
         WHERE ${PortableHash.md5LongSql(
-          "CAST(l_orderkey AS VARCHAR) || '_' || CAST(l_linenumber AS VARCHAR)")} % 20 = 0""")),
+          "CAST(l_orderkey AS VARCHAR) || '_' || CAST(l_linenumber AS VARCHAR)")} % 20 = 0"""), timed = false),
 
     // ===== Joins (SURVEY §2.4)
     Q("join_inner_broadcast",
@@ -501,7 +501,7 @@ object RelationalQueries {
       Some("""SELECT c_custkey, count(o_orderkey) AS n_orders,
         round(coalesce(sum(o_totalprice), 0), 4) AS total
         FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-        GROUP BY c_custkey""")),
+        GROUP BY c_custkey"""), timed = false),
 
     Q("join_semi",
       (s, d) => cust(s, d).join(
@@ -510,14 +510,14 @@ object RelationalQueries {
         .select("c_custkey", "c_name"),
       Some("""SELECT c_custkey, c_name FROM customer WHERE EXISTS
         (SELECT 1 FROM orders WHERE o_custkey = c_custkey
-         AND o_orderstatus = 'F')""")),
+         AND o_orderstatus = 'F')"""), timed = false),
 
     Q("join_anti",
       (s, d) => cust(s, d).join(ord(s, d).select("o_custkey"),
           col("c_custkey") === col("o_custkey"), "left_anti")
         .select("c_custkey", "c_name"),
       Some("""SELECT c_custkey, c_name FROM customer WHERE NOT EXISTS
-        (SELECT 1 FROM orders WHERE o_custkey = c_custkey)""")),
+        (SELECT 1 FROM orders WHERE o_custkey = c_custkey)"""), timed = false),
 
     Q("join_full_outer",
       (s, d) => {
@@ -535,7 +535,7 @@ object RelationalQueries {
         FROM (SELECT c_nationkey nk, count(*) n_cust FROM customer GROUP BY 1) c
         FULL OUTER JOIN
         (SELECT s_nationkey nk, count(*) n_supp FROM supplier GROUP BY 1) s
-        USING (nk)""")),
+        USING (nk)"""), timed = false),
 
     Q("join_multiway",
       (s, d) => li(s, d)
@@ -562,7 +562,7 @@ object RelationalQueries {
       Some("""SELECT s_suppkey, count(*) AS n_close_customers
         FROM customer JOIN supplier
         ON c_acctbal BETWEEN s_acctbal - 50 AND s_acctbal + 50
-        GROUP BY s_suppkey""")),
+        GROUP BY s_suppkey"""), timed = false),
 
     // Skew-safe salted join: lineitem (fact, hot l_orderkey histogram
     // at scale) × orders projected to 2 columns (dim too big to
@@ -662,7 +662,7 @@ object RelationalQueries {
       Some("""SELECT o_orderpriority, count(*) AS n FROM (
         SELECT * FROM orders WHERE o_orderstatus = 'F'
         UNION ALL SELECT * FROM orders WHERE o_orderstatus = 'O') u
-        GROUP BY o_orderpriority""")),
+        GROUP BY o_orderpriority"""), timed = false),
 
     Q("intersect_distinct",
       (s, d) => ord(s, d).filter(col("o_orderstatus") === "F")
@@ -671,7 +671,7 @@ object RelationalQueries {
           .select(col("o_custkey"))),
       Some("""SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
         INTERSECT
-        SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'""")),
+        SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'"""), timed = false),
 
     Q("except_distinct",
       (s, d) => ord(s, d).filter(col("o_orderstatus") === "F")
@@ -680,7 +680,7 @@ object RelationalQueries {
           .select(col("o_custkey"))),
       Some("""SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
         EXCEPT
-        SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'""")),
+        SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'"""), timed = false),
 
     Q("except_all",
       (s, d) => li(s, d).select(col("l_orderkey").as("k"))
@@ -689,7 +689,7 @@ object RelationalQueries {
       Some("""SELECT k, count(*) AS n FROM (
         SELECT l_orderkey AS k FROM lineitem
         EXCEPT ALL SELECT o_orderkey AS k FROM orders) e
-        GROUP BY k""")),
+        GROUP BY k"""), timed = false),
 
     Q("intersect_all",
       (s, d) => li(s, d).filter(col("l_quantity") > 25)
@@ -701,7 +701,7 @@ object RelationalQueries {
         SELECT l_orderkey AS k FROM lineitem WHERE l_quantity > 25
         INTERSECT ALL
         SELECT l_orderkey AS k FROM lineitem WHERE l_discount > 0.05) e
-        GROUP BY k""")),
+        GROUP BY k"""), timed = false),
 
     // ===== OVER-clause window functions (SURVEY §2.7)
     Q("window_rank",
@@ -722,7 +722,7 @@ object RelationalQueries {
         round(percent_rank() OVER w, 6) AS prnk
         FROM customer
         WINDOW w AS (PARTITION BY c_nationkey
-                     ORDER BY c_acctbal DESC, c_custkey ASC)""")),
+                     ORDER BY c_acctbal DESC, c_custkey ASC)"""), timed = false),
 
     Q("window_running",
       (s, d) => {
@@ -757,7 +757,7 @@ object RelationalQueries {
         round(avg(o_totalprice) OVER (PARTITION BY o_custkey
           ORDER BY o_orderdate ASC, o_orderkey ASC
           ROWS BETWEEN 3 PRECEDING AND CURRENT ROW), 4) AS moving_avg
-        FROM orders""")),
+        FROM orders"""), timed = false),
 
     // ===== EWMA per key (pandas ewm(alpha).mean(), adjust=False) —
     // the recurrence e_i = α·v_i + (1−α)·e_{i−1} has no O(n) window
@@ -822,7 +822,7 @@ object RelationalQueries {
         first_value(c_custkey) OVER w AS first_in_nation
         FROM customer
         WINDOW w AS (PARTITION BY c_nationkey
-          ORDER BY c_acctbal ASC, c_custkey ASC)""")),
+          ORDER BY c_acctbal ASC, c_custkey ASC)"""), timed = false),
 
     // ===== Element-wise & scalar functions (SURVEY §2.2, §2.9)
     Q("scalar_string",
@@ -852,7 +852,7 @@ object RelationalQueries {
         CAST(strpos(p_name, 'an') AS BIGINT) AS pos_an,
         trim(p_name) AS trimmed,
         regexp_replace(p_type, ' ', '_', 'g') AS type_u
-        FROM part""")),
+        FROM part"""), timed = false),
 
     Q("scalar_math",
       (s, d) => li(s, d).limit(0).unionByName(li(s, d)) // no-op shape guard
@@ -886,7 +886,7 @@ object RelationalQueries {
         round((exp(l_discount) - exp(-l_discount)) / 2, 6) AS sh,
         round((exp(l_discount) + exp(-l_discount)) / 2, 6) AS ch,
         round((exp(2 * l_discount) - 1) / (exp(2 * l_discount) + 1), 6) AS th
-        FROM lineitem WHERE l_linenumber <= 3""")),
+        FROM lineitem WHERE l_linenumber <= 3"""), timed = false),
 
     Q("scalar_datetime",
       (s, d) => ord(s, d).select(
@@ -906,7 +906,7 @@ object RelationalQueries {
         date_trunc('month', o_orderdate) AS month_start,
         o_orderdate + INTERVAL 30 DAY AS due,
         CAST(floor(epoch(o_orderdate)) AS BIGINT) AS epoch_s
-        FROM orders""")),
+        FROM orders"""), timed = false),
 
     Q("scalar_case_cast",
       (s, d) => ord(s, d).select(
@@ -929,7 +929,7 @@ object RelationalQueries {
         coalesce(nullif(o_orderstatus, 'O'), 'open') AS status2,
         greatest(o_totalprice, 150000.0) AS gst,
         least(o_totalprice, 150000.0) AS lst
-        FROM orders""")),
+        FROM orders"""), timed = false),
 
     Q("scalar_hash",
       (s, d) => cust(s, d).select(
@@ -940,7 +940,7 @@ object RelationalQueries {
       Some(s"""SELECT c_custkey, md5(c_name) AS h_md5,
         sha256(c_name) AS h_sha256,
         ${PortableHash.md5LongSql("c_name")} AS h_long
-        FROM customer""")),
+        FROM customer"""), timed = false),
 
     Q("json_extract",
       (s, d) => Tables.events(s, d).groupBy("event_type").agg(
@@ -1112,6 +1112,6 @@ object RelationalQueries {
       },
       Some("""SELECT CAST(id AS BIGINT) AS id, tag, CAST(v AS DOUBLE) AS v
         FROM (VALUES (1, 'a', 1.5), (2, 'b', 2.5),
-        (3, 'c', 3.5)) AS t(id, tag, v)""")),
+        (3, 'c', 3.5)) AS t(id, tag, v)"""), timed = false),
   )
 }

@@ -281,7 +281,7 @@ object TextQueries {
     Q("text_lang_id",
       (s, d) => docs(s, d).select(col("doc_id"),
         TextAnalysis.langId(col("text")).as("lang_guess")),
-      Some(langIdSelect)),
+      Some(langIdSelect), timed = false),
 
     // Quality scoring (length / punctuation / stopword-ratio heuristic).
     Q("text_quality",
@@ -465,7 +465,7 @@ object TextQueries {
       Some(s"""SELECT event_id, event_type FROM events
         QUALIFY row_number() OVER (PARTITION BY event_type
             ORDER BY ${graft.functions.PortableHash.md5LongSql("CAST(event_id AS VARCHAR)")} ASC,
-              event_id ASC) <= 25""")),
+              event_id ASC) <= 25"""), timed = false),
 
     // Exact dedup by normalized-content hash (hash-groupBy).
     Q("dedup_exact_docs",
@@ -570,7 +570,7 @@ object TextQueries {
         SELECT id_a, id_b,
           round(CAST(n_i AS DOUBLE) / (a.sz + b.sz - n_i), 6) AS jaccard
         FROM inter JOIN sz a ON a.doc_id = id_a JOIN sz b ON b.doc_id = id_b
-        WHERE round(CAST(n_i AS DOUBLE) / (a.sz + b.sz - n_i), 6) >= 0.1""")),
+        WHERE round(CAST(n_i AS DOUBLE) / (a.sz + b.sz - n_i), 6) >= 0.1"""), timed = false),
 
     // ===== PII redaction — the pre-training scrub pass: emails, phone
     // numbers and IPv4s replaced by typed placeholder tokens, with

@@ -42,7 +42,7 @@ object VectorQueries {
           round(Similarity.l2Norm(col("embedding")), 6).as("norm"))
       },
       Some(s"""SELECT vec_id, CAST(len(embedding) AS BIGINT) AS dim,
-        round(${norm2Sql("embedding")}, 6) AS norm FROM embeddings""")),
+        round(${norm2Sql("embedding")}, 6) AS norm FROM embeddings"""), timed = false),
 
     // Brute-force cosine top-k: small query set (vec_id % 100 = 0)
     // broadcast against the full corpus — the baseline ANN oracle.

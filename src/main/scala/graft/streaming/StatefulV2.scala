@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming._
 
 /** Beam State/Timer parity on Spark 4's `transformWithState` — the
-  * successor to `flatMapGroupsWithState` ([[Stateful]]) with the full
-  * Beam state-cell vocabulary (SURVEY §2.10):
+  * successor to `flatMapGroupsWithState`, and this repo's one per-key
+  * state API — with the full Beam state-cell vocabulary (SURVEY §2.10):
   *
   * | Beam (state/)                    | here                        |
   * |----------------------------------|-----------------------------|
@@ -186,6 +186,88 @@ object StatefulV2 {
     ds.groupByKey(_._1).transformWithState(
       new OrderedReplayProcessor[K](emitOnInput),
       if (emitOnInput) TimeMode.None() else TimeMode.EventTime(),
+      OutputMode.Append())
+
+  /** Ordered processing by explicit SEQUENCE NUMBER (Beam's
+    * extensions/ordered/ OrderedEventProcessor): per key, release
+    * events in contiguous sequence order starting at 0. An event whose
+    * predecessor has not arrived waits in the `pending` MapState;
+    * duplicates of already-released numbers drop (a re-sent pending
+    * number replaces the waiting value). `next` (ValueState) is the
+    * lowest unreleased number. Unlike [[orderedReplay]] — event-time
+    * order under the watermark — a gap here blocks release until it
+    * fills or the key goes stale.
+    *
+    * With `staleTimeoutMs > 0` a processing-time timer, re-armed on
+    * every input, fires once the key has been idle that long: pending
+    * events flush in sequence order (the gap is given up on) and `next`
+    * advances past them as a TOMBSTONE, so duplicates of flushed
+    * numbers still drop; a second idle firing with nothing pending
+    * clears the key's state — bounding the store for quiescent keys,
+    * like Beam's ordered-processing status/TTL handling. */
+  class SequenceOrderProcessor[K, V](staleTimeoutMs: Long)(
+      implicit vEnc: Encoder[V])
+      extends StatefulProcessor[K, (K, Long, V), (K, Long, V)] {
+
+    @transient private var next: ValueState[Long] = _
+    @transient private var pending: MapState[Long, V] = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+      next = getHandle.getValueState[Long]("next", Encoders.scalaLong,
+        TTLConfig.NONE)
+      pending = getHandle.getMapState[Long, V]("pending", Encoders.scalaLong,
+        vEnc, TTLConfig.NONE)
+    }
+
+    override def handleInputRows(key: K, rows: Iterator[(K, Long, V)],
+        timers: TimerValues): Iterator[(K, Long, V)] = {
+      var n = if (next.exists()) next.get() else 0L
+      val out = scala.collection.mutable.ArrayBuffer[(K, Long, V)]()
+      rows.foreach { case (_, seq, v) =>
+        if (seq == n) {
+          out += ((key, seq, v))
+          n += 1
+          while (pending.containsKey(n)) {
+            out += ((key, n, pending.getValue(n)))
+            pending.removeKey(n)
+            n += 1
+          }
+        } else if (seq > n) pending.updateValue(seq, v)
+      }
+      next.update(n)
+      if (staleTimeoutMs > 0) {
+        getHandle.listTimers().foreach(getHandle.deleteTimer)
+        getHandle.registerTimer(
+          timers.getCurrentProcessingTimeInMs() + staleTimeoutMs)
+      }
+      out.iterator
+    }
+
+    override def handleExpiredTimer(key: K, timers: TimerValues,
+        expired: ExpiredTimerInfo): Iterator[(K, Long, V)] = {
+      val flushed = pending.iterator().toSeq.sortBy(_._1)
+      if (flushed.isEmpty) {
+        next.clear()
+        Iterator.empty
+      } else {
+        pending.clear()
+        next.update(flushed.last._1 + 1)
+        getHandle.registerTimer(
+          timers.getCurrentProcessingTimeInMs() + staleTimeoutMs)
+        flushed.iterator.map { case (seq, v) => (key, seq, v) }
+      }
+    }
+  }
+
+  /** [[SequenceOrderProcessor]] as an operator: input and output
+    * (key, seq, value). Without a stale timeout the query runs in
+    * TimeMode.None (see [[groupIntoBatchesTws]]). */
+  def orderedBySequence[K: Encoder, V: Encoder](
+      ds: Dataset[(K, Long, V)], staleTimeoutMs: Long = -1L)(
+      implicit outEnc: Encoder[(K, Long, V)]): Dataset[(K, Long, V)] =
+    ds.groupByKey(_._1).transformWithState(
+      new SequenceOrderProcessor[K, V](staleTimeoutMs),
+      if (staleTimeoutMs > 0) TimeMode.ProcessingTime() else TimeMode.None(),
       OutputMode.Append())
 
   /** Multimap GROUP-AND-DRAIN through [[MultimapUserState]]: per user

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** Structured-Streaming operators matching Beam's unbounded-PCollection
   * surface (SURVEY §2.10). Beam's defining feature — one transform graph
@@ -28,7 +27,7 @@ import org.apache.spark.sql.types.StructType
   * (emit once when watermark passes window end) ≡ append output mode;
   * early firings ≡ update mode re-emitting per micro-batch; panes beyond
   * that (accumulating+retracting, per-pane metadata) are out of the
-  * declared surface and handled by [[Stateful]] where needed.
+  * declared surface and handled by [[StatefulV2]] where needed.
   */
 object StreamOps {
 
@@ -39,14 +38,6 @@ object StreamOps {
       lateness: String, keys: Seq[Column], aggs: Seq[Column]): DataFrame = {
     val wm = if (df.isStreaming) df.withWatermark(tsCol, lateness) else df
     wm.groupBy((window(col(tsCol), size) +: keys): _*).agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** Sliding windows: each event contributes to size/slide windows. */
-  def slidingAgg(df: DataFrame, tsCol: String, size: String, slide: String,
-      lateness: String, keys: Seq[Column], aggs: Seq[Column]): DataFrame = {
-    val wm = if (df.isStreaming) df.withWatermark(tsCol, lateness) else df
-    wm.groupBy((window(col(tsCol), size, slide) +: keys): _*)
-      .agg(aggs.head, aggs.tail: _*)
   }
 
   /** PANE-BASED sliding-window aggregation — Beam's own sliding
@@ -324,13 +315,6 @@ object StreamOps {
   def streamStaticJoin(stream: DataFrame, static: DataFrame,
       cond: Column, joinType: String = "inner"): DataFrame =
     stream.join(broadcast(static), cond, joinType)
-
-  /** File-replay source: stream the driver-written parquet through the
-    * file source (Beam TextIO.watchForNewFiles / Watch analog). */
-  def replayParquet(spark: SparkSession, path: String, schema: StructType,
-      filesPerTrigger: Int = 1): DataFrame =
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", filesPerTrigger).parquet(path)
 
   /** Replay the driver's `events` table as a stream: the parquet stores
     * TIMESTAMP(NANOS), which the vectorized reader only surfaces as long

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * LAST ~2000 chars of stdout, so the line must stay under
   * [[Bench.stdoutLineBudget]] (1900; the capture window measured
   * exactly 2000 chars across BENCH_r17–r19) no matter how large the
-  * headline/streaming suites grow — the scalar fields (`value`,
+  * timed/streaming suites grow — the scalar fields (`value`,
   * `cal`, `n_queries`) are what bench_diff's host normalization needs
   * and must never be front-truncated away, and the driver-compared
   * [[Bench.perfAnchors]] must all stay on the line (r19 lost
@@ -25,14 +25,14 @@ class BenchLineSpec extends AnyFunSuite {
     * never leave this guard testing a stale universe (ADVICE r15).
     * Queries ride in main()'s priority order: perfAnchors first. */
   private def realLine(extraStreaming: Seq[String] = Nil): String = {
-    val ordered = (Bench.perfAnchors.filter(Bench.headline.contains) ++
-      Bench.headline).distinct
+    val ordered = (Bench.perfAnchors.filter(Bench.timed.contains) ++
+      Bench.timed).distinct
     val qs = ordered.map(n => n -> 999.99)
     val ss = (StreamingBench.opNames ++ extraStreaming).map(n => n -> 999999.9)
     Bench.stdoutLine(total = 999.999, reps = 3, nQueries = qs.size,
       cal = 99.999, queries = qs, streaming = ss,
       sfDir = "/root/testdata/sf0.1",
-      nAnchors = Bench.perfAnchors.count(Bench.headline.contains))
+      nAnchors = Bench.perfAnchors.count(Bench.timed.contains))
   }
 
   test("stdout line stays under the driver tail-capture budget") {
@@ -45,11 +45,11 @@ class BenchLineSpec extends AnyFunSuite {
   }
 
   test("every driver-compared perfAnchor fits on the line (VERDICT r19 #2)") {
-    // all perfAnchors must be real headline members (a renamed/removed
+    // all perfAnchors must be timed registry queries (a renamed/removed
     // member would silently shrink the guaranteed set)...
-    val missing = Bench.perfAnchors.filterNot(Bench.headline.contains)
+    val missing = Bench.perfAnchors.filterNot(Bench.timed.contains)
     assert(missing.isEmpty,
-      s"perfAnchors not in headline: ${missing.mkString(", ")}")
+      s"perfAnchors not in the timed set: ${missing.mkString(", ")}")
     // ...and at worst-case widths with the FULL streaming suite plus a
     // hypothetical growth row, every anchor must still be printed —
     // streaming growth degrades its own tail rows, never the anchors.
@@ -85,7 +85,7 @@ class BenchLineSpec extends AnyFunSuite {
       assert(node.has(f), s"stdout line missing field $f")
     assert(node.get("value").asDouble() == 999.999)
     assert(node.get("cal").asDouble() == 99.999)
-    assert(node.get("n_queries").asInt() == Bench.headline.size)
+    assert(node.get("n_queries").asInt() == Bench.timed.size)
     // the streaming block is the BASELINE like-for-like side: with
     // today's suite sizes EVERY streaming row must fit (only batch
     // anchors overflow to bench_details.json)

@@ -21,15 +21,15 @@ class RegistrySpec extends SparkSpec {
       s"queries without oracle SQL: ${missing.map(_.name).mkString(", ")}")
   }
 
-  test("every bench headline name resolves to a registry query") {
-    // Bench silently filters unknown names (headline.filter(all.contains))
-    // — a typo would drop a query from BENCH_r{N}.json without any
-    // error. Fail loudly here instead.
-    val known = Registry.all.map(_.name).toSet
-    val unknown = Bench.headline.filterNot(known)
-    assert(unknown.isEmpty, s"headline names not in registry: $unknown")
-    val dupes = Bench.headline.groupBy(identity).filter(_._2.size > 1).keys
-    assert(dupes.isEmpty, s"duplicate headline names: $dupes")
+  test("every Bench.perfAnchors and Bench.calibration name is a timed registry query") {
+    // BenchLineSpec and the stdout line keep only timed anchors, so an
+    // anchor or probe member that stopped being timed (or was renamed)
+    // would drop out without any error. Fail loudly here instead.
+    val timed = Bench.timed.toSet
+    val stray = (Bench.perfAnchors ++ Bench.calibration).filterNot(timed)
+    assert(stray.isEmpty, s"anchor/calibration names not timed: $stray")
+    val dupes = Registry.all.groupBy(_.name).filter(_._2.size > 1).keys
+    assert(dupes.isEmpty, s"duplicate registry names: $dupes")
   }
 
   Registry.all.foreach { q =>

@@ -104,6 +104,18 @@ class ScaleLintSpec extends SparkSpec {
       s"build sessions through graft.Session.local; builder calls:\n${calls.mkString("\n")}")
   }
 
+  test("no flatMapGroupsWithState / mapGroupsWithState call under src/main") {
+    // one per-key state API: transformWithState (streaming/StatefulV2)
+    val calls = mainSources.flatMap { case (p, lines) =>
+      lines.zipWithIndex.collect {
+        case (line, i) if line.contains(".flatMapGroupsWithState(") ||
+            line.contains(".mapGroupsWithState(") => s"$p:${i + 1}"
+      }
+    }
+    assert(calls.isEmpty,
+      s"use StatefulV2 (transformWithState); v1 state calls:\n${calls.mkString("\n")}")
+  }
+
   test("every driver-side collect in main sources declares its bound") {
     // 4th job-killer: .collect()/.head()/.first() materializes to the
     // driver — fine ONLY for provably bounded fit artifacts (a 1-row

@@ -106,6 +106,51 @@ class StatefulV2Spec extends SparkSpec {
     }
   }
 
+  test("orderedBySequence releases buffered out-of-sequence events in order") {
+    withRocksDb {
+      val mem = MemoryStream[(String, Long, String)]
+      val table = freshTable()
+      val q = startMemorySink(StatefulV2.orderedBySequence(mem.toDS()), table)
+      def released(): Seq[Long] =
+        spark.table(table).as[(String, Long, String)].collect().map(_._2).sorted.toSeq
+      mem.addData(("k", 1L, "b"), ("k", 3L, "d")) // 0 missing: all buffered
+      q.processAllAvailable()
+      assert(released().isEmpty)
+      mem.addData(("k", 0L, "a")) // unblocks 0,1 (3 still waits on 2)
+      q.processAllAvailable()
+      assert(released() == Seq(0L, 1L))
+      mem.addData(("k", 2L, "c")) // unblocks 2,3
+      q.processAllAvailable()
+      q.stop()
+      assert(spark.table(table).as[(String, Long, String)].collect().toSet ==
+        Set(("k", 0L, "a"), ("k", 1L, "b"), ("k", 2L, "c"), ("k", 3L, "d")))
+    }
+  }
+
+  test("orderedBySequence flushes a stale gapped key in order, then drops its duplicates") {
+    withRocksDb {
+      val mem = MemoryStream[(String, Long, String)]
+      val table = freshTable()
+      val q = startMemorySink(
+        StatefulV2.orderedBySequence(mem.toDS(), staleTimeoutMs = 2000L), table)
+      def rows(): Seq[(String, Long, String)] =
+        spark.table(table).as[(String, Long, String)].collect().toSeq
+      // seq 1 never arrives: 0 releases at once, 3 and 2 wait on the gap
+      mem.addData(("k", 0L, "a"), ("k", 3L, "d"), ("k", 2L, "c"))
+      awaitSink(table)(rows().size == 3)
+      // the idle timer flushed the waiting events in sequence order
+      assert(rows() == Seq(("k", 0L, "a"), ("k", 2L, "c"), ("k", 3L, "d")))
+      // within the tombstone's idle period (next = 4): a re-sent 3
+      // drops, 4 releases
+      mem.addData(("k", 3L, "dup"), ("k", 4L, "e"))
+      awaitSink(table)(rows().size == 4)
+      Thread.sleep(3000) // past another idle flush: nothing else may land
+      q.stop()
+      assert(rows() ==
+        Seq(("k", 0L, "a"), ("k", 2L, "c"), ("k", 3L, "d"), ("k", 4L, "e")))
+    }
+  }
+
   test("groupIntoBatchesByWeight packs to the budget; oversize emits alone in order") {
     withRocksDb {
       // budget 10: [4,3,2] packs (9 <= 10); the 5 would overflow →

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import graft.streaming.{Stateful, StreamOps}
+import graft.streaming.StreamOps
 
 /** An event in the Nexmark-ish shape of the `events` table. */
 /** Reloadable demo model for the hot-swap spec: score = w · Σ(vec) —
@@ -652,52 +652,6 @@ class StreamingSpec extends SparkSpec {
     runToCompletion(q)
     val got = spark.table(table).collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(got == Set((1L, "alice")))
-  }
-
-  test("groupIntoBatches: batch mode emits size-capped batches + remainder") {
-    val ds = Seq(("k1", 1), ("k1", 2), ("k1", 3), ("k1", 4), ("k1", 5),
-      ("k2", 10)).toDS()
-    val out = Stateful.groupIntoBatches(ds, maxSize = 2)
-      .collect().map { case (k, vs) => (k, vs.sorted) }
-    val k1 = out.filter(_._1 == "k1").map(_._2.size).sorted
-    assert(k1.toSeq == Seq(1, 2, 2), s"k1 batch sizes: ${k1.toSeq}")
-    assert(out.filter(_._1 == "k2").map(_._2).toSeq == Seq(Seq(10)))
-  }
-
-  test("statefulFlatMap keeps running per-key state across micro-batches") {
-    val mem = MemoryStream[(String, Int)]
-    val counted = Stateful.statefulFlatMap[String, Int, Long, (String, Long)](
-      mem.toDS(), 0L,
-      (k, _, s) => { val s2 = s + 1; (s2, Iterator((k, s2))) })
-    val table = freshTable()
-    val q = counted.toDF("key", "running_n").writeStream.format("memory")
-      .queryName(table).outputMode("append").start()
-    mem.addData(("a", 1), ("a", 2), ("b", 1))
-    q.processAllAvailable()
-    mem.addData(("a", 3)) // second micro-batch: state must carry 2 → 3
-    runToCompletion(q)
-    val a = spark.table(table).filter(col("key") === "a")
-      .select("running_n").as[Long].collect().sorted
-    assert(a.toSeq == Seq(1L, 2L, 3L), s"running counts: ${a.toSeq}")
-  }
-
-  test("processInOrder releases buffered out-of-sequence events in order") {
-    val mem = MemoryStream[(String, Long, String)]
-    val ordered = Stateful.processInOrder(mem.toDS())
-    val table = freshTable()
-    val q = ordered.toDF("key", "seq", "v").writeStream.format("memory")
-      .queryName(table).outputMode("append").start()
-    mem.addData(("k", 1L, "b"), ("k", 3L, "d")) // 0 missing: all buffered
-    q.processAllAvailable()
-    assert(spark.table(table).count() == 0)
-    mem.addData(("k", 0L, "a")) // unblocks 0,1 (3 still waits on 2)
-    q.processAllAvailable()
-    assert(spark.table(table).select("seq").as[Long].collect().sorted.toSeq
-      == Seq(0L, 1L))
-    mem.addData(("k", 2L, "c")) // unblocks 2,3
-    runToCompletion(q)
-    assert(spark.table(table).select("seq").as[Long].collect().sorted.toSeq
-      == Seq(0L, 1L, 2L, 3L))
   }
 
   test("watchGrowth polls a growing set and emits each discovery once") {
