@@ -89,7 +89,7 @@ object Bench {
     Seq("lineitem", "orders", "customer", "supplier", "part", "nation",
       "region", "events", "documents", "embeddings").foreach { t =>
       try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case e: Throwable => warmupFailed(t, e) }
+      catch { case e: Throwable => failed(s"warmup $t", e) }
     }
     // plan/codegen warmup at the smallest SF (untimed): Catalyst
     // analysis + Janino compilation of each query's generated code
@@ -97,9 +97,23 @@ object Bench {
     // measures steady-state execution — the quantity that scales.
     names.foreach { name =>
       try all(name)(spark, "/root/testdata/sf0.001").count()
-      catch { case e: Throwable => warmupFailed(name, e) }
+      catch { case e: Throwable => failed(s"warmup $name", e) }
     }
     dropCaches(spark)
+    // One timed rep: wall seconds of the query's count(), or None after
+    // one stderr line naming the failure. Then release the query's
+    // cached/localCheckpointed blocks so storage never accumulates
+    // across the 100+ query session — at a fixed heap that
+    // accumulation evicts into GC thrash and taxes every later shuffle
+    // join. Cleanup is untimed.
+    def timeOnce(name: String): Option[Double] = {
+      val t0 = System.nanoTime()
+      val dt =
+        try { all(name)(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
+        catch { case e: Throwable => failed(name, e); None }
+      dropCaches(spark)
+      dt
+    }
     // Each query is timed `reps` times and the BEST run reported:
     // single-shot timings on this shared-host VM swing 2x+ with
     // neighbor noise, and the minimum is the standard steady-state
@@ -123,16 +137,8 @@ object Bench {
       // read as regression. Collect it at each pass boundary instead.
       System.gc()
       names.foreach { name =>
-        val t0 = System.nanoTime()
-        val ok = try { all(name)(spark, sfDir).count(); true }
-          catch { case _: Throwable => false }
-        val dt = (System.nanoTime() - t0) / 1e9
-        if (ok) best(name) = math.min(best.getOrElse(name, Double.MaxValue), dt)
-        // Release this query's cached/localCheckpointed blocks so
-        // storage never accumulates across the 100+ query session — at
-        // a fixed heap that accumulation evicts into GC thrash and
-        // taxes every later shuffle join. Cleanup is untimed.
-        dropCaches(spark)
+        timeOnce(name).foreach(dt =>
+          best(name) = math.min(best.getOrElse(name, Double.MaxValue), dt))
       }
     }
     val results = names.map(n => n -> best.getOrElse(n, -1.0))
@@ -154,12 +160,8 @@ object Bench {
     val calT0 = System.nanoTime()
     (1 to 3).foreach { _ =>
       calNames.foreach { name =>
-        val t0 = System.nanoTime()
-        val ok = try { all(name)(spark, sfDir).count(); true }
-          catch { case _: Throwable => false }
-        val dt = (System.nanoTime() - t0) / 1e9
-        if (ok) calBest(name) = math.min(calBest.getOrElse(name, Double.MaxValue), dt)
-        dropCaches(spark)
+        timeOnce(name).foreach(dt =>
+          calBest(name) = math.min(calBest.getOrElse(name, Double.MaxValue), dt))
       }
     }
     val calWallSec = (System.nanoTime() - calT0) / 1e9
@@ -233,11 +235,11 @@ object Bench {
       subsetOf = only.map(_ => names.size)))
   }
 
-  /** One stderr line per failed (untimed) warmup step: a broken table
-    * or query must not pass silently. `print`, not a line print: the
-    * metric line is this file's only one (BenchLineSpec). */
-  private def warmupFailed(what: String, e: Throwable): Unit =
-    System.err.print(s"[bench] warmup $what: ${e.getClass.getName}: " +
+  /** One stderr line per failed warmup step or timed rep: a broken
+    * table or query must not pass silently. `print`, not a line print:
+    * the metric line is this file's only one (BenchLineSpec). */
+  private def failed(what: String, e: Throwable): Unit =
+    System.err.print(s"[bench] $what: ${e.getClass.getName}: " +
       Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("") + "\n")
 
   /** Best-effort startup sweep of STALE temp trees from prior bench
@@ -254,14 +256,7 @@ object Bench {
       .filter(f => f.isDirectory && f.lastModified() < cutoff &&
         (f.getName.startsWith("graft_") || f.getName.startsWith("spark-") ||
           f.getName.startsWith("blockmgr-")))
-    stale.foreach { d =>
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(d.toPath).iterator().asScala.toSeq
-          .sortBy(-_.getNameCount)
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: Throwable => () }
-    }
+    stale.foreach(d => graft.tools.ReplayHarness.deleteTree(d.toPath))
   } catch { case _: Throwable => () }
 
   /** Print the metric line as the process's FINAL stdout bytes, then

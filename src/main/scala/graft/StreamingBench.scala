@@ -261,12 +261,7 @@ object StreamingBench {
           } catch { case _: Throwable => () }
           try q.stop() catch { case _: Throwable => () }
         }
-        try {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(ckptDir).iterator().asScala.toSeq
-            .sortBy(-_.getNameCount)
-            .foreach(p => java.nio.file.Files.deleteIfExists(p))
-        } catch { case _: Throwable => () }
+        graft.tools.ReplayHarness.deleteTree(ckptDir)
       }
     } catch { case e: Throwable => failed(name, e) }
 
@@ -511,12 +506,7 @@ object StreamingBench {
             ds.toDF("user_id", "ts", "etype", "value")
           }
         } finally {
-          try {
-            import scala.jdk.CollectionConverters._
-            java.nio.file.Files.walk(outDir).iterator().asScala.toSeq
-              .sortBy(-_.getNameCount)
-              .foreach(p => java.nio.file.Files.deleteIfExists(p))
-          } catch { case _: Throwable => () }
+          graft.tools.ReplayHarness.deleteTree(outDir)
         }
       } catch { case e: Throwable => failed(name, e) }
     }),

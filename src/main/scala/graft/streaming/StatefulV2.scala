@@ -502,71 +502,6 @@ object StatefulV2 {
       if (flushTimeoutMs > 0) TimeMode.ProcessingTime() else TimeMode.None(),
       OutputMode.Append())
 
-  /** Beam's PROCESSING-TIME trigger primitive in the global window —
-    * `Repeatedly.forever(AfterProcessingTime.pastFirstElementInPane()
-    * .plusDelayOf(delay))` (AfterProcessingTime.java:39,
-    * Repeatedly.java:38): each key fires a pane `delayMs` of wall time
-    * after the first element that arrived since the previous firing,
-    * forever. Pane metadata (index) and both accumulation modes match
-    * [[TriggeredWindowProcessor]]; a pane always holds ≥1 new element
-    * (pastFirstElementInPane — an empty interval never fires). */
-  class ProcessingTimePaneProcessor[K, V](delayMs: Long, accumulating: Boolean)(
-      implicit vEnc: Encoder[V])
-      extends StatefulProcessor[K, (K, V), (K, Long, Seq[V])] {
-    require(delayMs > 0, "delayMs must be positive")
-
-    @transient private var buf: ListState[V] = _      // pane contents
-    @transient private var since: ValueState[Long] = _ // new since last fire
-    @transient private var pane: ValueState[Long] = _  // next pane index
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      buf = getHandle.getListState[V]("buf", vEnc, TTLConfig.NONE)
-      since = getHandle.getValueState[Long]("since", Encoders.scalaLong,
-        TTLConfig.NONE)
-      pane = getHandle.getValueState[Long]("pane", Encoders.scalaLong,
-        TTLConfig.NONE)
-    }
-
-    override def handleInputRows(key: K, rows: Iterator[(K, V)],
-        timers: TimerValues): Iterator[(K, Long, Seq[V])] = {
-      var n = if (since.exists()) since.get() else 0L
-      val firstOfPane = n == 0
-      // ONE appendList per batch — see SessionLog.flush
-      val local = scala.collection.mutable.ArrayBuffer[V]()
-      rows.foreach { case (_, v) => local += v; n += 1 }
-      if (local.nonEmpty) buf.appendList(toArr(local))
-      since.update(n)
-      // pastFirstElementInPane: the delay is anchored at the FIRST
-      // element of the pane; later arrivals never push it out
-      if (firstOfPane && n > 0)
-        getHandle.registerTimer(timers.getCurrentProcessingTimeInMs() + delayMs)
-      Iterator.empty
-    }
-
-    override def handleExpiredTimer(key: K, timers: TimerValues,
-        timer: ExpiredTimerInfo): Iterator[(K, Long, Seq[V])] = {
-      val n = if (since.exists()) since.get() else 0L
-      if (n == 0) return Iterator.empty // raced with a concurrent clear
-      val p = if (pane.exists()) pane.get() else 0L
-      val contents = buf.get().toSeq
-      if (!accumulating) buf.clear()
-      since.update(0L)
-      pane.update(p + 1)
-      Iterator((key, p, contents))
-    }
-  }
-
-  /** [[ProcessingTimePaneProcessor]] over a keyed stream: periodic
-    * per-key panes on a wall-clock cadence, independent of event time
-    * — Beam's canonical "emit what you have every N seconds" global-
-    * window trigger. Output: (key, paneIndex, values). */
-  def processingTimePanes[K: Encoder, V: Encoder](
-      ds: Dataset[(K, V)], delayMs: Long, accumulating: Boolean = false)(
-      implicit outEnc: Encoder[(K, Long, Seq[V])]): Dataset[(K, Long, Seq[V])] =
-    ds.groupByKey(_._1).transformWithState(
-      new ProcessingTimePaneProcessor[K, V](delayMs, accumulating),
-      TimeMode.ProcessingTime(), OutputMode.Append())
-
   /** Beam's COMPOSITE trigger language (windowing/AfterFirst.java:41,
     * AfterAll.java:40, AfterPane.java:33, AfterProcessingTime.java:39)
     * as a serializable spec tree, implicitly wrapped in
@@ -626,7 +561,7 @@ object StatefulV2 {
     * (runners/core-java/.../TriggerStateMachineRunner.java) reduced to
     * the repeatable processing-time/count sub-language; watermark
     * (event-time) conditions live in [[TriggeredWindowProcessor]] /
-    * [[MixedTriggerProcessor]]. Output: (key, paneIndex, values). */
+    * [[MixedTriggerWindowProcessor]]. Output: (key, paneIndex, values). */
   class CompositeTriggerProcessor[K, V](spec: TriggerSpec,
       accumulating: Boolean)(implicit vEnc: Encoder[V])
       extends StatefulProcessor[K, (K, V), (K, Long, Seq[V])] {
@@ -747,6 +682,22 @@ object StatefulV2 {
     ds.groupByKey(_._1).transformWithState(
       new CompositeTriggerProcessor[K, V](spec, accumulating),
       TimeMode.ProcessingTime(), OutputMode.Append())
+
+  /** Beam's PROCESSING-TIME trigger primitive in the global window —
+    * `Repeatedly.forever(AfterProcessingTime.pastFirstElementInPane()
+    * .plusDelayOf(delay))` (AfterProcessingTime.java:39,
+    * Repeatedly.java:38): each key fires a pane `delayMs` of wall time
+    * after the first element that arrived since the previous firing,
+    * forever — periodic per-key panes on a wall-clock cadence,
+    * independent of event time (Beam's canonical "emit what you have
+    * every N seconds" global-window trigger). The single-condition
+    * case of [[compositeTriggerPanes]]; a pane always holds ≥1 new
+    * element (an empty interval never fires). Output:
+    * (key, paneIndex, values). */
+  def processingTimePanes[K: Encoder, V: Encoder](
+      ds: Dataset[(K, V)], delayMs: Long, accumulating: Boolean = false)(
+      implicit outEnc: Encoder[(K, Long, Seq[V])]): Dataset[(K, Long, Seq[V])] =
+    compositeTriggerPanes(ds, TriggerSpec.AfterDelay(delayMs), accumulating)
 
   /** Beam Deduplicate (transforms/Deduplicate.java:70) as explicit
     * MapState + TTL: ids expire after `ttl`, so re-arrivals beyond the
@@ -1019,45 +970,11 @@ object StatefulV2 {
     }
   }
 
-  /** Streaming per-key t-digest quantiles — the third mergeable
-    * sketch in the streaming family (with [[HeavyHittersProcessor]]'s
-    * Misra-Gries and native HLL): Beam's TDigestQuantiles
-    * (sdks/java/extensions/sketching/src/main/java/org/apache/beam/
-    * sdk/extensions/sketching/TDigestQuantiles.java:86) as a
-    * `transformWithState` fold over the SAME [[graft.functions.TDigest]]
-    * core the batch aggregates use — one estimator, two execution
-    * modes, so batch and stream agree on the rank-error contract.
-    * State per key is the compressed centroid list (O(compression)
-    * doubles FOREVER, interleaved [mean, weight, …]), one ValueState
-    * put per touched key per batch; each touched key emits a
-    * rev-stamped (rev, n, quantile values at `qs`) snapshot — latest
-    * row per key = max rev, as [[heavyHitters]]. */
-  /** Shared per-key t-digest fold step: rebuild the digest from its
-    * packed [mean, weight, …] state, fold the batch values in,
-    * compact, and persist ONE ValueState put. Returns None when the
-    * batch was empty, else (rev+1, n, packed centroids). The fold is
-    * the load-bearing half of both the quantile-emitting per-key
-    * processor and the sketch-emitting global stage 1 — a single copy
-    * so they can never diverge. */
-  private def tdigestFoldStep(st: ValueState[(Long, Long, Seq[Double])],
-      compression: Double,
-      values: Iterator[Double]): Option[(Long, Long, Seq[Double])] = {
-    val (rev, n0, packed) =
-      if (st.exists()) st.get() else (0L, 0L, Seq.empty[Double])
-    val buf = new graft.functions.TDigest.Buf(compression)
+  /** Add a packed [mean, weight, …] centroid list to `buf`. */
+  private def addPacked(buf: graft.functions.TDigest.Buf,
+      packed: Seq[Double]): Unit = {
     var i = 0
     while (i < packed.length) { buf.add(packed(i), packed(i + 1)); i += 2 }
-    var n = n0
-    values.foreach { v => buf.add(v, 1.0); n += 1 }
-    if (n == n0) return None
-    buf.compact()
-    val out = new Array[Double](2 * buf.n)
-    var j = 0
-    while (j < buf.n) {
-      out(2 * j) = buf.means(j); out(2 * j + 1) = buf.weights(j); j += 1
-    }
-    st.update((rev + 1L, n, out.toSeq))
-    Some((rev + 1L, n, out.toSeq))
   }
 
   /** Quantiles at `qs` off a packed [mean, weight, …] centroid list. */
@@ -1076,10 +993,27 @@ object StatefulV2 {
   private def requireQs(qs: Seq[Double]): Unit =
     require(qs.nonEmpty && qs.forall(q => q >= 0 && q <= 1), s"bad qs: $qs")
 
-  class TDigestProcessor[K](compression: Double, qs: Seq[Double])
+  /** Streaming per-key t-digest quantiles — the third mergeable
+    * sketch in the streaming family (with [[HeavyHittersProcessor]]'s
+    * Misra-Gries and native HLL): Beam's TDigestQuantiles
+    * (sdks/java/extensions/sketching/src/main/java/org/apache/beam/
+    * sdk/extensions/sketching/TDigestQuantiles.java:86) as a
+    * `transformWithState` fold over the SAME [[graft.functions.TDigest]]
+    * core the batch aggregates use — one estimator, two execution
+    * modes, so batch and stream agree on the rank-error contract.
+    * State per key is the compressed centroid list (O(compression)
+    * doubles FOREVER, interleaved [mean, weight, …]), one ValueState
+    * put per touched key per batch; each touched key emits a
+    * rev-stamped (rev, n, quantile values at `qs`) snapshot — latest
+    * row per key = max rev, as [[heavyHitters]].
+    * `readOut` turns the packed centroids into the emitted values:
+    * [[packedQuantiles]] per key, the identity for
+    * [[tdigestQuantilesGlobal]]'s stage 1 (the merge needs the
+    * mergeable digest, not its read-out). */
+  class TDigestProcessor[K](compression: Double,
+      readOut: Seq[Double] => Seq[Double])
       extends StatefulProcessor[K, (K, Double), (K, Long, Long, Seq[Double])] {
     require(compression >= 20, s"compression too small: $compression")
-    requireQs(qs)
 
     @transient private var st: ValueState[(Long, Long, Seq[Double])] = _
 
@@ -1088,92 +1022,36 @@ object StatefulV2 {
         Encoders.product[(Long, Long, Seq[Double])], TTLConfig.NONE)
 
     override def handleInputRows(key: K, rows: Iterator[(K, Double)],
-        timers: TimerValues): Iterator[(K, Long, Long, Seq[Double])] =
-      tdigestFoldStep(st, compression, rows.map(_._2)) match {
-        case None => Iterator.empty
-        case Some((rev, n, packed)) =>
-          Iterator.single((key, rev, n, packedQuantiles(packed, qs)))
+        timers: TimerValues): Iterator[(K, Long, Long, Seq[Double])] = {
+      val (rev, n0, packed) =
+        if (st.exists()) st.get() else (0L, 0L, Seq.empty[Double])
+      val buf = new graft.functions.TDigest.Buf(compression)
+      addPacked(buf, packed)
+      var n = n0
+      rows.foreach { case (_, v) => buf.add(v, 1.0); n += 1 }
+      if (n == n0) return Iterator.empty
+      buf.compact()
+      val out = new Array[Double](2 * buf.n)
+      var j = 0
+      while (j < buf.n) {
+        out(2 * j) = buf.means(j); out(2 * j + 1) = buf.weights(j); j += 1
       }
+      val next = out.toSeq
+      st.update((rev + 1L, n, next))
+      Iterator.single((key, rev + 1L, n, readOut(next)))
+    }
   }
 
   /** [[TDigestProcessor]] over a keyed value stream: per-key
     * rev-stamped quantile snapshots at `qs`. */
   def tdigestQuantiles[K: Encoder](ds: Dataset[(K, Double)],
       compression: Double = 100.0, qs: Seq[Double] = Seq(0.5, 0.95, 0.99))(
-      implicit outEnc: Encoder[(K, Long, Long, Seq[Double])]): Dataset[(K, Long, Long, Seq[Double])] =
+      implicit outEnc: Encoder[(K, Long, Long, Seq[Double])]): Dataset[(K, Long, Long, Seq[Double])] = {
+    requireQs(qs)
     ds.groupByKey(_._1).transformWithState(
-      new TDigestProcessor[K](compression, qs),
+      new TDigestProcessor[K](compression, packedQuantiles(_, qs)),
       // no timers, no TTL → TimeMode.None (see scd2Changes)
       TimeMode.None(), OutputMode.Append())
-
-  /** Stage 1 of [[tdigestQuantilesGlobal]]: [[TDigestProcessor]]'s
-    * fold, but the snapshot carries the packed CENTROIDS (the
-    * mergeable summary) instead of evaluated quantiles — the merge
-    * stage needs the digest, not its read-out. */
-  class TDigestSketchProcessor[K](compression: Double)
-      extends StatefulProcessor[K, (K, Double), (K, Long, Long, Seq[Double])] {
-    require(compression >= 20, s"compression too small: $compression")
-
-    @transient private var st: ValueState[(Long, Long, Seq[Double])] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[(Long, Long, Seq[Double])]("digest",
-        Encoders.product[(Long, Long, Seq[Double])], TTLConfig.NONE)
-
-    override def handleInputRows(key: K, rows: Iterator[(K, Double)],
-        timers: TimerValues): Iterator[(K, Long, Long, Seq[Double])] =
-      tdigestFoldStep(st, compression, rows.map(_._2)) match {
-        case None => Iterator.empty
-        case Some((rev, n, packed)) => Iterator.single((key, rev, n, packed))
-      }
-  }
-
-  /** Second stage of [[tdigestQuantilesGlobal]]: latest packed digest
-    * per shard (MapState, ≤ shards × O(compression) doubles FOREVER),
-    * one centroid-level merge + compact per batch — t-digests are
-    * mergeable, so the union digest keeps the rank-error contract of
-    * the per-shard folds. Emits rev-stamped (rev, n, quantiles). */
-  class GlobalTDigestMergeProcessor(compression: Double, qs: Seq[Double])
-      extends StatefulProcessor[Int, (Long, Long, Long, Seq[Double]), (Long, Long, Seq[Double])] {
-    require(compression >= 20, s"compression too small: $compression")
-    requireQs(qs) // same construction-time contract as the per-key form
-
-    @transient private var perShard: MapState[Long, (Long, Seq[Double])] = _
-    @transient private var rev: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      perShard = getHandle.getMapState[Long, (Long, Seq[Double])](
-        "shardDigest", Encoders.scalaLong,
-        Encoders.product[(Long, Seq[Double])], TTLConfig.NONE)
-      rev = getHandle.getValueState[Long]("rev", Encoders.scalaLong,
-        TTLConfig.NONE)
-    }
-
-    override def handleInputRows(key: Int,
-        rows: Iterator[(Long, Long, Long, Seq[Double])],
-        timers: TimerValues): Iterator[(Long, Long, Seq[Double])] = {
-      val fresh = latestPerShard(rows.map { case (shard, srev, n, packed) =>
-        (shard, srev, (n, packed))
-      })
-      if (fresh.isEmpty) return Iterator.empty
-      fresh.foreach { case (shard, st) => perShard.updateValue(shard, st) }
-      var nSum = 0L
-      val buf = new graft.functions.TDigest.Buf(compression)
-      val it = perShard.iterator()
-      while (it.hasNext) {
-        val (_, (n, packed)) = it.next()
-        nSum += n
-        var i = 0
-        while (i < packed.length) { buf.add(packed(i), packed(i + 1)); i += 2 }
-      }
-      buf.compact()
-      val means = java.util.Arrays.copyOf(buf.means, buf.n)
-      val weights = java.util.Arrays.copyOf(buf.weights, buf.n)
-      val r = (if (rev.exists()) rev.get() else 0L) + 1L
-      rev.update(r)
-      Iterator.single((r, nSum,
-        qs.map(q => graft.functions.TDigest.quantile(means, weights, q))))
-    }
   }
 
   /** GLOBAL (cross-key) streaming t-digest quantiles — Beam's
@@ -1182,25 +1060,39 @@ object StatefulV2 {
     * TDigestQuantiles.java:86) in the same two-stage form as
     * [[heavyHittersGlobal]]: value-hash shards fold per-shard digests
     * in parallel (mergeable, so the partition is free to be anything
-    * deterministic), a one-key stage merges the O(shards) digest
-    * stream. Emits rev-stamped (rev, n, quantile values at `qs`). */
+    * deterministic), then [[mergeShards]] keeps the latest packed
+    * digest per shard (≤ shards × O(compression) doubles FOREVER) and
+    * does one centroid-level merge + compact per batch — the union
+    * digest keeps the rank-error contract of the per-shard folds.
+    * Emits rev-stamped (rev, n, quantile values at `qs`). */
   def tdigestQuantilesGlobal(ds: Dataset[Double],
       compression: Double = 100.0, qs: Seq[Double] = Seq(0.5, 0.95, 0.99),
       shards: Int = 32)(
       implicit outEnc: Encoder[(Long, Long, Seq[Double])]): Dataset[(Long, Long, Seq[Double])] = {
     require(shards >= 1, s"shards must be >= 1, got $shards")
+    requireQs(qs)
     implicit val keyedEnc: Encoder[(Long, Double)] =
       Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble)
     implicit val longEnc: Encoder[Long] = Encoders.scalaLong
     implicit val midEnc: Encoder[(Long, Long, Long, Seq[Double])] =
       Encoders.product[(Long, Long, Long, Seq[Double])]
-    ds.map(v => (shardOf(v, shards), v))
+    implicit val digestEnc: Encoder[(Long, Seq[Double])] =
+      Encoders.product[(Long, Seq[Double])]
+    val digests = ds.map(v => (shardOf(v, shards), v))
       .groupByKey(_._1)
-      .transformWithState(new TDigestSketchProcessor[Long](compression),
+      .transformWithState(new TDigestProcessor[Long](compression, identity),
         TimeMode.None(), OutputMode.Append())
-      .groupByKey(_ => 0)(Encoders.scalaInt)
-      .transformWithState(new GlobalTDigestMergeProcessor(compression, qs),
-        TimeMode.None(), OutputMode.Append())
+      .map { case (shard, srev, n, packed) => (shard, srev, (n, packed)) }(
+        snapshotEnc[(Long, Seq[Double])])
+    mergeShards(digests) { (rev, perShard: Seq[(Long, Seq[Double])]) =>
+      val buf = new graft.functions.TDigest.Buf(compression)
+      perShard.foreach { case (_, packed) => addPacked(buf, packed) }
+      buf.compact()
+      val means = java.util.Arrays.copyOf(buf.means, buf.n)
+      val weights = java.util.Arrays.copyOf(buf.weights, buf.n)
+      (rev, perShard.iterator.map(_._1).sum,
+        qs.map(q => graft.functions.TDigest.quantile(means, weights, q)))
+    }
   }
 
   /** Exact k-sample of the UNION of per-shard uniform reservoirs —
@@ -1255,56 +1147,18 @@ object StatefulV2 {
     out.toSeq
   }
 
-  /** Second stage of [[sampleFixedGlobal]]: latest (n, reservoir) per
-    * shard (MapState, ≤ shards × k values FOREVER), re-merged via
-    * [[mergeReservoirs]] on each emit — the merge is STATELESS given
-    * the shard reservoirs, so every snapshot is an exact uniform
-    * k-sample of everything seen. */
-  class GlobalReservoirMergeProcessor[V](k: Int, seed: Long)(
-      implicit shardEnc: Encoder[(Long, Seq[V])])
-      extends StatefulProcessor[Int, (Long, Long, Long, Seq[V]), (Long, Long, Seq[V])] {
-    require(k >= 1, s"k must be >= 1, got $k")
-
-    @transient private var perShard: MapState[Long, (Long, Seq[V])] = _
-    @transient private var rev: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      perShard = getHandle.getMapState[Long, (Long, Seq[V])](
-        "shardRes", Encoders.scalaLong, shardEnc, TTLConfig.NONE)
-      rev = getHandle.getValueState[Long]("rev", Encoders.scalaLong,
-        TTLConfig.NONE)
-    }
-
-    override def handleInputRows(key: Int,
-        rows: Iterator[(Long, Long, Long, Seq[V])],
-        timers: TimerValues): Iterator[(Long, Long, Seq[V])] = {
-      val fresh = latestPerShard(rows.map { case (shard, srev, n, sample) =>
-        (shard, srev, (n, sample))
-      })
-      if (fresh.isEmpty) return Iterator.empty
-      fresh.foreach { case (shard, st) => perShard.updateValue(shard, st) }
-      val states = scala.collection.mutable.ArrayBuffer[(Long, Seq[V])]()
-      val it = perShard.iterator()
-      while (it.hasNext) {
-        val (_, st) = it.next()
-        states += st
-      }
-      val r = (if (rev.exists()) rev.get() else 0L) + 1L
-      rev.update(r)
-      val nSum = states.iterator.map(_._1).sum
-      Iterator.single((r, nSum, mergeReservoirs(states.toSeq, k, seed, r)))
-    }
-  }
-
   /** GLOBAL (cross-key) streaming fixed-size uniform sample — Beam's
     * Sample.fixedSizeGlobally (sdks/java/core/src/main/java/org/
     * apache/beam/sdk/transforms/Sample.java:47) in the two-stage
     * form: value-hash shards each hold a deterministic Algorithm R
     * reservoir ([[ReservoirProcessor]] — ANY deterministic partition
     * is valid, since hypergeometric merge allocation is exact over
-    * disjoint shard populations), a one-key stage re-merges the
-    * O(shards) reservoir snapshots into an exact uniform k-sample of
-    * the whole stream. Emits rev-stamped (rev, n, sample). */
+    * disjoint shard populations), then [[mergeShards]] keeps the
+    * latest (n, reservoir) per shard (≤ shards × k values FOREVER) and
+    * re-merges them via [[mergeReservoirs]] on each emit. The merge is
+    * STATELESS given the shard reservoirs, so every snapshot is an
+    * exact uniform k-sample of everything seen. Emits rev-stamped
+    * (rev, n, sample). */
   def sampleFixedGlobal[V: Encoder](ds: Dataset[V], k: Int,
       seed: Long = 42L, shards: Int = 32)(
       implicit midEnc: Encoder[(Long, Long, Long, Seq[V])],
@@ -1316,11 +1170,14 @@ object StatefulV2 {
     implicit val keyedEnc: Encoder[(Long, V)] =
       Encoders.tuple(Encoders.scalaLong, implicitly[Encoder[V]])
     implicit val longEnc: Encoder[Long] = Encoders.scalaLong
-    sampleFixedPerKey[Long, V](ds.map(v => (shardOf(v, shards), v)), k,
-        seed)(longEnc, midEnc, stEnc)
-      .groupByKey(_ => 0)(Encoders.scalaInt)
-      .transformWithState(new GlobalReservoirMergeProcessor[V](k, seed),
-        TimeMode.None(), OutputMode.Append())(stEnc)
+    val reservoirs = sampleFixedPerKey[Long, V](
+        ds.map(v => (shardOf(v, shards), v)), k, seed)(longEnc, midEnc, stEnc)
+      .map { case (shard, srev, n, sample) => (shard, srev, (n, sample)) }(
+        snapshotEnc[(Long, Seq[V])])
+    mergeShards(reservoirs) { (rev, perShard: Seq[(Long, Seq[V])]) =>
+      (rev, perShard.iterator.map(_._1).sum,
+        mergeReservoirs(perShard, k, seed, rev))
+    }(shardEnc, stEnc)
   }
 
   /** SplitMix64 finalizer — the deterministic pseudo-random mix behind
@@ -1473,23 +1330,62 @@ object StatefulV2 {
       // no timers, no TTL → TimeMode.None (see scd2Changes)
       TimeMode.None(), OutputMode.Append())
 
-  /** The latest (max-srev) payload per shard from a merge-stage input
-    * batch — the staleness rule every GLOBAL sketch's stage 2 applies
-    * before folding shard snapshots into its MapState (≤ one snapshot
-    * per shard per batch arrives by construction; the max-rev guard is
-    * defensive). One copy so the rev-comparison logic can never
-    * diverge across the merge processors. */
-  private def latestPerShard[S](
-      rows: Iterator[(Long, Long, S)]): scala.collection.mutable.Map[Long, S] = {
-    val revs = scala.collection.mutable.Map[Long, Long]()
-    val out = scala.collection.mutable.Map[Long, S]()
-    rows.foreach { case (shard, srev, payload) =>
-      if (revs.get(shard).forall(_ < srev)) {
-        revs(shard) = srev; out(shard) = payload
-      }
+  /** The merge half of Beam's `Combine.globally(fn).withFanout(n)`
+    * (transforms/Combine.java:88) for the GLOBAL streaming sketches:
+    * stage 1 folds value-hash shards in parallel and emits
+    * rev-stamped `(shard, srev, S)` snapshots; this one-key stage keeps
+    * the latest (max-srev) snapshot per shard in one
+    * `MapState[Long, S]` (only shards that emitted this batch
+    * rewrite), bumps one `rev` ValueState and emits
+    * `merge(rev, allShards)` — one output row per batch that carries a
+    * snapshot, none otherwise. ≤ one snapshot per shard per batch
+    * arrives by construction; the max-srev guard is defensive. A
+    * single-key stage is only safe because its INPUT is O(shards)
+    * summaries per batch, never the event stream. */
+  class ShardMergeProcessor[S, O](merge: (Long, Seq[S]) => O)(
+      implicit sEnc: Encoder[S])
+      extends StatefulProcessor[Int, (Long, Long, S), O] {
+
+    @transient private var perShard: MapState[Long, S] = _
+    @transient private var rev: ValueState[Long] = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+      perShard = getHandle.getMapState[Long, S]("shard", Encoders.scalaLong,
+        sEnc, TTLConfig.NONE)
+      rev = getHandle.getValueState[Long]("rev", Encoders.scalaLong,
+        TTLConfig.NONE)
     }
-    out
+
+    override def handleInputRows(key: Int, rows: Iterator[(Long, Long, S)],
+        timers: TimerValues): Iterator[O] = {
+      val srevs = scala.collection.mutable.Map[Long, Long]()
+      val fresh = scala.collection.mutable.Map[Long, S]()
+      rows.foreach { case (shard, srev, s) =>
+        if (srevs.get(shard).forall(_ < srev)) {
+          srevs(shard) = srev; fresh(shard) = s
+        }
+      }
+      if (fresh.isEmpty) return Iterator.empty
+      fresh.foreach { case (shard, s) => perShard.updateValue(shard, s) }
+      val r = (if (rev.exists()) rev.get() else 0L) + 1L
+      rev.update(r)
+      Iterator.single(merge(r, perShard.iterator().map(_._2).toVector))
+    }
   }
+
+  /** [[ShardMergeProcessor]] over a stage-1 snapshot stream
+    * `(shard, srev, S)`: one rev-stamped `merge(rev, latest S per
+    * shard)` per batch. */
+  private[graft] def mergeShards[S, O](snapshots: Dataset[(Long, Long, S)])(
+      merge: (Long, Seq[S]) => O)(
+      implicit sEnc: Encoder[S], outEnc: Encoder[O]): Dataset[O] =
+    snapshots.groupByKey(_ => 0)(Encoders.scalaInt)
+      .transformWithState(new ShardMergeProcessor[S, O](merge),
+        TimeMode.None(), OutputMode.Append())
+
+  /** Encoder of a [[mergeShards]] input row `(shard, srev, S)`. */
+  private def snapshotEnc[S](implicit sEnc: Encoder[S]): Encoder[(Long, Long, S)] =
+    Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, sEnc)
 
   /** Shard assignment for the GLOBAL sketch forms: the item's own
     * value routes it — hash-sharding by item means an item's ENTIRE
@@ -1500,63 +1396,6 @@ object StatefulV2 {
   private[graft] def shardOf(item: Any, shards: Int): Long =
     Math.floorMod(keyDrawHash(item), shards.toLong)
 
-  /** Second stage of [[heavyHittersGlobal]]: the O(shards)-row
-    * snapshot stream merges under ONE grouping key. State is the
-    * latest Misra-Gries summary per shard (MapState, ≤ `shards`
-    * entries × k counters FOREVER; only shards that emitted this
-    * batch rewrite). Because sharding is BY ITEM, shard summaries
-    * cover disjoint item sets: the global summary is their plain
-    * union, est(x) = its shard's est, and x's true undercount is
-    * bounded by its own shard's err — so the published single bound
-    * `err = max(shard errs)` is valid for every item (tighter than
-    * [[graft.functions.MisraGries.merge]]'s general-case err sum,
-    * which pays for overlapping summaries that cannot arise here),
-    * and coverage holds: true(x) > err ≥ errShard(x) ⇒ x survives in
-    * its shard. Emits one rev-stamped global snapshot per batch:
-    * (rev, n, err, counters) — the FULL union (≤ shards × k entries,
-    * est-descending), never truncated to k: a take(k) here would
-    * silently break the coverage contract when more than k items
-    * exceed err (consumers wanting exactly k take the prefix). */
-  class GlobalHeavyHittersMergeProcessor[I](k: Int)(
-      implicit shardEnc: Encoder[(Long, Long, Seq[(I, Long)])])
-      extends StatefulProcessor[Int, (Long, Long, Long, Long, Seq[(I, Long)]), (Long, Long, Long, Seq[(I, Long)])] {
-    require(k >= 1, s"k must be >= 1, got $k")
-
-    // shard → (n, err, counters); rev in its own slot (one put each)
-    @transient private var perShard: MapState[Long, (Long, Long, Seq[(I, Long)])] = _
-    @transient private var rev: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      perShard = getHandle.getMapState[Long, (Long, Long, Seq[(I, Long)])](
-        "shardMg", Encoders.scalaLong, shardEnc, TTLConfig.NONE)
-      rev = getHandle.getValueState[Long]("rev", Encoders.scalaLong,
-        TTLConfig.NONE)
-    }
-
-    override def handleInputRows(key: Int,
-        rows: Iterator[(Long, Long, Long, Long, Seq[(I, Long)])],
-        timers: TimerValues): Iterator[(Long, Long, Long, Seq[(I, Long)])] = {
-      val fresh = latestPerShard(rows.map { case (shard, srev, n, err, cs) =>
-        (shard, srev, (n, err, cs))
-      })
-      if (fresh.isEmpty) return Iterator.empty
-      fresh.foreach { case (shard, st) => perShard.updateValue(shard, st) }
-      // merge the full shard set (O(shards × k) — small by contract)
-      var nSum = 0L; var errMax = 0L
-      val union = scala.collection.mutable.ArrayBuffer[(I, Long)]()
-      val it = perShard.iterator()
-      while (it.hasNext) {
-        val (_, (n, err, counters)) = it.next()
-        nSum += n; errMax = math.max(errMax, err)
-        union ++= counters
-      }
-      val r = (if (rev.exists()) rev.get() else 0L) + 1L
-      rev.update(r)
-      Iterator.single((r, nSum, errMax,
-        union.sortBy { case (_, c) => -c }.toSeq))
-    }
-  }
-
   /** GLOBAL (cross-key) streaming heavy hitters — Beam's
     * SketchFrequencies / Top.largest over the whole stream
     * (sdks/java/extensions/sketching/src/main/java/org/apache/beam/
@@ -1564,15 +1403,25 @@ object StatefulV2 {
     * scale-safe two-stage form: stage 1 shards BY ITEM VALUE
     * (hash(item) % shards — parallel across the cluster, O(k) state
     * per shard) and runs the per-key [[HeavyHittersProcessor]]; stage
-    * 2 merges the O(shards)-row snapshot stream under one key
-    * ([[GlobalHeavyHittersMergeProcessor]] — a single-key stage is
-    * only safe because its INPUT is summaries, never the event
-    * stream). Emits rev-stamped global snapshots
-    * (rev, n, err, counters est-descending, ≤ shards × k entries):
-    * est ≤ true ≤ est + err deterministic, and EVERY item with true
-    * count > err is present (which is why the list is not truncated
-    * to k). Input: (item, weight); non-positive weights would void
-    * the bounds and are rejected by the per-shard stage. */
+    * 2 ([[mergeShards]]) keeps the latest Misra-Gries summary per
+    * shard (≤ `shards` entries × k counters FOREVER) and merges them.
+    * Because sharding is BY ITEM, shard summaries cover disjoint item
+    * sets: the global summary is their plain union, est(x) = its
+    * shard's est, and x's true undercount is bounded by its own
+    * shard's err — so the published single bound `err = max(shard
+    * errs)` is valid for every item (tighter than
+    * [[graft.functions.MisraGries.merge]]'s general-case err sum,
+    * which pays for overlapping summaries that cannot arise here),
+    * and coverage holds: true(x) > err ≥ errShard(x) ⇒ x survives in
+    * its shard. Emits rev-stamped global snapshots
+    * (rev, n, err, counters est-descending): est ≤ true ≤ est + err
+    * deterministic, and EVERY item with true count > err is present.
+    * The list is the FULL union (≤ shards × k entries), never
+    * truncated to k: a take(k) would silently break the coverage
+    * contract when more than k items exceed err (consumers wanting
+    * exactly k take the prefix). Input: (item, weight); non-positive
+    * weights would void the bounds and are rejected by the per-shard
+    * stage. */
   def heavyHittersGlobal[I: Encoder](ds: Dataset[(I, Long)], k: Int,
       shards: Int = 32)(
       implicit midEnc: Encoder[(Long, Long, Long, Long, Seq[(I, Long)])],
@@ -1584,10 +1433,14 @@ object StatefulV2 {
         Encoders.scalaLong)
     implicit val longEnc: Encoder[Long] = Encoders.scalaLong
     val sharded = ds.map { case (i, w) => (shardOf(i, shards), i, w) }
-    heavyHitters[Long, I](sharded, k)
-      .groupByKey(_ => 0)(Encoders.scalaInt)
-      .transformWithState(new GlobalHeavyHittersMergeProcessor[I](k),
-        TimeMode.None(), OutputMode.Append())
+    val summaries = heavyHitters[Long, I](sharded, k)
+      .map { case (shard, srev, n, err, cs) => (shard, srev, (n, err, cs)) }(
+        snapshotEnc(shardEnc))
+    mergeShards(summaries) { (rev, perShard: Seq[(Long, Long, Seq[(I, Long)])]) =>
+      (rev, perShard.iterator.map(_._1).sum,
+        perShard.iterator.map(_._2).foldLeft(0L)(math.max),
+        perShard.flatMap(_._3).sortBy { case (_, c) => -c })
+    }
   }
 
   /** Streaming per-key top-K by comparator — Beam's Top.perKey
@@ -1650,60 +1503,19 @@ object StatefulV2 {
       // no timers, no TTL → TimeMode.None (see scd2Changes)
       TimeMode.None(), OutputMode.Append())
 
-  /** Second stage of [[topKGlobal]]: latest (n, top-k) per shard
-    * (MapState, ≤ shards × k values FOREVER), re-merged on each emit
-    * as union → sort desc → take k. The merge is STATELESS given the
-    * shard snapshots and top-k is a mergeable fold, so every emitted
-    * snapshot is the EXACT global top-k of everything seen: any
-    * element of the true global top-k is, a fortiori, in the top-k of
-    * whichever shard it landed in. */
-  class GlobalTopKMergeProcessor[V](k: Int, ord: Ordering[V])(
-      implicit shardEnc: Encoder[(Long, Seq[V])])
-      extends StatefulProcessor[Int, (Long, Long, Long, Seq[V]), (Long, Long, Seq[V])] {
-    require(k >= 1, s"k must be >= 1, got $k")
-
-    @transient private var perShard: MapState[Long, (Long, Seq[V])] = _
-    @transient private var rev: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      perShard = getHandle.getMapState[Long, (Long, Seq[V])](
-        "shardTop", Encoders.scalaLong, shardEnc, TTLConfig.NONE)
-      rev = getHandle.getValueState[Long]("rev", Encoders.scalaLong,
-        TTLConfig.NONE)
-    }
-
-    override def handleInputRows(key: Int,
-        rows: Iterator[(Long, Long, Long, Seq[V])],
-        timers: TimerValues): Iterator[(Long, Long, Seq[V])] = {
-      val fresh = latestPerShard(rows.map { case (shard, srev, n, top) =>
-        (shard, srev, (n, top))
-      })
-      if (fresh.isEmpty) return Iterator.empty
-      fresh.foreach { case (shard, st) => perShard.updateValue(shard, st) }
-      var nSum = 0L
-      val union = scala.collection.mutable.ArrayBuffer[V]()
-      val it = perShard.iterator()
-      while (it.hasNext) {
-        val (_, (n, top)) = it.next()
-        nSum += n
-        union ++= top
-      }
-      val r = (if (rev.exists()) rev.get() else 0L) + 1L
-      rev.update(r)
-      Iterator.single((r, nSum, union.sorted(ord.reverse).take(k).toSeq))
-    }
-  }
-
   /** GLOBAL (cross-key) streaming top-K by comparator — Beam's
     * Top.of/largest/smallest on unbounded input (sdks/java/core/src/
     * main/java/org/apache/beam/sdk/transforms/Top.java:58) in the same
     * two-stage form as [[heavyHittersGlobal]]: value-hash shards each
     * keep a bounded k-heap in parallel (unlike the heavy-hitter
     * summaries, top-k is mergeable under ANY partition — hashing is
-    * purely for balance), then a one-key stage re-merges the
-    * O(shards × k) snapshot stream. Emits rev-stamped (rev, n, topK
-    * descending) — EXACT, not approximate: each element survives in
-    * its own shard iff it can survive globally. */
+    * purely for balance), then [[mergeShards]] keeps the latest
+    * (n, top-k) per shard (≤ shards × k values FOREVER) and re-merges
+    * them on each emit as union → sort desc → take k. Emits
+    * rev-stamped (rev, n, topK descending) — EXACT, not approximate:
+    * the merge is stateless given the shard snapshots, and any element
+    * of the true global top-k is, a fortiori, in the top-k of
+    * whichever shard it landed in. */
   def topKGlobal[V: Encoder](ds: Dataset[V], k: Int, shards: Int = 32)(
       implicit ord: Ordering[V],
       midEnc: Encoder[(Long, Long, Long, Seq[V])],
@@ -1716,64 +1528,28 @@ object StatefulV2 {
     // outEnc doubles as the packed-state encoder (same
     // (Long, Long, Seq[V]) shape) — passed explicitly to avoid
     // same-type implicit ambiguity
-    topKPerKey[Long, V](ds.map(v => (shardOf(v, shards), v)), k)(
+    val tops = topKPerKey[Long, V](ds.map(v => (shardOf(v, shards), v)), k)(
         implicitly[Encoder[Long]], ord, midEnc, outEnc)
-      .groupByKey(_ => 0)(Encoders.scalaInt)
-      .transformWithState(new GlobalTopKMergeProcessor[V](k, ord),
-        TimeMode.None(), OutputMode.Append())(outEnc)
-  }
-
-  /** Second stage of [[approxDistinctGlobal]]: latest HLL sketch bytes
-    * per shard (MapState, ≤ `shards` compact images FOREVER), one
-    * DataSketches union over the shard set per batch. Item-value
-    * sharding makes shard item sets disjoint, but HLL union is exact
-    * under ANY overlap — the bound is the plain union-sketch rsd. */
-  class GlobalApproxDistinctMergeProcessor(lgK: Int)
-      extends StatefulProcessor[Int, (Long, Long, Long, Long, Array[Byte]), (Long, Long, Long, Array[Byte])] {
-
-    @transient private var perShard: MapState[Long, (Long, Array[Byte])] = _
-    @transient private var rev: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      perShard = getHandle.getMapState[Long, (Long, Array[Byte])](
-        "shardHll", Encoders.scalaLong,
-        Encoders.tuple(Encoders.scalaLong, Encoders.BINARY), TTLConfig.NONE)
-      rev = getHandle.getValueState[Long]("rev", Encoders.scalaLong,
-        TTLConfig.NONE)
-    }
-
-    override def handleInputRows(key: Int,
-        rows: Iterator[(Long, Long, Long, Long, Array[Byte])],
-        timers: TimerValues): Iterator[(Long, Long, Long, Array[Byte])] = {
-      val fresh = latestPerShard(rows.map { case (shard, srev, n, _, bytes) =>
-        (shard, srev, (n, bytes))
-      })
-      if (fresh.isEmpty) return Iterator.empty
-      fresh.foreach { case (shard, st) => perShard.updateValue(shard, st) }
-      var nSum = 0L
-      val union = new org.apache.datasketches.hll.Union(lgK)
-      val it = perShard.iterator()
-      while (it.hasNext) {
-        val (_, (n, bytes)) = it.next()
-        nSum += n
-        union.update(org.apache.datasketches.hll.HllSketch.heapify(bytes))
-      }
-      val sk = union.getResult
-      val r = (if (rev.exists()) rev.get() else 0L) + 1L
-      rev.update(r)
-      Iterator.single((r, nSum, Math.round(sk.getEstimate),
-        sk.toCompactByteArray))
-    }
+      .map { case (shard, srev, n, top) => (shard, srev, (n, top)) }(
+        snapshotEnc(shardEnc))
+    mergeShards(tops) { (rev, perShard: Seq[(Long, Seq[V])]) =>
+      (rev, perShard.iterator.map(_._1).sum,
+        perShard.flatMap(_._2).sorted(ord.reverse).take(k))
+    }(shardEnc, outEnc)
   }
 
   /** GLOBAL (cross-key) streaming approximate distinct count — Beam's
     * ApproximateUnique.globally (sdks/java/core/src/main/java/org/
     * apache/beam/sdk/transforms/ApproximateUnique.java:82) in the same
     * two-stage form as [[heavyHittersGlobal]]: per-shard
-    * [[ApproxDistinctProcessor]] HLLs, then a one-key DataSketches
-    * union over the O(shards) snapshot stream. Emits rev-stamped
-    * (rev, n, estimate, union sketch bytes) — the bytes compose with
-    * the native hll_* SQL functions exactly like the per-key form. */
+    * [[ApproxDistinctProcessor]] HLLs, then [[mergeShards]] keeps the
+    * latest sketch bytes per shard (≤ `shards` compact images FOREVER)
+    * and runs one DataSketches union over them per batch. Item-value
+    * sharding makes shard item sets disjoint, but HLL union is exact
+    * under ANY overlap — the bound is the plain union-sketch rsd.
+    * Emits rev-stamped (rev, n, estimate, union sketch bytes) — the
+    * bytes compose with the native hll_* SQL functions exactly like
+    * the per-key form. */
   def approxDistinctGlobal(ds: Dataset[String], lgK: Int = 12,
       shards: Int = 32)(
       implicit outEnc: Encoder[(Long, Long, Long, Array[Byte])]): Dataset[(Long, Long, Long, Array[Byte])] = {
@@ -1784,12 +1560,22 @@ object StatefulV2 {
       Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
         Encoders.scalaLong, Encoders.scalaLong, Encoders.BINARY)
     implicit val longEnc: Encoder[Long] = Encoders.scalaLong
+    implicit val sketchEnc: Encoder[(Long, Array[Byte])] =
+      Encoders.tuple(Encoders.scalaLong, Encoders.BINARY)
     val sharded = ds.filter((i: String) => i != null)
       .map(i => (shardOf(i, shards), i))
-    approxDistinct[Long](sharded, lgK)
-      .groupByKey(_ => 0)(Encoders.scalaInt)
-      .transformWithState(new GlobalApproxDistinctMergeProcessor(lgK),
-        TimeMode.None(), OutputMode.Append())
+    val sketches = approxDistinct[Long](sharded, lgK)
+      .map { case (shard, srev, n, _, bytes) => (shard, srev, (n, bytes)) }(
+        snapshotEnc[(Long, Array[Byte])])
+    mergeShards(sketches) { (rev, perShard: Seq[(Long, Array[Byte])]) =>
+      val union = new org.apache.datasketches.hll.Union(lgK)
+      perShard.foreach { case (_, bytes) =>
+        union.update(org.apache.datasketches.hll.HllSketch.heapify(bytes))
+      }
+      val sk = union.getResult
+      (rev, perShard.iterator.map(_._1).sum, Math.round(sk.getEstimate),
+        sk.toCompactByteArray)
+    }
   }
 
   /** Streaming per-key z-score anomaly detection — the continuous

@@ -18,10 +18,16 @@ object Explain {
       val df = all(n)(spark, sfDir)
       // executeCollect() drives df's OWN AdaptiveSparkPlanExec to its
       // final form (a separate count()/write action plans a different
-      // query execution and leaves this one isFinalPlan=false)
+      // query execution and leaves this one isFinalPlan=false); a
+      // failed execution leaves the pre-execution plan, so say so
       if (exec) {
         try df.queryExecution.executedPlan.executeCollect()
-        catch { case _: Throwable => () }
+        catch {
+          case e: Throwable =>
+            System.err.println(s"[explain] $n: ${e.getClass.getName}: " +
+              Option(e.getMessage).flatMap(_.linesIterator.nextOption())
+                .getOrElse("") + " (plan below is pre-execution)")
+        }
       }
       df.explain("formatted")
     }

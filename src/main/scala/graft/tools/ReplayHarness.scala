@@ -48,14 +48,19 @@ object ReplayHarness {
     } finally {
       if (q != null) { try q.stop() catch { case _: Throwable => () } }
       // RocksDB checkpoint trees accumulate across runs otherwise
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(ckptDir).iterator().asScala.toSeq
-          .sortBy(-_.getNameCount)
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: Throwable => () }
+      deleteTree(ckptDir)
     }
   }
+
+  /** Best-effort delete of the tree under `root`, deepest paths first:
+    * checkpoint, sink and stale temp-dir teardown. */
+  def deleteTree(root: java.nio.file.Path): Unit =
+    try {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(root).iterator().asScala.toSeq
+        .sortBy(-_.getNameCount)
+        .foreach(p => java.nio.file.Files.deleteIfExists(p))
+    } catch { case _: Throwable => () }
 
   /** durationMs lookup that tolerates absent keys (planning-only
     * batches) — the same helper all three call sites re-declared. */

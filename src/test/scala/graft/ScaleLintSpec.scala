@@ -116,6 +116,20 @@ class ScaleLintSpec extends SparkSpec {
       s"use StatefulV2 (transformWithState); v1 state calls:\n${calls.mkString("\n")}")
   }
 
+  test("at most one groupByKey(_ => 0) under src/main: the shard-merge stage") {
+    // a one-key stage funnels its whole input through one task; only
+    // StatefulV2.mergeShards may, because its input is O(shards)
+    // summaries per batch, never the event stream
+    val calls = mainSources.flatMap { case (p, lines) =>
+      lines.zipWithIndex.collect {
+        case (line, i) if line.contains("groupByKey(_ => 0)") => s"$p:${i + 1}"
+      }
+    }
+    assert(calls.size <= 1,
+      s"merge global summaries through StatefulV2.mergeShards; one-key " +
+        s"groupByKey calls:\n${calls.mkString("\n")}")
+  }
+
   test("every driver-side collect in main sources declares its bound") {
     // 4th job-killer: .collect()/.head()/.first() materializes to the
     // driver — fine ONLY for provably bounded fit artifacts (a 1-row

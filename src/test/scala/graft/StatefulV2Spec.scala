@@ -277,6 +277,31 @@ class StatefulV2Spec extends SparkSpec {
     }
   }
 
+  test("compositeTriggerPanes AfterFirst(count, delay): a count pane mid-batch, then a delay pane") {
+    withRocksDb {
+      import StatefulV2.TriggerSpec._
+      val mem = MemoryStream[(Long, String)]
+      val panes = StatefulV2.compositeTriggerPanes(mem.toDS(),
+        AfterFirst(AfterCount(3), AfterDelay(300L)))
+      val table = freshTable()
+      val q = startMemorySink(panes, table)
+      def got = spark.table(table).as[(Long, Long, Seq[String])].collect()
+        .sortBy(_._2).toSeq
+      // one batch of 5: the count condition fires pane 0 with 3 of them
+      // on the element path (a delay pane would carry all 5), the delay
+      // fires pane 1 with the other 2
+      mem.addData((1L, "a"), (1L, "b"), (1L, "c"), (1L, "d"), (1L, "e"))
+      awaitSink(table)(got.size >= 2)
+      assert(got.map(p => (p._1, p._2, p._3.size)) == Seq((1L, 0L, 3), (1L, 1L, 2)),
+        s"panes: $got")
+      assert(got.flatMap(_._3).sorted == Seq("a", "b", "c", "d", "e"))
+      // the tree reset with nothing new: no further pane
+      Thread.sleep(1000)
+      assert(got.size == 2, s"panes: $got")
+      q.stop()
+    }
+  }
+
   test("event-time timer fires when the watermark passes last event + gap") {
     withRocksDb {
       val mem = MemoryStream[(Long, java.sql.Timestamp, String)]
@@ -1982,6 +2007,34 @@ class StatefulV2Spec extends SparkSpec {
       val Seq(q50, q95) = last._4
       assert(math.abs(rankOf(q50) - 0.5) <= 0.02, s"q50=$q50 rank=${rankOf(q50)}")
       assert(math.abs(rankOf(q95) - 0.95) <= 0.02, s"q95=$q95 rank=${rankOf(q95)}")
+    }
+  }
+
+  test("mergeShards: max srev per shard wins, stored shards re-merge, rev counts batches") {
+    withRocksDb {
+      // (shard, srev, payload) snapshots merged by a plain sum
+      val mem = MemoryStream[(Long, Long, Long)]
+      val table = freshTable()
+      val q = startMemorySink(
+        StatefulV2.mergeShards(mem.toDS()) { (rev, xs: Seq[Long]) => (rev, xs.sum) },
+        table)
+      def got = spark.table(table).as[(Long, Long)].collect().sortBy(_._1).toSeq
+      // shard 0's newer snapshot arrives last, shard 1's first: the
+      // higher srev wins either way
+      mem.addData((0L, 1L, 10L), (0L, 2L, 20L), (1L, 5L, 7L), (1L, 4L, 100L))
+      q.processAllAvailable()
+      assert(got == Seq((1L, 27L)))
+      // a batch touching only shard 2 still merges the stored 0 and 1
+      mem.addData((2L, 1L, 1000L))
+      q.processAllAvailable()
+      assert(got == Seq((1L, 27L), (2L, 1027L)))
+      // an empty batch runs and emits nothing
+      val lastBatch = q.lastProgress.batchId
+      mem.addData(Seq.empty[(Long, Long, Long)]: _*)
+      q.processAllAvailable()
+      assert(q.lastProgress.batchId > lastBatch && q.lastProgress.numInputRows == 0)
+      assert(got == Seq((1L, 27L), (2L, 1027L)))
+      q.stop()
     }
   }
 
