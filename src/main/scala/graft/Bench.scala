@@ -188,7 +188,8 @@ object Bench {
       if (sys.env.getOrElse("SPARK_GRAFT_STREAMING", "1") == "0") Seq.empty
       else
         try StreamingBench.run(spark, sfDir)
-        catch { case _: Throwable =>
+        catch { case e: Throwable =>
+          failed("streaming_suite", e)
           // -1 sentinels, NOT zeros: an all-zeros breakdown is
           // indistinguishable from "ran with zero state traffic"
           Seq(("streaming_suite", -1.0, StreamingBench.failedBreakdown)) }
@@ -209,11 +210,11 @@ object Bench {
     val fullLine =
       s"""{"metric":"total","value":${num("%.3f", total)},"unit":"sec","reps":$reps,"queries":$full,"calibration":$calJson,"streaming":$streamingJson,"streaming_breakdown":$streamingBreakdownJson,"sf":"${jsonPath(sfDir)}"}"""
     // best-effort: never let a read-only/foreign cwd kill the stdout
-    // line the driver parses
+    // line the driver parses — but say on stderr that the file is stale
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("bench_details.json"),
       (fullLine + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () }
+    catch { case e: Throwable => failed("bench_details.json write", e) }
     // The ONE stdout JSON line carries the total plus as many per-query
     // entries as fit under the tail window, highest-signal first:
     // BASELINE.md Nexmark anchors, then the TPC-H suite, then the

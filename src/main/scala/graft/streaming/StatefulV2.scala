@@ -560,8 +560,9 @@ object StatefulV2 {
     * the `ReduceFnRunner`+`TriggerStateMachine` pair of the reference
     * (runners/core-java/.../TriggerStateMachineRunner.java) reduced to
     * the repeatable processing-time/count sub-language; watermark
-    * (event-time) conditions live in [[TriggeredWindowProcessor]] /
-    * [[MixedTriggerWindowProcessor]]. Output: (key, paneIndex, values). */
+    * (event-time) conditions live in the windowed [[PaneProcessor]]s,
+    * [[TriggeredSessionProcessor]] / [[MixedTriggerSessionProcessor]].
+    * Output: (key, paneIndex, values). */
   class CompositeTriggerProcessor[K, V](spec: TriggerSpec,
       accumulating: Boolean)(implicit vEnc: Encoder[V])
       extends StatefulProcessor[K, (K, V), (K, Long, Seq[V])] {
@@ -840,34 +841,6 @@ object StatefulV2 {
         Iterator.single((key, rev + 1L, after._1, after._2, after._3))
       } else Iterator.empty
     }
-  }
-
-  /** Insert one timestamp into sorted disjoint gap-cluster intervals
-    * (pure; property-tested against naive re-clustering in
-    * RandomizedSpec): extends a neighbor within `gapMs`, merges the
-    * two it bridges, or opens a new singleton — the same gap-connected
-    * components a full re-sort produces, maintained incrementally in
-    * O(log clusters) (+ O(clusters) on the rare structural patch). */
-  private[graft] def insertCluster(cs: Vector[(Long, Long)], ts: Long,
-      gapMs: Long): Vector[(Long, Long)] = {
-    // idx = first cluster with min > ts
-    var lo = 0; var hi = cs.length
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      if (cs(mid)._1 <= ts) lo = mid + 1 else hi = mid
-    }
-    val pred = lo - 1 // cluster with min <= ts, if any
-    if (pred >= 0 && ts <= cs(pred)._2) return cs // inside an interval
-    val joinsPred = pred >= 0 && ts <= cs(pred)._2 + gapMs
-    val joinsSucc = lo < cs.length && cs(lo)._1 - ts <= gapMs
-    if (joinsPred && joinsSucc)
-      cs.patch(pred, Seq((cs(pred)._1, cs(lo)._2)), 2)
-    else if (joinsPred)
-      cs.updated(pred, (cs(pred)._1, math.max(cs(pred)._2, ts)))
-    else if (joinsSucc)
-      cs.updated(lo, (ts, cs(lo)._2))
-    else
-      cs.patch(lo, Seq((ts, ts)), 0)
   }
 
   /** One funnel slot transition (pure; property-tested against the
@@ -1662,218 +1635,43 @@ object StatefulV2 {
       // no timers, no TTL → TimeMode.None (see scd2Changes)
       TimeMode.None(), OutputMode.Append())
 
-  /** Beam's event-time timer (`@TimerId` in TimeDomain.EVENT_TIME — the
-    * domain Beam windows/GC run on): buffer values per key, register a
-    * timer at (max seen event time + gapMs), re-arming as later events
-    * arrive; when the WATERMARK passes the timer, flush the buffer as
-    * one batch. This is ReduceFnRunner's end-of-window firing rebuilt
-    * on transformWithState — a custom session-ish window with the
-    * default (AfterWatermark.pastEndOfWindow) trigger.
-    *
-    * Input (key, eventTime, value); output = `flushFn(key, values)` per
-    * flushed session, values in event-time order ((key, values)
-    * identity for the plain flush).
-    *
-    * Sessions are EVENT-TIME clusters, not arrival-time ones: rows
-    * sorted by event time split wherever the next row starts more than
-    * `gapMs` past the cluster's max — so an event arriving (in
-    * processing time) before an older session's timer fires, but
-    * carrying an event time a full gap later, opens a NEW session
-    * instead of silently extending the old one. ONE timer chain per
-    * key aims at the earliest pending close; a chain timer whose
-    * cluster merged away or extended (a late within-watermark row
-    * bridged two clusters) fires as a no-op and re-arms. */
-  class EventTimeGapProcessor[K, V, O](gapMs: Long,
-      flushFn: (K, Seq[V]) => Iterator[O])(implicit vEnc: Encoder[V])
-      extends StatefulProcessor[K, (K, java.sql.Timestamp, V), O] {
-
-    // State layout (r13, the [[SessionLog]] design applied here): the
-    // row log is APPEND-ONLY (pos, ts, value) — a flush no longer
-    // clears+rewrites the surviving buffer (the r12 breakdown's last
-    // ~6x-per-event write amplifier); flushed rows die LAZILY behind a
-    // (pos, cutTs) fence and the one O(log) rewrite runs when dead
-    // rows reach half the log (amortized O(1)/append). All scalar and
-    // small-vector bookkeeping — next position, row/garbage counts,
-    // the sorted disjoint cluster summaries, the fences — packs into
-    // ONE ValueState row, so a batch writes one meta put per key
-    // instead of the old sums clear + per-cluster re-appends. Timers
-    // collapse from one-per-cluster-end (the old `armed` ListState,
-    // rewritten on prune) to ONE chain per key aimed at the earliest
-    // pending close; a chain timer left early by a since-extended
-    // cluster fires as a cheap no-op and re-arms.
-    //   meta = (nextPos, total, garbage, clusters, fences)
-    //     clusters: (minTs, maxTs) sorted, pairwise > gapMs apart
-    //     fences:   (fencePos, cutTs) — a row (pos, ts) is dead iff
-    //               some fence has pos < fencePos && ts <= cutTs (the
-    //               pos guard keeps a LATE row landing under an old
-    //               cut alive; it reflushes as its own session)
-    private type Meta =
-      (Long, Long, Long, Seq[(Long, Long)], Seq[(Long, Long)])
-
-    @transient private var log: ListState[(Long, Long, V)] = _
-    @transient private var meta: ValueState[Meta] = _
-    @transient private var nextTimer: ValueState[Long] = _
-    // The pre-r13 "buf" ((ts, value), no positions) migration shim was
-    // retired in r14 once no pre-r13 checkpoint could survive a round
-    // boundary — dropping the variable relies on removed-state-tolerant
-    // restore, the same contract the r11 sessions→sessions2 rename
-    // shipped on (see SCALE.md's state-evolution playbook).
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      log = getHandle.getListState[(Long, Long, V)]("log",
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, vEnc),
-        TTLConfig.NONE)
-      meta = getHandle.getValueState[Meta]("gapMeta",
-        Encoders.product[Meta], TTLConfig.NONE)
-      nextTimer = getHandle.getValueState[Long]("nextTimer",
-        Encoders.scalaLong, TTLConfig.NONE)
-    }
-
-    private def insert(cs: Vector[(Long, Long)], ts: Long): Vector[(Long, Long)] =
-      insertCluster(cs, ts, gapMs)
-
-    private def loadMeta(): Meta =
-      if (meta.exists()) meta.get() else (0L, 0L, 0L, Nil, Nil)
-
-    /** Dead iff flushed behind some fence: appended before it
-      * (pos < fencePos) at or below its cut. */
-    private def live(pos: Long, ts: Long, fences: Seq[(Long, Long)]): Boolean =
-      !fences.exists { case (fp, fc) => pos < fp && ts <= fc }
-
-    /** Add a flush fence, dropping the ones it dominates (covers both
-      * coordinates) — with in-order data every flush's fence dominates
-      * all before it, so the list stays at ONE entry; only a late row
-      * reflushed under an old cut leaves an extra behind (pruned at
-      * the next dominating flush or compaction). */
-    private def addFence(fences: Seq[(Long, Long)],
-        fp: Long, fc: Long): Seq[(Long, Long)] =
-      fences.filterNot { case (p, c) => p <= fp && c <= fc } :+ ((fp, fc))
-
-    /** Re-aim the key's single timer chain at the earliest pending
-      * close (first cluster's max + gap — ends increase across the
-      * sorted disjoint clusters). Only ever moves EARLIER: a chain
-      * timer left early by a since-extended cluster fires as a no-op
-      * and re-arms here, avoiding a delete+register write per batch on
-      * a steadily growing session. `consumed` = the expiry of the
-      * timer this invocation is firing for, already spent. */
-    private def armChain(cs: Vector[(Long, Long)], consumed: Long = 0L): Unit = {
-      val have0 = if (nextTimer.exists()) nextTimer.get() else 0L
-      val have = if (have0 == consumed) 0L else have0
-      if (cs.isEmpty) {
-        if (have != 0L) getHandle.deleteTimer(have)
-        if (have0 != 0L) nextTimer.clear()
-        return
-      }
-      val need = cs.head._2 + gapMs
-      if (have == 0L || need < have) {
-        if (have != 0L) getHandle.deleteTimer(have)
-        getHandle.registerTimer(need)
-        nextTimer.update(need)
-      }
-    }
-
-    override def handleInputRows(key: K,
-        rows: Iterator[(K, java.sql.Timestamp, V)],
-        timers: TimerValues): Iterator[O] = {
-      var (nextPos, total, garbage, cs0, fences) = loadMeta()
-      var cs = cs0.toVector
-      // ONE appendList per key per batch, not one appendValue per row:
-      // per-value appendValue pays a per-call store overhead that the
-      // ScaleProbe measured as O(batch-appends) per key — a 20k-row
-      // batch ran ~13x slower PER EVENT than a 2k-row batch on the
-      // same accumulated state (O(batch²) per invocation); batching
-      // the rows into one call restores O(batch)
-      val batch = scala.collection.mutable.ArrayBuffer[(Long, Long, V)]()
-      rows.foreach { case (_, ts, v) =>
-        val t = ts.getTime
-        batch += ((nextPos, t, v))
-        cs = insert(cs, t)
-        nextPos += 1; total += 1
-      }
-      if (batch.nonEmpty) log.appendList(batch.toArray)
-      meta.update((nextPos, total, garbage, cs, fences))
-      armChain(cs)
-      Iterator.empty
-    }
-
-    override def handleExpiredTimer(key: K, timers: TimerValues,
-        timer: ExpiredTimerInfo): Iterator[O] = {
-      // flush by the WATERMARK, not the firing timer's own expiry: all
-      // clusters whose end the watermark passed are equally final (no
-      // row below the watermark can arrive to extend them), so the
-      // batch's FIRST fire flushes every due cluster and later fires
-      // no-op — one log scan per key per batch instead of one per
-      // cluster.
-      val expiry = timer.getExpiryTimeInMs()
-      val cutTs = math.max(expiry, timers.getCurrentWatermarkInMs())
-      val (nextPos, total, garbage0, cs0, fences0) = loadMeta()
-      val cs = cs0.toVector
-      // clusters are disjoint and sorted, so ends are increasing and
-      // the due set is a PREFIX — a stale timer (its cluster merged
-      // away or extended) is a pure no-op that never reads the log
-      val (due, pending) = cs.partition(_._2 + gapMs <= cutTs)
-      if (due.isEmpty) { armChain(cs, consumed = expiry); return Iterator.empty }
-      val cut = due.last._2
-      // ONE log read: split live rows at the cut; dead rows (behind a
-      // fence) stay in the log untouched — they fall out at compaction
-      val dueRows = scala.collection.mutable.ArrayBuffer[(Long, Long, V)]()
-      val pendRows = scala.collection.mutable.ArrayBuffer[(Long, Long, V)]()
-      val it = log.get()
-      while (it.hasNext) {
-        val e = it.next()
-        if (live(e._1, e._2, fences0)) {
-          if (e._2 <= cut) dueRows += e else pendRows += e
-        }
-      }
-      val garbage = garbage0 + dueRows.length
-      if (garbage * 2 >= total) {
-        // threshold compaction — the ONLY log rewrite, amortized O(1)
-        // per append: keep the still-pending live rows, drop fences
-        // (every survivor is live)
-        if (pendRows.isEmpty) log.clear() else log.put(pendRows.toArray)
-        meta.update((nextPos, pendRows.length.toLong, 0L, pending, Nil))
-      } else {
-        meta.update((nextPos, total, garbage, pending,
-          addFence(fences0, nextPos, cut)))
-      }
-      armChain(pending.toVector, consumed = expiry)
-      // sort ONLY the flushed rows (ties by pos = arrival order, as
-      // the old stable ts-sort of the arrival-ordered buffer did),
-      // then split them across the due clusters
-      val sorted = dueRows.sortInPlaceBy(e => (e._2, e._1))
-      var rest: Seq[(Long, Long, V)] = sorted.toSeq
-      due.iterator.flatMap { case (_, mx) =>
-        val (rs, later) = rest.span(_._2 <= mx)
-        rest = later
-        flushFn(key, rs.map(_._3))
-      }
-    }
-  }
-
-  /** Gap-flush on the event-time watermark: values buffer per key into
-    * event-time session clusters, each emitted as one batch (in
-    * event-time order) when the watermark passes its last-event + gap.
-    * `ds` must carry a watermark on its timestamp column
-    * (`.withWatermark("_2", …)` upstream — EventTime mode requires it). */
+  /** Gap-flush on the event-time watermark — Beam's
+    * `Window.into(Sessions.withGapDuration(gap))` under the default
+    * AfterWatermark trigger: values buffer per key into event-time
+    * session clusters, each emitted as one batch (in event-time order)
+    * when the watermark passes its last event + gap. `ds` must carry a
+    * watermark on its timestamp column (`.withWatermark("_2", …)`
+    * upstream — EventTime mode requires it). See [[eventTimeGapApply]]. */
   def eventTimeGapFlush[K: Encoder, V: Encoder](
       ds: Dataset[(K, java.sql.Timestamp, V)], gapMs: Long)(
       implicit outEnc: Encoder[(K, Seq[V])]): Dataset[(K, Seq[V])] =
-    ds.groupByKey(_._1).transformWithState(
-      new EventTimeGapProcessor[K, V, (K, Seq[V])](gapMs,
-        (k, vs) => Iterator((k, vs))),
-      TimeMode.EventTime(), OutputMode.Append())
+    eventTimeGapApply(ds, gapMs)((k, vs) => Iterator((k, vs)))
 
   /** [[eventTimeGapFlush]] with the group transform applied INSIDE the
     * stateful processor at flush time — avoids materializing a
     * `(K, Seq[V])` dataset (and its Seq encoder) when the caller only
     * wants the per-session result, e.g. the streaming MATCH_RECOGNIZE
-    * front door running its NFA on each watermark-closed session. */
+    * front door running its NFA on each watermark-closed session.
+    *
+    * Sessions are EVENT-TIME clusters, not arrival-time ones: rows
+    * sorted by event time split wherever the next row starts more than
+    * `gapMs` past the cluster's max — so an event arriving (in
+    * processing time) before an older session closes, but carrying an
+    * event time a full gap later, opens a NEW session instead of
+    * silently extending the old one, and a late within-watermark row
+    * that bridges two open clusters merges them. This is the
+    * count-trigger pane machine ([[TriggeredSessionProcessor]]) over
+    * [[WindowFn.Sessions]] with no element triggers, no allowed
+    * lateness and discarding panes, so the one pane each session
+    * fires is its closing ON_TIME pane, and `f(key, values)` runs on
+    * it. */
   def eventTimeGapApply[K: Encoder, V: Encoder, O](
       ds: Dataset[(K, java.sql.Timestamp, V)], gapMs: Long)(
       f: (K, Seq[V]) => Iterator[O])(
       implicit outEnc: Encoder[O]): Dataset[O] =
     ds.groupByKey(_._1).transformWithState(
-      new EventTimeGapProcessor[K, V, O](gapMs, f),
+      new TriggeredSessionProcessor[K, V, O](WindowFn.Sessions(gapMs), 0L,
+        NeverCount, NeverCount, accumulating = false)(p => f(p._1, p._6)),
       TimeMode.EventTime(), OutputMode.Append())
 
   /** FIXED (tumbling) event-time windows with an apply at close —
@@ -2061,209 +1859,13 @@ object StatefulV2 {
       (((a >> 1) + (b >> 1)) << 1) | ((a | b) & 1L)
   }
 
-  /** One fired pane of [[TriggeredWindowProcessor]]:
+  /** One fired pane of a [[PaneProcessor]]:
     * (key, windowStart, paneIndex, timing, isFinal, values). Timing ∈
     * EARLY / ON_TIME / LATE — Beam's PaneInfo.Timing
-    * (windowing/PaneInfo.java:45); paneIndex increments per firing of
-    * the same window; isFinal marks the window-closing (GC) pane. */
+    * (windowing/PaneInfo.java:45) — or RETRACT; paneIndex increments
+    * per firing of the same window; isFinal marks the window-closing
+    * (GC) pane. */
   type Pane[K, V] = (K, Long, Long, String, Boolean, Seq[V])
-
-  /** Beam's trigger/pane state machine — a reduced ReduceFnRunner
-    * (runners/core-java/.../ReduceFnRunner.java:97) for fixed windows
-    * with the canonical compound trigger
-    * `AfterWatermark.pastEndOfWindow()                    // AfterWatermark.java:60
-    *    .withEarlyFirings(AfterPane.elementCountAtLeast(earlyFireEvery))
-    *    .withLateFirings(AfterPane.elementCountAtLeast(lateFireEvery))`
-    * (AfterPane.java:33), in either accumulation mode:
-    *
-    *  - EARLY panes: before the watermark passes the window end, every
-    *    `earlyFireEvery` buffered elements fire a pane (0 = no early
-    *    firings — the pure default trigger).
-    *  - ON_TIME pane: fired exactly once when the (conceptual) Beam
-    *    watermark passes the window end; fired even if no new elements
-    *    arrived since the last early pane (Beam's default
-    *    OnTimeBehavior.FIRE_ALWAYS).
-    *  - LATE panes: elements arriving after the on-time firing but
-    *    within `allowedLatenessMs` fire every `lateFireEvery` elements.
-    *  - At window end + allowed lateness the window is CLOSED: a final
-    *    pane (isFinal=true) flushes any unfired remainder and state is
-    *    GC'd — ReduceFnRunner's onGarbageCollection.
-    *  - `accumulating=true` ⇒ each pane carries ALL window values so
-    *    far (Beam accumulatingFiredPanes); false ⇒ only values since
-    *    the previous pane (discardingFiredPanes).
-    *  - `retractions=true` (requires accumulating) ⇒ before each
-    *    non-first pane, a RETRACT pane re-emits the PREVIOUS pane's
-    *    contents so downstream consumers can subtract it — Beam's
-    *    accumulatingAndRetractingFiredPanes
-    *    (`Window.java:259-270` / the retraction region of
-    *    beam_runner_api.proto; Beam itself never shipped runner
-    *    support — the mode exists here end-to-end).
-    *
-    * Watermark mapping: Spark has ONE watermark (max event − delay),
-    * Beam two concepts (watermark + allowed lateness beyond it). The
-    * caller MUST set the upstream watermark delay to `allowedLatenessMs`
-    * (`.withWatermark(ts, s"$allowedLatenessMs milliseconds")`); the
-    * conceptual Beam watermark is then Spark's + allowedLateness, so
-    * the on-time timer arms at (windowEnd − allowedLateness) and the GC
-    * timer at windowEnd in Spark's domain. Spark drops rows below its
-    * watermark by ELEMENT time where Beam drops by WINDOW end — rows
-    * early in their window arriving near the lateness horizon can be
-    * dropped slightly sooner than Beam would; same bounded-staleness
-    * contract, documented difference.
-    *
-    * Constraint: `allowedLatenessMs < windowMs` (enforced). The
-    * on-time timer arms at (windowEnd − allowedLateness) in Spark's
-    * domain; with lateness ≥ the window size that expiry lands at or
-    * before the window START, so the timer could fire below the
-    * registration watermark and rows conceptually on-time/late would
-    * be mis-classified EARLY. Larger lateness horizons want a wider
-    * window or a two-level (window, horizon) state design — rejected
-    * here rather than silently mis-labelled. */
-  class TriggeredWindowProcessor[K, V](windowMs: Long, allowedLatenessMs: Long,
-      earlyTrigger: CountTrigger, lateTrigger: CountTrigger,
-      accumulating: Boolean, retractions: Boolean = false)(
-      implicit stEnc: Encoder[(Seq[V], Long, Long, Boolean, Long)])
-      extends StatefulProcessor[K, (K, java.sql.Timestamp, V), (K, Long, Long, String, Boolean, Seq[V])] {
-    require(windowMs > 0 && allowedLatenessMs >= 0)
-    require(allowedLatenessMs < windowMs,
-      s"allowedLatenessMs ($allowedLatenessMs) must be < windowMs " +
-        s"($windowMs): the on-time timer arms at windowEnd - lateness, " +
-        "which must fall strictly inside the window (see scaladoc)")
-    require(!retractions || accumulating,
-      "retractions require accumulating mode (a discarding pane has nothing to retract)")
-
-    // per-window pane state: (buffer, countSinceLastFire, paneIndex,
-    // onTimeFired, triggerState) — buffer holds the whole window when
-    // accumulating, else only values since the previous pane;
-    // triggerState is the active trigger's opaque composite state
-    // (AfterEachOf child index / OrFinallyOf finished+count), reset to
-    // 0 at the on-time transition so the late trigger starts fresh
-    @transient private var windows: MapState[Long, (Seq[V], Long, Long, Boolean, Long)] = _
-    // ONE event-time timer chain per key (see the session processor's
-    // nextTimer): the fire sweeps EVERY window the watermark passed,
-    // replacing two timers per window whose fires each iterated the
-    // whole window map — O(windows²) reads per batch on a busy key
-    @transient private var nextTimer: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      windows = getHandle.getMapState[Long, (Seq[V], Long, Long, Boolean, Long)](
-        "windows", Encoders.scalaLong, stEnc, TTLConfig.NONE)
-      nextTimer = getHandle.getValueState[Long]("nextTimer",
-        Encoders.scalaLong, TTLConfig.NONE)
-    }
-
-    /** Re-aim the chain at the earliest pending need: (end − lateness)
-      * for an unfired window, (end) for a fired one awaiting GC — both
-      * in Spark's watermark domain. Fixed windows never extend, so the
-      * chain only ever needs to move earlier (a new window can open
-      * below existing needs). */
-    private def armNext(): Unit = {
-      val pending = if (nextTimer.exists()) nextTimer.get() else 0L
-      val it = windows.iterator()
-      var need = Long.MaxValue
-      while (it.hasNext) {
-        val (w, st) = it.next()
-        val n = if (!st._4) w + windowMs - allowedLatenessMs else w + windowMs
-        if (n < need) need = n
-      }
-      if (need == Long.MaxValue) {
-        if (pending != 0L) { getHandle.deleteTimer(pending); nextTimer.clear() }
-      } else if (pending == 0L || need < pending) {
-        if (pending != 0L) getHandle.deleteTimer(pending)
-        getHandle.registerTimer(need)
-        nextTimer.update(need)
-      }
-    }
-
-    override def handleInputRows(key: K,
-        rows: Iterator[(K, java.sql.Timestamp, V)],
-        timers: TimerValues): Iterator[(K, Long, Long, String, Boolean, Seq[V])] = {
-      val out = scala.collection.mutable.ArrayBuffer[(K, Long, Long, String, Boolean, Seq[V])]()
-      // per-element state writes deferred: the pane state (including
-      // the whole window buffer) serializes into the MapState ONCE per
-      // touched window per batch, not once per row — a B-row batch
-      // into one window was O(B²) serialized bytes otherwise (the r10
-      // breakdown's rowsUpdated ≈ 2× events on this op)
-      val touched = scala.collection.mutable.Map[Long, (Seq[V], Long, Long, Boolean, Long)]()
-      rows.foreach { case (_, ts, v) =>
-        val w = Math.floorDiv(ts.getTime, windowMs) * windowMs
-        val opening = !touched.contains(w) && !windows.containsKey(w)
-        var (buf, since, pane, fired, trigSt) =
-          if (opening) (Seq.empty[V], 0L, 0L, false, 0L)
-          else touched.getOrElse(w, windows.getValue(w))
-        buf :+= v
-        since += 1
-        val trig = if (fired) lateTrigger else earlyTrigger
-        val (fire, nextSt) = trig.onElement(trigSt, since)
-        trigSt = nextSt
-        if (fire) {
-          if (retractions && pane > 0) {
-            val prevPane = buf.take(buf.size - since.toInt)
-            if (prevPane.nonEmpty)
-              out += ((key, w, pane - 1, "RETRACT", false, prevPane))
-          }
-          out += ((key, w, pane, if (fired) "LATE" else "EARLY", false, buf))
-          pane += 1; since = 0
-          if (!accumulating) buf = Seq.empty
-        }
-        touched(w) = (buf, since, pane, fired, trigSt)
-      }
-      touched.foreach { case (w, st) => windows.updateValue(w, st) }
-      armNext()
-      out.iterator
-    }
-
-    override def handleExpiredTimer(key: K, timers: TimerValues,
-        timer: ExpiredTimerInfo): Iterator[(K, Long, Long, String, Boolean, Seq[V])] = {
-      val expiry = timer.getExpiryTimeInMs()
-      if (nextTimer.exists() && nextTimer.get() == expiry) nextTimer.clear()
-      // sweep by the WATERMARK: one fire drains every due window (the
-      // timer was aimed at the earliest need; all windows the
-      // watermark passed this batch are equally final)
-      val cut = math.max(expiry, timers.getCurrentWatermarkInMs())
-      val out = scala.collection.mutable.ArrayBuffer[(K, Long, Long, String, Boolean, Seq[V])]()
-      val openWindows = {
-        val it = windows.keys(); val b = scala.collection.mutable.ArrayBuffer[Long]()
-        while (it.hasNext) b += it.next()
-        b.sorted
-      }
-      openWindows.foreach { w =>
-        // on-time firing: conceptual watermark passed the window end
-        var closedHere = false
-        if (w + windowMs - allowedLatenessMs <= cut) {
-          val (buf, since, pane, fired, _) = windows.getValue(w)
-          if (!fired) {
-            if (retractions && pane > 0) {
-              val prevPane = buf.take(buf.size - since.toInt)
-              if (prevPane.nonEmpty)
-                out += ((key, w, pane - 1, "RETRACT", false, prevPane))
-            }
-            val closing = allowedLatenessMs == 0
-            // trigger state resets to 0: the late trigger starts fresh
-            out += ((key, w, pane, "ON_TIME", closing, buf))
-            if (closing) { windows.removeKey(w); closedHere = true }
-            else windows.updateValue(w,
-              (if (accumulating) buf else Seq.empty, 0L, pane + 1, true, 0L))
-          }
-        }
-        // window close + GC: lateness horizon passed
-        if (!closedHere && w + windowMs <= cut && allowedLatenessMs > 0) {
-          val (buf, since, pane, fired, _) = windows.getValue(w)
-          if (since > 0) {
-            if (retractions && pane > 0) {
-              val prevPane = buf.take(buf.size - since.toInt)
-              if (prevPane.nonEmpty)
-                out += ((key, w, pane - 1, "RETRACT", false, prevPane))
-            }
-            out += ((key, w, pane, if (fired) "LATE" else "ON_TIME", true, buf))
-          }
-          windows.removeKey(w)
-        }
-      }
-      armNext()
-      out.iterator
-    }
-  }
 
   /** Nexmark Q3's incremental join (nexmark/.../queries/Query3.java —
     * THE Beam state+timers showcase): per key, one LEFT ("person") value
@@ -2604,16 +2206,18 @@ object StatefulV2 {
       new WinningBidProcessor[K](durationMs, orphanTtlMs),
       TimeMode.EventTime(), OutputMode.Append())
 
-  /** Fixed windows with Beam's early/on-time/late trigger panes — see
-    * [[TriggeredWindowProcessor]]. `ds` must carry
-    * `.withWatermark(tsCol, s"$allowedLatenessMs milliseconds")`. */
+  /** Fixed windows with Beam's early/on-time/late trigger panes — the
+    * count-trigger pane machine ([[TriggeredSessionProcessor]]) over
+    * [[WindowFn.Fixed]]. `ds` must carry
+    * `.withWatermark(tsCol, s"$allowedLatenessMs milliseconds")`, and
+    * `allowedLatenessMs < windowMs`. `earlyFireEvery` 0 = no early
+    * firings (the default trigger). */
   def triggeredWindows[K: Encoder, V: Encoder](
       ds: Dataset[(K, java.sql.Timestamp, V)], windowMs: Long,
       allowedLatenessMs: Long = 0L, earlyFireEvery: Int = 0,
       lateFireEvery: Int = 1, accumulating: Boolean = false,
       retractions: Boolean = false)(
-      implicit stEnc: Encoder[(Seq[V], Long, Long, Boolean, Long)],
-      outEnc: Encoder[(K, Long, Long, String, Boolean, Seq[V])]): Dataset[(K, Long, Long, String, Boolean, Seq[V])] =
+      implicit outEnc: Encoder[Pane[K, V]]): Dataset[Pane[K, V]] =
     triggeredWindowsWith(ds, windowMs, allowedLatenessMs,
       earlyTrigger = if (earlyFireEvery > 0) AfterCount(earlyFireEvery)
                      else NeverCount,
@@ -2629,74 +2233,151 @@ object StatefulV2 {
       lateTrigger: CountTrigger = AfterCount(1),
       accumulating: Boolean = false,
       retractions: Boolean = false)(
-      implicit stEnc: Encoder[(Seq[V], Long, Long, Boolean, Long)],
-      outEnc: Encoder[(K, Long, Long, String, Boolean, Seq[V])]): Dataset[(K, Long, Long, String, Boolean, Seq[V])] =
+      implicit outEnc: Encoder[Pane[K, V]]): Dataset[Pane[K, V]] =
     ds.groupByKey(_._1).transformWithState(
-      new TriggeredWindowProcessor[K, V](windowMs, allowedLatenessMs,
-        earlyTrigger, lateTrigger, accumulating, retractions),
+      new TriggeredSessionProcessor[K, V, Pane[K, V]](WindowFn.Fixed(windowMs),
+        allowedLatenessMs, earlyTrigger, lateTrigger, accumulating,
+        retractions)(Iterator.single),
       TimeMode.EventTime(), OutputMode.Append())
 
-  /** The trigger/pane state machine over MERGING windows — Beam's
-    * ReduceFnRunner (runners/core-java/.../ReduceFnRunner.java:97)
-    * running the compound trigger
-    * `AfterWatermark.pastEndOfWindow().withEarlyFirings(..).withLateFirings(..)`
-    * over `Sessions` (Sessions.java:42,57-66), the interplay SURVEY
-    * §7.4 names as Beam's single most intricate behavior. Sessions are
-    * per-key gap-merged event-time clusters; each carries its OWN pane
-    * state, and when a bridging element merges two sessions their
-    * state merges too (Window.java:259-270 accumulation semantics):
-    *
-    *  - buffers concatenate; counts-since-last-fire SUM; pane index
-    *    continues from the furthest part (max); composite trigger
-    *    state joins via [[CountTrigger.mergeState]] — an early pane
-    *    fired pre-merge keeps its place in the merged lineage
-    *  - `fired` (on-time emitted) merges with OR: a merged session one
-    *    of whose parts already fired its ON_TIME pane is post-on-time
-    *    — subsequent firings are LATE (at most one ON_TIME pane per
-    *    session lineage; when fired-ness differs the fired part's
-    *    trigger state wins, since the merged session continues under
-    *    the late trigger)
-    *  - a merged session's later panes can carry an EARLIER
-    *    windowStart than its early panes — window identity itself
-    *    evolves under merging, exactly Beam's merging-window model
-    *
-    * EARLY panes fire per `earlyTrigger` before the conceptual Beam
-    * watermark passes the session end (= maxTs + gap); the ON_TIME
-    * pane fires exactly once when it does (FIRE_ALWAYS — even with
-    * nothing new buffered); LATE panes fire per `lateTrigger` for rows
-    * within `allowedLatenessMs` beyond that; at end + lateness the
-    * session closes with a final pane (isFinal=true) flushing any
-    * unfired remainder, and state is GC'd (onGarbageCollection). Pane
-    * values are event-time sorted (stable for ties). Accumulating
-    * mode re-emits the whole session per pane; discarding emits only
-    * values since the previous pane. `retractions=true` (requires
-    * accumulating) re-emits the stale pane as a RETRACT before each
-    * replacement — and on MERGE retracts each part's last pane under
-    * its OWN window start (downstream subtracts the per-window results
-    * the merge just invalidated), with the merged lineage starting
-    * clean.
-    *
-    * Watermark mapping as in [[TriggeredWindowProcessor]]: the caller
-    * MUST set the upstream watermark delay to `allowedLatenessMs`, so
-    * the conceptual Beam watermark = Spark's + lateness; the on-time
-    * timer arms at (end − lateness), the GC timer at end, in Spark's
-    * domain. `allowedLatenessMs < gapMs` is enforced for the same
-    * reason as the fixed-window `lateness < window` constraint: the
-    * on-time expiry must land strictly after the session's max element
-    * timestamp. Timers whose session end moved (extension or merge)
-    * fire as no-ops.
-    *
-    * Scale: summaries + pane state per OPEN session per key (sessions
-    * per key are bounded by the gap structure); the buffer is
-    * append-only between panes; all state RocksDB-backed. */
-  /** Shared session-pane plumbing for the two merging-window trigger
-    * processors ([[TriggeredSessionProcessor]] count-trigger,
-    * [[MixedTriggerSessionProcessor]] mixed-clock): the state shape,
-    * TreeMap load, pane value ordering, and the four-way
-    * gap-connectivity locate/extend/rekey/merge for a new element —
-    * parameterized on how slot 5 (composite trigger state vs
-    * wall-clock anchor) combines at a merge. A fix to merge semantics
-    * lands ONCE here. */
+  /** Beam's WindowFn for the pane processors: which window an element
+    * lands in, where that window ends, when a row is too late for it,
+    * and how much allowed lateness the event-time clock can carry.
+    * Both shapes key window state by window START in the per-key
+    * [[SessionPanes.St]] summaries over ONE append-only
+    * [[SessionLog]]; fixed windows never overlap, so the log's
+    * liveness test and `maybeRewrite`'s predecessor lookup stay exact
+    * for them. */
+  sealed trait WindowFn extends Serializable {
+    /** Locate the window for an element at `t`, mutating `m`: returns
+      * (windowStart, state-before-append). `nextPos` = the log position
+      * the element will be appended at; a newly opened (or rekeyed)
+      * window's liveness cutoff starts there, so stale log rows of
+      * since-closed windows in the same ts range never resurrect.
+      * `combine5` merges slot 5 of two merging windows and `retract`
+      * runs for every pane a window-identity change invalidates
+      * (merging windows only — see [[WindowFn.Sessions]]). */
+    private[graft] def upsert(m: scala.collection.mutable.TreeMap[Long, SessionPanes.St],
+        t: Long, nextPos: Long,
+        combine5: (Boolean, Long, Boolean, Long) => Long,
+        retract: (Long, SessionPanes.St) => Unit): (Long, SessionPanes.St)
+
+    /** End of the window keyed at `min`: Beam's end of window, the
+      * instant the watermark must pass for the ON_TIME pane. */
+    private[graft] def end(min: Long, st: SessionPanes.St): Long
+
+    /** End of the window an element at `t` opens on arrival (a session
+      * element's proto-window [t, t + gap)): once the watermark passes
+      * it plus the allowed lateness, the element is droppable — Beam's
+      * window-end drop rule. */
+    private[graft] def dropPoint(t: Long): Long
+
+    /** Reject an allowed lateness the event-time clock cannot carry: it
+      * arms the on-time timer at (end − lateness), which must fall
+      * strictly after every element of the window — see
+      * [[TriggeredSessionProcessor]]. */
+    private[graft] def requireLateness(allowedLatenessMs: Long): Unit
+  }
+
+  object WindowFn {
+    /** Tumbling windows of `sizeMs` (Beam FixedWindows): an element at
+      * `t` belongs to [floor(t / size)·size, +size); windows never
+      * merge or rekey, so the merge callbacks never run. */
+    final case class Fixed(sizeMs: Long) extends WindowFn {
+      require(sizeMs > 0, s"windowMs must be positive, got $sizeMs")
+
+      private def start(t: Long): Long = Math.floorDiv(t, sizeMs) * sizeMs
+
+      private[graft] def upsert(m: scala.collection.mutable.TreeMap[Long, SessionPanes.St],
+          t: Long, nextPos: Long,
+          combine5: (Boolean, Long, Boolean, Long) => Long,
+          retract: (Long, SessionPanes.St) => Unit): (Long, SessionPanes.St) = {
+        val w = start(t)
+        m.get(w) match {
+          case Some(st) => (w, st.copy(_6 = math.max(st._6, t)))
+          case None => (w, (Seq((w, nextPos)), 0L, 0L, false, 0L, t, 0L))
+        }
+      }
+
+      private[graft] def end(min: Long, st: SessionPanes.St): Long = min + sizeMs
+
+      private[graft] def dropPoint(t: Long): Long = start(t) + sizeMs
+
+      private[graft] def requireLateness(allowedLatenessMs: Long): Unit =
+        require(allowedLatenessMs < sizeMs,
+          s"allowedLatenessMs ($allowedLatenessMs) must be < windowMs " +
+            s"($sizeMs): the on-time timer arms at windowEnd - lateness, " +
+            "which must fall strictly inside the window")
+    }
+
+    /** Merging gap sessions (Beam Sessions, Sessions.java:42,57-66):
+      * per-key event-time clusters whose consecutive elements are at
+      * most `gapMs` apart; a session ends at its max element + gap. */
+    final case class Sessions(gapMs: Long) extends WindowFn {
+      require(gapMs > 0, s"gapMs must be positive, got $gapMs")
+
+      /** Gap connectivity: extend the predecessor, move a successor's
+        * start down (REKEY), bridge-merge both, or open a singleton.
+        * `retract(windowStart, partState)` runs for both parts of a
+        * two-sided merge AND the old start of a downward rekey (the
+        * session's windowStart changes, so a pane published under the
+        * old start must be retracted before panes appear under the new
+        * one); the invalidated lineage restarts with lastFirePos = 0. */
+      private[graft] def upsert(m: scala.collection.mutable.TreeMap[Long, SessionPanes.St],
+          t: Long, nextPos: Long,
+          combine5: (Boolean, Long, Boolean, Long) => Long,
+          retract: (Long, SessionPanes.St) => Unit): (Long, SessionPanes.St) = {
+        val predKey = m.rangeTo(t).lastOption.map(_._1)
+        val succKey = m.rangeFrom(t + 1).headOption.map(_._1)
+        val joinsPred = predKey.exists(p => t <= m(p)._6 + gapMs)
+        val joinsSucc = succKey.exists(s => s - t <= gapMs)
+        (joinsPred, joinsSucc) match {
+          case (true, true) =>
+            val p = predKey.get; val s = succKey.get
+            val a = m(p); val b = m(s)
+            val (ac, asn, ap, af, a5, amx, _) = a
+            val (bc, bsn, bp, bf, b5, bmx, _) = b
+            m.remove(s)
+            retract(p, a)
+            retract(s, b)
+            // cuts concatenate in key order (part spans are disjoint,
+            // all of a's tsLo < s ≤ b's tsLo) — each part keeps its own
+            // liveness fence across the merge; equal adjacent fences
+            // collapse, and a log compaction collapses ALL fences to 0
+            // (see SessionLog.maybeRewrite), bounding cuts length
+            (p, (SessionPanes.compact(ac ++ bc), asn + bsn, math.max(ap, bp),
+              af || bf, combine5(af, a5, bf, b5), math.max(amx, bmx), 0L))
+          case (true, false) =>
+            val p = predKey.get
+            val (c, sn, pn, f, s5, mx, pl) = m(p)
+            (p, (c, sn, pn, f, s5, math.max(mx, t), pl))
+          case (false, true) =>
+            val s = succKey.get
+            val st = m(s)
+            m.remove(s) // start moves down to t — new window identity
+            retract(s, st)
+            (t, st.copy(_1 = (t, nextPos) +: st._1, _7 = 0L))
+          case (false, false) =>
+            (t, (Seq((t, nextPos)), 0L, 0L, false, 0L, t, 0L))
+        }
+      }
+
+      private[graft] def end(min: Long, st: SessionPanes.St): Long = st._6 + gapMs
+
+      private[graft] def dropPoint(t: Long): Long = t + gapMs
+
+      private[graft] def requireLateness(allowedLatenessMs: Long): Unit =
+        require(allowedLatenessMs < gapMs,
+          s"allowedLatenessMs ($allowedLatenessMs) must be < gapMs ($gapMs): " +
+            "the on-time timer arms at sessionEnd - lateness, which must " +
+            "fall strictly after the session's max element timestamp")
+    }
+  }
+
+  /** The per-window pane state both clocks share and the pure helpers
+    * over it: the state shape, liveness fences and pane value order.
+    * Window assignment lives in [[WindowFn]]; the pane machine in
+    * [[PaneProcessor]]. */
   private[graft] object SessionPanes {
     /** (cuts(tsLo, cutoffPos), countSinceLastFire, paneIndex,
       * onTimeFired, slot5, maxTs, lastFirePos).
@@ -2779,61 +2460,9 @@ object StatefulV2 {
     def live(min: Long, st: St, pos: Long, ts: Long): Boolean =
       ts >= min && ts <= st._6 && pos >= cutoff(st._1, ts)
 
+    /** Pane values in event-time order, ties in log (arrival) order. */
     def paneValues[V](buf: Seq[(Long, V)]): Seq[V] =
       buf.sortBy(_._1).map(_._2)
-
-    /** Locate the session for an element at `t` under gap
-      * connectivity, mutating `m`: extend the predecessor, move a
-      * successor's start down (REKEY), bridge-merge both, or open a
-      * singleton. Returns (sessionKey, state-before-append). `nextPos`
-      * = the log position the element will be appended at; a new or
-      * rekeyed span's cutoff starts there so stale log rows from
-      * since-closed sessions in the same ts range can never resurrect.
-      *
-      * `retract(windowStart, partState)` runs for every pane a
-      * window-IDENTITY change invalidates — both parts of a two-sided
-      * merge AND the old start of a downward rekey (the session's
-      * windowStart changes, so a pane published under the old start
-      * must be retracted before panes appear under the new one); the
-      * invalidated lineage restarts with lastFirePos = 0. */
-    def upsert(m: scala.collection.mutable.TreeMap[Long, St],
-        t: Long, gapMs: Long, nextPos: Long,
-        combine5: (Boolean, Long, Boolean, Long) => Long,
-        retract: (Long, St) => Unit): (Long, St) = {
-      val predKey = m.rangeTo(t).lastOption.map(_._1)
-      val succKey = m.rangeFrom(t + 1).headOption.map(_._1)
-      val joinsPred = predKey.exists(p => t <= m(p)._6 + gapMs)
-      val joinsSucc = succKey.exists(s => s - t <= gapMs)
-      (joinsPred, joinsSucc) match {
-        case (true, true) =>
-          val p = predKey.get; val s = succKey.get
-          val a = m(p); val b = m(s)
-          val (ac, asn, ap, af, a5, amx, _) = a
-          val (bc, bsn, bp, bf, b5, bmx, _) = b
-          m.remove(s)
-          retract(p, a)
-          retract(s, b)
-          // cuts concatenate in key order (part spans are disjoint,
-          // all of a's tsLo < s ≤ b's tsLo) — each part keeps its own
-          // liveness fence across the merge; equal adjacent fences
-          // collapse, and a log compaction collapses ALL fences to 0
-          // (see SessionLog.maybeRewrite), bounding cuts length
-          (p, (compact(ac ++ bc), asn + bsn, math.max(ap, bp), af || bf,
-            combine5(af, a5, bf, b5), math.max(amx, bmx), 0L))
-        case (true, false) =>
-          val p = predKey.get
-          val (c, sn, pn, f, s5, mx, pl) = m(p)
-          (p, (c, sn, pn, f, s5, math.max(mx, t), pl))
-        case (false, true) =>
-          val s = succKey.get
-          val st = m(s)
-          m.remove(s) // start moves down to t — new window identity
-          retract(s, st)
-          (t, st.copy(_1 = (t, nextPos) +: st._1, _7 = 0L))
-        case (false, false) =>
-          (t, (Seq((t, nextPos)), 0L, 0L, false, 0L, t, 0L))
-      }
-    }
   }
 
   /** Per-invocation view over a key's append-only row log — the state
@@ -2994,54 +2623,75 @@ object StatefulV2 {
             "from a fresh checkpoint")
   }
 
-  class TriggeredSessionProcessor[K, V](gapMs: Long, allowedLatenessMs: Long,
-      earlyTrigger: CountTrigger, lateTrigger: CountTrigger,
-      accumulating: Boolean, retractions: Boolean = false)(
-      implicit vEnc: Encoder[V])
-      extends StatefulProcessor[K, (K, java.sql.Timestamp, V), (K, Long, Long, String, Boolean, Seq[V])] {
-    require(gapMs > 0 && allowedLatenessMs >= 0)
-    require(allowedLatenessMs < gapMs,
-      s"allowedLatenessMs ($allowedLatenessMs) must be < gapMs ($gapMs): " +
-        "the on-time timer arms at sessionEnd - lateness, which must " +
-        "fall strictly after the session's max element timestamp")
+  /** Beam's trigger/pane state machine — a reduced ReduceFnRunner
+    * (runners/core-java/.../ReduceFnRunner.java:97) over a [[WindowFn]]
+    * (fixed windows or merging sessions), the part both clocks share.
+    * Per key, every open window carries its pane summary
+    * ([[SessionPanes.St]], keyed by window start):
+    *
+    *  - EARLY panes fire before the (conceptual Beam) watermark passes
+    *    the window end, as the subclass's trigger decides;
+    *  - the ON_TIME pane fires exactly once when it does — even with
+    *    nothing new buffered (Beam's OnTimeBehavior.FIRE_ALWAYS);
+    *  - LATE panes fire for rows within `allowedLatenessMs` beyond it;
+    *  - at end + lateness the window CLOSES: a final pane
+    *    (isFinal=true) flushes any unfired remainder and its state is
+    *    GC'd — ReduceFnRunner's onGarbageCollection.
+    *  - `accumulating=true` ⇒ each pane carries ALL window values so far
+    *    (Beam accumulatingFiredPanes); false ⇒ only values since the
+    *    previous pane (discardingFiredPanes).
+    *  - `retractions=true` (requires accumulating) ⇒ before each
+    *    non-first pane, a RETRACT pane re-emits the PREVIOUS pane's
+    *    contents so downstream consumers can subtract it — Beam's
+    *    accumulatingAndRetractingFiredPanes (`Window.java:259-270` /
+    *    the retraction region of beam_runner_api.proto; Beam itself
+    *    never shipped runner support — the mode exists here end to end).
+    *
+    * Pane values come out in event-time order, ties in arrival order
+    * (Beam panes are unordered bags).
+    *
+    * MERGING windows (Sessions.java:57-66, the interplay SURVEY §7.4
+    * names as Beam's single most intricate behavior): when a bridging
+    * element merges two sessions their pane state merges too — rows
+    * concatenate, counts-since-last-fire SUM, the pane index continues
+    * from the furthest part (max), slot 5 merges per clock
+    * ([[combine5]]) and `fired` (on-time emitted) ORs, so a merged
+    * session one of whose parts already fired its ON_TIME pane is
+    * post-on-time and fires LATE from then on (at most one ON_TIME pane
+    * per session lineage). A merge or downward rekey changes window
+    * identity: with retractions each part's last pane retracts under
+    * its OWN window start (downstream subtracts the per-window results
+    * the merge invalidated), and the merged lineage starts clean — a
+    * merged session's later panes can carry an EARLIER windowStart than
+    * its early panes, exactly Beam's merging-window model.
+    *
+    * State: rows live in a per-key append-only [[SessionLog]]; the
+    * window summaries, log counters and the clock's single timer-chain
+    * slot pack into ONE ValueState row ([[SessionPanes.Packed]]) — one
+    * put per touched key per batch, and a key with no open window and
+    * an empty log holds no state at all. The row is NAMED "panes3" so
+    * a checkpoint of an older layout (MapState per window, or the
+    * r11-r13 sessions2 + logMeta + timer slot) can never be decoded as
+    * this schema; a renamed variable legally restores EMPTY under state
+    * evolution, so [[SessionLog.checkFreshLayout]] makes the restore
+    * loud for any checkpoint that carried this processor's "log" (rows
+    * under an absent meta are impossible in this layout).
+    *
+    * Each fired pane passes through `emit` on its way out. Subclasses
+    * supply the clock: how panes trigger between watermark
+    * transitions, where those transitions fall in their clock
+    * ([[onTimeAt]]) and the timer chain that wakes the key. */
+  abstract class PaneProcessor[K, V, O](wf: WindowFn, allowedLatenessMs: Long,
+      accumulating: Boolean, retractions: Boolean,
+      emit: Pane[K, V] => Iterator[O])(implicit vEnc: Encoder[V])
+      extends StatefulProcessor[K, (K, java.sql.Timestamp, V), O] {
+    require(allowedLatenessMs >= 0)
     require(!retractions || accumulating,
       "retractions require accumulating mode (a discarding pane has nothing to retract)")
 
-    // per-session pane SUMMARIES, keyed by session MIN ts — see
-    // [[SessionPanes.St]]; slot 5 = composite trigger state. Rows live
-    // in the per-key append-only [[SessionLog]]; lastFirePos (slot 7)
-    // fences the last EMITTED (un-retracted) pane, the retraction
-    // baseline. A window-identity change (merge or rekey) retracts the
-    // stale panes under their own window starts (downstream must
-    // subtract the now-stale per-window results, Beam's
-    // accumulatingAndRetractingFiredPanes rule over merging windows)
-    // and rebases the lineage to lastFirePos = 0.
-    //
-    // r14 packed layout ([[SessionPanes.Packed]]): the summaries, the
-    // log counters, and the single timer-chain slot all live in ONE
-    // ValueState row — one put per touched key per batch, replacing
-    // the r11-r13 sessions2 MapState + logMeta + nextTimer trio (one
-    // put per DIRTY SESSION per batch plus two scalar puts plus a
-    // removeKey per close: the engine's worst remaining write
-    // amplifier at ~3.4 state rows/event in the r13 breakdown). The
-    // variable is NAMED "panes3" so an r11-r13 checkpoint can never
-    // be decoded as the new schema; a renamed variable legally
-    // restores EMPTY under state evolution, so emptiness alone is not
-    // loud — the paired SessionLog.checkFreshLayout makes it loud for
-    // any checkpoint that carried this processor's log (rows under an
-    // absent meta are impossible in this layout); a pre-log r9
-    // checkpoint degrades to a clean start, documented data loss
-    // rather than silent corruption.
-    //
-    // The timer-chain slot (Packed._4): ONE event-time timer per key,
-    // aimed at the earliest pending session need — the fire sweeps
-    // EVERY session the watermark has passed (not just the one whose
-    // end matched), then re-arms. The r10 layout armed one timer per
-    // session end (an `armed` ListState): a session-heavy key paid one
-    // fire per closing session per batch, each fire re-reading the
-    // session map and rewriting the armed list — O(sessions²) state
-    // traffic per batch where this chain pays O(sessions).
-    private type SessState = SessionPanes.St
+    protected type Windows = scala.collection.mutable.TreeMap[Long, SessionPanes.St]
+    protected type Out = scala.collection.mutable.ArrayBuffer[Pane[K, V]]
+
     @transient private var packed: ValueState[SessionPanes.Packed] = _
     @transient private var log: ListState[(Long, Long, V)] = _
 
@@ -3053,48 +2703,169 @@ object StatefulV2 {
         TTLConfig.NONE)
     }
 
-    /** (log view, timer slot, session summaries) off the packed row. */
-    private def loadPacked(): (SessionLog[V], Long,
-        scala.collection.mutable.TreeMap[Long, SessState]) =
+    /** The clock's instant for the ON_TIME transition of a window
+      * ending at `end`; the close + GC transition falls
+      * `allowedLatenessMs` later. */
+    protected def onTimeAt(end: Long): Long
+
+    /** Slot 5 of a merged window from its parts' (fired, slot5). */
+    protected def combine5(af: Boolean, a5: Long, bf: Boolean, b5: Long): Long
+
+    /** (log view, timer slot, window summaries) off the packed row. */
+    protected def loadPacked(): (SessionLog[V], Long, Windows) =
       if (packed.exists()) {
         val (np, tot, gb, slot, ss) = packed.get()
         (new SessionLog[V](log, np, tot, gb), slot,
           scala.collection.mutable.TreeMap.from(ss))
       } else {
         val lv = new SessionLog[V](log)
-        lv.checkFreshLayout() // pre-r14 checkpoint → loud, not data loss
+        lv.checkFreshLayout() // older-layout checkpoint → loud, not data loss
         (lv, 0L, scala.collection.mutable.TreeMap.empty)
       }
 
-    /** ONE meta put per touched key per batch — or a full clear when
-      * the key went idle (no sessions, compacted-empty log, no timer):
-      * zero resident state for dead keys. */
-    private def savePacked(lv: SessionLog[V], slot: Long,
-        m: scala.collection.mutable.TreeMap[Long, SessState]): Unit =
+    /** Persist the invocation and hand its panes to `emit`: compact the
+      * log when due (collapsing fences in `m` itself), ONE appendList
+      * for this batch's rows, then ONE meta put — or a full clear when
+      * the key went idle (no windows, compacted-empty log, no timer). */
+    protected def commit(lv: SessionLog[V], slot: Long, m: Windows,
+        out: Out): Iterator[O] = {
+      lv.maybeRewrite(m)
+      lv.flush()
       if (m.isEmpty && lv.total == 0L && slot == 0L) packed.clear()
       else packed.update((lv.nextPos, lv.total, lv.garbage, slot, m.toSeq))
+      out.iterator.flatMap(emit)
+    }
 
-    private def paneValues(buf: Seq[(Long, V)]): Seq[V] =
-      SessionPanes.paneValues(buf)
+    /** [[WindowFn.upsert]] with merge/rekey retractions into `out`. */
+    protected def upsert(key: K, m: Windows, t: Long, lv: SessionLog[V],
+        out: Out): (Long, SessionPanes.St) =
+      wf.upsert(m, t, lv.nextPos, combine5,
+        (w, st) => retractionOf(key, w, st, lv, out))
 
-    /** Re-aim the key's single timer chain at the earliest pending
-      * need: (end − lateness) for a not-yet-fired session, end for a
-      * fired one awaiting GC. Only ever moves EARLIER — a timer left
-      * too early by a since-extended session fires as a cheap no-op
-      * and re-arms itself. Returns the new slot value (0 = no timer);
-      * `consumed` = the expiry this invocation is firing for, already
-      * spent. The slot persists inside the packed meta row. */
-    private def armNext(m: scala.collection.mutable.TreeMap[Long, SessState],
-        slot: Long, consumed: Long = 0L): Long = {
+    /** RETRACT pane for a window's last emitted content, if any. */
+    private def retractionOf(key: K, min: Long, st: SessionPanes.St,
+        lv: SessionLog[V], out: Out): Unit =
+      if (retractions && st._7 > 0)
+        out += ((key, min, st._3 - 1, "RETRACT", false,
+          SessionPanes.paneValues(lv.content(min, st, beforePos = st._7))))
+
+    /** Fire the window's pane under `timing` (after the RETRACT of its
+      * last emitted pane) and return the state after the firing: count
+      * reset, index advanced, retraction baseline at the log head. A
+      * discarding or final pane fences its rows dead (they purge
+      * lazily at compaction); the caller drops a final pane's window. */
+    protected def firePane(key: K, min: Long, st: SessionPanes.St,
+        timing: String, isFinal: Boolean, lv: SessionLog[V],
+        out: Out): SessionPanes.St = {
+      retractionOf(key, min, st, lv, out)
+      val vals = SessionPanes.paneValues(lv.content(min, st))
+      out += ((key, min, st._3, timing, isFinal, vals))
+      val discard = isFinal || !accumulating
+      if (discard) lv.garbage += vals.size
+      (if (discard) Seq((min, lv.nextPos)) else st._1, 0L, st._3 + 1,
+        st._4, st._5, st._6, lv.nextPos)
+    }
+
+    /** The watermark transitions of every open window, in window-start
+      * order, against its CURRENT end: the ON_TIME pane once `clock`
+      * reaches [[onTimeAt]] (closing at once with no allowed lateness),
+      * then close + GC `allowedLatenessMs` later, flushing an unfired
+      * remainder as the final LATE pane. */
+    protected def closeDue(key: K, clock: Long, lv: SessionLog[V], m: Windows,
+        out: Out): Unit =
+      m.keys.toSeq.foreach { min =>
+        var st = m(min)
+        val onTime = onTimeAt(wf.end(min, st))
+        var open = true
+        if (!st._4 && onTime <= clock) {
+          val closing = allowedLatenessMs == 0
+          st = firePane(key, min, st, "ON_TIME", closing, lv, out)
+          if (closing) { m.remove(min); open = false }
+          else { st = st.copy(_4 = true, _5 = 0L); m(min) = st }
+        }
+        if (open && st._4 && onTime + allowedLatenessMs <= clock) {
+          if (st._2 > 0) firePane(key, min, st, "LATE", isFinal = true, lv, out)
+          else lv.garbage += lv.content(min, st).size
+          m.remove(min)
+        }
+      }
+
+    /** Earliest pending transition over the open windows (non-empty
+      * `m`): on-time for an unfired window, close + GC for a fired one. */
+    protected def nextDue(m: Windows): Long =
+      m.iterator.map { case (min, st) =>
+        val onTime = onTimeAt(wf.end(min, st))
+        if (st._4) onTime + allowedLatenessMs else onTime
+      }.min
+  }
+
+  /** The pane machine under element-COUNT triggers on the event-time
+    * clock — Beam's canonical compound trigger
+    * `AfterWatermark.pastEndOfWindow()                    // AfterWatermark.java:60
+    *    .withEarlyFirings(earlyTrigger)   // AfterPane.elementCountAtLeast, AfterPane.java:33
+    *    .withLateFirings(lateTrigger)`
+    * in any [[CountTrigger]] composition; the trigger state lives in
+    * slot 5, reset at the on-time transition so the late trigger starts
+    * fresh, and merged per [[CountTrigger.mergeState]] (when fired-ness
+    * differs the fired part's state wins: the merged window continues
+    * under the late trigger).
+    *
+    * Watermark mapping: Spark has ONE watermark (max event − delay),
+    * Beam two concepts (watermark + allowed lateness beyond it). The
+    * caller MUST set the upstream watermark delay to
+    * `allowedLatenessMs` (`.withWatermark(ts, s"$allowedLatenessMs
+    * milliseconds")`); the conceptual Beam watermark is then Spark's +
+    * allowedLateness, so the on-time transition falls at
+    * (end − allowedLateness) and the close + GC at end in Spark's
+    * domain. Spark drops rows below its watermark by ELEMENT time where
+    * Beam drops by WINDOW end — rows early in their window arriving
+    * near the lateness horizon can be dropped slightly sooner than Beam
+    * would; same bounded-staleness contract, documented difference
+    * ([[MixedTriggerSessionProcessor]] has Beam's exact rule).
+    *
+    * Constraint (enforced, [[WindowFn]]): `allowedLatenessMs` < the
+    * window size or session gap. With a larger lateness the on-time
+    * expiry would land at or before the window's last element, below
+    * the registration watermark, and rows conceptually on-time/late
+    * would be mis-classified EARLY. Larger horizons want a wider window
+    * or a two-level (window, horizon) state design — rejected here
+    * rather than silently mis-labelled.
+    *
+    * Timers: ONE event-time timer chain per key (the packed slot),
+    * aimed at the earliest pending transition; its fire sweeps EVERY
+    * window the watermark has passed, then re-arms. One timer per
+    * window end would pay one fire per closing window per batch, each
+    * re-reading the key's windows — O(windows²) state traffic per batch
+    * where the chain pays O(windows). A chain timer left early by a
+    * since-extended or merged session fires as a cheap no-op. */
+  class TriggeredSessionProcessor[K, V, O](wf: WindowFn, allowedLatenessMs: Long,
+      earlyTrigger: CountTrigger, lateTrigger: CountTrigger,
+      accumulating: Boolean, retractions: Boolean = false)(
+      emit: Pane[K, V] => Iterator[O])(implicit vEnc: Encoder[V])
+      extends PaneProcessor[K, V, O](wf, allowedLatenessMs, accumulating,
+        retractions, emit) {
+    wf.requireLateness(allowedLatenessMs)
+
+    protected def onTimeAt(end: Long): Long = end - allowedLatenessMs
+
+    protected def combine5(af: Boolean, a5: Long, bf: Boolean, b5: Long): Long = {
+      val trig = if (af || bf) lateTrigger else earlyTrigger
+      if (af == bf) trig.mergeState(a5, b5)
+      else if (af) a5 else b5
+    }
+
+    /** Re-aim the key's timer chain at the earliest pending transition.
+      * Only ever moves EARLIER — a timer left too early by a
+      * since-extended session fires as a no-op and re-arms itself.
+      * Returns the new slot value (0 = no timer); `consumed` = the
+      * expiry this invocation is firing for, already spent. */
+    private def armNext(m: Windows, slot: Long, consumed: Long = 0L): Long = {
       val pending = if (slot == consumed) 0L else slot
       if (m.isEmpty) {
         if (pending != 0L) getHandle.deleteTimer(pending)
         return 0L
       }
-      val need = m.valuesIterator.map { st =>
-        if (!st._4) st._6 + gapMs - allowedLatenessMs
-        else st._6 + gapMs
-      }.min
+      val need = nextDue(m)
       if (pending == 0L || need < pending) {
         if (pending != 0L) getHandle.deleteTimer(pending)
         getHandle.registerTimer(need)
@@ -3102,120 +2873,51 @@ object StatefulV2 {
       } else pending
     }
 
-    /** RETRACT pane for a session's last emitted content, if any. */
-    private def retractionOf(key: K, skey: Long, st: SessState,
-        lv: SessionLog[V],
-        out: scala.collection.mutable.ArrayBuffer[(K, Long, Long, String, Boolean, Seq[V])]): Unit =
-      if (retractions && st._7 > 0)
-        out += ((key, skey, st._3 - 1, "RETRACT", false,
-          paneValues(lv.content(skey, st, beforePos = st._7))))
-
     override def handleInputRows(key: K,
         rows: Iterator[(K, java.sql.Timestamp, V)],
-        timers: TimerValues): Iterator[(K, Long, Long, String, Boolean, Seq[V])] = {
-      val out = scala.collection.mutable.ArrayBuffer[(K, Long, Long, String, Boolean, Seq[V])]()
+        timers: TimerValues): Iterator[O] = {
+      val out: Out = scala.collection.mutable.ArrayBuffer()
       val (lv, slot, m) = loadPacked()
       rows.foreach { case (_, ts, v) =>
         val t = ts.getTime
-        // locate/extend/rekey/merge under gap-connectivity — shared
-        // with the mixed-clock processor; merge/rekey retract the
-        // invalidated panes under their own window starts
-        val (skey, st0) = SessionPanes.upsert(m, t, gapMs, lv.nextPos,
-          combine5 = (af, a5, bf, b5) => {
-            val trig = if (af || bf) lateTrigger else earlyTrigger
-            if (af == bf) trig.mergeState(a5, b5)
-            else if (af) a5 else b5
-          },
-          retract = (w, st) => retractionOf(key, w, st, lv, out))
-        var (cuts, since, pane, fired, trigSt, mx, lastFire) = st0
+        val (w, st0) = upsert(key, m, t, lv, out)
         lv.append(t, v)
-        since += 1
-        val trig = if (fired) lateTrigger else earlyTrigger
-        val (fire, nextSt) = trig.onElement(trigSt, since)
-        trigSt = nextSt
-        if (fire) {
-          val stNow = (cuts, since, pane, fired, trigSt, mx, lastFire)
-          retractionOf(key, skey, stNow, lv, out)
-          val vals = paneValues(lv.content(skey, stNow))
-          out += ((key, skey, pane, if (fired) "LATE" else "EARLY", false,
-            vals))
-          pane += 1; since = 0
-          lastFire = lv.nextPos
-          if (!accumulating) {
-            lv.garbage += vals.size // cleared rows stay in the log, dead
-            cuts = Seq((skey, lv.nextPos))
-          }
-        }
-        m(skey) = (cuts, since, pane, fired, trigSt, mx, lastFire)
+        val since = st0._2 + 1
+        val trig = if (st0._4) lateTrigger else earlyTrigger
+        val (fire, trigSt) = trig.onElement(st0._5, since)
+        val st = st0.copy(_2 = since, _5 = trigSt)
+        m(w) = if (!fire) st
+          else firePane(key, w, st, if (st._4) "LATE" else "EARLY",
+            isFinal = false, lv, out)
       }
-      lv.maybeRewrite(m) // collapses fences in m itself; m persists below
-      lv.flush() // ONE appendList for this batch's rows
-      savePacked(lv, armNext(m, slot), m)
-      out.iterator
+      commit(lv, armNext(m, slot), m, out)
     }
 
     override def handleExpiredTimer(key: K, timers: TimerValues,
-        timer: ExpiredTimerInfo): Iterator[(K, Long, Long, String, Boolean, Seq[V])] = {
+        timer: ExpiredTimerInfo): Iterator[O] = {
       val expiry = timer.getExpiryTimeInMs()
-      // sweep by the WATERMARK, not the firing expiry: every session
-      // the watermark has passed is equally final, so one fire drains
-      // all of them and the chain re-arms at the next future need —
-      // identical per-batch output to per-end timers, at one fire
-      val cut = math.max(expiry, timers.getCurrentWatermarkInMs())
-      val out = scala.collection.mutable.ArrayBuffer[(K, Long, Long, String, Boolean, Seq[V])]()
+      val out: Out = scala.collection.mutable.ArrayBuffer()
       val (lv, slot, m) = loadPacked()
-      m.toSeq.foreach { case (min, st0) =>
-        var st = st0
-        var open = true
-        if (!st._4 && st._6 + gapMs - allowedLatenessMs <= cut) {
-          // conceptual Beam watermark passed the session end
-          val closing = allowedLatenessMs == 0
-          retractionOf(key, min, st, lv, out)
-          val vals = paneValues(lv.content(min, st))
-          out += ((key, min, st._3, "ON_TIME", closing, vals))
-          if (closing) {
-            m.remove(min); open = false
-            lv.garbage += vals.size // closed-span rows purge lazily
-          } else {
-            val cuts = if (accumulating) st._1
-                       else { lv.garbage += vals.size; Seq((min, lv.nextPos)) }
-            st = (cuts, 0L, st._3 + 1, true, 0L, st._6, lv.nextPos)
-            m(min) = st
-          }
-        }
-        // GC need is (end) in Spark's watermark domain — the upstream
-        // delay already embodies the lateness horizon
-        if (open && st._4 && st._6 + gapMs <= cut && allowedLatenessMs > 0) {
-          // lateness horizon passed: close + GC
-          val live = lv.content(min, st)
-          if (st._2 > 0) {
-            retractionOf(key, min, st, lv, out)
-            out += ((key, min, st._3, if (st0._4) "LATE" else "ON_TIME",
-              true, paneValues(live)))
-          }
-          m.remove(min)
-          lv.garbage += live.size
-        }
-        // anything else: the chain fired early (session since
-        // extended) — pure no-op, re-armed below
-      }
-      lv.maybeRewrite(m)
-      lv.flush()
-      savePacked(lv, armNext(m, slot, consumed = expiry), m)
-      out.iterator
+      // sweep by the WATERMARK, not the firing expiry: every window the
+      // watermark has passed is equally final, so one fire drains all
+      // of them — identical per-batch output to per-end timers
+      closeDue(key, math.max(expiry, timers.getCurrentWatermarkInMs()),
+        lv, m, out)
+      commit(lv, armNext(m, slot, consumed = expiry), m, out)
     }
   }
 
   /** Session windows with early/late count firings + pane metadata —
     * see [[TriggeredSessionProcessor]]. `ds` must carry
-    * `.withWatermark(tsCol, s"$allowedLatenessMs milliseconds")`.
-    * `earlyFireEvery` 0 = no early firings (the default trigger). */
+    * `.withWatermark(tsCol, s"$allowedLatenessMs milliseconds")`, and
+    * `allowedLatenessMs < gapMs`. `earlyFireEvery` 0 = no early
+    * firings (the default trigger). */
   def triggeredSessions[K: Encoder, V: Encoder](
       ds: Dataset[(K, java.sql.Timestamp, V)], gapMs: Long,
       allowedLatenessMs: Long = 0L, earlyFireEvery: Int = 0,
       lateFireEvery: Int = 1, accumulating: Boolean = false,
       retractions: Boolean = false)(
-      implicit outEnc: Encoder[(K, Long, Long, String, Boolean, Seq[V])]): Dataset[(K, Long, Long, String, Boolean, Seq[V])] =
+      implicit outEnc: Encoder[Pane[K, V]]): Dataset[Pane[K, V]] =
     triggeredSessionsWith(ds, gapMs, allowedLatenessMs,
       earlyTrigger = if (earlyFireEvery > 0) AfterCount(earlyFireEvery)
                      else NeverCount,
@@ -3230,14 +2932,15 @@ object StatefulV2 {
       lateTrigger: CountTrigger = AfterCount(1),
       accumulating: Boolean = false,
       retractions: Boolean = false)(
-      implicit outEnc: Encoder[(K, Long, Long, String, Boolean, Seq[V])]): Dataset[(K, Long, Long, String, Boolean, Seq[V])] =
+      implicit outEnc: Encoder[Pane[K, V]]): Dataset[Pane[K, V]] =
     ds.groupByKey(_._1).transformWithState(
-      new TriggeredSessionProcessor[K, V](gapMs, allowedLatenessMs,
-        earlyTrigger, lateTrigger, accumulating, retractions),
+      new TriggeredSessionProcessor[K, V, Pane[K, V]](WindowFn.Sessions(gapMs),
+        allowedLatenessMs, earlyTrigger, lateTrigger, accumulating,
+        retractions)(Iterator.single),
       TimeMode.EventTime(), OutputMode.Append())
 
-  /** Beam's MIXED time-mode compound trigger — the one trigger shape a
-    * single-time-mode processor can't express:
+  /** The pane machine under Beam's MIXED time-mode compound trigger —
+    * the one trigger shape a single-time-mode processor can't express:
     *
     * `AfterWatermark.pastEndOfWindow()                 // event time
     *    .withEarlyFirings(AfterProcessingTime          // WALL CLOCK
@@ -3250,199 +2953,139 @@ object StatefulV2 {
     * data").
     *
     * HOW the two clocks coexist on one `transformWithState` processor:
-    * the processor runs in TimeMode.ProcessingTime (wall-clock timers
-    * drive early/late panes), while the EVENT-time machinery reads
+    * it runs in TimeMode.ProcessingTime (wall-clock timers drive
+    * early/late panes), while the EVENT-time transitions read
     * `TimerValues.getCurrentWatermarkInMs()` — Spark propagates the
     * event-time watermark of the upstream `.withWatermark` into every
-    * invocation regardless of the processor's own time mode, and (unlike
-    * TimeMode.EventTime) the operator applies NO late-row filter, so
-    * lateness policy is entirely ours:
+    * invocation regardless of the processor's own time mode, and
+    * (unlike TimeMode.EventTime) the operator applies NO late-row
+    * filter, so lateness policy is entirely ours:
     *
-    *  - rows land in their event-time fixed window; rows whose
-    *    window end + allowedLateness < watermark are dropped — by
-    *    WINDOW end, Beam's exact drop rule (TriggeredWindowProcessor
-    *    documents its element-time approximation; this processor has
-    *    the faithful semantics, and no `lateness < window` restriction)
-    *  - EARLY panes: `earlyDelayMs` of wall time after the first
-    *    element buffered since the last firing (pastFirstElementInPane
-    *    anchoring — later arrivals never push the deadline out)
-    *  - ON_TIME pane: fired when the watermark passes the window end
-    *    (FIRE_ALWAYS, even if no elements arrived since the last early
-    *    pane); observed on the next timer/input invocation after the
-    *    watermark advances — a heartbeat timer guarantees one within
-    *    `heartbeatMs` even on an idle key
-    *  - LATE panes: elements within allowed lateness fire
-    *    `lateDelayMs` after the first late element of the pane
-    *  - window close at watermark ≥ end + lateness: unfired remainder
-    *    flushes as a final pane (isFinal=true), state GC'd
-    *  - accumulating / discarding / accumulating-and-retracting modes
-    *    as in [[TriggeredWindowProcessor]].
+    *  - a row is dropped once the watermark passes the end of the
+    *    window it lands in (a session row's proto-window end
+    *    ts + gap) plus allowedLateness — Beam's exact WINDOW-end drop
+    *    rule, with no `lateness < window` restriction
+    *    ([[TriggeredSessionProcessor]] documents its element-time
+    *    approximation);
+    *  - EARLY / LATE panes: `earlyDelayMs` / `lateDelayMs` of wall time
+    *    after the FIRST element buffered since the last firing (slot 5
+    *    = that anchor deadline, 0 = none; later arrivals never push it
+    *    out, and a merge keeps the EARLIEST pending one — a pane
+    *    already promised keeps its deadline);
+    *  - ON_TIME at watermark ≥ end, close + GC at end + lateness, both
+    *    against each window's CURRENT end (a session's end moves as
+    *    elements arrive and merge), observed on the next timer or input
+    *    invocation after the watermark advances — a sweep-timer chain
+    *    (`armSweep`) guarantees one on an idle key.
     *
-    * Scale: state is one MapState entry per OPEN window per key (bounded
-    * by the lateness horizon); each firing drains or snapshots the
-    * buffer; timers are O(open windows) per key. RocksDB-backed as the
-    * rest of this file. */
-  class MixedTriggerWindowProcessor[K, V](
-      windowMs: Long, allowedLatenessMs: Long,
+    * An idle key (no open windows) holds zero state and zero timers. */
+  class MixedTriggerSessionProcessor[K, V, O](
+      wf: WindowFn, allowedLatenessMs: Long,
       earlyDelayMs: Long, lateDelayMs: Long,
       accumulating: Boolean, retractions: Boolean = false,
       heartbeatMs: Long = 200L, maxSweepLagMs: Long = 5000L)(
-      implicit stEnc: Encoder[(Seq[V], Long, Long, Boolean, Long)])
-      extends StatefulProcessor[K, (K, java.sql.Timestamp, V), (K, Long, Long, String, Boolean, Seq[V])] {
-    require(windowMs > 0 && allowedLatenessMs >= 0)
+      emit: Pane[K, V] => Iterator[O])(implicit vEnc: Encoder[V])
+      extends PaneProcessor[K, V, O](wf, allowedLatenessMs, accumulating,
+        retractions, emit) {
     require(earlyDelayMs > 0 && lateDelayMs > 0 && heartbeatMs > 0)
     require(maxSweepLagMs >= heartbeatMs)
-    require(!retractions || accumulating,
-      "retractions require accumulating mode (a discarding pane has nothing to retract)")
 
-    // per-window pane state: (buffer, countSinceLastFire, paneIndex,
-    // onTimeFired, anchorDeadlineMs) — anchorDeadline 0 = no pending
-    // wall-clock pane; buffer holds the whole window when accumulating,
-    // else only values since the previous pane
-    @transient private var windows: MapState[Long, (Seq[V], Long, Long, Boolean, Long)] = _
-    @transient private var sweepAt: ValueState[Long] = _
+    protected def onTimeAt(end: Long): Long = end
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      windows = getHandle.getMapState[Long, (Seq[V], Long, Long, Boolean, Long)](
-        "windows", Encoders.scalaLong, stEnc, TTLConfig.NONE)
-      sweepAt = getHandle.getValueState[Long]("sweepAt",
-        Encoders.scalaLong, TTLConfig.NONE)
-    }
+    protected def combine5(af: Boolean, a5: Long, bf: Boolean, b5: Long): Long =
+      (a5, b5) match {
+        case (0L, x) => x
+        case (x, 0L) => x
+        case (x, y) => math.min(x, y) // earliest promised pane
+      }
+
+    /** Fire any due wall-clock pane anchors; mutates `m` in place. */
+    private def fireDueAnchors(key: K, now: Long, lv: SessionLog[V],
+        m: Windows, out: Out): Unit =
+      m.keys.toSeq.foreach { min =>
+        val st = m(min)
+        if (st._5 != 0L && st._5 <= now && st._2 > 0)
+          m(min) = firePane(key, min, st, if (st._4) "LATE" else "EARLY",
+            isFinal = false, lv, out).copy(_5 = 0L)
+      }
 
     /** One sweep-timer chain per key, aimed at the nearest pending
-      * event-time need (on-time at window end, GC at end + lateness)
-      * mapped to wall clock — same self-pacing estimate as
-      * [[MixedTriggerSessionProcessor.armSweep]]; replaces the fixed
-      * per-invocation heartbeat that grew one timer chain per input
-      * batch. */
-    private def armSweep(now: Long, wm: Long): Unit = {
-      val pending = if (sweepAt.exists()) sweepAt.get() else 0L
-      val it = windows.iterator()
-      var need = Long.MaxValue
-      // anchor-coinciding timer slots are shared, never deleted — see
-      // MixedTriggerSessionProcessor.armSweep
-      val anchors = scala.collection.mutable.Set[Long]()
-      while (it.hasNext) {
-        val (w, st) = it.next()
-        if (st._5 != 0L) anchors += st._5
-        val n = if (!st._4) w + windowMs else w + windowMs + allowedLatenessMs
-        if (n < need) need = n
+      * event-time transition, mapped to the wall clock under the
+      * steady-state assumption that the watermark advances at wall
+      * rate: delay = clamp(nearestNeed − wm, heartbeatMs,
+      * maxSweepLagMs). A stalled watermark self-paces (the deficit
+      * stays put, so so does the polling interval); a watermark racing
+      * ahead of wall time is observed within maxSweepLagMs; every input
+      * batch re-aims the chain at the fresh estimate.
+      *
+      * Timer-slot sharing: per-key timers are keyed by expiry, so the
+      * pending sweep slot can COINCIDE with a window's wall-clock
+      * anchor (now + delay). Deleting such a slot would silence the
+      * anchor until the next sweep tick — so an anchor-coinciding slot
+      * is never deleted, and a target landing on an anchor reuses that
+      * timer as the sweep tick (the expiry handler runs the sweep on
+      * every firing regardless of which role armed it). */
+    private def armSweep(now: Long, wm: Long, m: Windows, slot: Long): Long = {
+      val pending = slot
+      if (m.isEmpty) {
+        if (pending != 0L) getHandle.deleteTimer(pending)
+        return 0L
       }
-      if (need == Long.MaxValue) { // no open windows
-        if (pending != 0L) { getHandle.deleteTimer(pending); sweepAt.clear() }
-        return
-      }
-      val target = now + math.max(heartbeatMs, math.min(need - wm, maxSweepLagMs))
+      val anchors = m.valuesIterator.map(_._5).filter(_ != 0L).toSet
+      val target = now +
+        math.max(heartbeatMs, math.min(nextDue(m) - wm, maxSweepLagMs))
       if (pending == 0L || pending <= now || target < pending) {
         if (pending > now && !anchors.contains(pending))
           getHandle.deleteTimer(pending)
         if (!anchors.contains(target)) getHandle.registerTimer(target)
-        sweepAt.update(target)
-      }
+        target
+      } else pending
     }
-
-    private def openWindows(): Seq[Long] = {
-      val it = windows.keys(); val b = scala.collection.mutable.ArrayBuffer[Long]()
-      while (it.hasNext) b += it.next()
-      b.sorted.toSeq
-    }
-
-    private def retractionOf(key: K, buf: Seq[V], since: Long, pane: Long,
-        out: scala.collection.mutable.ArrayBuffer[(K, Long, Long, String, Boolean, Seq[V])],
-        w: Long): Unit =
-      if (retractions && pane > 0) {
-        val prevPane = buf.take(buf.size - since.toInt)
-        if (prevPane.nonEmpty) out += ((key, w, pane - 1, "RETRACT", false, prevPane))
-      }
-
-    /** Watermark-driven transitions (on-time firing, window close/GC)
-      * for every open window; runs before wall-clock pane firing in
-      * both handlers so elements pending when the watermark passes the
-      * end land in the ON_TIME pane, as in Beam. */
-    private def sweep(key: K, wm: Long,
-        out: scala.collection.mutable.ArrayBuffer[(K, Long, Long, String, Boolean, Seq[V])]): Unit =
-      openWindows().foreach { w =>
-        var (buf, since, pane, fired, anchor) = windows.getValue(w)
-        var closed = false
-        if (!fired && wm >= w + windowMs) {
-          retractionOf(key, buf, since, pane, out, w)
-          val closing = allowedLatenessMs == 0
-          out += ((key, w, pane, "ON_TIME", closing, buf))
-          if (closing) { windows.removeKey(w); closed = true }
-          else {
-            buf = if (accumulating) buf else Seq.empty
-            since = 0; pane += 1; fired = true; anchor = 0
-            windows.updateValue(w, (buf, since, pane, fired, anchor))
-          }
-        }
-        if (!closed && fired && wm >= w + windowMs + allowedLatenessMs) {
-          if (since > 0) {
-            retractionOf(key, buf, since, pane, out, w)
-            out += ((key, w, pane, "LATE", true, buf))
-          }
-          windows.removeKey(w)
-        }
-      }
 
     override def handleInputRows(key: K,
         rows: Iterator[(K, java.sql.Timestamp, V)],
-        timers: TimerValues): Iterator[(K, Long, Long, String, Boolean, Seq[V])] = {
+        timers: TimerValues): Iterator[O] = {
       val wm = timers.getCurrentWatermarkInMs()
       val now = timers.getCurrentProcessingTimeInMs()
-      val out = scala.collection.mutable.ArrayBuffer[(K, Long, Long, String, Boolean, Seq[V])]()
-      // state writes deferred to one per touched window per batch (see
-      // TriggeredWindowProcessor.handleInputRows)
-      val touched = scala.collection.mutable.Map[Long, (Seq[V], Long, Long, Boolean, Long)]()
+      val out: Out = scala.collection.mutable.ArrayBuffer()
+      val (lv, slot, m) = loadPacked()
       rows.foreach { case (_, ts, v) =>
-        val w = Math.floorDiv(ts.getTime, windowMs) * windowMs
-        if (wm < w + windowMs + allowedLatenessMs) { // else: expired window, drop
-          var (buf, since, pane, fired, anchor) =
-            touched.getOrElse(w,
-              if (windows.containsKey(w)) windows.getValue(w)
-              else (Seq.empty[V], 0L, 0L, false, 0L))
-          buf :+= v
-          since += 1
-          if (anchor == 0L) { // first element of this pane anchors the delay
-            anchor = now + (if (fired) lateDelayMs else earlyDelayMs)
-            getHandle.registerTimer(anchor)
+        val t = ts.getTime
+        if (wm < wf.dropPoint(t) + allowedLatenessMs) { // else: expired window
+          val (w, st0) = upsert(key, m, t, lv, out)
+          lv.append(t, v)
+          // the first element of a pane anchors its wall-clock delay
+          val anchor = if (st0._5 != 0L) st0._5 else {
+            val a = now + (if (st0._4) lateDelayMs else earlyDelayMs)
+            getHandle.registerTimer(a)
+            a
           }
-          touched(w) = (buf, since, pane, fired, anchor)
+          m(w) = st0.copy(_2 = st0._2 + 1, _5 = anchor)
         }
       }
-      touched.foreach { case (w, st) => windows.updateValue(w, st) }
-      sweep(key, wm, out)
-      // idle-key progress: keep exactly one sweep chain alive so the
-      // on-time/GC sweep runs again even with no further input
-      armSweep(now, wm)
-      out.iterator
+      // watermark transitions before wall-clock panes, so elements
+      // pending when the watermark passes the end land in ON_TIME
+      closeDue(key, wm, lv, m, out)
+      commit(lv, armSweep(now, wm, m, slot), m, out)
     }
 
     override def handleExpiredTimer(key: K, timers: TimerValues,
-        timer: ExpiredTimerInfo): Iterator[(K, Long, Long, String, Boolean, Seq[V])] = {
+        timer: ExpiredTimerInfo): Iterator[O] = {
       val wm = timers.getCurrentWatermarkInMs()
       val now = timers.getCurrentProcessingTimeInMs()
       val expiry = timer.getExpiryTimeInMs()
-      if (sweepAt.exists() && sweepAt.get() == expiry) sweepAt.clear()
-      val out = scala.collection.mutable.ArrayBuffer[(K, Long, Long, String, Boolean, Seq[V])]()
-      sweep(key, wm, out)
-      openWindows().foreach { w =>
-        var (buf, since, pane, fired, anchor) = windows.getValue(w)
-        if (anchor != 0L && anchor <= expiry && since > 0) {
-          retractionOf(key, buf, since, pane, out, w)
-          out += ((key, w, pane, if (fired) "LATE" else "EARLY", false, buf))
-          if (!accumulating) buf = Seq.empty
-          since = 0; pane += 1; anchor = 0
-          windows.updateValue(w, (buf, since, pane, fired, anchor))
-        }
-      }
-      armSweep(now, wm)
-      out.iterator
+      val out: Out = scala.collection.mutable.ArrayBuffer()
+      val (lv, slot0, m) = loadPacked()
+      val slot = if (slot0 == expiry) 0L else slot0 // sweep slot consumed
+      closeDue(key, wm, lv, m, out)
+      fireDueAnchors(key, math.max(now, expiry), lv, m, out)
+      commit(lv, armSweep(now, wm, m, slot), m, out)
     }
   }
 
   /** Fixed windows with Beam's mixed-clock compound trigger — wall-
     * clock early/late panes inside event-time windows; see
-    * [[MixedTriggerWindowProcessor]]. `ds` must carry a watermark on
+    * [[MixedTriggerSessionProcessor]]. `ds` must carry a watermark on
     * its timestamp column (any delay; the processor reads the
     * watermark but does its own window-end lateness drops).
     *
@@ -3458,251 +3101,12 @@ object StatefulV2 {
       earlyDelayMs: Long = 1000L, lateDelayMs: Long = 1000L,
       accumulating: Boolean = false, retractions: Boolean = false,
       heartbeatMs: Long = 200L, maxSweepLagMs: Long = 5000L)(
-      implicit stEnc: Encoder[(Seq[V], Long, Long, Boolean, Long)],
-      outEnc: Encoder[(K, Long, Long, String, Boolean, Seq[V])]): Dataset[(K, Long, Long, String, Boolean, Seq[V])] =
+      implicit outEnc: Encoder[Pane[K, V]]): Dataset[Pane[K, V]] =
     ds.groupByKey(_._1).transformWithState(
-      new MixedTriggerWindowProcessor[K, V](windowMs, allowedLatenessMs,
-        earlyDelayMs, lateDelayMs, accumulating, retractions, heartbeatMs,
-        maxSweepLagMs),
+      new MixedTriggerSessionProcessor[K, V, Pane[K, V]](WindowFn.Fixed(windowMs),
+        allowedLatenessMs, earlyDelayMs, lateDelayMs, accumulating,
+        retractions, heartbeatMs, maxSweepLagMs)(Iterator.single),
       TimeMode.ProcessingTime(), OutputMode.Append())
-
-  /** Beam's mixed-clock compound trigger over MERGING windows — the
-    * composition of [[MixedTriggerWindowProcessor]] (wall-clock
-    * early/late panes inside event-time windows) and
-    * [[TriggeredSessionProcessor]] (pane state that merges when
-    * sessions merge):
-    *
-    * `Window.into(Sessions.withGapDuration(gap))
-    *    .triggering(AfterWatermark.pastEndOfWindow()
-    *      .withEarlyFirings(AfterProcessingTime
-    *         .pastFirstElementInPane().plusDelayOf(earlyDelay))
-    *      .withLateFirings(...))`
-    *
-    * Mechanics: runs in TimeMode.ProcessingTime — wall-clock timers
-    * drive early/late panes (`pastFirstElementInPane` anchoring: the
-    * FIRST element buffered since the last firing sets the deadline;
-    * later arrivals never push it out) — while the event-time
-    * machinery reads the propagated watermark for on-time/close/GC.
-    * No engine late-row filter applies in this mode, so drops happen
-    * by the element's proto-window end (ts + gap + lateness < wm),
-    * Beam's exact rule. On MERGE: buffers concatenate, counts sum,
-    * pane index continues, `fired` ORs, the anchor deadline takes the
-    * EARLIEST pending one (a pane already promised keeps its
-    * deadline), and with retractions each part's last pane retracts
-    * under its own window start (as in [[TriggeredSessionProcessor]]).
-    * Session ends move as elements arrive/merge, so on-time/GC are
-    * evaluated against the CURRENT end in the sweep rather than a
-    * pre-armed end timer — a heartbeat guarantees sweep progress on
-    * idle keys, and an idle key (no open sessions) holds zero state
-    * and zero timers. */
-  class MixedTriggerSessionProcessor[K, V](
-      gapMs: Long, allowedLatenessMs: Long,
-      earlyDelayMs: Long, lateDelayMs: Long,
-      accumulating: Boolean, retractions: Boolean = false,
-      heartbeatMs: Long = 200L, maxSweepLagMs: Long = 5000L)(
-      implicit vEnc: Encoder[V])
-      extends StatefulProcessor[K, (K, java.sql.Timestamp, V), (K, Long, Long, String, Boolean, Seq[V])] {
-    require(gapMs > 0 && allowedLatenessMs >= 0)
-    require(earlyDelayMs > 0 && lateDelayMs > 0 && heartbeatMs > 0)
-    require(maxSweepLagMs >= heartbeatMs)
-    require(!retractions || accumulating,
-      "retractions require accumulating mode (a discarding pane has nothing to retract)")
-
-    // per-session pane SUMMARIES, keyed by session MIN ts — see
-    // [[SessionPanes.St]]; slot 5 = anchorDeadlineMs (0 = no pending
-    // wall-clock pane); lastFirePos = the retraction baseline and rows
-    // live in the per-key append-only [[SessionLog]], both as in
-    // TriggeredSessionProcessor — including the r14 packed layout
-    // ([[SessionPanes.Packed]], Packed._4 = the sweep-chain slot): ONE
-    // ValueState put per touched key per batch, named "panes3" so an
-    // r11-r13 (sessions2 + logMeta + sweepAt) checkpoint can never be
-    // decoded as the new schema; SessionLog.checkFreshLayout makes a
-    // pre-r14 restore loud (see the TriggeredSessionProcessor note).
-    private type SessState = SessionPanes.St
-    @transient private var packed: ValueState[SessionPanes.Packed] = _
-    @transient private var log: ListState[(Long, Long, V)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      packed = getHandle.getValueState[SessionPanes.Packed]("panes3",
-        SessionPanes.packedEnc, TTLConfig.NONE)
-      log = getHandle.getListState[(Long, Long, V)]("log",
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, vEnc),
-        TTLConfig.NONE)
-    }
-
-    /** (log view, sweep slot, session summaries) off the packed row. */
-    private def loadPacked(): (SessionLog[V], Long,
-        scala.collection.mutable.TreeMap[Long, SessState]) =
-      if (packed.exists()) {
-        val (np, tot, gb, slot, ss) = packed.get()
-        (new SessionLog[V](log, np, tot, gb), slot,
-          scala.collection.mutable.TreeMap.from(ss))
-      } else {
-        val lv = new SessionLog[V](log)
-        lv.checkFreshLayout() // pre-r14 checkpoint → loud, not data loss
-        (lv, 0L, scala.collection.mutable.TreeMap.empty)
-      }
-
-    private def savePacked(lv: SessionLog[V], slot: Long,
-        m: scala.collection.mutable.TreeMap[Long, SessState]): Unit =
-      if (m.isEmpty && lv.total == 0L && slot == 0L) packed.clear()
-      else packed.update((lv.nextPos, lv.total, lv.garbage, slot, m.toSeq))
-
-    private def paneValues(buf: Seq[(Long, V)]): Seq[V] =
-      SessionPanes.paneValues(buf)
-
-    private def retractionOf(key: K, skey: Long, st: SessState,
-        lv: SessionLog[V],
-        out: scala.collection.mutable.ArrayBuffer[(K, Long, Long, String, Boolean, Seq[V])]): Unit =
-      if (retractions && st._7 > 0)
-        out += ((key, skey, st._3 - 1, "RETRACT", false,
-          paneValues(lv.content(skey, st, beforePos = st._7))))
-
-    /** Watermark transitions (on-time, close/GC) against each
-      * session's CURRENT end; mutates `m` in place, tracking dirty
-      * sessions (closed-span rows are accounted as log garbage and
-      * purge lazily at the compaction threshold). */
-    private def sweep(key: K, wm: Long, lv: SessionLog[V],
-        m: scala.collection.mutable.TreeMap[Long, SessState],
-        out: scala.collection.mutable.ArrayBuffer[(K, Long, Long, String, Boolean, Seq[V])]): Unit =
-      m.keys.toSeq.foreach { min =>
-        var st = m(min)
-        val (_, _, _, fired0, _, mx, _) = st
-        val end = mx + gapMs
-        var closed = false
-        if (!fired0 && wm >= end) {
-          retractionOf(key, min, st, lv, out)
-          val closing = allowedLatenessMs == 0
-          val vals = paneValues(lv.content(min, st))
-          out += ((key, min, st._3, "ON_TIME", closing, vals))
-          if (closing) {
-            m.remove(min); closed = true
-            lv.garbage += vals.size // closed-span rows purge lazily
-          } else {
-            val cuts = if (accumulating) st._1
-                       else { lv.garbage += vals.size; Seq((min, lv.nextPos)) }
-            st = (cuts, 0L, st._3 + 1, true, 0L, mx, lv.nextPos)
-            m(min) = st
-          }
-        }
-        if (!closed && st._4 && wm >= end + allowedLatenessMs) {
-          val live = lv.content(min, st)
-          if (st._2 > 0) {
-            retractionOf(key, min, st, lv, out)
-            out += ((key, min, st._3, "LATE", true, paneValues(live)))
-          }
-          m.remove(min)
-          lv.garbage += live.size
-        }
-      }
-
-    /** Fire any due wall-clock pane anchors; mutates `m` in place. */
-    private def fireDueAnchors(key: K, now: Long, lv: SessionLog[V],
-        m: scala.collection.mutable.TreeMap[Long, SessState],
-        out: scala.collection.mutable.ArrayBuffer[(K, Long, Long, String, Boolean, Seq[V])]): Unit =
-      m.keys.toSeq.foreach { min =>
-        val st = m(min)
-        val (_, since, pane, fired, anchor, mx, _) = st
-        if (anchor != 0L && anchor <= now && since > 0) {
-          retractionOf(key, min, st, lv, out)
-          val vals = paneValues(lv.content(min, st))
-          out += ((key, min, pane, if (fired) "LATE" else "EARLY", false,
-            vals))
-          val cuts = if (accumulating) st._1
-                     else { lv.garbage += vals.size; Seq((min, lv.nextPos)) }
-          m(min) = (cuts, 0L, pane + 1, fired, 0L, mx, lv.nextPos)
-        }
-      }
-
-    /** One sweep-timer chain per key, aimed at the nearest pending
-      * event-time need (on-time at end, GC at end + lateness), mapped
-      * to the wall clock under the steady-state assumption that the
-      * watermark advances at wall rate: delay = clamp(nearestNeed − wm,
-      * heartbeatMs, maxSweepLagMs). A stalled watermark self-paces
-      * (the deficit stays put, so so does the polling interval); a
-      * watermark racing ahead of wall time is observed within
-      * maxSweepLagMs; every input batch re-aims the chain at the fresh
-      * estimate. Replaces the fixed per-invocation heartbeat that
-      * accumulated one timer chain per input batch.
-      *
-      * Timer-slot sharing: per-key timers are keyed by expiry, so the
-      * pending sweep slot can COINCIDE with a session's wall-clock
-      * anchor (now + delay). Deleting such a slot would silence the
-      * anchor until the next sweep tick — so an anchor-coinciding slot
-      * is never deleted, and a target landing on an anchor reuses that
-      * timer as the sweep tick (the expiry handler runs the sweep on
-      * every firing regardless of which role armed it). */
-    private def armSweep(now: Long, wm: Long,
-        m: scala.collection.mutable.TreeMap[Long, SessState],
-        slot: Long): Long = {
-      val pending = slot
-      if (m.isEmpty) {
-        if (pending != 0L) getHandle.deleteTimer(pending)
-        return 0L
-      }
-      val anchors = m.valuesIterator.map(_._5).filter(_ != 0L).toSet
-      val need = m.valuesIterator.map { st =>
-        if (!st._4) st._6 + gapMs else st._6 + gapMs + allowedLatenessMs
-      }.min
-      val target = now + math.max(heartbeatMs, math.min(need - wm, maxSweepLagMs))
-      if (pending == 0L || pending <= now || target < pending) {
-        if (pending > now && !anchors.contains(pending))
-          getHandle.deleteTimer(pending)
-        if (!anchors.contains(target)) getHandle.registerTimer(target)
-        target
-      } else pending
-    }
-
-    override def handleInputRows(key: K,
-        rows: Iterator[(K, java.sql.Timestamp, V)],
-        timers: TimerValues): Iterator[(K, Long, Long, String, Boolean, Seq[V])] = {
-      val wm = timers.getCurrentWatermarkInMs()
-      val now = timers.getCurrentProcessingTimeInMs()
-      val out = scala.collection.mutable.ArrayBuffer[(K, Long, Long, String, Boolean, Seq[V])]()
-      val (lv, slot, m) = loadPacked()
-      rows.foreach { case (_, ts, v) =>
-        val t = ts.getTime
-        if (wm < t + gapMs + allowedLatenessMs) { // else: expired proto-window
-          val (skey, st0) = SessionPanes.upsert(m, t, gapMs, lv.nextPos,
-            combine5 = (_, a5, _, b5) => (a5, b5) match {
-              case (0L, x) => x
-              case (x, 0L) => x
-              case (x, y) => math.min(x, y) // earliest promised pane
-            },
-            retract = (w, st) => retractionOf(key, w, st, lv, out))
-          var (cuts, since, pane, fired, anchor, mx, lastFire) = st0
-          lv.append(t, v)
-          since += 1
-          if (anchor == 0L) { // first element of this pane anchors the delay
-            anchor = now + (if (fired) lateDelayMs else earlyDelayMs)
-            getHandle.registerTimer(anchor)
-          }
-          m(skey) = (cuts, since, pane, fired, anchor, mx, lastFire)
-        }
-      }
-      sweep(key, wm, lv, m, out)
-      lv.maybeRewrite(m) // collapses fences in m itself; m persists below
-      lv.flush() // ONE appendList for this batch's rows
-      savePacked(lv, armSweep(now, wm, m, slot), m)
-      out.iterator
-    }
-
-    override def handleExpiredTimer(key: K, timers: TimerValues,
-        timer: ExpiredTimerInfo): Iterator[(K, Long, Long, String, Boolean, Seq[V])] = {
-      val wm = timers.getCurrentWatermarkInMs()
-      val now = timers.getCurrentProcessingTimeInMs()
-      val expiry = timer.getExpiryTimeInMs()
-      val out = scala.collection.mutable.ArrayBuffer[(K, Long, Long, String, Boolean, Seq[V])]()
-      val (lv, slot0, m) = loadPacked()
-      val slot = if (slot0 == expiry) 0L else slot0 // sweep slot consumed
-      sweep(key, wm, lv, m, out)
-      fireDueAnchors(key, math.max(now, expiry), lv, m, out)
-      lv.maybeRewrite(m)
-      lv.flush()
-      savePacked(lv, armSweep(now, wm, m, slot), m)
-      out.iterator
-    }
-  }
 
   /** Session windows with Beam's mixed-clock compound trigger — see
     * [[MixedTriggerSessionProcessor]]. `ds` must carry a watermark on
@@ -3718,10 +3122,10 @@ object StatefulV2 {
       earlyDelayMs: Long = 1000L, lateDelayMs: Long = 1000L,
       accumulating: Boolean = false, retractions: Boolean = false,
       heartbeatMs: Long = 200L, maxSweepLagMs: Long = 5000L)(
-      implicit outEnc: Encoder[(K, Long, Long, String, Boolean, Seq[V])]): Dataset[(K, Long, Long, String, Boolean, Seq[V])] =
+      implicit outEnc: Encoder[Pane[K, V]]): Dataset[Pane[K, V]] =
     ds.groupByKey(_._1).transformWithState(
-      new MixedTriggerSessionProcessor[K, V](gapMs, allowedLatenessMs,
-        earlyDelayMs, lateDelayMs, accumulating, retractions, heartbeatMs,
-        maxSweepLagMs),
+      new MixedTriggerSessionProcessor[K, V, Pane[K, V]](WindowFn.Sessions(gapMs),
+        allowedLatenessMs, earlyDelayMs, lateDelayMs, accumulating,
+        retractions, heartbeatMs, maxSweepLagMs)(Iterator.single),
       TimeMode.ProcessingTime(), OutputMode.Append())
 }

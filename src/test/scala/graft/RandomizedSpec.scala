@@ -406,12 +406,13 @@ class RandomizedSpec extends SparkSpec {
   }
 
   test("SessionPanes.upsert maintains exact gap-clusters under random insertion order") {
-    import graft.streaming.StatefulV2.SessionPanes
+    import graft.streaming.StatefulV2.{SessionPanes, WindowFn}
     // the incremental locate/extend/rekey/merge must reproduce, after
     // EVERY insertion, exactly the gap-connected components a full
     // re-cluster of the inserted timestamps would give — plus the
     // bookkeeping invariants the trigger machinery relies on
     val rnd = new scala.util.Random(11)
+    val sizes = new scala.util.Random(12) // fixed-window sizes
     (1 to 200).foreach { trial =>
       val gap = 1 + rnd.nextInt(10)
       val n = 1 + rnd.nextInt(40)
@@ -424,7 +425,7 @@ class RandomizedSpec extends SparkSpec {
       var retracts = 0
       ts.zipWithIndex.foreach { case (t, i) =>
         val pos = i.toLong
-        val (skey, st0) = SessionPanes.upsert(m, t, gap, pos,
+        val (skey, st0) = WindowFn.Sessions(gap).upsert(m, t, pos,
           combine5 = (_, a5, _, b5) => math.max(a5, b5),
           retract = (_, _) => retracts += 1)
         log += ((pos, t, s"v$i"))
@@ -461,11 +462,39 @@ class RandomizedSpec extends SparkSpec {
         // counts sum to the inserted total (merges never drop counts)
         assert(m.values.map(_._2).sum == i + 1L, s"trial $trial: count drift")
       }
+      // the same insertion order through FIXED windows: every row is
+      // live in exactly its floor window, whose summary spans exactly
+      // that window's rows — fixed windows never merge, rekey or retract
+      val size = 1 + sizes.nextInt(20)
+      val fixed = WindowFn.Fixed(size)
+      val fm = scala.collection.mutable.TreeMap.empty[Long, SessionPanes.St]
+      def floor(x: Long) = Math.floorDiv(x, size.toLong) * size
+      ts.zipWithIndex.foreach { case (t, i) =>
+        val (w, st0) = fixed.upsert(fm, t, i.toLong,
+          combine5 = (_, _, _, _) => fail(s"trial $trial: fixed windows merged"),
+          retract = (_, _) => fail(s"trial $trial: fixed windows retracted"))
+        assert(w == floor(t), s"trial $trial size=$size: $t keyed at $w")
+        fm(w) = st0.copy(_2 = st0._2 + 1)
+        val seen = ts.take(i + 1)
+        val expected = seen.groupBy(floor).map { case (k, xs) => (k, xs.max) }
+          .toSeq.sorted
+        assert(fm.toSeq.map { case (k, st) => (k, st._6) } == expected,
+          s"trial $trial size=$size after $seen: ${fm.keys}")
+        seen.zipWithIndex.foreach { case (rt, p) =>
+          val liveIn = fm.toSeq.collect {
+            case (k, st) if SessionPanes.live(k, st, p.toLong, rt) => k
+          }
+          assert(liveIn == Seq(floor(rt)),
+            s"trial $trial size=$size: row ($p, $rt) live in $liveIn")
+        }
+        assert(fm.forall { case (k, st) => st._2 == seen.count(floor(_) == k) },
+          s"trial $trial size=$size: per-window count drift")
+      }
     }
   }
 
   test("SessionLog: hundreds of merges into one session keep cuts bounded; span reads == full-scan reference") {
-    import graft.streaming.StatefulV2.{SessionPanes, SessionLog}
+    import graft.streaming.StatefulV2.{SessionPanes, SessionLog, WindowFn}
     // in-memory state fakes (the trait surface the processors use)
     class FakeList[T] extends org.apache.spark.sql.streaming.ListState[T] {
       var buf = scala.collection.mutable.ArrayBuffer.empty[T]
@@ -495,7 +524,7 @@ class RandomizedSpec extends SparkSpec {
     (singles ++ bridges).foreach { t =>
       // fresh view per "invocation", as the processors construct one
       val lv = freshLog()
-      val (skey, st0) = SessionPanes.upsert(m, t, 1L, lv.nextPos,
+      val (skey, st0) = WindowFn.Sessions(1L).upsert(m, t, lv.nextPos,
         combine5 = (_, a5, _, b5) => math.max(a5, b5),
         retract = (_, _) => merges += 1)
       lv.append(t, s"v$t")
@@ -537,33 +566,6 @@ class RandomizedSpec extends SparkSpec {
     }
     new SessionLog[String](new FakeList[(Long, Long, String)]())
       .checkFreshLayout()
-  }
-
-  test("insertCluster == naive gap re-clustering on random insertion orders") {
-    // the r13 gap processor maintains session summaries incrementally
-    // (extend / bridge-merge / open) against rows arriving in ANY
-    // order — every prefix of every insertion order must equal the
-    // naive sort-then-split clustering of the same multiset
-    val rnd = new scala.util.Random(20260815L)
-    (1 to 200).foreach { trial =>
-      val gap = 1L + rnd.nextInt(9)
-      val n = 1 + rnd.nextInt(40)
-      val ts = Seq.fill(n)(rnd.nextInt(120).toLong)
-      var cs = Vector.empty[(Long, Long)]
-      ts.zipWithIndex.foreach { case (t, i) =>
-        cs = graft.streaming.StatefulV2.insertCluster(cs, t, gap)
-        val seen = ts.take(i + 1).distinct.sorted
-        // naive: split the sorted distinct timestamps wherever the
-        // next starts more than gap past the running max
-        val want = seen.tail.foldLeft(Vector((seen.head, seen.head))) {
-          case (acc, t2) =>
-            if (t2 - acc.last._2 <= gap) acc.init :+ ((acc.last._1, t2))
-            else acc :+ ((t2, t2))
-        }
-        assert(cs == want,
-          s"trial $trial gap=$gap after ${ts.take(i + 1)}: $cs != $want")
-      }
-    }
   }
 
   test("Misra-Gries: est <= true <= est + err, err <= n/(k+1), heavy coverage — any split/merge order") {

@@ -130,6 +130,19 @@ class ScaleLintSpec extends SparkSpec {
         s"groupByKey calls:\n${calls.mkString("\n")}")
   }
 
+  test("no per-window MapState pane buffer under src/main") {
+    // windowed pane rows live in the append-only SessionLog: a
+    // MapState[windowStart, (Seq[V], ...)] pane re-serializes the whole
+    // window buffer on every touched batch, O(window) per write
+    val calls = mainSources.flatMap { case (p, lines) =>
+      lines.zipWithIndex.collect {
+        case (line, i) if line.contains("getMapState[Long, (Seq[") => s"$p:${i + 1}"
+      }
+    }
+    assert(calls.isEmpty,
+      s"keep pane rows in StatefulV2.SessionLog; MapState pane buffers:\n${calls.mkString("\n")}")
+  }
+
   test("every driver-side collect in main sources declares its bound") {
     // 4th job-killer: .collect()/.head()/.first() materializes to the
     // driver — fine ONLY for provably bounded fit artifacts (a 1-row

@@ -590,6 +590,35 @@ class StatefulV2Spec extends SparkSpec {
     }
   }
 
+  test("triggered windows: out-of-order rows within one window come out in event-time order") {
+    withRocksDb {
+      val mem = MemoryStream[(Long, java.sql.Timestamp, String)]
+      val panes = StatefulV2.triggeredWindows(
+        mem.toDS().withWatermark("_2", "0 milliseconds"),
+        windowMs = 10000L, earlyFireEvery = 2, accumulating = true)
+      val table = freshTable()
+      val q = startMemorySink(panes, table)
+      // arrival order c, a, b inside [0,10s): the early pane fires on
+      // a, then b lands between them (one batch, so the watermark
+      // drops none of them)
+      mem.addData((1L, t(5), "c"), (1L, t(1), "a"), (1L, t(3), "b"))
+      q.processAllAvailable()
+      mem.addData((9L, t(50), "wm"))
+      q.processAllAvailable()
+      mem.addData((9L, t(55), "wm2"))
+      q.processAllAvailable()
+      awaitSink(table)(spark.table(table).filter("_1 = 1").count() == 2)
+      val got = spark.table(table)
+        .as[(Long, Long, Long, String, Boolean, Seq[String])]
+        .collect().filter(_._1 == 1L).sortBy(_._3)
+        .map(p => (p._3, p._4, p._6)).toSeq
+      assert(got == Seq(
+        (0L, "EARLY", Seq("a", "c")),
+        (1L, "ON_TIME", Seq("a", "b", "c"))), s"got $got")
+      q.stop()
+    }
+  }
+
   test("triggered SESSIONS: early pane before merge; merged panes continue the index and accumulate across the bridge") {
     withRocksDb {
       val mem = MemoryStream[(Long, java.sql.Timestamp, String)]
@@ -870,10 +899,11 @@ class StatefulV2Spec extends SparkSpec {
 
   test("triggered SESSIONS: lateness >= gap is rejected up front") {
     val err = intercept[IllegalArgumentException] {
-      new StatefulV2.TriggeredSessionProcessor[Long, String](
-        gapMs = 1000L, allowedLatenessMs = 1000L,
+      new StatefulV2.TriggeredSessionProcessor[Long, String, StatefulV2.Pane[Long, String]](
+        StatefulV2.WindowFn.Sessions(1000L), allowedLatenessMs = 1000L,
         earlyTrigger = StatefulV2.NeverCount,
-        lateTrigger = StatefulV2.AfterCount(1), accumulating = false)
+        lateTrigger = StatefulV2.AfterCount(1), accumulating = false)(
+        Iterator.single)
     }
     assert(err.getMessage.contains("must be < gapMs"))
   }
@@ -1119,6 +1149,43 @@ class StatefulV2Spec extends SparkSpec {
       assert(got.exists(p => p._1 == 2L && p._4 == "ON_TIME" &&
         p._6 == Seq("x")),
         s"key 2's session lost across restart: ${got.toSeq}")
+      q2.stop()
+    }
+  }
+
+  test("triggeredWindows: open windows survive restart and fire via the restored timer chain") {
+    withRocksDb {
+      // fixed windows share the session-pane layout (packed meta +
+      // append-only log + one timer chain per key): an open window's
+      // rows and its chain timer must both restore
+      val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt3").toString
+      val outDir = java.nio.file.Files.createTempDirectory("graft-rec3").toString
+      val mem = MemoryStream[(Long, java.sql.Timestamp, String)]
+      def start() = StatefulV2.triggeredWindows(
+          mem.toDS().withWatermark("_2", "0 seconds"), windowMs = 10000L)
+        .toDF("key", "win", "pane", "timing", "isFinal", "vals")
+        .writeStream.format("parquet").option("path", outDir)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append").start()
+      val q1 = start()
+      mem.addData((1L, t(1), "a"), (1L, t(3), "b"), (1L, t(12), "c"),
+        (2L, t(2), "x"))
+      q1.processAllAvailable()
+      q1.stop() // three windows open over two keys; nothing emitted yet
+      val q2 = start()
+      mem.addData((9L, t(50), "wm")) // watermark past every window end
+      q2.processAllAvailable()
+      mem.addData((9L, t(55), "wm2"))
+      q2.processAllAvailable()
+      val got = spark.read.parquet(outDir)
+        .as[(Long, Long, Long, String, Boolean, Seq[String])]
+        .collect().filter(_._1 != 9L)
+        .map(p => (p._1, p._2 - t(0).getTime, p._4, p._5, p._6)).toSet
+      assert(got == Set(
+        (1L, 0L, "ON_TIME", true, Seq("a", "b")),
+        (1L, 10000L, "ON_TIME", true, Seq("c")),
+        (2L, 0L, "ON_TIME", true, Seq("x"))),
+        s"windows lost or mis-flushed across restart: $got")
       q2.stop()
     }
   }
