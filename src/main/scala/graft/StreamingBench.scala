@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryProgress
 import graft.streaming.{StatefulV2, StreamOps}
 
 /** Streaming THROUGHPUT bench: replays the `events` table in
@@ -72,6 +73,11 @@ object StreamingBench {
     *     ListState/MapState traffic the processors generate
     *   - rowsUpdated / rowsRemoved: state-row write volume (the
     *     metric that exposes O(n²) state rewrite patterns directly)
+    *   - queryPlanningMs / walCommitMs / commitOffsetsMs: the driver's
+    *     per-batch fixed cost — planning, the offset-log write and the
+    *     commit-log write
+    *   - triggerMs: WALL time of each whole micro-batch (the sum the
+    *     other wall times above are parts of)
     * The three state times are PER-PARTITION task times summed across
     * the parallel state-store instances, so they are comparable to
     * each other and across runs but NOT subtractable from the wall
@@ -80,17 +86,21 @@ object StreamingBench {
     * signal; the times attribute which path paid for it. */
   final case class OpBreakdown(batches: Int, addBatchMs: Long,
       stateCommitMs: Long, stateUpdateMs: Long, stateRemovalMs: Long,
-      rowsUpdated: Long, rowsRemoved: Long) {
+      rowsUpdated: Long, rowsRemoved: Long, queryPlanningMs: Long,
+      walCommitMs: Long, commitOffsetsMs: Long, triggerMs: Long) {
     def json: String =
       s"""{"batches":$batches,"addBatchMs":$addBatchMs,""" +
         s""""stateCommitMs":$stateCommitMs,"stateUpdateMs":$stateUpdateMs,""" +
         s""""stateRemovalMs":$stateRemovalMs,"rowsUpdated":$rowsUpdated,""" +
-        s""""rowsRemoved":$rowsRemoved}"""
+        s""""rowsRemoved":$rowsRemoved,"queryPlanningMs":$queryPlanningMs,""" +
+        s""""walCommitMs":$walCommitMs,"commitOffsetsMs":$commitOffsetsMs,""" +
+        s""""triggerMs":$triggerMs}"""
   }
 
   /** Failure sentinel: every field -1 so a failed op/suite can never
     * be misread as "ran with zero state traffic". */
-  val failedBreakdown: OpBreakdown = OpBreakdown(-1, -1, -1, -1, -1, -1, -1)
+  val failedBreakdown: OpBreakdown =
+    OpBreakdown(-1, -1, -1, -1, -1, -1, -1, -1, -1, -1, -1)
 
   /** A failed op: one `[sbench] op: class: message` line on stderr,
     * then the -1.0 sentinel row. */
@@ -100,17 +110,21 @@ object StreamingBench {
     (-1.0, failedBreakdown)
   }
 
-  private def breakdownOf(
-      prog: Array[org.apache.spark.sql.streaming.StreamingQueryProgress]): OpBreakdown = {
+  private def breakdownOf(prog: Array[StreamingQueryProgress]): OpBreakdown = {
     val ops = prog.flatMap(_.stateOperators)
+    def sum(k: String) = prog.map(graft.tools.ReplayHarness.dur(_, k)).sum
     OpBreakdown(
       batches = prog.length,
-      addBatchMs = prog.map(graft.tools.ReplayHarness.dur(_, "addBatch")).sum,
+      addBatchMs = sum("addBatch"),
       stateCommitMs = ops.map(_.commitTimeMs).sum,
       stateUpdateMs = ops.map(_.allUpdatesTimeMs).sum,
       stateRemovalMs = ops.map(_.allRemovalsTimeMs).sum,
       rowsUpdated = ops.map(_.numRowsUpdated).sum,
-      rowsRemoved = ops.map(_.numRowsRemoved).sum)
+      rowsRemoved = ops.map(_.numRowsRemoved).sum,
+      queryPlanningMs = sum("queryPlanning"),
+      walCommitMs = sum("walCommit"),
+      commitOffsetsMs = sum("commitOffsets"),
+      triggerMs = sum("triggerExecution"))
   }
 
   /** One measured pass over the shared replay core
@@ -148,13 +162,9 @@ object StreamingBench {
     val outRows = new java.util.concurrent.atomic.AtomicLong
     /** epoch-ms end of the last OUTPUT-producing batch (wall anchor) */
     @volatile var lastOutEndMs: Long = -1L
-    @volatile var batches: Int = 0
-    @volatile var addBatchMs: Long = 0L
-    @volatile var stateCommitMs: Long = 0L
-    @volatile var stateUpdateMs: Long = 0L
-    @volatile var stateRemovalMs: Long = 0L
-    @volatile var rowsUpdated: Long = 0L
-    @volatile var rowsRemoved: Long = 0L
+    /** every progress event of the run, for [[breakdownOf]] */
+    private val progress =
+      scala.collection.mutable.ArrayBuffer.empty[StreamingQueryProgress]
     override def onQueryStarted(e: QueryStartedEvent): Unit = ()
     override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
     override def onQueryProgress(e: QueryProgressEvent): Unit =
@@ -167,20 +177,10 @@ object StreamingBench {
             lastOutEndMs = java.time.Instant.parse(p.timestamp)
               .toEpochMilli + p.batchDuration
           }
-          val ops = p.stateOperators
-          batches += 1
-          addBatchMs += graft.tools.ReplayHarness.dur(p, "addBatch")
-          stateCommitMs += ops.map(_.commitTimeMs).sum
-          stateUpdateMs += ops.map(_.allUpdatesTimeMs).sum
-          stateRemovalMs += ops.map(_.allRemovalsTimeMs).sum
-          rowsUpdated += ops.map(_.numRowsUpdated).sum
-          rowsRemoved += ops.map(_.numRowsRemoved).sum
+          progress += p
         }
       }
-    def breakdown: OpBreakdown = synchronized {
-      OpBreakdown(batches, addBatchMs, stateCommitMs, stateUpdateMs,
-        stateRemovalMs, rowsUpdated, rowsRemoved)
-    }
+    def breakdown: OpBreakdown = synchronized { breakdownOf(progress.toArray) }
   }
 
   /** Nexmark Q12 analog (processing-time windows) measured for REAL:

@@ -17,8 +17,26 @@ import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryProgress}
   * from query start through the final flush. Returns (wallSeconds,
   * recentProgress) — callers aggregate the progress array their own
   * way. Exceptions propagate (callers own failure policy); the query
-  * and its checkpoint tree are ALWAYS torn down. */
+  * and its checkpoint tree are ALWAYS torn down, and a failed stop or
+  * delete writes one line to stderr without masking the body's error.
+  *
+  * Every replay checkpoints through [[CheckpointManager]], Spark's
+  * FileSystem-based manager, instead of the default FileContext one.
+  * Without libhadoop, Hadoop's local filesystem forks a `readlink`
+  * process for each path a FileContext rename checks, and the offset
+  * log, the commit log and every RocksDB changelog/snapshot write end
+  * in such a rename: a JFR recording of one perfbench `stream_stateful`
+  * run on a 4-core host counted 6,096 `readlink` among its 8,094
+  * process starts. The FileSystem manager's exists-then-rename gives
+  * the same guarantees here: the checkpoint is a fresh local temp
+  * directory the harness owns, with one writer, and a local POSIX
+  * rename is atomic. The caller's setting is restored after the
+  * replay. */
 object ReplayHarness {
+
+  private[graft] val CheckpointManager: (String, String) =
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
 
   def run[T: Encoder](spark: SparkSession, name: String,
       rows: IndexedSeq[T], sentinels: Seq[T], chunks: Int,
@@ -26,41 +44,50 @@ object ReplayHarness {
       // (Nexmark Q10's sharded file logging); default noop
       sinkFormat: String = "noop", sinkPath: Option[String] = None,
       sinkPartitionBy: Seq[String] = Nil)(
-      f: Dataset[T] => Dataset[_]): (Double, Array[StreamingQueryProgress]) = {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ckptDir = java.nio.file.Files
-      .createTempDirectory("graft_replay_" + name)
-    var q: StreamingQuery = null
-    try {
-      val mem = MemoryStream[T]
-      val out = f(mem.toDS())
-      val t0 = System.nanoTime()
-      var w = out.writeStream.format(sinkFormat)
-        .option("checkpointLocation", ckptDir.toString)
-        .outputMode("append")
-      if (sinkPartitionBy.nonEmpty) w = w.partitionBy(sinkPartitionBy: _*)
-      sinkPath.foreach(p => w = w.option("path", p))
-      q = w.start()
-      val sz = math.max(1, rows.size / chunks)
-      rows.grouped(sz).foreach { g => mem.addData(g: _*); q.processAllAvailable() }
-      sentinels.foreach { s => mem.addData(s); q.processAllAvailable() }
-      ((System.nanoTime() - t0) / 1e9, q.recentProgress)
-    } finally {
-      if (q != null) { try q.stop() catch { case _: Throwable => () } }
-      // RocksDB checkpoint trees accumulate across runs otherwise
-      deleteTree(ckptDir)
+      f: Dataset[T] => Dataset[_]): (Double, Array[StreamingQueryProgress]) =
+    graft.StreamingBench.withConfs(spark, Seq(CheckpointManager)) {
+      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+      val ckptDir = java.nio.file.Files
+        .createTempDirectory("graft_replay_" + name)
+      var q: StreamingQuery = null
+      try {
+        val mem = MemoryStream[T]
+        val out = f(mem.toDS())
+        val t0 = System.nanoTime()
+        var w = out.writeStream.format(sinkFormat)
+          .option("checkpointLocation", ckptDir.toString)
+          .outputMode("append")
+        if (sinkPartitionBy.nonEmpty) w = w.partitionBy(sinkPartitionBy: _*)
+        sinkPath.foreach(p => w = w.option("path", p))
+        q = w.start()
+        val sz = math.max(1, rows.size / chunks)
+        rows.grouped(sz).foreach { g => mem.addData(g: _*); q.processAllAvailable() }
+        sentinels.foreach { s => mem.addData(s); q.processAllAvailable() }
+        ((System.nanoTime() - t0) / 1e9, q.recentProgress)
+      } finally {
+        if (q != null) {
+          try q.stop() catch { case e: Throwable => warn(s"stop $name", e) }
+        }
+        // RocksDB checkpoint trees accumulate across runs otherwise
+        deleteTree(ckptDir)
+      }
     }
-  }
 
-  /** Best-effort delete of the tree under `root`, deepest paths first:
-    * checkpoint, sink and stale temp-dir teardown. */
+  /** Deletes the tree under `root`, deepest paths first: checkpoint,
+    * sink and stale temp-dir teardown. A failure writes one stderr line
+    * and does not throw, so it never masks the caller's own error. */
   def deleteTree(root: java.nio.file.Path): Unit =
     try {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(root).iterator().asScala.toSeq
         .sortBy(-_.getNameCount)
         .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    } catch { case _: Throwable => () }
+    } catch { case e: Throwable => warn(s"delete $root", e) }
+
+  /** One `[replay] what: class: message` line on stderr. */
+  private def warn(what: String, e: Throwable): Unit =
+    System.err.println(s"[replay] $what: ${e.getClass.getName}: " +
+      Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse(""))
 
   /** durationMs lookup that tolerates absent keys (planning-only
     * batches) — the same helper all three call sites re-declared. */

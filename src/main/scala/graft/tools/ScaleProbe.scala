@@ -77,8 +77,12 @@ object ScaleProbe {
   private final case class Probe(name: String, n: Int, evsPerSec: Double,
       rowsUpdated: Long, rowsRemoved: Long,
       addBatchMs: Long, commitMs: Long, updateMs: Long,
-      stateRowsFinal: Long) {
+      stateRowsFinal: Long, stateBatches: Int) {
     def updPerEvent: Double = rowsUpdated.toDouble / n
+    /** upd/ev left after a fixed `perBatch` rows written by every
+      * batch that ran a state operator */
+    def updPerEventBeyond(perBatch: Long): Double =
+      (rowsUpdated - stateBatches * perBatch).toDouble / n
   }
 
   private def drive[T: Encoder](spark: SparkSession, name: String,
@@ -96,7 +100,8 @@ object ScaleProbe {
       ops.map(_.numRowsUpdated).sum, ops.map(_.numRowsRemoved).sum,
       prog.map(ReplayHarness.dur(_, "addBatch")).sum,
       ops.map(_.commitTimeMs).sum,
-      ops.map(_.allUpdatesTimeMs).sum, lastRows)
+      ops.map(_.allUpdatesTimeMs).sum, lastRows,
+      prog.count(_.stateOperators.nonEmpty))
   }
 
   /** Synthetic doc corpus for the banded-dedup witness: `n` docs of 30
@@ -246,6 +251,9 @@ object ScaleProbe {
     // for appendValue in r14. Two sweeps per op:
     //   (a) the 100k→1M event decade at shards=32: throughput exponent
     //       ≤ 0.30 per decade + state-write amplification ≤ 0.10 upd/ev
+    //       beyond stage 1's fixed per-batch rewrite (≤ shards × the
+    //       per-shard footprint below per state batch, whatever the
+    //       batch size — without it a small base fails on batch count)
     //   (b) a 32→256 shard sweep at the base scale: FINAL resident
     //       state rows stay O(shards) — ≤ shards × the op's designed
     //       per-shard row footprint (+16 slack), NEVER O(events) —
@@ -309,8 +317,10 @@ object ScaleProbe {
         // gates (~1 resident row per 1000 events) would only show in
         // resident rows at the decade's far end
         val rowBudget = rowsPerShard.toLong * 32 + 16
-        val g = gate(p.updPerEvent <= 0.10,
-          f"$nm upd/ev ${p.updPerEvent}%.3f > 0.10 at n=$n") + " " +
+        val excess = p.updPerEventBeyond(rowsPerShard.toLong * 32)
+        val g = gate(excess <= 0.10,
+          f"$nm upd/ev beyond the per-batch rewrite $excess%.3f > 0.10 " +
+            s"at n=$n") + " " +
           gate(p.stateRowsFinal <= rowBudget,
             s"$nm stateRows ${p.stateRowsFinal} > $rowBudget at n=$n " +
               "(resident state grows with events?)")

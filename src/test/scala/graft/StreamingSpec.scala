@@ -1276,4 +1276,55 @@ class StreamingSpec extends SparkSpec {
     assert(batchSizes.size >= 4 && batchSizes.toSeq == batchSizes.sorted,
       s"store sizes not monotone: $batchSizes")
   }
+
+  // ---- the replay core behind StreamingBench, ScaleProbe and
+  // perfbench's stream workload
+  private val (managerKey, fsManager) = graft.tools.ReplayHarness.CheckpointManager
+
+  /** A passthrough replay of 1..n in 3 chunks plus one sentinel; `inside`
+    * runs where the query is built. */
+  private def passthroughReplay(name: String, n: Long = 30L)(
+      inside: org.apache.spark.sql.Dataset[Long] => Unit = _ => ()) =
+    graft.tools.ReplayHarness.run(spark, name, 1L to n, Seq(0L), 3) { ds =>
+      inside(ds); ds
+    }
+
+  test("replay harness checkpoints through the FileSystem-based manager") {
+    var seen: Option[String] = None
+    passthroughReplay("harness_manager") { ds =>
+      seen = ds.sparkSession.conf.getOption(managerKey)
+    }
+    assert(seen.contains(fsManager), s"manager inside the replay: $seen")
+  }
+
+  test("replay harness restores the caller's manager: unset, preset, and when f throws") {
+    spark.conf.unset(managerKey)
+    passthroughReplay("harness_unset")()
+    assert(spark.conf.getOption(managerKey).isEmpty)
+    val other = "org.apache.spark.sql.execution.streaming.checkpointing." +
+      "FileContextBasedCheckpointFileManager"
+    spark.conf.set(managerKey, other)
+    try {
+      passthroughReplay("harness_preset")()
+      assert(spark.conf.get(managerKey) == other)
+      val e = intercept[IllegalStateException] {
+        passthroughReplay("harness_throws")(_ => throw new IllegalStateException("boom"))
+      }
+      assert(e.getMessage == "boom")
+      assert(spark.conf.get(managerKey) == other)
+    } finally spark.conf.unset(managerKey)
+  }
+
+  test("replay harness: N rows in 3 chunks + 1 sentinel reach the sink, checkpoint deleted") {
+    val name = s"harness_rows_${System.nanoTime}"
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def checkpoints() = Option(tmp.listFiles()).toSeq.flatten
+      .filter(_.getName.startsWith("graft_replay_" + name))
+    var during = Seq.empty[java.io.File]
+    val n = 30L
+    val (_, prog) = passthroughReplay(name, n)(_ => during = checkpoints())
+    assert(during.size == 1, s"checkpoint dirs while replaying: $during")
+    assert(prog.map(_.sink.numOutputRows).filter(_ > 0).sum == n + 1)
+    assert(checkpoints().isEmpty, s"checkpoint left behind: ${checkpoints()}")
+  }
 }
