@@ -208,7 +208,8 @@ object StreamingBench {
       try {
         val mem = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[(Long, Double)]
-        val out = StatefulV2.processingTimePanes(mem.toDS(), delayMs = delayMs)
+        val out = StatefulV2.compositeTriggerPanes(mem.toDS(),
+          StatefulV2.AfterDelay(delayMs))
         val wallT0 = System.currentTimeMillis()
         q = out.writeStream.format("noop")
           .option("checkpointLocation", ckptDir.toString)

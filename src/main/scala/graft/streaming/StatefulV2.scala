@@ -502,204 +502,6 @@ object StatefulV2 {
       if (flushTimeoutMs > 0) TimeMode.ProcessingTime() else TimeMode.None(),
       OutputMode.Append())
 
-  /** Beam's COMPOSITE trigger language (windowing/AfterFirst.java:41,
-    * AfterAll.java:40, AfterPane.java:33, AfterProcessingTime.java:39)
-    * as a serializable spec tree, implicitly wrapped in
-    * `Repeatedly.forever` (Repeatedly.java:38): every firing resets
-    * the WHOLE tree, exactly like Beam's repeated composite.
-    *
-    *  - `AfterCount(n)`  — AfterPane.elementCountAtLeast(n)
-    *  - `AfterDelay(d)`  — AfterProcessingTime.pastFirstElementInPane()
-    *                       .plusDelayOf(d): anchored at the first
-    *                       element since the previous firing
-    *  - `AfterFirst(…)`  — ready when ANY child is ready
-    *  - `AfterAll(…)`    — ready when EVERY child is ready
-    */
-  sealed trait TriggerSpec extends Serializable
-  object TriggerSpec {
-    final case class AfterCount(n: Int) extends TriggerSpec {
-      require(n > 0, "AfterCount needs n > 0")
-    }
-    final case class AfterDelay(delayMs: Long) extends TriggerSpec {
-      require(delayMs > 0, "AfterDelay needs delayMs > 0")
-    }
-    final case class AfterFirst(subs: TriggerSpec*) extends TriggerSpec {
-      require(subs.nonEmpty, "AfterFirst needs children")
-    }
-    final case class AfterAll(subs: TriggerSpec*) extends TriggerSpec {
-      require(subs.nonEmpty, "AfterAll needs children")
-    }
-
-    /** Earliest wall-clock instant at which `t` is (or becomes) ready,
-      * holding the element count fixed: `Some(ts)` with ts ≤ now means
-      * ready NOW; `None` means no amount of waiting alone satisfies it
-      * (an unsatisfied count condition). All children share the pane's
-      * single anchor — equivalent to Beam's per-subtrigger anchors
-      * because the whole tree resets together on every firing. */
-    def readyAt(t: TriggerSpec, cnt: Long, anchorMs: Long): Option[Long] =
-      t match {
-        case AfterCount(n) => if (cnt >= n) Some(0L) else None
-        case AfterDelay(d) => if (cnt > 0) Some(anchorMs + d) else None
-        case AfterFirst(subs @ _*) =>
-          subs.flatMap(s => readyAt(s, cnt, anchorMs)) match {
-            case ts if ts.nonEmpty => Some(ts.min)
-            case _ => None
-          }
-        case AfterAll(subs @ _*) =>
-          val ts = subs.map(s => readyAt(s, cnt, anchorMs))
-          if (ts.forall(_.isDefined)) Some(ts.map(_.get).max) else None
-      }
-  }
-
-  /** Composite-trigger panes in the global window: per key, buffer
-    * elements and fire a pane whenever the [[TriggerSpec]] tree is
-    * ready — on the element path (count conditions trip immediately)
-    * or on a wall-clock timer armed at the tree's earliest future
-    * ready-instant (re-armed as the tree's shape demands: AfterAll
-    * waits for its slowest child, AfterFirst for its fastest). This is
-    * the `ReduceFnRunner`+`TriggerStateMachine` pair of the reference
-    * (runners/core-java/.../TriggerStateMachineRunner.java) reduced to
-    * the repeatable processing-time/count sub-language; watermark
-    * (event-time) conditions live in the windowed [[PaneProcessor]]s,
-    * [[TriggeredSessionProcessor]] / [[MixedTriggerSessionProcessor]].
-    * Output: (key, paneIndex, values). */
-  class CompositeTriggerProcessor[K, V](spec: TriggerSpec,
-      accumulating: Boolean)(implicit vEnc: Encoder[V])
-      extends StatefulProcessor[K, (K, V), (K, Long, Seq[V])] {
-
-    @transient private var buf: ListState[V] = _       // pane contents
-    @transient private var since: ValueState[Long] = _ // count since fire
-    @transient private var anchor: ValueState[Long] = _ // first-elem ts
-    @transient private var pane: ValueState[Long] = _  // next pane index
-    @transient private var armed: ValueState[Long] = _ // timer instant
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      buf = getHandle.getListState[V]("buf", vEnc, TTLConfig.NONE)
-      since = getHandle.getValueState[Long]("since", Encoders.scalaLong,
-        TTLConfig.NONE)
-      anchor = getHandle.getValueState[Long]("anchor", Encoders.scalaLong,
-        TTLConfig.NONE)
-      pane = getHandle.getValueState[Long]("pane", Encoders.scalaLong,
-        TTLConfig.NONE)
-      armed = getHandle.getValueState[Long]("armed", Encoders.scalaLong,
-        TTLConfig.NONE)
-    }
-
-    private def fire(key: K): (K, Long, Seq[V]) = {
-      val p = if (pane.exists()) pane.get() else 0L
-      val contents = buf.get().toSeq
-      if (!accumulating) buf.clear()
-      since.update(0L)
-      anchor.clear()
-      pane.update(p + 1)
-      (key, p, contents)
-    }
-
-    /** Sync the armed timer to the tree's earliest future ready-instant
-      * (or drop it when the tree can only advance via elements). */
-    private def rearm(now: Long): Unit = {
-      val cnt = if (since.exists()) since.get() else 0L
-      val anc = if (anchor.exists()) anchor.get() else now
-      val want = TriggerSpec.readyAt(spec, cnt, anc).filter(_ > now)
-      val have = if (armed.exists()) Some(armed.get()) else None
-      if (want != have) {
-        have.foreach(ts => getHandle.deleteTimer(ts))
-        want.foreach(ts => getHandle.registerTimer(ts))
-        want match {
-          case Some(ts) => armed.update(ts)
-          case None => armed.clear()
-        }
-      }
-    }
-
-    override def handleInputRows(key: K, rows: Iterator[(K, V)],
-        timers: TimerValues): Iterator[(K, Long, Seq[V])] = {
-      val now = timers.getCurrentProcessingTimeInMs()
-      var cnt = if (since.exists()) since.get() else 0L
-      var anc = if (anchor.exists()) anchor.get() else now
-      var pn = if (pane.exists()) pane.get() else 0L
-      val out = scala.collection.mutable.ArrayBuffer[(K, Long, Seq[V])]()
-      // buffer locally; persist buf/since/anchor/pane ONCE at the end
-      // (per-row appendValue/update is O(writes-this-batch) per call —
-      // see SessionLog.flush)
-      val local = scala.collection.mutable.ArrayBuffer[V]()
-      var storeValid = true // persisted rows still part of the open pane
-      var storeRows: Seq[V] = null
-      def readStore(): Seq[V] = {
-        if (storeRows == null) storeRows = buf.get().toSeq
-        storeRows
-      }
-      rows.foreach { case (_, v) =>
-        if (cnt == 0) anc = now // first element of this pane
-        local += v
-        cnt += 1
-        // Count conditions trip on the element path, mid-batch — a
-        // second AfterCount pane can fire within one input batch.
-        if (TriggerSpec.readyAt(spec, cnt, anc).exists(_ <= now)) {
-          val contents =
-            (if (storeValid) readStore() else Seq.empty[V]) ++ local
-          out += ((key, pn, contents))
-          pn += 1
-          if (!accumulating) { local.clear(); storeValid = false }
-          cnt = 0
-        }
-      }
-      if (!storeValid) {
-        if (local.isEmpty) buf.clear() else buf.put(toArr(local))
-      } else if (local.nonEmpty) buf.appendList(toArr(local))
-      since.update(cnt)
-      pane.update(pn)
-      if (cnt > 0) anchor.update(anc) else anchor.clear()
-      rearm(now)
-      out.iterator
-    }
-
-    override def handleExpiredTimer(key: K, timers: TimerValues,
-        timer: ExpiredTimerInfo): Iterator[(K, Long, Seq[V])] = {
-      val now = timers.getCurrentProcessingTimeInMs()
-      armed.clear()
-      val cnt = if (since.exists()) since.get() else 0L
-      val anc = if (anchor.exists()) anchor.get() else now
-      val ready = cnt > 0 &&
-        TriggerSpec.readyAt(spec, cnt, anc).exists(_ <= now)
-      val out = if (ready) Iterator(fire(key)) else Iterator.empty
-      rearm(now)
-      out
-    }
-  }
-
-  /** [[CompositeTriggerProcessor]] over a keyed stream. Example —
-    * Beam's "every 100 elements or at most every 10 s, whichever comes
-    * first":
-    * {{{
-    * compositeTriggerPanes(ds,
-    *   TriggerSpec.AfterFirst(TriggerSpec.AfterCount(100),
-    *                          TriggerSpec.AfterDelay(10000L)))
-    * }}} */
-  def compositeTriggerPanes[K: Encoder, V: Encoder](
-      ds: Dataset[(K, V)], spec: TriggerSpec,
-      accumulating: Boolean = false)(
-      implicit outEnc: Encoder[(K, Long, Seq[V])]): Dataset[(K, Long, Seq[V])] =
-    ds.groupByKey(_._1).transformWithState(
-      new CompositeTriggerProcessor[K, V](spec, accumulating),
-      TimeMode.ProcessingTime(), OutputMode.Append())
-
-  /** Beam's PROCESSING-TIME trigger primitive in the global window —
-    * `Repeatedly.forever(AfterProcessingTime.pastFirstElementInPane()
-    * .plusDelayOf(delay))` (AfterProcessingTime.java:39,
-    * Repeatedly.java:38): each key fires a pane `delayMs` of wall time
-    * after the first element that arrived since the previous firing,
-    * forever — periodic per-key panes on a wall-clock cadence,
-    * independent of event time (Beam's canonical "emit what you have
-    * every N seconds" global-window trigger). The single-condition
-    * case of [[compositeTriggerPanes]]; a pane always holds ≥1 new
-    * element (an empty interval never fires). Output:
-    * (key, paneIndex, values). */
-  def processingTimePanes[K: Encoder, V: Encoder](
-      ds: Dataset[(K, V)], delayMs: Long, accumulating: Boolean = false)(
-      implicit outEnc: Encoder[(K, Long, Seq[V])]): Dataset[(K, Long, Seq[V])] =
-    compositeTriggerPanes(ds, TriggerSpec.AfterDelay(delayMs), accumulating)
-
   /** Beam Deduplicate (transforms/Deduplicate.java:70) as explicit
     * MapState + TTL: ids expire after `ttl`, so re-arrivals beyond the
     * horizon pass through again — bounded state, Beam's exact TTL-timer
@@ -1671,7 +1473,7 @@ object StatefulV2 {
       implicit outEnc: Encoder[O]): Dataset[O] =
     ds.groupByKey(_._1).transformWithState(
       new TriggeredSessionProcessor[K, V, O](WindowFn.Sessions(gapMs), 0L,
-        NeverCount, NeverCount, accumulating = false)(p => f(p._1, p._6)),
+        Never, Never, accumulating = false)(p => f(p._1, p._6)),
       TimeMode.EventTime(), OutputMode.Append())
 
   /** FIXED (tumbling) event-time windows with an apply at close —
@@ -1764,21 +1566,38 @@ object StatefulV2 {
     }
   }
 
-  /** Compositional element-count trigger language — the combinator
-    * shapes of Beam's trigger API (`Repeatedly.java:38`,
-    * `AfterFirst.java:31`, `AfterAll.java:30`) over the
-    * `AfterPane.elementCountAtLeast` primitive (`AfterPane.java:33`).
-    * A trigger is asked, after each element, whether the current pane
-    * should fire given `sinceLastFire`; firing resets the count (our
-    * panes always re-arm, i.e. every composite is implicitly wrapped in
-    * Beam's `Repeatedly.forever`). Processing-time primitives are out
-    * of scope (a transformWithState processor runs in ONE time mode). */
-  sealed trait CountTrigger {
-    def shouldFire(sinceLastFire: Long): Boolean
-    /** Stateless shapes (evaluable from `sinceLastFire` alone) — the
-      * stateful composites below may only nest these, so one Long can
-      * encode the whole per-window trigger state. */
+  /** Beam's trigger language (windowing/Trigger.java) as ONE
+    * serializable tree for every pane processor, implicitly wrapped in
+    * `Repeatedly.forever` (Repeatedly.java:38): each firing resets the
+    * repeatable shapes, so panes always re-arm.
+    *
+    *  - [[AfterCount]]`(n)` — AfterPane.elementCountAtLeast(n)
+    *    (AfterPane.java:33)
+    *  - [[AfterDelay]]`(d)` — AfterProcessingTime
+    *    .pastFirstElementInPane().plusDelayOf(d)
+    *    (AfterProcessingTime.java:39), anchored at the first element
+    *    since the previous firing
+    *  - [[AfterFirst]] / [[AfterAll]] — ready when ANY / EVERY child is
+    *    (AfterFirst.java:31, AfterAll.java:30)
+    *  - [[AfterEach]] / [[OrFinally]] — the two stateful composites
+    *    (AfterEach.java:43, OrFinallyTrigger.java:31)
+    *  - [[Never]] — no element-driven pane, only the watermark's
+    *
+    * One tree, two readings. The event-time clock
+    * ([[TriggeredSessionProcessor]]) asks after every element through
+    * the count-state contract ([[onElement]], [[finished]],
+    * [[mergeState]]) and rejects [[AfterDelay]]; the wall clock
+    * ([[MixedTriggerSessionProcessor]]) asks [[readyAt]] for the tree's
+    * deadline and rejects the stateful composites, whose progress would
+    * need the pane slot it keeps its anchor in. */
+  sealed trait PaneTrigger extends Serializable {
+    /** Ready on `since` elements alone, for the stateless shapes. */
+    def shouldFire(since: Long): Boolean
+    /** Stateless shapes — the composites may only nest these, so one
+      * Long can encode the whole per-window trigger state. */
     def isPure: Boolean = true
+    /** The tree holds an [[AfterDelay]], which only the wall clock reads. */
+    def hasDelay: Boolean = false
     /** Stateful contract: given the opaque per-window trigger state
       * (0 at window open and after the on-time reset) and the count
       * since the last firing, decide (fire?, nextState). Pure shapes
@@ -1791,41 +1610,62 @@ object StatefulV2 {
     /** Combine the trigger states of two MERGING windows (sessions) —
       * Beam's onMerge trigger-state merge (ReduceFnRunner.java:97 over
       * Sessions.java:57-66). Progress composites join at the furthest
-      * point; [[OrFinallyOf]] overrides to SUM the until-counts (Beam
+      * point; [[OrFinally]] overrides to SUM the until-counts (Beam
       * merges AfterPane element counts by summing the combining
       * state). Pure shapes carry no state. */
     def mergeState(a: Long, b: Long): Long = math.max(a, b)
+    /** Earliest wall-clock instant at which the pure tree is (or
+      * becomes) ready, holding the element count fixed: `Some(ts)` with
+      * ts ≤ now means ready NOW; `None` means no amount of waiting alone
+      * satisfies it (an unsatisfied count condition). All children share
+      * the pane's single anchor — equivalent to Beam's per-subtrigger
+      * anchors because the whole tree resets together on every firing. */
+    def readyAt(cnt: Long, anchorMs: Long): Option[Long] =
+      throw new UnsupportedOperationException(s"$this has no wall-clock reading")
   }
-  /** AfterPane.elementCountAtLeast(n). */
-  final case class AfterCount(n: Int) extends CountTrigger {
-    require(n >= 1)
+  final case class AfterCount(n: Int) extends PaneTrigger {
+    require(n > 0, "AfterCount needs n > 0")
     def shouldFire(since: Long): Boolean = since >= n
+    override def readyAt(cnt: Long, anchorMs: Long): Option[Long] =
+      if (cnt >= n) Some(0L) else None
   }
-  /** Fires when ANY sub-trigger would (Beam AfterFirst). */
-  final case class AfterFirstOf(ts: CountTrigger*) extends CountTrigger {
-    require(ts.forall(_.isPure), "AfterFirstOf nests pure triggers only")
-    def shouldFire(since: Long): Boolean = ts.exists(_.shouldFire(since))
-  }
-  /** Fires when ALL sub-triggers would (Beam AfterAll). */
-  final case class AfterAllOf(ts: CountTrigger*) extends CountTrigger {
-    require(ts.forall(_.isPure), "AfterAllOf nests pure triggers only")
-    def shouldFire(since: Long): Boolean = ts.forall(_.shouldFire(since))
-  }
-  /** Never fires on elements — only the watermark pane (Beam Never /
-    * the pure default trigger). */
-  case object NeverCount extends CountTrigger {
+  final case class AfterDelay(delayMs: Long) extends PaneTrigger {
+    require(delayMs > 0, "AfterDelay needs delayMs > 0")
     def shouldFire(since: Long): Boolean = false
+    override def hasDelay: Boolean = true
+    override def readyAt(cnt: Long, anchorMs: Long): Option[Long] =
+      if (cnt > 0) Some(anchorMs + delayMs) else None
   }
-  /** Beam AfterEach.inOrder (AfterEach.java:43): run the children in
-    * SEQUENCE — child i must fire before child i+1 starts being
-    * evaluated; after the last child fires the composite is finished
-    * for the window. Each child sees the element count since the
-    * composite's previous firing (its own fresh pane). State = index
-    * of the active child. */
-  final case class AfterEachOf(children: CountTrigger*) extends CountTrigger {
+  final case class AfterFirst(ts: PaneTrigger*) extends PaneTrigger {
+    require(ts.nonEmpty && ts.forall(_.isPure), "AfterFirst nests >= 1 pure triggers")
+    def shouldFire(since: Long): Boolean = ts.exists(_.shouldFire(since))
+    override def hasDelay: Boolean = ts.exists(_.hasDelay)
+    override def readyAt(cnt: Long, anchorMs: Long): Option[Long] =
+      ts.flatMap(_.readyAt(cnt, anchorMs)).minOption
+  }
+  final case class AfterAll(ts: PaneTrigger*) extends PaneTrigger {
+    require(ts.nonEmpty && ts.forall(_.isPure), "AfterAll nests >= 1 pure triggers")
+    def shouldFire(since: Long): Boolean = ts.forall(_.shouldFire(since))
+    override def hasDelay: Boolean = ts.exists(_.hasDelay)
+    override def readyAt(cnt: Long, anchorMs: Long): Option[Long] = {
+      val r = ts.map(_.readyAt(cnt, anchorMs))
+      Option.when(r.forall(_.isDefined))(r.flatten.max)
+    }
+  }
+  case object Never extends PaneTrigger {
+    def shouldFire(since: Long): Boolean = false
+    override def readyAt(cnt: Long, anchorMs: Long): Option[Long] = None
+  }
+  /** Beam AfterEach.inOrder: run the children in SEQUENCE — child i
+    * must fire before child i+1 starts being evaluated; after the last
+    * child fires the composite is finished for the window. Each child
+    * sees the element count since the composite's previous firing (its
+    * own fresh pane). State = index of the active child. */
+  final case class AfterEach(children: PaneTrigger*) extends PaneTrigger {
     require(children.nonEmpty && children.forall(_.isPure),
-      "AfterEachOf needs >= 1 pure children")
+      "AfterEach needs >= 1 pure children")
     override def isPure: Boolean = false
+    override def hasDelay: Boolean = children.exists(_.hasDelay)
     def shouldFire(since: Long): Boolean = children.head.shouldFire(since)
     override def onElement(state: Long, since: Long): (Boolean, Long) =
       if (state >= children.size) (false, state)
@@ -1833,19 +1673,18 @@ object StatefulV2 {
       else (false, state)
     override def finished(state: Long): Boolean = state >= children.size
   }
-  /** Beam OrFinallyTrigger (OrFinallyTrigger.java:31;
-    * `Repeatedly.forever(main).orFinally(until)`): behaves as `main`,
-    * but when `until` fires the composite fires ONE last pane and is
-    * finished for the window. Beam resets only the repeated `main` on
-    * each firing while `until` keeps its state — mirrored here by
-    * evaluating `until` against the element count since WINDOW start
-    * (carried in the trigger state), while `main` sees the pane-local
-    * count. State = (untilCount << 1) | finishedBit. */
-  final case class OrFinallyOf(main: CountTrigger, until: CountTrigger)
-      extends CountTrigger {
-    require(main.isPure && until.isPure,
-      "OrFinallyOf nests pure triggers only")
+  /** Beam OrFinallyTrigger (`Repeatedly.forever(main).orFinally(until)`):
+    * behaves as `main`, but when `until` fires the composite fires ONE
+    * last pane and is finished for the window. Beam resets only the
+    * repeated `main` on each firing while `until` keeps its state —
+    * mirrored here by evaluating `until` against the element count
+    * since WINDOW start (carried in the trigger state), while `main`
+    * sees the pane-local count. State = (untilCount << 1) | finishedBit. */
+  final case class OrFinally(main: PaneTrigger, until: PaneTrigger)
+      extends PaneTrigger {
+    require(main.isPure && until.isPure, "OrFinally nests pure triggers only")
     override def isPure: Boolean = false
+    override def hasDelay: Boolean = main.hasDelay || until.hasDelay
     def shouldFire(since: Long): Boolean = main.shouldFire(since)
     override def onElement(state: Long, since: Long): (Boolean, Long) =
       if ((state & 1L) == 1L) (false, state)
@@ -2208,46 +2047,29 @@ object StatefulV2 {
 
   /** Fixed windows with Beam's early/on-time/late trigger panes — the
     * count-trigger pane machine ([[TriggeredSessionProcessor]]) over
-    * [[WindowFn.Fixed]]. `ds` must carry
-    * `.withWatermark(tsCol, s"$allowedLatenessMs milliseconds")`, and
-    * `allowedLatenessMs < windowMs`. `earlyFireEvery` 0 = no early
-    * firings (the default trigger). */
+    * [[WindowFn.Fixed]], e.g.
+    * `early = AfterFirst(AfterCount(100), AfterAll(...))`. `ds` must
+    * carry `.withWatermark(tsCol, s"$allowedLatenessMs milliseconds")`,
+    * and `allowedLatenessMs < windowMs`. The default `early = Never` is
+    * Beam's default trigger: no early firings. */
   def triggeredWindows[K: Encoder, V: Encoder](
       ds: Dataset[(K, java.sql.Timestamp, V)], windowMs: Long,
-      allowedLatenessMs: Long = 0L, earlyFireEvery: Int = 0,
-      lateFireEvery: Int = 1, accumulating: Boolean = false,
-      retractions: Boolean = false)(
-      implicit outEnc: Encoder[Pane[K, V]]): Dataset[Pane[K, V]] =
-    triggeredWindowsWith(ds, windowMs, allowedLatenessMs,
-      earlyTrigger = if (earlyFireEvery > 0) AfterCount(earlyFireEvery)
-                     else NeverCount,
-      lateTrigger = AfterCount(lateFireEvery),
-      accumulating = accumulating, retractions = retractions)
-
-  /** [[triggeredWindows]] with compositional [[CountTrigger]]s, e.g.
-    * `earlyTrigger = AfterFirstOf(AfterCount(100), AfterAllOf(...))`. */
-  def triggeredWindowsWith[K: Encoder, V: Encoder](
-      ds: Dataset[(K, java.sql.Timestamp, V)], windowMs: Long,
-      allowedLatenessMs: Long = 0L,
-      earlyTrigger: CountTrigger = NeverCount,
-      lateTrigger: CountTrigger = AfterCount(1),
-      accumulating: Boolean = false,
+      allowedLatenessMs: Long = 0L, early: PaneTrigger = Never,
+      late: PaneTrigger = AfterCount(1), accumulating: Boolean = false,
       retractions: Boolean = false)(
       implicit outEnc: Encoder[Pane[K, V]]): Dataset[Pane[K, V]] =
     ds.groupByKey(_._1).transformWithState(
       new TriggeredSessionProcessor[K, V, Pane[K, V]](WindowFn.Fixed(windowMs),
-        allowedLatenessMs, earlyTrigger, lateTrigger, accumulating,
-        retractions)(Iterator.single),
+        allowedLatenessMs, early, late, accumulating, retractions)(Iterator.single),
       TimeMode.EventTime(), OutputMode.Append())
 
   /** Beam's WindowFn for the pane processors: which window an element
     * lands in, where that window ends, when a row is too late for it,
-    * and how much allowed lateness the event-time clock can carry.
-    * Both shapes key window state by window START in the per-key
-    * [[SessionPanes.St]] summaries over ONE append-only
-    * [[SessionLog]]; fixed windows never overlap, so the log's
-    * liveness test and `maybeRewrite`'s predecessor lookup stay exact
-    * for them. */
+    * and what the event-time clock can carry. Every shape keys window
+    * state by window START in the per-key [[SessionPanes.St]]
+    * summaries over ONE append-only [[SessionLog]]; fixed windows never
+    * overlap and a key has one global window, so the log's liveness
+    * test and `maybeRewrite`'s predecessor lookup stay exact for them. */
   sealed trait WindowFn extends Serializable {
     /** Locate the window for an element at `t`, mutating `m`: returns
       * (windowStart, state-before-append). `nextPos` = the log position
@@ -2272,14 +2094,45 @@ object StatefulV2 {
       * window-end drop rule. */
     private[graft] def dropPoint(t: Long): Long
 
-    /** Reject an allowed lateness the event-time clock cannot carry: it
-      * arms the on-time timer at (end − lateness), which must fall
-      * strictly after every element of the window — see
+    /** Reject what the event-time clock cannot carry: a window that
+      * never ends, or a lateness that puts the on-time timer, armed at
+      * (end − lateness), at or before an element of the window — see
       * [[TriggeredSessionProcessor]]. */
-    private[graft] def requireLateness(allowedLatenessMs: Long): Unit
+    private[graft] def requireEventTime(allowedLatenessMs: Long): Unit
   }
 
   object WindowFn {
+    /** Non-merging assignment: the element joins the window keyed at
+      * `w` (opened at `nextPos` when absent) and only its maxTs moves. */
+    private def assign(m: scala.collection.mutable.TreeMap[Long, SessionPanes.St],
+        w: Long, t: Long, nextPos: Long): (Long, SessionPanes.St) =
+      m.get(w) match {
+        case Some(st) => (w, st.copy(_6 = math.max(st._6, t)))
+        case None => (w, (Seq((w, nextPos)), 0L, 0L, false, 0L, t, 0L))
+      }
+
+    /** Beam's GlobalWindows: one window per key, keyed at Long.MinValue,
+      * that never ends, never drops a row and never merges — so no
+      * watermark transition ever falls due and only the trigger fires
+      * its panes. The wall clock runs it ([[compositeTriggerPanes]]);
+      * the event-time clock, whose panes end at the watermark, rejects
+      * it. */
+    case object Global extends WindowFn {
+      private[graft] def upsert(m: scala.collection.mutable.TreeMap[Long, SessionPanes.St],
+          t: Long, nextPos: Long,
+          combine5: (Boolean, Long, Boolean, Long) => Long,
+          retract: (Long, SessionPanes.St) => Unit): (Long, SessionPanes.St) =
+        assign(m, Long.MinValue, t, nextPos)
+
+      private[graft] def end(min: Long, st: SessionPanes.St): Long = Long.MaxValue
+
+      private[graft] def dropPoint(t: Long): Long = Long.MaxValue
+
+      private[graft] def requireEventTime(allowedLatenessMs: Long): Unit =
+        throw new IllegalArgumentException("a Global window never ends: " +
+          "the event-time clock can neither fire its ON_TIME pane nor close it")
+    }
+
     /** Tumbling windows of `sizeMs` (Beam FixedWindows): an element at
       * `t` belongs to [floor(t / size)·size, +size); windows never
       * merge or rekey, so the merge callbacks never run. */
@@ -2291,19 +2144,14 @@ object StatefulV2 {
       private[graft] def upsert(m: scala.collection.mutable.TreeMap[Long, SessionPanes.St],
           t: Long, nextPos: Long,
           combine5: (Boolean, Long, Boolean, Long) => Long,
-          retract: (Long, SessionPanes.St) => Unit): (Long, SessionPanes.St) = {
-        val w = start(t)
-        m.get(w) match {
-          case Some(st) => (w, st.copy(_6 = math.max(st._6, t)))
-          case None => (w, (Seq((w, nextPos)), 0L, 0L, false, 0L, t, 0L))
-        }
-      }
+          retract: (Long, SessionPanes.St) => Unit): (Long, SessionPanes.St) =
+        assign(m, start(t), t, nextPos)
 
       private[graft] def end(min: Long, st: SessionPanes.St): Long = min + sizeMs
 
       private[graft] def dropPoint(t: Long): Long = start(t) + sizeMs
 
-      private[graft] def requireLateness(allowedLatenessMs: Long): Unit =
+      private[graft] def requireEventTime(allowedLatenessMs: Long): Unit =
         require(allowedLatenessMs < sizeMs,
           s"allowedLatenessMs ($allowedLatenessMs) must be < windowMs " +
             s"($sizeMs): the on-time timer arms at windowEnd - lateness, " +
@@ -2366,7 +2214,7 @@ object StatefulV2 {
 
       private[graft] def dropPoint(t: Long): Long = t + gapMs
 
-      private[graft] def requireLateness(allowedLatenessMs: Long): Unit =
+      private[graft] def requireEventTime(allowedLatenessMs: Long): Unit =
         require(allowedLatenessMs < gapMs,
           s"allowedLatenessMs ($allowedLatenessMs) must be < gapMs ($gapMs): " +
             "the on-time timer arms at sessionEnd - lateness, which must " +
@@ -2625,7 +2473,7 @@ object StatefulV2 {
 
   /** Beam's trigger/pane state machine — a reduced ReduceFnRunner
     * (runners/core-java/.../ReduceFnRunner.java:97) over a [[WindowFn]]
-    * (fixed windows or merging sessions), the part both clocks share.
+    * (global, fixed or merging sessions), the part both clocks share.
     * Per key, every open window carries its pane summary
     * ([[SessionPanes.St]], keyed by window start):
     *
@@ -2802,13 +2650,16 @@ object StatefulV2 {
   /** The pane machine under element-COUNT triggers on the event-time
     * clock — Beam's canonical compound trigger
     * `AfterWatermark.pastEndOfWindow()                    // AfterWatermark.java:60
-    *    .withEarlyFirings(earlyTrigger)   // AfterPane.elementCountAtLeast, AfterPane.java:33
-    *    .withLateFirings(lateTrigger)`
-    * in any [[CountTrigger]] composition; the trigger state lives in
-    * slot 5, reset at the on-time transition so the late trigger starts
-    * fresh, and merged per [[CountTrigger.mergeState]] (when fired-ness
-    * differs the fired part's state wins: the merged window continues
-    * under the late trigger).
+    *    .withEarlyFirings(early)   // AfterPane.elementCountAtLeast, AfterPane.java:33
+    *    .withLateFirings(late)`
+    * in any element-count [[PaneTrigger]] composition; the trigger state
+    * lives in slot 5, reset at the on-time transition so the late
+    * trigger starts fresh, and merged per [[PaneTrigger.mergeState]]
+    * (when fired-ness differs the fired part's state wins: the merged
+    * window continues under the late trigger). A tree holding an
+    * [[AfterDelay]], and a [[WindowFn.Global]] window, are rejected at
+    * construction: this clock has no wall time and never closes a
+    * window that does not end.
     *
     * Watermark mapping: Spark has ONE watermark (max event − delay),
     * Beam two concepts (watermark + allowed lateness beyond it). The
@@ -2839,17 +2690,22 @@ object StatefulV2 {
     * where the chain pays O(windows). A chain timer left early by a
     * since-extended or merged session fires as a cheap no-op. */
   class TriggeredSessionProcessor[K, V, O](wf: WindowFn, allowedLatenessMs: Long,
-      earlyTrigger: CountTrigger, lateTrigger: CountTrigger,
+      early: PaneTrigger, late: PaneTrigger,
       accumulating: Boolean, retractions: Boolean = false)(
       emit: Pane[K, V] => Iterator[O])(implicit vEnc: Encoder[V])
       extends PaneProcessor[K, V, O](wf, allowedLatenessMs, accumulating,
         retractions, emit) {
-    wf.requireLateness(allowedLatenessMs)
+    wf.requireEventTime(allowedLatenessMs)
+    require(!early.hasDelay && !late.hasDelay,
+      "AfterDelay needs the processing-time clock: the event-time clock of " +
+        "triggeredWindows / triggeredSessions fires on element counts and " +
+        "the watermark only (use mixedTriggerWindows / mixedTriggerSessions " +
+        "or compositeTriggerPanes)")
 
     protected def onTimeAt(end: Long): Long = end - allowedLatenessMs
 
     protected def combine5(af: Boolean, a5: Long, bf: Boolean, b5: Long): Long = {
-      val trig = if (af || bf) lateTrigger else earlyTrigger
+      val trig = if (af || bf) late else early
       if (af == bf) trig.mergeState(a5, b5)
       else if (af) a5 else b5
     }
@@ -2883,7 +2739,7 @@ object StatefulV2 {
         val (w, st0) = upsert(key, m, t, lv, out)
         lv.append(t, v)
         val since = st0._2 + 1
-        val trig = if (st0._4) lateTrigger else earlyTrigger
+        val trig = if (st0._4) late else early
         val (fire, trigSt) = trig.onElement(st0._5, since)
         val st = st0.copy(_2 = since, _5 = trigSt)
         m(w) = if (!fire) st
@@ -2910,47 +2766,35 @@ object StatefulV2 {
   /** Session windows with early/late count firings + pane metadata —
     * see [[TriggeredSessionProcessor]]. `ds` must carry
     * `.withWatermark(tsCol, s"$allowedLatenessMs milliseconds")`, and
-    * `allowedLatenessMs < gapMs`. `earlyFireEvery` 0 = no early
-    * firings (the default trigger). */
+    * `allowedLatenessMs < gapMs`. The default `early = Never` is Beam's
+    * default trigger: no early firings. */
   def triggeredSessions[K: Encoder, V: Encoder](
       ds: Dataset[(K, java.sql.Timestamp, V)], gapMs: Long,
-      allowedLatenessMs: Long = 0L, earlyFireEvery: Int = 0,
-      lateFireEvery: Int = 1, accumulating: Boolean = false,
-      retractions: Boolean = false)(
-      implicit outEnc: Encoder[Pane[K, V]]): Dataset[Pane[K, V]] =
-    triggeredSessionsWith(ds, gapMs, allowedLatenessMs,
-      earlyTrigger = if (earlyFireEvery > 0) AfterCount(earlyFireEvery)
-                     else NeverCount,
-      lateTrigger = AfterCount(lateFireEvery),
-      accumulating = accumulating, retractions = retractions)
-
-  /** [[triggeredSessions]] with compositional [[CountTrigger]]s. */
-  def triggeredSessionsWith[K: Encoder, V: Encoder](
-      ds: Dataset[(K, java.sql.Timestamp, V)], gapMs: Long,
-      allowedLatenessMs: Long = 0L,
-      earlyTrigger: CountTrigger = NeverCount,
-      lateTrigger: CountTrigger = AfterCount(1),
-      accumulating: Boolean = false,
+      allowedLatenessMs: Long = 0L, early: PaneTrigger = Never,
+      late: PaneTrigger = AfterCount(1), accumulating: Boolean = false,
       retractions: Boolean = false)(
       implicit outEnc: Encoder[Pane[K, V]]): Dataset[Pane[K, V]] =
     ds.groupByKey(_._1).transformWithState(
       new TriggeredSessionProcessor[K, V, Pane[K, V]](WindowFn.Sessions(gapMs),
-        allowedLatenessMs, earlyTrigger, lateTrigger, accumulating,
-        retractions)(Iterator.single),
+        allowedLatenessMs, early, late, accumulating, retractions)(Iterator.single),
       TimeMode.EventTime(), OutputMode.Append())
 
-  /** The pane machine under Beam's MIXED time-mode compound trigger —
-    * the one trigger shape a single-time-mode processor can't express:
+  /** The pane machine on the WALL clock, under Beam's MIXED time-mode
+    * compound trigger — the one trigger shape a single-time-mode
+    * processor can't express:
     *
     * `AfterWatermark.pastEndOfWindow()                 // event time
-    *    .withEarlyFirings(AfterProcessingTime          // WALL CLOCK
-    *       .pastFirstElementInPane().plusDelayOf(earlyDelay))
-    *    .withLateFirings(AfterProcessingTime
-    *       .pastFirstElementInPane().plusDelayOf(lateDelay))`
-    * (AfterWatermark.java:60 + AfterProcessingTime.java:39 — Beam's
-    * most common production trigger: "emit a preview every N seconds of
-    * wall time, the real answer at the watermark, corrections for late
-    * data").
+    *    .withEarlyFirings(early)                       // WALL CLOCK
+    *    .withLateFirings(late)`
+    * where `early` / `late` are repeatable [[PaneTrigger]] trees over
+    * element counts and AfterProcessingTime.pastFirstElementInPane()
+    * .plusDelayOf(d) (AfterWatermark.java:60 + AfterProcessingTime.java:39
+    * — Beam's most common production trigger: "emit a preview every N
+    * seconds of wall time, the real answer at the watermark, corrections
+    * for late data"). Over [[WindowFn.Global]] no watermark transition
+    * ever falls due and `early` alone fires the panes: Beam's
+    * global-window `Repeatedly.forever(trigger)`
+    * ([[compositeTriggerPanes]]).
     *
     * HOW the two clocks coexist on one `transformWithState` processor:
     * it runs in TimeMode.ProcessingTime (wall-clock timers drive
@@ -2967,28 +2811,42 @@ object StatefulV2 {
     *    rule, with no `lateness < window` restriction
     *    ([[TriggeredSessionProcessor]] documents its element-time
     *    approximation);
-    *  - EARLY / LATE panes: `earlyDelayMs` / `lateDelayMs` of wall time
-    *    after the FIRST element buffered since the last firing (slot 5
-    *    = that anchor deadline, 0 = none; later arrivals never push it
-    *    out, and a merge keeps the EARLIEST pending one — a pane
-    *    already promised keeps its deadline);
+    *  - EARLY / LATE panes fire when the window's tree is ready
+    *    ([[PaneTrigger.readyAt]]) over the elements buffered since the
+    *    last firing, its delays anchored at the wall time of the FIRST
+    *    of them (slot 5 = that anchor, 0 = none; later arrivals never
+    *    push it out, and a merge keeps the EARLIEST). A ready tree fires
+    *    on the element path (a count condition mid-batch), else on the
+    *    key's timer at its deadline;
     *  - ON_TIME at watermark ≥ end, close + GC at end + lateness, both
     *    against each window's CURRENT end (a session's end moves as
     *    elements arrive and merge), observed on the next timer or input
-    *    invocation after the watermark advances — a sweep-timer chain
-    *    (`armSweep`) guarantees one on an idle key.
+    *    invocation after the watermark advances.
     *
-    * An idle key (no open windows) holds zero state and zero timers. */
+    * Timers: ONE processing-time chain per key (the packed slot),
+    * aimed at the earliest trigger deadline of any window and at a
+    * sweep tick for the nearest watermark transition (`armNext`). A key
+    * with no open window holds zero state and zero timers; a Global
+    * key keeps its window, and a timer only while a deadline is
+    * pending. */
   class MixedTriggerSessionProcessor[K, V, O](
       wf: WindowFn, allowedLatenessMs: Long,
-      earlyDelayMs: Long, lateDelayMs: Long,
-      accumulating: Boolean, retractions: Boolean = false,
-      heartbeatMs: Long = 200L, maxSweepLagMs: Long = 5000L)(
+      early: PaneTrigger, late: PaneTrigger,
+      accumulating: Boolean, retractions: Boolean = false)(
       emit: Pane[K, V] => Iterator[O])(implicit vEnc: Encoder[V])
       extends PaneProcessor[K, V, O](wf, allowedLatenessMs, accumulating,
         retractions, emit) {
-    require(earlyDelayMs > 0 && lateDelayMs > 0 && heartbeatMs > 0)
-    require(maxSweepLagMs >= heartbeatMs)
+    require(early.isPure && late.isPure,
+      "AfterEach / OrFinally need the event-time clock: the processing-time " +
+        "clock keeps its wall-clock anchor in the slot they keep their progress in")
+
+    // The sweep tick's bounds. The chain assumes the watermark advances
+    // at wall-clock rate, so where it outpaces wall time (replay,
+    // backfill) an idle key's on-time or GC pane can trail the
+    // watermark by up to MaxSweepLagMs: the EMISSION-LATENCY bound.
+    // HeartbeatMs floors the polling interval.
+    private final val HeartbeatMs = 200L
+    private final val MaxSweepLagMs = 5000L
 
     protected def onTimeAt(end: Long): Long = end
 
@@ -2999,47 +2857,55 @@ object StatefulV2 {
         case (x, y) => math.min(x, y) // earliest promised pane
       }
 
-    /** Fire any due wall-clock pane anchors; mutates `m` in place. */
-    private def fireDueAnchors(key: K, now: Long, lv: SessionLog[V],
-        m: Windows, out: Out): Unit =
-      m.keys.toSeq.foreach { min =>
-        val st = m(min)
-        if (st._5 != 0L && st._5 <= now && st._2 > 0)
-          m(min) = firePane(key, min, st, if (st._4) "LATE" else "EARLY",
-            isFinal = false, lv, out).copy(_5 = 0L)
-      }
+    /** The wall-clock instant the window's trigger tree is ready at. */
+    private def readyAt(st: SessionPanes.St): Option[Long] =
+      (if (st._4) late else early).readyAt(st._2, st._5)
 
-    /** One sweep-timer chain per key, aimed at the nearest pending
-      * event-time transition, mapped to the wall clock under the
-      * steady-state assumption that the watermark advances at wall
-      * rate: delay = clamp(nearestNeed − wm, heartbeatMs,
-      * maxSweepLagMs). A stalled watermark self-paces (the deficit
-      * stays put, so so does the polling interval); a watermark racing
-      * ahead of wall time is observed within maxSweepLagMs; every input
-      * batch re-aims the chain at the fresh estimate.
-      *
-      * Timer-slot sharing: per-key timers are keyed by expiry, so the
-      * pending sweep slot can COINCIDE with a window's wall-clock
-      * anchor (now + delay). Deleting such a slot would silence the
-      * anchor until the next sweep tick — so an anchor-coinciding slot
-      * is never deleted, and a target landing on an anchor reuses that
-      * timer as the sweep tick (the expiry handler runs the sweep on
-      * every firing regardless of which role armed it). */
-    private def armSweep(now: Long, wm: Long, m: Windows, slot: Long): Long = {
-      val pending = slot
-      if (m.isEmpty) {
-        if (pending != 0L) getHandle.deleteTimer(pending)
-        return 0L
+    /** Fire the window's EARLY / LATE pane; the next element re-anchors. */
+    private def fireTrigger(key: K, min: Long, st: SessionPanes.St,
+        lv: SessionLog[V], out: Out): SessionPanes.St =
+      firePane(key, min, st, if (st._4) "LATE" else "EARLY",
+        isFinal = false, lv, out).copy(_5 = 0L)
+
+    /** The watermark transitions, then the EARLY / LATE pane of every
+      * window whose trigger is ready by `clock` — in that order, so
+      * elements pending when the watermark passes the end land in
+      * ON_TIME. */
+    private def fireDue(key: K, wm: Long, clock: Long, lv: SessionLog[V],
+        m: Windows, out: Out): Unit = {
+      closeDue(key, wm, lv, m, out)
+      m.mapValuesInPlace { (w, st) =>
+        if (readyAt(st).exists(_ <= clock)) fireTrigger(key, w, st, lv, out)
+        else st
       }
-      val anchors = m.valuesIterator.map(_._5).filter(_ != 0L).toSet
-      val target = now +
-        math.max(heartbeatMs, math.min(nextDue(m) - wm, maxSweepLagMs))
-      if (pending == 0L || pending <= now || target < pending) {
-        if (pending > now && !anchors.contains(pending))
-          getHandle.deleteTimer(pending)
-        if (!anchors.contains(target)) getHandle.registerTimer(target)
+    }
+
+    /** Re-aim the key's timer chain at the earliest future trigger
+      * deadline or sweep tick. The sweep maps the nearest pending
+      * event-time transition to the wall clock under the steady-state
+      * assumption that the watermark advances at wall rate:
+      * now + clamp(nearestNeed − wm, HeartbeatMs, MaxSweepLagMs). A
+      * stalled watermark self-paces (the deficit stays put, so so does
+      * the polling interval); a watermark racing ahead of wall time is
+      * observed within MaxSweepLagMs; every invocation re-aims the chain
+      * at the fresh estimate. A Global window never ends, so it arms no
+      * sweep. Spark fires a batch's due timers after its input rows, so
+      * an input invocation replaces even a due slot, whose work
+      * [[fireDue]] just did; a timer invocation leaves a due slot to
+      * fire. Returns the new slot (0 = no timer). */
+    private def armNext(now: Long, wm: Long, m: Windows, slot: Long,
+        onInput: Boolean): Long = {
+      val sweep =
+        if (m.isEmpty || wf == WindowFn.Global) None
+        else Some(now + math.max(HeartbeatMs, math.min(nextDue(m) - wm, MaxSweepLagMs)))
+      val target = (m.valuesIterator.flatMap(readyAt).filter(_ > now) ++ sweep)
+        .minOption.getOrElse(0L)
+      if (slot > now && target != 0L && target >= slot) slot
+      else {
+        if (slot > now || (slot != 0L && onInput)) getHandle.deleteTimer(slot)
+        if (target != 0L) getHandle.registerTimer(target)
         target
-      } else pending
+      }
     }
 
     override def handleInputRows(key: K,
@@ -3051,22 +2917,22 @@ object StatefulV2 {
       val (lv, slot, m) = loadPacked()
       rows.foreach { case (_, ts, v) =>
         val t = ts.getTime
-        if (wm < wf.dropPoint(t) + allowedLatenessMs) { // else: expired window
+        if (wm - allowedLatenessMs < wf.dropPoint(t)) { // else: expired window
           val (w, st0) = upsert(key, m, t, lv, out)
           lv.append(t, v)
-          // the first element of a pane anchors its wall-clock delay
-          val anchor = if (st0._5 != 0L) st0._5 else {
-            val a = now + (if (st0._4) lateDelayMs else earlyDelayMs)
-            getHandle.registerTimer(a)
-            a
-          }
-          m(w) = st0.copy(_2 = st0._2 + 1, _5 = anchor)
+          // the first element of a pane anchors its wall-clock delays
+          val st = st0.copy(_2 = st0._2 + 1,
+            _5 = if (st0._5 != 0L) st0._5 else now)
+          // a ready tree fires on the element path (a count condition
+          // mid-batch) unless the watermark already passed the window's
+          // end: the ON_TIME pane takes those elements
+          m(w) = if ((st._4 || wf.end(w, st) > wm) && readyAt(st).exists(_ <= now))
+            fireTrigger(key, w, st, lv, out)
+          else st
         }
       }
-      // watermark transitions before wall-clock panes, so elements
-      // pending when the watermark passes the end land in ON_TIME
-      closeDue(key, wm, lv, m, out)
-      commit(lv, armSweep(now, wm, m, slot), m, out)
+      fireDue(key, wm, now, lv, m, out)
+      commit(lv, armNext(now, wm, m, slot, onInput = true), m, out)
     }
 
     override def handleExpiredTimer(key: K, timers: TimerValues,
@@ -3076,56 +2942,74 @@ object StatefulV2 {
       val expiry = timer.getExpiryTimeInMs()
       val out: Out = scala.collection.mutable.ArrayBuffer()
       val (lv, slot0, m) = loadPacked()
-      val slot = if (slot0 == expiry) 0L else slot0 // sweep slot consumed
-      closeDue(key, wm, lv, m, out)
-      fireDueAnchors(key, math.max(now, expiry), lv, m, out)
-      commit(lv, armSweep(now, wm, m, slot), m, out)
+      val slot = if (slot0 == expiry) 0L else slot0 // chain slot consumed
+      fireDue(key, wm, math.max(now, expiry), lv, m, out)
+      commit(lv, armNext(now, wm, m, slot, onInput = false), m, out)
     }
   }
 
   /** Fixed windows with Beam's mixed-clock compound trigger — wall-
-    * clock early/late panes inside event-time windows; see
-    * [[MixedTriggerSessionProcessor]]. `ds` must carry a watermark on
-    * its timestamp column (any delay; the processor reads the
-    * watermark but does its own window-end lateness drops).
-    *
-    * `maxSweepLagMs` is the EMISSION-LATENCY BOUND for on-time/GC
-    * panes on idle keys: the sweep chain assumes the watermark
-    * advances at wall-clock rate, so in replay/backfill where it
-    * outpaces wall time, an idle key's on-time pane can trail the
-    * watermark by up to this long (default 5 s). Replay-heavy callers
-    * should lower it (at the cost of more sweep ticks). */
+    * clock early/late panes, `earlyDelayMs` / `lateDelayMs` after the
+    * first element since the last firing, inside event-time windows;
+    * see [[MixedTriggerSessionProcessor]]. `ds` must carry a watermark
+    * on its timestamp column (any delay; the processor reads the
+    * watermark but does its own window-end lateness drops). Where the
+    * watermark outpaces wall time (replay, backfill), an idle key's
+    * on-time pane can trail it by up to the processor's 5 s sweep lag. */
   def mixedTriggerWindows[K: Encoder, V: Encoder](
       ds: Dataset[(K, java.sql.Timestamp, V)], windowMs: Long,
       allowedLatenessMs: Long = 0L,
       earlyDelayMs: Long = 1000L, lateDelayMs: Long = 1000L,
-      accumulating: Boolean = false, retractions: Boolean = false,
-      heartbeatMs: Long = 200L, maxSweepLagMs: Long = 5000L)(
+      accumulating: Boolean = false, retractions: Boolean = false)(
       implicit outEnc: Encoder[Pane[K, V]]): Dataset[Pane[K, V]] =
     ds.groupByKey(_._1).transformWithState(
       new MixedTriggerSessionProcessor[K, V, Pane[K, V]](WindowFn.Fixed(windowMs),
-        allowedLatenessMs, earlyDelayMs, lateDelayMs, accumulating,
-        retractions, heartbeatMs, maxSweepLagMs)(Iterator.single),
+        allowedLatenessMs, AfterDelay(earlyDelayMs), AfterDelay(lateDelayMs),
+        accumulating, retractions)(Iterator.single),
       TimeMode.ProcessingTime(), OutputMode.Append())
 
   /** Session windows with Beam's mixed-clock compound trigger — see
-    * [[MixedTriggerSessionProcessor]]. `ds` must carry a watermark on
-    * its timestamp column (any delay; the processor reads the
-    * watermark but does its own proto-window-end lateness drops).
-    *
-    * `maxSweepLagMs` bounds on-time/GC emission latency on idle keys
-    * when the watermark outpaces wall time (replay/backfill) — see
-    * the note on [[mixedTriggerWindows]]. */
+    * [[MixedTriggerSessionProcessor]] and [[mixedTriggerWindows]]. `ds`
+    * must carry a watermark on its timestamp column (any delay; the
+    * processor reads the watermark but does its own proto-window-end
+    * lateness drops). */
   def mixedTriggerSessions[K: Encoder, V: Encoder](
       ds: Dataset[(K, java.sql.Timestamp, V)], gapMs: Long,
       allowedLatenessMs: Long = 0L,
       earlyDelayMs: Long = 1000L, lateDelayMs: Long = 1000L,
-      accumulating: Boolean = false, retractions: Boolean = false,
-      heartbeatMs: Long = 200L, maxSweepLagMs: Long = 5000L)(
+      accumulating: Boolean = false, retractions: Boolean = false)(
       implicit outEnc: Encoder[Pane[K, V]]): Dataset[Pane[K, V]] =
     ds.groupByKey(_._1).transformWithState(
       new MixedTriggerSessionProcessor[K, V, Pane[K, V]](WindowFn.Sessions(gapMs),
-        allowedLatenessMs, earlyDelayMs, lateDelayMs, accumulating,
-        retractions, heartbeatMs, maxSweepLagMs)(Iterator.single),
+        allowedLatenessMs, AfterDelay(earlyDelayMs), AfterDelay(lateDelayMs),
+        accumulating, retractions)(Iterator.single),
       TimeMode.ProcessingTime(), OutputMode.Append())
+
+  /** Beam's global-window trigger `Repeatedly.forever(trigger)` per key:
+    * the wall-clock pane machine ([[MixedTriggerSessionProcessor]]) over
+    * [[WindowFn.Global]], which never ends, so `trigger` alone fires the
+    * panes — on the element path when a count condition trips
+    * (mid-batch), on the key's timer at the tree's earliest deadline.
+    * A pane always holds ≥ 1 new element. Output: (key, paneIndex,
+    * values in arrival order). Beam's "every 100 elements or at most
+    * every 10 s, whichever comes first":
+    * {{{
+    * compositeTriggerPanes(ds, AfterFirst(AfterCount(100), AfterDelay(10000L)))
+    * }}}
+    * and its canonical "emit what you have every N seconds" (Nexmark
+    * Q12's processing-time windows) is `AfterDelay(n)` alone. */
+  def compositeTriggerPanes[K: Encoder, V: Encoder](
+      ds: Dataset[(K, V)], trigger: PaneTrigger,
+      accumulating: Boolean = false)(
+      implicit outEnc: Encoder[(K, Long, Seq[V])]): Dataset[(K, Long, Seq[V])] = {
+    // one event time for every row: the global window ignores it, and
+    // equal timestamps keep pane values in arrival order
+    val epoch = new java.sql.Timestamp(0L)
+    ds.map { case (k, v) => (k, epoch, v) }(Encoders.tuple(
+        implicitly[Encoder[K]], Encoders.TIMESTAMP, implicitly[Encoder[V]]))
+      .groupByKey(_._1).transformWithState(
+        new MixedTriggerSessionProcessor[K, V, (K, Long, Seq[V])](WindowFn.Global,
+          0L, trigger, Never, accumulating)(p => Iterator((p._1, p._3, p._6))),
+        TimeMode.ProcessingTime(), OutputMode.Append())
+  }
 }

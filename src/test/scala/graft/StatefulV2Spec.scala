@@ -218,7 +218,7 @@ class StatefulV2Spec extends SparkSpec {
   test("processingTimePanes fires repeatedly: one pane per delay after first element") {
     withRocksDb {
       val mem = MemoryStream[(Long, String)]
-      val panes = StatefulV2.processingTimePanes(mem.toDS(), delayMs = 300L)
+      val panes = StatefulV2.compositeTriggerPanes(mem.toDS(), StatefulV2.AfterDelay(300L))
       val table = freshTable()
       val q = startMemorySink(panes, table)
       mem.addData((1L, "a"), (1L, "b")) // first element anchors pane 0
@@ -243,7 +243,7 @@ class StatefulV2Spec extends SparkSpec {
     // event time never consulted. Pane counts are the measure.
     withRocksDb {
       val mem = MemoryStream[(Long, Long)] // (bidder, auction)
-      val panes = StatefulV2.processingTimePanes(mem.toDS(), delayMs = 300L)
+      val panes = StatefulV2.compositeTriggerPanes(mem.toDS(), StatefulV2.AfterDelay(300L))
       val table = freshTable()
       val q = startMemorySink(panes, table)
       mem.addData((7L, 100L), (7L, 101L), (9L, 102L))
@@ -259,8 +259,8 @@ class StatefulV2Spec extends SparkSpec {
   test("processingTimePanes accumulating panes carry the whole history") {
     withRocksDb {
       val mem = MemoryStream[(Long, String)]
-      val panes = StatefulV2.processingTimePanes(mem.toDS(), delayMs = 300L,
-        accumulating = true)
+      val panes = StatefulV2.compositeTriggerPanes(mem.toDS(),
+        StatefulV2.AfterDelay(300L), accumulating = true)
       val table = freshTable()
       val q = startMemorySink(panes, table)
       mem.addData((1L, "a"))
@@ -279,7 +279,7 @@ class StatefulV2Spec extends SparkSpec {
 
   test("compositeTriggerPanes AfterFirst(count, delay): a count pane mid-batch, then a delay pane") {
     withRocksDb {
-      import StatefulV2.TriggerSpec._
+      import StatefulV2.{AfterCount, AfterDelay, AfterFirst}
       val mem = MemoryStream[(Long, String)]
       val panes = StatefulV2.compositeTriggerPanes(mem.toDS(),
         AfterFirst(AfterCount(3), AfterDelay(300L)))
@@ -298,6 +298,31 @@ class StatefulV2Spec extends SparkSpec {
       // the tree reset with nothing new: no further pane
       Thread.sleep(1000)
       assert(got.size == 2, s"panes: $got")
+      q.stop()
+    }
+  }
+
+  test("compositeTriggerPanes AfterAll(count, delay): no pane under the count, then one pane") {
+    withRocksDb {
+      import StatefulV2.{AfterAll, AfterCount, AfterDelay}
+      val mem = MemoryStream[(Long, String)]
+      val panes = StatefulV2.compositeTriggerPanes(mem.toDS(),
+        AfterAll(AfterCount(3), AfterDelay(300L)))
+      val table = freshTable()
+      val q = startMemorySink(panes, table)
+      def got = spark.table(table).as[(Long, Long, Seq[String])].collect().toSeq
+      // two elements: the delay passes, but the count is still under 3
+      // (no processAllAvailable: a processing-time query never idles)
+      mem.addData((1L, "a"), (1L, "b"))
+      awaitSink(table)(q.recentProgress.map(_.numInputRows).sum >= 2)
+      Thread.sleep(1000)
+      assert(got.isEmpty, s"panes: $got")
+      // the third element satisfies the count; the delay, anchored at the
+      // first element, has long passed: one pane with all three
+      mem.addData((1L, "c"))
+      awaitSink(table)(got.nonEmpty)
+      Thread.sleep(1000)
+      assert(got == Seq((1L, 0L, Seq("a", "b", "c"))), s"panes: $got")
       q.stop()
     }
   }
@@ -370,7 +395,7 @@ class StatefulV2Spec extends SparkSpec {
       val mem = MemoryStream[(Long, java.sql.Timestamp, String)]
       val panes = StatefulV2.triggeredWindows(
         mem.toDS().withWatermark("_2", "0 milliseconds"),
-        windowMs = 10000L, allowedLatenessMs = 0L, earlyFireEvery = 2,
+        windowMs = 10000L, allowedLatenessMs = 0L, early = StatefulV2.AfterCount(2),
         accumulating = false)
       val table = freshTable()
       val q = startMemorySink(panes, table)
@@ -400,7 +425,7 @@ class StatefulV2Spec extends SparkSpec {
       val mem = MemoryStream[(Long, java.sql.Timestamp, String)]
       val panes = StatefulV2.triggeredWindows(
         mem.toDS().withWatermark("_2", "0 milliseconds"),
-        windowMs = 10000L, allowedLatenessMs = 0L, earlyFireEvery = 2,
+        windowMs = 10000L, allowedLatenessMs = 0L, early = StatefulV2.AfterCount(2),
         accumulating = true)
       val table = freshTable()
       val q = startMemorySink(panes, table)
@@ -428,8 +453,8 @@ class StatefulV2Spec extends SparkSpec {
       // allowedLateness 5s ⇒ watermark delay 5s; window [10:00:00, 10:00:10)
       val panes = StatefulV2.triggeredWindows(
         mem.toDS().withWatermark("_2", "5000 milliseconds"),
-        windowMs = 10000L, allowedLatenessMs = 5000L, earlyFireEvery = 0,
-        lateFireEvery = 1, accumulating = false)
+        windowMs = 10000L, allowedLatenessMs = 5000L,
+        accumulating = false)
       val table = freshTable()
       val q = startMemorySink(panes, table)
       mem.addData((1L, t(1), "a"), (1L, t(3), "b"))
@@ -466,12 +491,12 @@ class StatefulV2Spec extends SparkSpec {
       val mem = MemoryStream[(Long, java.sql.Timestamp, String)]
       // AfterFirst(count>=5, AfterAll(count>=2, count>=3)): the AfterAll
       // branch is satisfied at 3 elements — before the count>=5 branch
-      val panes = StatefulV2.triggeredWindowsWith(
+      val panes = StatefulV2.triggeredWindows(
         mem.toDS().withWatermark("_2", "0 milliseconds"),
         windowMs = 10000L,
-        earlyTrigger = StatefulV2.AfterFirstOf(
+        early = StatefulV2.AfterFirst(
           StatefulV2.AfterCount(5),
-          StatefulV2.AfterAllOf(StatefulV2.AfterCount(2),
+          StatefulV2.AfterAll(StatefulV2.AfterCount(2),
             StatefulV2.AfterCount(3))))
       val table = freshTable()
       val q = startMemorySink(panes, table)
@@ -500,10 +525,10 @@ class StatefulV2Spec extends SparkSpec {
       // AfterEach(count>=1, count>=3): pane after the 1st element, the
       // next after 3 MORE, then the sequence is exhausted — the 5th..7th
       // elements fire nothing; the watermark pane still closes the window
-      val panes = StatefulV2.triggeredWindowsWith(
+      val panes = StatefulV2.triggeredWindows(
         mem.toDS().withWatermark("_2", "0 milliseconds"),
         windowMs = 10000L, accumulating = true,
-        earlyTrigger = StatefulV2.AfterEachOf(
+        early = StatefulV2.AfterEach(
           StatefulV2.AfterCount(1), StatefulV2.AfterCount(3)))
       val table = freshTable()
       val q = startMemorySink(panes, table)
@@ -535,10 +560,10 @@ class StatefulV2Spec extends SparkSpec {
       // and 4 from the main trigger; the until-counter runs from window
       // start, so element 5 fires the FINAL early pane and finishes the
       // composite — elements 6..7 fire nothing before the watermark
-      val panes = StatefulV2.triggeredWindowsWith(
+      val panes = StatefulV2.triggeredWindows(
         mem.toDS().withWatermark("_2", "0 milliseconds"),
         windowMs = 10000L, accumulating = true,
-        earlyTrigger = StatefulV2.OrFinallyOf(
+        early = StatefulV2.OrFinally(
           StatefulV2.AfterCount(2), StatefulV2.AfterCount(5)))
       val table = freshTable()
       val q = startMemorySink(panes, table)
@@ -595,7 +620,7 @@ class StatefulV2Spec extends SparkSpec {
       val mem = MemoryStream[(Long, java.sql.Timestamp, String)]
       val panes = StatefulV2.triggeredWindows(
         mem.toDS().withWatermark("_2", "0 milliseconds"),
-        windowMs = 10000L, earlyFireEvery = 2, accumulating = true)
+        windowMs = 10000L, early = StatefulV2.AfterCount(2), accumulating = true)
       val table = freshTable()
       val q = startMemorySink(panes, table)
       // arrival order c, a, b inside [0,10s): the early pane fires on
@@ -624,7 +649,7 @@ class StatefulV2Spec extends SparkSpec {
       val mem = MemoryStream[(Long, java.sql.Timestamp, String)]
       val panes = StatefulV2.triggeredSessions(
         mem.toDS().withWatermark("_2", "0 milliseconds"),
-        gapMs = 10000L, allowedLatenessMs = 0L, earlyFireEvery = 2,
+        gapMs = 10000L, allowedLatenessMs = 0L, early = StatefulV2.AfterCount(2),
         accumulating = true)
       val table = freshTable()
       val q = startMemorySink(panes, table)
@@ -666,8 +691,8 @@ class StatefulV2Spec extends SparkSpec {
       // on-time timer at 8s in Spark's domain
       val panes = StatefulV2.triggeredSessions(
         mem.toDS().withWatermark("_2", "5000 milliseconds"),
-        gapMs = 10000L, allowedLatenessMs = 5000L, earlyFireEvery = 0,
-        lateFireEvery = 1, accumulating = false)
+        gapMs = 10000L, allowedLatenessMs = 5000L,
+        accumulating = false)
       val table = freshTable()
       val q = startMemorySink(panes, table)
       mem.addData((1L, t(1), "a"), (1L, t(3), "b"))
@@ -713,7 +738,7 @@ class StatefulV2Spec extends SparkSpec {
       // order never drops rows; lateness 0 → on-time pane IS final
       val panes = StatefulV2.triggeredSessions(
         mem.toDS().withWatermark("_2", "2 minutes"),
-        gapMs = 10000L, allowedLatenessMs = 0L, earlyFireEvery = 2,
+        gapMs = 10000L, allowedLatenessMs = 0L, early = StatefulV2.AfterCount(2),
         accumulating = true)
       val table = freshTable()
       val q = startMemorySink(panes, table)
@@ -745,7 +770,7 @@ class StatefulV2Spec extends SparkSpec {
       // the on-time pane is final
       val panes = StatefulV2.triggeredSessions(
         mem.toDS().withWatermark("_2", "2 minutes"),
-        gapMs = 10000L, allowedLatenessMs = 0L, earlyFireEvery = 2,
+        gapMs = 10000L, allowedLatenessMs = 0L, early = StatefulV2.AfterCount(2),
         accumulating = true, retractions = true)
       val table = freshTable()
       val q = startMemorySink(panes, table)
@@ -790,7 +815,7 @@ class StatefulV2Spec extends SparkSpec {
       val mem = MemoryStream[(Long, java.sql.Timestamp, String)]
       val panes = StatefulV2.triggeredSessions(
         mem.toDS().withWatermark("_2", "2 minutes"),
-        gapMs = 10000L, allowedLatenessMs = 0L, earlyFireEvery = 2,
+        gapMs = 10000L, allowedLatenessMs = 0L, early = StatefulV2.AfterCount(2),
         accumulating = true, retractions = true)
       val table = freshTable()
       val q = startMemorySink(panes, table)
@@ -833,7 +858,7 @@ class StatefulV2Spec extends SparkSpec {
       val mem = MemoryStream[(Long, java.sql.Timestamp, String)]
       val panes = StatefulV2.triggeredSessions(
         mem.toDS().withWatermark("_2", "2 minutes"),
-        gapMs = 10000L, allowedLatenessMs = 0L, earlyFireEvery = 3,
+        gapMs = 10000L, allowedLatenessMs = 0L, early = StatefulV2.AfterCount(3),
         accumulating = true)
       val table = freshTable()
       val q = startMemorySink(panes, table)
@@ -869,7 +894,7 @@ class StatefulV2Spec extends SparkSpec {
       val mem = MemoryStream[(Long, java.sql.Timestamp, String)]
       val panes = StatefulV2.triggeredSessions(
         mem.toDS().withWatermark("_2", "2 minutes"),
-        gapMs = 10000L, allowedLatenessMs = 0L, earlyFireEvery = 2,
+        gapMs = 10000L, allowedLatenessMs = 0L, early = StatefulV2.AfterCount(2),
         accumulating = false)
       val table = freshTable()
       val q = startMemorySink(panes, table)
@@ -901,8 +926,8 @@ class StatefulV2Spec extends SparkSpec {
     val err = intercept[IllegalArgumentException] {
       new StatefulV2.TriggeredSessionProcessor[Long, String, StatefulV2.Pane[Long, String]](
         StatefulV2.WindowFn.Sessions(1000L), allowedLatenessMs = 1000L,
-        earlyTrigger = StatefulV2.NeverCount,
-        lateTrigger = StatefulV2.AfterCount(1), accumulating = false)(
+        early = StatefulV2.Never,
+        late = StatefulV2.AfterCount(1), accumulating = false)(
         Iterator.single)
     }
     assert(err.getMessage.contains("must be < gapMs"))
@@ -1001,12 +1026,39 @@ class StatefulV2Spec extends SparkSpec {
     assert(err.getMessage.contains("allowedLatenessMs"))
   }
 
+  test("triggered windows: a trigger tree holding AfterDelay is rejected when built") {
+    val mem = MemoryStream[(Long, java.sql.Timestamp, String)]
+    val err = intercept[IllegalArgumentException] {
+      StatefulV2.triggeredWindows(
+        mem.toDS().withWatermark("_2", "0 milliseconds"), windowMs = 10000L,
+        early = StatefulV2.AfterFirst(StatefulV2.AfterCount(2),
+          StatefulV2.AfterDelay(300L)))
+    }
+    assert(err.getMessage.contains("event-time clock"), err.getMessage)
+  }
+
+  test("each pane clock rejects the windows and trigger shapes it cannot run") {
+    import StatefulV2._
+    val onEventTime = intercept[IllegalArgumentException] {
+      new TriggeredSessionProcessor[Long, String, Pane[Long, String]](
+        WindowFn.Global, 0L, Never, AfterCount(1), accumulating = false)(
+        Iterator.single)
+    }
+    assert(onEventTime.getMessage.contains("Global window never ends"))
+    val onWallClock = intercept[IllegalArgumentException] {
+      new MixedTriggerSessionProcessor[Long, String, Pane[Long, String]](
+        WindowFn.Global, 0L, OrFinally(AfterCount(2), AfterCount(5)), Never,
+        accumulating = false)(Iterator.single)
+    }
+    assert(onWallClock.getMessage.contains("event-time clock"))
+  }
+
   test("triggered windows: retractions re-emit the previous pane before each firing") {
     withRocksDb {
       val mem = MemoryStream[(Long, java.sql.Timestamp, String)]
       val panes = StatefulV2.triggeredWindows(
         mem.toDS().withWatermark("_2", "0 milliseconds"),
-        windowMs = 10000L, allowedLatenessMs = 0L, earlyFireEvery = 2,
+        windowMs = 10000L, allowedLatenessMs = 0L, early = StatefulV2.AfterCount(2),
         accumulating = true, retractions = true)
       val table = freshTable()
       val q = startMemorySink(panes, table)
