@@ -194,11 +194,13 @@ object StreamingBench {
     * last output-producing batch — so poll latency never inflates the
     * denominator. The drain tail (the last panes' delayMs) stays IN
     * the measurement: pane latency is the operator's contract, and the
-    * published 3.5 s Q12 wall includes its pipeline drain too. */
+    * published 3.5 s Q12 wall includes its pipeline drain too. Its own
+    * checkpoint runs under the replay harness's fork-free
+    * [[graft.tools.ReplayHarness.CheckpointConfs]]. */
   private def benchProcTime(spark: SparkSession, name: String,
       rows: IndexedSeq[(Long, Double)], delayMs: Long,
       triggerMs: Long): (Double, OpBreakdown) =
-    try {
+    try withConfs(spark, graft.tools.ReplayHarness.CheckpointConfs) {
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
       import spark.implicits._
       val ckptDir = java.nio.file.Files.createTempDirectory("graft_q12_")

@@ -1,10 +1,15 @@
 package graft
 
+import java.nio.file.Files
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.{LocalFileSystem, Path}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.streaming.StreamOps
+import graft.tools.{ForkFreeLocalFileSystem, ForkFreeRawLocalFileSystem, ReplayHarness}
 
 /** An event in the Nexmark-ish shape of the `events` table. */
 /** Reloadable demo model for the hot-swap spec: score = w · Σ(vec) —
@@ -1279,15 +1284,19 @@ class StreamingSpec extends SparkSpec {
 
   // ---- the replay core behind StreamingBench, ScaleProbe and
   // perfbench's stream workload
-  private val (managerKey, fsManager) = graft.tools.ReplayHarness.CheckpointManager
+  private val (managerKey, fsManager) = ReplayHarness.CheckpointManager
 
   /** A passthrough replay of 1..n in 3 chunks plus one sentinel; `inside`
     * runs where the query is built. */
   private def passthroughReplay(name: String, n: Long = 30L)(
       inside: org.apache.spark.sql.Dataset[Long] => Unit = _ => ()) =
-    graft.tools.ReplayHarness.run(spark, name, 1L to n, Seq(0L), 3) { ds =>
+    ReplayHarness.run(spark, name, 1L to n, Seq(0L), 3) { ds =>
       inside(ds); ds
     }
+
+  /** The replay's `graft_replay_<name>*` checkpoint dirs in the temp dir. */
+  private def checkpointsOf(name: String): Seq[java.io.File] =
+    CheckpointProbe.checkpointsOf("graft_replay_" + name)
 
   test("replay harness checkpoints through the FileSystem-based manager") {
     var seen: Option[String] = None
@@ -1298,33 +1307,169 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("replay harness restores the caller's manager: unset, preset, and when f throws") {
-    spark.conf.unset(managerKey)
-    passthroughReplay("harness_unset")()
-    assert(spark.conf.getOption(managerKey).isEmpty)
-    val other = "org.apache.spark.sql.execution.streaming.checkpointing." +
-      "FileContextBasedCheckpointFileManager"
-    spark.conf.set(managerKey, other)
+    val keys = ReplayHarness.CheckpointConfs.map(_._1)
+    keys.foreach(spark.conf.unset)
+    var fsSeen: Option[Class[_]] = None
+    passthroughReplay("harness_unset") { _ =>
+      val ckpt = new Path(checkpointsOf("harness_unset").head.toURI)
+      fsSeen = Some(ckpt.getFileSystem(spark.sessionState.newHadoopConf()).getClass)
+    }
+    assert(fsSeen.contains(classOf[ForkFreeLocalFileSystem]), s"fs inside the replay: $fsSeen")
+    keys.foreach(k => assert(spark.conf.getOption(k).isEmpty, k))
+    val preset = Seq(managerKey -> ("org.apache.spark.sql.execution.streaming." +
+        "checkpointing.FileContextBasedCheckpointFileManager"),
+      "fs.file.impl" -> classOf[LocalFileSystem].getName,
+      "fs.file.impl.disable.cache" -> "false")
+    assert(preset.map(_._1) == keys)
+    preset.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
       passthroughReplay("harness_preset")()
-      assert(spark.conf.get(managerKey) == other)
+      preset.foreach { case (k, v) => assert(spark.conf.get(k) == v, k) }
       val e = intercept[IllegalStateException] {
         passthroughReplay("harness_throws")(_ => throw new IllegalStateException("boom"))
       }
       assert(e.getMessage == "boom")
-      assert(spark.conf.get(managerKey) == other)
-    } finally spark.conf.unset(managerKey)
+      preset.foreach { case (k, v) => assert(spark.conf.get(k) == v, k) }
+    } finally keys.foreach(spark.conf.unset)
   }
 
   test("replay harness: N rows in 3 chunks + 1 sentinel reach the sink, checkpoint deleted") {
     val name = s"harness_rows_${System.nanoTime}"
-    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-    def checkpoints() = Option(tmp.listFiles()).toSeq.flatten
-      .filter(_.getName.startsWith("graft_replay_" + name))
     var during = Seq.empty[java.io.File]
     val n = 30L
-    val (_, prog) = passthroughReplay(name, n)(_ => during = checkpoints())
+    val (_, prog) = passthroughReplay(name, n)(_ => during = checkpointsOf(name))
     assert(during.size == 1, s"checkpoint dirs while replaying: $during")
     assert(prog.map(_.sink.numOutputRows).filter(_ > 0).sum == n + 1)
-    assert(checkpoints().isEmpty, s"checkpoint left behind: ${checkpoints()}")
+    assert(checkpointsOf(name).isEmpty, s"checkpoint left behind: ${checkpointsOf(name)}")
   }
+
+  test("replay harness starts no chmod or readlink process") {
+    val rows = (1L to 20L).flatMap(k =>
+      Seq((k, Option(k), Option.empty[Double]), (k, Option.empty[Long], Option(k * 1.5))))
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    val jfr = Files.createTempFile("graft_forks", ".jfr")
+    try {
+      // a known fork, so an empty recording cannot pass the guard
+      new ProcessBuilder("true").start().waitFor()
+      StreamingBench.withConfs(spark, StreamingBench.confs) {
+        ReplayHarness.run(spark, "harness_forks", rows,
+          Seq.empty[(Long, Option[Long], Option[Double])], 3) { ds =>
+          graft.streaming.StatefulV2.incrementalJoin[Long, Long, Double](ds)
+        }
+      }
+      rec.stop()
+      rec.dump(jfr)
+      val programs = jdk.jfr.consumer.RecordingFile.readAllEvents(jfr).asScala.toSeq
+        .map(_.getString("command").takeWhile(_ != ' ').split('/').last)
+      assert(programs.contains("true"), s"recorded: $programs")
+      val forks = programs.filter(c => c == "chmod" || c == "readlink")
+        .groupBy(identity).view.mapValues(_.size).toMap
+      assert(forks.isEmpty, "chmod/readlink process starts")
+    } finally { rec.close(); Files.deleteIfExists(jfr) }
+  }
+
+  test("replay harness checkpoint keeps its .crc checksum files") {
+    val name = s"harness_crc_${System.nanoTime}"
+    CheckpointProbe.offsets.clear()
+    ReplayHarness.run(spark, name, 1L to 30L, Seq(0L), 3) { ds =>
+      ds.map { x => CheckpointProbe.lookAtOffsets("graft_replay_" + name); x }
+    }
+    val seen = CheckpointProbe.offsets.asScala.toSet
+    assert(Set("0", ".0.crc").subsetOf(seen), s"offsets seen by the tasks: $seen")
+  }
+
+  test("a stateful query restarted on its own checkpoint resumes its state") {
+    val ckpt = Files.createTempDirectory("graft_restart")
+    try StreamingBench.withConfs(spark,
+        StreamingBench.confs ++ ReplayHarness.CheckpointConfs) {
+      val mem = MemoryStream[Int]
+      val counts = mem.toDS().groupBy("value").count()
+      def start(table: String) = counts.writeStream.format("memory")
+        .queryName(table).outputMode("complete")
+        .option("checkpointLocation", ckpt.toString).start()
+      val q1 = start(freshTable())
+      mem.addData(1, 2, 2)
+      runToCompletion(q1)
+      mem.addData(2, 3)
+      val table = freshTable()
+      runToCompletion(start(table))
+      assertRows(spark.table(table), Seq(Seq(1, 1L), Seq(2, 3L), Seq(3, 1L)))
+      assert(Files.exists(ckpt.resolve("offsets/.1.crc")))
+    } finally ReplayHarness.deleteTree(ckpt)
+  }
+
+  // ---- the fork-free `file:` filesystem against the stock one
+
+  /** Runs `op` on a fresh stock and a fresh fork-free local filesystem,
+    * each in its own temp dir under one conf (umask 077); returns each
+    * side's full mode (permission, setuid/setgid and sticky bits) per
+    * relative path. */
+  private def modesAfter(op: (LocalFileSystem, Path) => Unit)
+      : (Map[String, Int], Map[String, Int]) = {
+    val conf = new org.apache.hadoop.conf.Configuration()
+    conf.set("fs.permissions.umask-mode", "077")
+    def modes(fs: LocalFileSystem): Map[String, Int] = {
+      val root = Files.createTempDirectory("graft_fs_parity")
+      try {
+        fs.initialize(java.net.URI.create("file:///"), conf)
+        op(fs, new Path(root.toUri))
+        Files.walk(root).iterator().asScala.filter(_ != root).map { p =>
+          root.relativize(p).toString ->
+            (Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xFFF)
+        }.toMap
+      } finally { fs.close(); ReplayHarness.deleteTree(root) }
+    }
+    val forkFree = new ForkFreeLocalFileSystem
+    assert(forkFree.getRaw.isInstanceOf[ForkFreeRawLocalFileSystem])
+    (modes(new LocalFileSystem), modes(forkFree))
+  }
+
+  private def octal(s: String) = Integer.parseInt(s, 8)
+
+  test("fork-free file: fs gives the stock modes for create, mkdirs and setPermission") {
+    val (stock, forkFree) = modesAfter { (fs, root) =>
+      fs.mkdirs(new Path(root, "a/b"), FsPermission.getDirDefault)
+      fs.create(new Path(root, "a/b/f")).close()
+      fs.create(new Path(root, "g")).close()
+      fs.setPermission(new Path(root, "g"), new FsPermission(octal("640").toShort))
+    }
+    assert(stock == Map("a" -> octal("700"), "a/b" -> octal("700"),
+      "a/b/f" -> octal("600"), "a/b/.f.crc" -> octal("600"),
+      "g" -> octal("640"), ".g.crc" -> octal("640")), s"stock: $stock")
+    assert(forkFree == stock)
+  }
+
+  test("fork-free file: fs keeps the stock mode for a sticky bit and a setgid directory") {
+    val (stock, forkFree) = modesAfter { (fs, root) =>
+      val sticky = new Path(root, "t")
+      fs.mkdirs(sticky)
+      fs.setPermission(sticky, new FsPermission(octal("1777").toShort))
+      val setgid = new Path(root, "s")
+      fs.mkdirs(setgid)
+      assert(new ProcessBuilder("chmod", "g+s", fs.pathToFile(setgid).toString)
+        .start().waitFor() == 0)
+      fs.setPermission(setgid, new FsPermission(octal("750").toShort))
+    }
+    assert(stock == Map("t" -> octal("1777"), "s" -> octal("2750")), s"stock: $stock")
+    assert(forkFree == stock)
+  }
+}
+
+/** What a replay's tasks see of its offset log: the file names under
+  * `offsets/` of every temp dir with a given prefix. An object, so a task
+  * closure reaches it without capturing the spec. */
+object CheckpointProbe {
+  val offsets: java.util.Set[String] =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  def checkpointsOf(prefix: String): Seq[java.io.File] =
+    Option(new java.io.File(System.getProperty("java.io.tmpdir")).listFiles())
+      .toSeq.flatten.filter(_.getName.startsWith(prefix))
+
+  def lookAtOffsets(prefix: String): Unit =
+    checkpointsOf(prefix).foreach { d =>
+      Option(new java.io.File(d, "offsets").list()).toSeq.flatten.foreach(offsets.add)
+    }
 }
