@@ -51,10 +51,12 @@ object StreamingBench {
     "spark.sql.shuffle.partitions" -> "8")
 
   /** Run `body` with `confs` set on the session, then restore each
-    * key's previous value (unset if it had none). */
+    * key's previous value, or unset it if it was not set (not pin the
+    * default that `spark.conf.getOption` returns for a registered key). */
   private[graft] def withConfs[A](spark: SparkSession,
       confs: Seq[(String, String)])(body: => A): A = {
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    val set = spark.sessionState.conf.getAllConfs
+    val prev = confs.map { case (k, _) => k -> set.get(k) }
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
     finally prev.foreach {
@@ -194,13 +196,14 @@ object StreamingBench {
     * last output-producing batch — so poll latency never inflates the
     * denominator. The drain tail (the last panes' delayMs) stays IN
     * the measurement: pane latency is the operator's contract, and the
-    * published 3.5 s Q12 wall includes its pipeline drain too. Its own
-    * checkpoint runs under the replay harness's fork-free
-    * [[graft.tools.ReplayHarness.CheckpointConfs]]. */
+    * published 3.5 s Q12 wall includes its pipeline drain too. The
+    * query runs under the replay harness's
+    * [[graft.tools.ReplayHarness.ReplayConfs]]: its own checkpoint is
+    * fork-free, and its 1 ms poll leaves the trigger interval as is. */
   private def benchProcTime(spark: SparkSession, name: String,
       rows: IndexedSeq[(Long, Double)], delayMs: Long,
       triggerMs: Long): (Double, OpBreakdown) =
-    try withConfs(spark, graft.tools.ReplayHarness.CheckpointConfs) {
+    try withConfs(spark, graft.tools.ReplayHarness.ReplayConfs) {
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
       import spark.implicits._
       val ckptDir = java.nio.file.Files.createTempDirectory("graft_q12_")
@@ -251,18 +254,20 @@ object StreamingBench {
           // indefinitely (observed: two bench JVMs parked here >1 h,
           // batches still firing) — so the drain runs on a daemon
           // thread joined for ≤10 s, and the sink is noop here anyway
-          // (stop() mid-batch has nothing to abort).
+          // (stop() mid-batch has nothing to abort). A failed drain or
+          // stop writes one stderr line.
+          import graft.tools.ReplayHarness.warn
           try {
             if (acc.inRows.get >= rows.size) {
               val drain = new Thread(() =>
                 try q.processAllAvailable()
-                catch { case _: Throwable => () })
+                catch { case e: Throwable => warn(s"drain $name", e) })
               drain.setDaemon(true)
               drain.start()
               drain.join(10000L)
             }
-          } catch { case _: Throwable => () }
-          try q.stop() catch { case _: Throwable => () }
+          } catch { case e: Throwable => warn(s"drain $name", e) }
+          try q.stop() catch { case e: Throwable => warn(s"stop $name", e) }
         }
         graft.tools.ReplayHarness.deleteTree(ckptDir)
       }

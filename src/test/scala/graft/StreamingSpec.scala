@@ -1307,30 +1307,46 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("replay harness restores the caller's manager: unset, preset, and when f throws") {
-    val keys = ReplayHarness.CheckpointConfs.map(_._1)
-    keys.foreach(spark.conf.unset)
-    var fsSeen: Option[Class[_]] = None
-    passthroughReplay("harness_unset") { _ =>
-      val ckpt = new Path(checkpointsOf("harness_unset").head.toURI)
-      fsSeen = Some(ckpt.getFileSystem(spark.sessionState.newHadoopConf()).getClass)
+    val keys = ReplayHarness.ReplayConfs.map(_._1)
+    def setNow = spark.sessionState.conf.getAllConfs
+    val before = keys.map(k => k -> setNow.get(k))
+    /** The replay's confs as `f` sees them. */
+    def replayConfsIn(name: String)(f: => Unit = ()): Seq[(String, String)] = {
+      var seen = Seq.empty[(String, String)]
+      passthroughReplay(name) { _ =>
+        seen = keys.map(k => k -> spark.conf.get(k)); f
+      }
+      seen
     }
-    assert(fsSeen.contains(classOf[ForkFreeLocalFileSystem]), s"fs inside the replay: $fsSeen")
-    keys.foreach(k => assert(spark.conf.getOption(k).isEmpty, k))
-    val preset = Seq(managerKey -> ("org.apache.spark.sql.execution.streaming." +
-        "checkpointing.FileContextBasedCheckpointFileManager"),
-      "fs.file.impl" -> classOf[LocalFileSystem].getName,
-      "fs.file.impl.disable.cache" -> "false")
-    assert(preset.map(_._1) == keys)
-    preset.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
-      passthroughReplay("harness_preset")()
+      keys.foreach(spark.conf.unset)
+      var fsSeen: Option[Class[_]] = None
+      val unsetSeen = replayConfsIn("harness_unset") {
+        val ckpt = new Path(checkpointsOf("harness_unset").head.toURI)
+        fsSeen = Some(ckpt.getFileSystem(spark.sessionState.newHadoopConf()).getClass)
+      }
+      assert(unsetSeen == ReplayHarness.ReplayConfs)
+      assert(fsSeen.contains(classOf[ForkFreeLocalFileSystem]), s"fs inside the replay: $fsSeen")
+      keys.foreach(k => assert(!setNow.contains(k), s"$k is set"))
+      val preset = Seq(managerKey -> ("org.apache.spark.sql.execution.streaming." +
+          "checkpointing.FileContextBasedCheckpointFileManager"),
+        "fs.file.impl" -> classOf[LocalFileSystem].getName,
+        "fs.file.impl.disable.cache" -> "false",
+        "spark.sql.artifact.isolation.enabled" -> "true",
+        "spark.sql.streaming.pollingDelay" -> "10ms")
+      assert(preset.map(_._1) == keys)
+      preset.foreach { case (k, v) => spark.conf.set(k, v) }
+      assert(replayConfsIn("harness_preset")() == ReplayHarness.ReplayConfs)
       preset.foreach { case (k, v) => assert(spark.conf.get(k) == v, k) }
       val e = intercept[IllegalStateException] {
-        passthroughReplay("harness_throws")(_ => throw new IllegalStateException("boom"))
+        replayConfsIn("harness_throws")(throw new IllegalStateException("boom"))
       }
       assert(e.getMessage == "boom")
       preset.foreach { case (k, v) => assert(spark.conf.get(k) == v, k) }
-    } finally keys.foreach(spark.conf.unset)
+    } finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   test("replay harness: N rows in 3 chunks + 1 sentinel reach the sink, checkpoint deleted") {
@@ -1370,6 +1386,35 @@ class StreamingSpec extends SparkSpec {
     } finally { rec.close(); Files.deleteIfExists(jfr) }
   }
 
+  test("a repeated replay compiles no generated class and shares one task class loader") {
+    val rows = (1L to 20L).flatMap(k =>
+      Seq((k, Option(k), Option.empty[Double]), (k, Option.empty[Long], Option(k * 1.5))))
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    /** One RocksDB `incrementalJoin` replay; returns the task context
+      * class loaders it saw and the classes compiled while it ran. */
+    def replay(): (Set[ClassLoader], Long) = {
+      LoaderProbe.seen.clear()
+      val before = compiles.getCount
+      StreamingBench.withConfs(spark, StreamingBench.confs) {
+        ReplayHarness.run(spark, "harness_codegen", rows,
+          Seq.empty[(Long, Option[Long], Option[Double])], 3) { ds =>
+          graft.streaming.StatefulV2.incrementalJoin[Long, Long, Double](
+            ds.map { r => LoaderProbe.look(); r })
+        }
+      }
+      (LoaderProbe.seen.asScala.toSet, compiles.getCount - before)
+    }
+    // perfbench's session keeps Spark's default, per-session isolation
+    StreamingBench.withConfs(spark, Seq(graft.Session.SharedExecutorLoader._1 -> "true")) {
+      val (first, _) = replay()
+      val (second, compiled) = replay()
+      LoaderProbe.seen.clear()
+      assert(compiled == 0, "classes compiled by the repeated replay")
+      assert(first.nonEmpty && second.nonEmpty, "the probe saw no task")
+      assert((first ++ second).size == 1, s"task class loaders: ${first ++ second}")
+    }
+  }
+
   test("replay harness checkpoint keeps its .crc checksum files") {
     val name = s"harness_crc_${System.nanoTime}"
     CheckpointProbe.offsets.clear()
@@ -1383,7 +1428,7 @@ class StreamingSpec extends SparkSpec {
   test("a stateful query restarted on its own checkpoint resumes its state") {
     val ckpt = Files.createTempDirectory("graft_restart")
     try StreamingBench.withConfs(spark,
-        StreamingBench.confs ++ ReplayHarness.CheckpointConfs) {
+        StreamingBench.confs ++ ReplayHarness.ReplayConfs) {
       val mem = MemoryStream[Int]
       val counts = mem.toDS().groupBy("value").count()
       def start(table: String) = counts.writeStream.format("memory")
@@ -1472,4 +1517,12 @@ object CheckpointProbe {
     checkpointsOf(prefix).foreach { d =>
       Option(new java.io.File(d, "offsets").list()).toSeq.flatten.foreach(offsets.add)
     }
+}
+
+/** The context class loaders of the tasks that called [[look]]. */
+object LoaderProbe {
+  val seen: java.util.Set[ClassLoader] =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[ClassLoader]()
+
+  def look(): Unit = seen.add(Thread.currentThread.getContextClassLoader)
 }
