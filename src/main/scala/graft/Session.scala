@@ -6,8 +6,9 @@ import org.apache.spark.sql.SparkSession
   * a profiler or probe measures the bench's configuration: local mode
   * on `cpus` cores with as many shuffle partitions, UTC session time,
   * parquet timestamps read as LTZ (never inferred NTZ), no UI, WARN
-  * logging, and one executor class loader for every session
-  * ([[SharedExecutorLoader]]). `overrides` are applied last, so they
+  * logging, one executor class loader for every session
+  * ([[SharedExecutorLoader]]) and 512 KB broadcast blocks
+  * ([[BroadcastBlockSize]]). `overrides` are applied last, so they
   * win. */
 object Session {
 
@@ -18,6 +19,23 @@ object Session {
     * `addArtifact` or `addJar`), so one shared loader loses nothing. */
   private[graft] val SharedExecutorLoader: (String, String) =
     "spark.sql.artifact.isolation.enabled" -> "false"
+
+  /** The size of a broadcast block. `TorrentBroadcast` serializes into
+    * chunks of this size and allocates a whole one on its first write,
+    * for every broadcast join, every stage's task binary and every
+    * parquet scan's Hadoop conf. G1 treats an object of half a region or
+    * more as humongous: it fills whole regions of its own and is freed
+    * only at the next GC, so a faster pass packs more of them into each
+    * cycle and raises the resident set. JDK 17 sizes regions from the
+    * heap: 1 MB at 2 GB, 2 MB at 3–4 GB (perfbench), 4 MB at 7–8 GB (the
+    * test suite on a 15 GB host). Spark's 4 MB default is humongous at
+    * every heap under 16 GB; 512 KB is not, from 2 MB regions up, but is
+    * again at 1 MB regions. [[local]] sets it at build;
+    * [[graft.sources.Tables.parquet]] sets it on sessions built
+    * elsewhere, with `setIfMissing`, because `TorrentBroadcast` reads the
+    * size from `SparkEnv.get.conf` on every broadcast. */
+  private[graft] val BroadcastBlockSize: (String, String) =
+    "spark.broadcast.blockSize" -> "512k"
 
   /** `SPARK_GRAFT_CPUS`, or the host's available processors when unset. */
   def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
@@ -31,6 +49,7 @@ object Session {
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.ui.enabled", "false")
       .config(SharedExecutorLoader._1, SharedExecutorLoader._2)
+      .config(BroadcastBlockSize._1, BroadcastBlockSize._2)
     overrides.foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

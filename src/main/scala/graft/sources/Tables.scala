@@ -1,5 +1,12 @@
 package graft.sources
 
+import java.nio.file.{FileVisitOption, Files, Path, Paths}
+import java.nio.file.attribute.BasicFileAttributes
+import java.util.concurrent.{ConcurrentHashMap, TimeUnit}
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.FileSystem
+import org.apache.spark.SparkEnv
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -12,10 +19,89 @@ import org.apache.spark.sql.types._
   * Spark the DataSource V2 parquet reader already provides predicate
   * pushdown, column pruning and partition planning, so these are thin
   * wrappers that only normalize types.
+  *
+  * '''Schema memo.''' In Beam a PCollection's schema is fixed when the
+  * pipeline is built; here a table's schema is inferred once, not on
+  * every query build, where Spark's parquet inference costs one Spark job
+  * per table. [[parquet]] keeps one JVM-wide entry per absolute table
+  * path, so the memo is bounded by the number of tables and a new key for
+  * a path replaces its entry. The key is
+  *  - a `java.nio` listing stamp of every file under the path (relative
+  *    name, size, mtime), so an in-place overwrite misses: Spark writes
+  *    new part-file names (as `tools.DegenerateTables` does); and
+  *  - the session's explicitly set confs that change inference:
+  *    `spark.sql.parquet.*`, `spark.sql.legacy.parquet.*` (`nanosAsLong`
+  *    turns `events.ts` into a long), `spark.sql.caseSensitive` and
+  *    `spark.sql.files.ignoreCorruptFiles`.
+  *
+  * A miss runs Spark's own inference, with no lock held, and stores its
+  * schema. A path that is missing, a glob, or on another file system is
+  * read as before, without the memo, so its errors (`PATH_NOT_FOUND`)
+  * are Spark's own. Only the schema is cached: every read still lists
+  * and scans the files.
   */
 object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    normalizeNtz(spark.read.parquet(s"$dir/$name.parquet"))
+    normalizeNtz(parquet(spark, s"$dir/$name.parquet"))
+
+  /** `spark.read.parquet(path)`, with the schema from the memo when the
+    * path's stamp matches its entry. Also applies
+    * [[graft.Session.BroadcastBlockSize]] to sessions the engine did not
+    * build, unless the application set a block size itself. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val (k, v) = graft.Session.BroadcastBlockSize
+    SparkEnv.get.conf.setIfMissing(k, v)
+    val stamped = for {
+      p <- localPath(spark, path)
+      files <- listing(p)
+    } yield p -> Stamp(files, inferenceConfs(spark))
+    stamped match {
+      case None => spark.read.parquet(path)
+      case Some((p, stamp)) =>
+        Option(memo.get(p)).filter(_._1 == stamp) match {
+          case Some((_, schema)) => spark.read.schema(schema).parquet(path)
+          case None =>
+            val df = spark.read.parquet(path)
+            memo.put(p, stamp -> df.schema)
+            df
+        }
+    }
+  }
+
+  private final case class Stamp(files: Seq[(String, Long, Long)],
+      confs: Seq[(String, String)])
+
+  private val memo = new ConcurrentHashMap[Path, (Stamp, StructType)]()
+
+  private def inferenceConfs(spark: SparkSession): Seq[(String, String)] =
+    spark.conf.getAll.toSeq.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") ||
+        k == "spark.sql.caseSensitive" || k == "spark.sql.files.ignoreCorruptFiles"
+    }.sorted
+
+  /** The absolute local path that Spark reads for `path`; None for a
+    * glob or another file system. */
+  private def localPath(spark: SparkSession, path: String): Option[Path] = {
+    val uri = new org.apache.hadoop.fs.Path(path).toUri
+    val scheme = Option(uri.getScheme).getOrElse(
+      FileSystem.getDefaultUri(spark.sparkContext.hadoopConfiguration).getScheme)
+    if (scheme != "file" || path.exists("{}[]*?\\".contains(_))) None
+    else Some(Paths.get(uri.getPath).toAbsolutePath.normalize)
+  }
+
+  /** (relative name, size, mtime in ns) of every file under `root`,
+    * sorted; None when `root` is missing or changes under the walk. */
+  private def listing(root: Path): Option[Seq[(String, Long, Long)]] =
+    try {
+      val walk = Files.walk(root, FileVisitOption.FOLLOW_LINKS)
+      try Some(walk.iterator.asScala.flatMap { p =>
+        val a = Files.readAttributes(p, classOf[BasicFileAttributes])
+        if (!a.isRegularFile) None
+        else Some((root.relativize(p).toString, a.size,
+          a.lastModifiedTime.to(TimeUnit.NANOSECONDS)))
+      }.toVector.sorted)
+      finally walk.close()
+    } catch { case _: java.io.IOException | _: java.io.UncheckedIOException => None }
 
   /** Parquet files written without the UTC-adjusted flag (pandas/arrow
     * default) surface as TIMESTAMP_NTZ on Spark ≥3.4 when

@@ -323,7 +323,7 @@ object StreamOps {
   def replayEvents(spark: SparkSession, sfDir: String,
       filesPerTrigger: Int = 1): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$sfDir/events.parquet") // schema probe
+    val raw = graft.sources.Tables.parquet(spark, s"$sfDir/events.parquet") // schema probe
     // The file stream source wants a directory to watch (Beam's
     // FileIO.match continuously matching a glob); stage the single
     // driver-written file into one.

@@ -48,7 +48,7 @@ object Profile {
     // absorb session/JIT/parquet-reader init so per-query "cold" times
     // measure plan compile + execution, not JVM warmup
     spark.range(1000000).selectExpr("sum(id * 2)").collect()
-    spark.read.parquet(s"$sfDir/region.parquet").count()
+    graft.sources.Tables.region(spark, sfDir).count()
     val all = graft.SparkEntry.queries
     args.drop(1).foreach { n =>
       try {

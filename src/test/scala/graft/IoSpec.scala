@@ -430,4 +430,109 @@ class IoSpec extends SparkSpec {
     // (dest, shard) pair
     assert(written.map(e => (e._1, e._2)).distinct.size == written.size)
   }
+
+  /** `body`'s result and the Spark jobs it starts on this thread,
+    * counted by a listener. A sentinel job in another group, started after
+    * `body`, marks the point where the listener has seen all of them. */
+  private def jobsStartedBy[A](body: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"graft-io-jobs-${java.util.UUID.randomUUID}"
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => started.incrementAndGet()
+          case g if g == s"$group-end" => seen.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val result = body
+      sc.setJobGroup(s"$group-end", "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (result, started.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("Tables.load infers a table's schema once: a second load starts no Spark job") {
+    val base = Files.createTempDirectory("graft-memo").toString
+    Seq((1L, "a")).toDF("id", "s").write.parquet(s"$base/t.parquet")
+    val (_, first) = jobsStartedBy(graft.sources.Tables.load(spark, base, "t"))
+    assert(first >= 1, "the first load runs Spark's schema inference")
+    val (again, second) = jobsStartedBy(graft.sources.Tables.load(spark, base, "t"))
+    assert(second == 0)
+    assertRows(again, Seq(Seq(1L, "a")))
+  }
+
+  test("Tables.load sees an in-place overwrite that adds a column") {
+    val base = Files.createTempDirectory("graft-memo").toString
+    Seq((1L, "a")).toDF("id", "s").write.parquet(s"$base/t.parquet")
+    assert(graft.sources.Tables.load(spark, base, "t").columns.toSeq == Seq("id", "s"))
+    Seq((2L, "b", 2.5)).toDF("id", "s", "v").write.mode("overwrite").parquet(s"$base/t.parquet")
+    val back = graft.sources.Tables.load(spark, base, "t")
+    assert(back.columns.toSeq == Seq("id", "s", "v"))
+    assertRows(back, Seq(Seq(2L, "b", 2.5)))
+  }
+
+  test("Tables.load keys its schema memo on the parquet inference confs") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    // an `events` table stored as the driver writes it: TIMESTAMP(NANOS),
+    // which Spark cannot write itself
+    val base = Files.createTempDirectory("graft-memo").toString
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val writer = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$base/events.parquet"))
+      .withConf(new org.apache.hadoop.conf.Configuration()).withType(schema).build()
+    try writer.write(new SimpleGroupFactory(schema).newGroup().append("ts", 1700000000123456789L))
+    finally writer.close()
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val before = spark.conf.getOption(key)
+    def ts = graft.sources.Tables.load(spark, base, "events").schema("ts").dataType
+    try {
+      spark.conf.set(key, "true")
+      assert(ts == LongType)
+      // a memo hit here would return the long column
+      spark.conf.set(key, "false")
+      val e = intercept[org.apache.spark.sql.AnalysisException](ts)
+      assert(e.getCondition == "PARQUET_TYPE_ILLEGAL", e.getMessage)
+    } finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("Tables.load of a missing path raises Spark's PATH_NOT_FOUND") {
+    val base = Files.createTempDirectory("graft-memo").toString
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      graft.sources.Tables.load(spark, base, "missing"))
+    assert(e.getCondition == "PATH_NOT_FOUND", e.getMessage)
+  }
+
+  test("Tables.load sets the broadcast block size only where none is set") {
+    val conf = org.apache.spark.SparkEnv.get.conf
+    val (key, size) = Session.BroadcastBlockSize
+    val before = conf.getOption(key)
+    try {
+      conf.set(key, "1m")
+      graft.sources.Tables.load(spark, sfDir, "region")
+      assert(conf.get(key) == "1m")
+      conf.remove(key)
+      graft.sources.Tables.load(spark, sfDir, "region")
+      assert(conf.get(key) == size)
+    } finally before match {
+      case Some(v) => conf.set(key, v)
+      case None => conf.remove(key)
+    }
+  }
 }

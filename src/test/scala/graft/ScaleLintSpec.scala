@@ -104,6 +104,25 @@ class ScaleLintSpec extends SparkSpec {
       s"build sessions through graft.Session.local; builder calls:\n${calls.mkString("\n")}")
   }
 
+  test("read.parquet( appears under src/main only in graft/sources/Tables.scala") {
+    // every table read goes through the schema memo of Tables. Allowed:
+    // the table copiers, which read a source directory to rewrite it, and
+    // Similarity's reads of the temp files it wrote itself
+    val allow = Seq("graft/sources/Tables.scala", "graft/tools/DegenerateTables.scala",
+      "graft/tools/ScaleBench.scala", "graft/operators/Similarity.scala")
+    val calls = mainSources.flatMap { case (p, lines) =>
+      lines.zipWithIndex.collect {
+        case (line, i) if line.contains("read.parquet(") => (p.toString, s"$p:${i + 1}")
+      }
+    }
+    val outside = calls.collect { case (p, at) if !allow.exists(p.endsWith) => at }
+    assert(outside.isEmpty,
+      s"read tables through graft.sources.Tables; raw parquet reads:\n${outside.mkString("\n")}")
+    // the allowlist must not rot: every entry still reads parquet
+    val stale = allow.filterNot(a => calls.exists(_._1.endsWith(a)))
+    assert(stale.isEmpty, s"stale allowlist entries: $stale")
+  }
+
   test("no flatMapGroupsWithState / mapGroupsWithState call under src/main") {
     // one per-key state API: transformWithState (streaming/StatefulV2)
     val calls = mainSources.flatMap { case (p, lines) =>
