@@ -38,6 +38,9 @@ object Bench {
   // knows the v1 and v2 totals are NOT directly comparable.
   // bench_diff.py normalizes v1-vs-v2 comparisons with the NINE
   // unchanged members' in-run times instead of the quiesced totals.
+  // The members keep their DataFrame forms even where an oracle text
+  // plans the same (`Q.sql`): building from text would change their
+  // build path and so the probe.
   private[graft] val calVersion = 2
   private[graft] val calibration = Seq(
     "agg_tpch_q1", "agg_tpch_q6", "join_multiway", "window_running",

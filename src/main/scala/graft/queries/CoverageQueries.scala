@@ -213,21 +213,12 @@ object CoverageQueries {
 
     // ===== ROLLUP + GROUPING() (capability bonus over Beam — SURVEY
     // §2.3 notes Beam SQL has single groupSet only).
-    Q("agg_rollup",
-      (s, d) => li(s, d).rollup("l_returnflag", "l_linestatus")
-        .agg(grouping(col("l_returnflag")).cast("long").as("g_rf"),
-          grouping(col("l_linestatus")).cast("long").as("g_ls"),
-          count(lit(1)).as("n"), round(sum("l_quantity"), 4).as("qty"))
-        .select(
-          coalesce(col("l_returnflag"), lit("ALL")).as("rf"),
-          coalesce(col("l_linestatus"), lit("ALL")).as("ls"),
-          col("g_rf"), col("g_ls"), col("n"), col("qty")),
-      Some("""SELECT coalesce(l_returnflag, 'ALL') AS rf,
+    Q.sql("agg_rollup", """SELECT coalesce(l_returnflag, 'ALL') AS rf,
         coalesce(l_linestatus, 'ALL') AS ls,
         CAST(grouping(l_returnflag) AS BIGINT) AS g_rf,
         CAST(grouping(l_linestatus) AS BIGINT) AS g_ls,
         count(*) AS n, round(sum(l_quantity), 4) AS qty
-        FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)""")),
+        FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)"""),
 
     // ===== Array / map complex types (Beam FieldType.array/map —
     // schema.proto:120,134; BeamSqlDslArrayTest / BeamSqlMapTest).
@@ -435,42 +426,25 @@ object CoverageQueries {
 
     // ===== SQL front door (SURVEY §3.2: Catalyst replaces Calcite
     // wholesale): the full pipeline expressed as one SQL string over
-    // registered temp views — parser, analyzer, optimizer, codegen all
+    // the base tables — parser, analyzer, optimizer, codegen all
     // native.
-    Q("sql_front_door",
-      (s, d) => {
-        ord(s, d).createOrReplaceTempView("v_orders")
-        Tables.customer(s, d).createOrReplaceTempView("v_customer")
-        s.sql("""
-          SELECT c_mktsegment,
-                 CAST(year(o_orderdate) AS BIGINT) AS yr,
-                 count(*) AS n,
-                 round(sum(o_totalprice), 2) AS revenue,
-                 CAST(rank() OVER (PARTITION BY c_mktsegment
-                   ORDER BY round(sum(o_totalprice), 2) DESC) AS BIGINT) AS yr_rank
-          FROM v_orders JOIN v_customer ON o_custkey = c_custkey
-          GROUP BY c_mktsegment, year(o_orderdate)""")
-      },
-      Some("""SELECT c_mktsegment, CAST(year(o_orderdate) AS BIGINT) AS yr,
+    Q.sql("sql_front_door", """SELECT c_mktsegment, CAST(year(o_orderdate) AS BIGINT) AS yr,
         count(*) AS n, round(sum(o_totalprice), 2) AS revenue,
         CAST(rank() OVER (PARTITION BY c_mktsegment
           ORDER BY round(sum(o_totalprice), 2) DESC) AS BIGINT) AS yr_rank
         FROM orders JOIN customer ON o_custkey = c_custkey
-        GROUP BY c_mktsegment, year(o_orderdate)""")),
+        GROUP BY c_mktsegment, year(o_orderdate)"""),
 
     // ===== SQL-text TVF windowing (rule/BeamAggregationRule.java:121-165
     // rewrites GROUP BY TUMBLE(ts, …) into windowed aggregation; Spark
     // SQL accepts GROUP BY window(ts, '1 hour') natively — parser,
     // window assignment, and agg all from SQL text).
     Q("sql_front_door_windowed",
-      (s, d) => {
-        ev(s, d).createOrReplaceTempView("v_events")
-        s.sql("""
+      (s, d) => Q.run(s, d, """
           SELECT CAST(unix_timestamp(window.start) AS BIGINT) AS win_start,
                  event_type, count(*) AS n, round(sum(value), 4) AS sum_value
-          FROM v_events
-          GROUP BY window(ts, '1 hour'), event_type""")
-      },
+          FROM events
+          GROUP BY window(ts, '1 hour'), event_type"""),
       Some("""SELECT CAST(floor(epoch(ts) / 3600) * 3600 AS BIGINT) AS win_start,
         event_type, count(*) AS n, round(sum(value), 4) AS sum_value
         FROM events GROUP BY 1, 2"""), timed = false),
@@ -483,11 +457,10 @@ object CoverageQueries {
     Q("sql_udaf_geomean",
       (s, d) => {
         graft.functions.UserAggregators.register(s)
-        ord(s, d).createOrReplaceTempView("v_orders")
-        s.sql("""
+        Q.run(s, d, """
           SELECT o_orderpriority, round(geo_mean(o_totalprice), 4) AS gm,
                  count(*) AS n
-          FROM v_orders GROUP BY o_orderpriority""")
+          FROM orders GROUP BY o_orderpriority""")
       },
       Some("""SELECT o_orderpriority,
         round(exp(avg(ln(o_totalprice))), 4) AS gm, count(*) AS n

@@ -135,15 +135,12 @@ object CurationQueries {
     // sql_front_door_windowed; this closes the session TVF member of
     // §2.8's windowing-TVF row in SQL text, not just the DSL).
     Q("sql_session_tvf",
-      (s, d) => {
-        ev(s, d).createOrReplaceTempView("events_sess_sql")
-        s.sql("""SELECT user_id,
+      (s, d) => Q.run(s, d, """SELECT user_id,
             CAST(unix_timestamp(session_window.start) AS BIGINT) AS sess_start,
             CAST(unix_timestamp(session_window.end) AS BIGINT) AS sess_end,
             count(1) AS n, round(sum(value), 4) AS sum_value
-          FROM events_sess_sql
-          GROUP BY session_window(ts, '30 minutes'), user_id""")
-      },
+          FROM events
+          GROUP BY session_window(ts, '30 minutes'), user_id"""),
       Some("""WITH g AS (
           SELECT user_id, ts, value,
             CASE WHEN lag(ts) OVER w IS NULL

@@ -465,22 +465,13 @@ object EventTimeQueries {
 
     // Nexmark Q1 "currency conversion" (queries/Query1.java — a pure
     // per-element map over the bid stream: dollars → euros).
-    Q("nexmark_q1_convert",
-      (s, d) => ev(s, d).filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"),
-          round(col("value") * 0.908, 4).as("price_eur")),
-      Some("""SELECT event_id, user_id, round(value * 0.908, 4) AS price_eur
-        FROM events WHERE event_type = 'click'""")),
+    Q.sql("nexmark_q1_convert", """SELECT event_id, user_id, round(value * 0.908, 4) AS price_eur
+        FROM events WHERE event_type = 'click'"""),
 
     // Nexmark Q2 "selection" (queries/Query2.java — a pure filter over
     // the bid stream for a sparse key set).
-    Q("nexmark_q2_filter",
-      (s, d) => ev(s, d).filter(col("event_type") === "click" &&
-          col("user_id") % 13 === 0)
-        .select(col("event_id"), col("user_id"),
-          round(col("value"), 4).as("price")),
-      Some("""SELECT event_id, user_id, round(value, 4) AS price
-        FROM events WHERE event_type = 'click' AND user_id % 13 = 0""")),
+    Q.sql("nexmark_q2_filter", """SELECT event_id, user_id, round(value, 4) AS price
+        FROM events WHERE event_type = 'click' AND user_id % 13 = 0"""),
 
     // Nexmark Q3 "local item suggestion" (queries/Query3.java — THE
     // state+timers showcase: an incremental Person⋈Auction join where

@@ -545,22 +545,13 @@ object PipelineQueries {
 
     // ===== Anomaly detection (ml/anomaly/): per-type z-score against
     // fitted mean/stddev (one agg pass, broadcast back), flag |z|>2.5.
-    Q("anomaly_zscore",
-      (s, d) => {
-        val stats = ev(s, d).groupBy("event_type")
-          .agg(avg("value").as("mean_v"), stddev_samp(col("value")).as("sd_v"))
-        ev(s, d).join(broadcast(stats), "event_type")
-          .withColumn("z", round((col("value") - col("mean_v")) / col("sd_v"), 6))
-          .filter(abs(col("z")) > 2.5)
-          .select(col("event_id"), col("event_type"), col("z"))
-      },
-      Some("""WITH stats AS (
+    Q.sql("anomaly_zscore", """WITH stats AS (
           SELECT event_type, avg(value) AS mean_v, stddev_samp(value) AS sd_v
           FROM events GROUP BY 1)
-        SELECT event_id, e.event_type,
+        SELECT /*+ BROADCAST(stats) */ event_id, e.event_type,
           round((value - mean_v) / sd_v, 6) AS z
         FROM events e JOIN stats USING (event_type)
-        WHERE abs(round((value - mean_v) / sd_v, 6)) > 2.5""")),
+        WHERE abs(round((value - mean_v) / sd_v, 6)) > 2.5"""),
 
     // ===== Robust z-score anomaly detector (ml/anomaly/detectors/
     // robust_zscore.py — median/MAD instead of mean/stddev, outlier-

@@ -109,21 +109,7 @@ object RelationalQueries {
     // star-plus-constraint join — fact-fact shuffle joins on the keys,
     // tiny dims broadcast, the c_nationkey = s_nationkey constraint
     // applied at the supplier join.
-    Q("agg_tpch_q5",
-      (s, d) => li(s, d)
-        .join(ord(s, d), col("l_orderkey") === col("o_orderkey"))
-        .join(cust(s, d), col("o_custkey") === col("c_custkey"))
-        .join(Tables.supplier(s, d),
-          col("l_suppkey") === col("s_suppkey") &&
-            col("c_nationkey") === col("s_nationkey"))
-        .join(broadcast(Tables.nation(s, d)),
-          col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(Tables.region(s, d).filter(col("r_name") === "ASIA")),
-          col("n_regionkey") === col("r_regionkey"))
-        .groupBy("n_name")
-        .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 4)
-          .as("revenue")),
-      Some("""SELECT n_name,
+    Q.sql("agg_tpch_q5", """SELECT /*+ BROADCAST(nation, region) */ n_name,
         round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue
         FROM lineitem
         JOIN orders ON l_orderkey = o_orderkey
@@ -132,7 +118,7 @@ object RelationalQueries {
         JOIN nation ON s_nationkey = n_nationkey
         JOIN region ON n_regionkey = r_regionkey
         WHERE r_name = 'ASIA'
-        GROUP BY n_name""")),
+        GROUP BY n_name"""),
 
     // TPC-H Q12 shape (shipping modes / priority): join + conditional
     // CASE aggregation — both branches in one pass.
@@ -159,75 +145,39 @@ object RelationalQueries {
 
     // TPC-H Q10 shape (returned-item reporting): 3-table join filtered
     // to returned lineitems, revenue agg per customer, top 20.
-    Q("agg_tpch_q10",
-      (s, d) => li(s, d).filter(col("l_returnflag") === "R")
-        .join(ord(s, d), col("l_orderkey") === col("o_orderkey"))
-        .join(cust(s, d), col("o_custkey") === col("c_custkey"))
-        .groupBy("c_custkey", "c_name")
-        .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 4)
-          .as("revenue"))
-        .orderBy(col("revenue").desc, col("c_custkey").asc)
-        .limit(20),
-      Some("""SELECT c_custkey, c_name,
+    Q.sql("agg_tpch_q10", """SELECT c_custkey, c_name,
         round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue
         FROM lineitem
         JOIN orders ON l_orderkey = o_orderkey
         JOIN customer ON o_custkey = c_custkey
         WHERE l_returnflag = 'R'
         GROUP BY c_custkey, c_name
-        ORDER BY revenue DESC, c_custkey ASC LIMIT 20""")),
+        ORDER BY revenue DESC, c_custkey ASC LIMIT 20"""),
 
     // TPC-H Q14 shape (promotion effect): conditional revenue ratio —
     // a CASE aggregate over a broadcast dim join.
-    Q("agg_tpch_q14",
-      (s, d) => li(s, d)
-        .join(broadcast(Tables.part(s, d)), col("l_partkey") === col("p_partkey"))
-        .agg(round(lit(100.0) *
-          sum(when(col("p_type").startsWith("PROMO"),
-              col("l_extendedprice") * (lit(1) - col("l_discount")))
-            .otherwise(lit(0.0))) /
-          sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 6)
-          .as("promo_revenue_pct")),
-      Some("""SELECT round(100.0 *
+    Q.sql("agg_tpch_q14", """SELECT /*+ BROADCAST(part) */ round(100.0 *
           sum(CASE WHEN p_type LIKE 'PROMO%'
               THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END) /
           sum(l_extendedprice * (1 - l_discount)), 6) AS promo_revenue_pct
-        FROM lineitem JOIN part ON l_partkey = p_partkey""")),
+        FROM lineitem JOIN part ON l_partkey = p_partkey"""),
 
-    Q("agg_global",
-      (s, d) => li(s, d).agg(
-        count(lit(1)).as("n_rows"),
-        sum("l_quantity").as("total_qty"),
-        avg("l_extendedprice").as("avg_price"),
-        min("l_shipdate").as("min_ship"),
-        max("l_shipdate").as("max_ship"),
-        countDistinct("l_orderkey").as("n_orders")),
-      Some("""SELECT count(*) AS n_rows, sum(l_quantity) AS total_qty,
+    Q.sql("agg_global", """SELECT count(*) AS n_rows, sum(l_quantity) AS total_qty,
         avg(l_extendedprice) AS avg_price, min(l_shipdate) AS min_ship,
         max(l_shipdate) AS max_ship,
-        count(DISTINCT l_orderkey) AS n_orders FROM lineitem"""), timed = false),
+        count(DISTINCT l_orderkey) AS n_orders FROM lineitem""", timed = false),
 
     // Extended aggregate surface: median (continuous interpolation in
     // both engines) + the SQL:2003 linear-regression family. Skewness/
     // kurtosis are deliberately absent — Spark computes population
     // moments where DuckDB applies sample corrections, so their values
     // diverge past 6 decimals (documented engine difference).
-    Q("agg_stats_regr",
-      (s, d) => li(s, d).groupBy("l_returnflag").agg(
-        median(col("l_quantity")).as("med_qty"),
-        round(regr_slope(col("l_extendedprice"), col("l_quantity")), 6)
-          .as("slope"),
-        round(regr_intercept(col("l_extendedprice"), col("l_quantity")), 6)
-          .as("intercept"),
-        round(regr_r2(col("l_extendedprice"), col("l_quantity")), 6)
-          .as("r2"),
-        regr_count(col("l_extendedprice"), col("l_quantity")).as("n")),
-      Some("""SELECT l_returnflag, median(l_quantity) AS med_qty,
+    Q.sql("agg_stats_regr", """SELECT l_returnflag, median(l_quantity) AS med_qty,
         round(regr_slope(l_extendedprice, l_quantity), 6) AS slope,
         round(regr_intercept(l_extendedprice, l_quantity), 6) AS intercept,
         round(regr_r2(l_extendedprice, l_quantity), 6) AS r2,
         regr_count(l_extendedprice, l_quantity) AS n
-        FROM lineitem GROUP BY l_returnflag"""), timed = false),
+        FROM lineitem GROUP BY l_returnflag""", timed = false),
 
     Q("agg_stats",
       (s, d) => li(s, d).groupBy("l_returnflag").agg(
@@ -248,16 +198,11 @@ object RelationalQueries {
         count(*) FILTER (WHERE l_discount > 0.05) AS n_big_disc
         FROM lineitem GROUP BY l_returnflag""")),
 
-    Q("agg_bitops",
-      (s, d) => li(s, d).groupBy("l_returnflag").agg(
-        bit_and(col("l_linenumber").cast("long")).as("band"),
-        bit_or(col("l_linenumber").cast("long")).as("bor"),
-        bit_xor(col("l_linenumber").cast("long")).as("bxor")),
-      Some("""SELECT l_returnflag,
+    Q.sql("agg_bitops", """SELECT l_returnflag,
         CAST(bit_and(CAST(l_linenumber AS BIGINT)) AS BIGINT) AS band,
         CAST(bit_or(CAST(l_linenumber AS BIGINT)) AS BIGINT) AS bor,
         CAST(bit_xor(CAST(l_linenumber AS BIGINT)) AS BIGINT) AS bxor
-        FROM lineitem GROUP BY l_returnflag"""), timed = false),
+        FROM lineitem GROUP BY l_returnflag""", timed = false),
 
     Q("agg_collect",
       (s, d) => ord(s, d).groupBy("o_orderpriority").agg(
@@ -322,17 +267,10 @@ object RelationalQueries {
         round(quantile_cont(l_quantity, 0.75), 6) AS p75
         FROM lineitem GROUP BY l_linestatus"""), timed = false),
 
-    Q("agg_cube",
-      (s, d) => li(s, d).cube("l_returnflag", "l_linestatus")
-        .agg(count(lit(1)).as("n"), sum("l_quantity").as("qty"))
-        .select(
-          coalesce(col("l_returnflag"), lit("ALL")).as("rf"),
-          coalesce(col("l_linestatus"), lit("ALL")).as("ls"),
-          col("n"), col("qty")),
-      Some("""SELECT coalesce(l_returnflag, 'ALL') AS rf,
+    Q.sql("agg_cube", """SELECT coalesce(l_returnflag, 'ALL') AS rf,
         coalesce(l_linestatus, 'ALL') AS ls,
         count(*) AS n, sum(l_quantity) AS qty
-        FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)""")),
+        FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)"""),
 
     Q("agg_count_distinct",
       (s, d) => li(s, d).agg(
@@ -458,18 +396,11 @@ object RelationalQueries {
         FROM orders
         QUALIFY rk <= 3""")),
 
-    Q("sort_limit_offset",
-      (s, d) => ord(s, d)
-        .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-        .offset(10).limit(20)
-        .select("o_orderkey", "o_totalprice"),
-      Some("""SELECT o_orderkey, o_totalprice FROM orders
-        ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 20 OFFSET 10"""), timed = false),
+    Q.sql("sort_limit_offset", """SELECT o_orderkey, o_totalprice FROM orders
+        ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 20 OFFSET 10""", timed = false),
 
     // ===== Distinct / dedup (Beam Distinct.java:67)
-    Q("distinct_rows",
-      (s, d) => li(s, d).select("l_returnflag", "l_linestatus").distinct(),
-      Some("SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem")),
+    Q.sql("distinct_rows", "SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem"),
 
     Q("sample_hash",
       (s, d) => li(s, d)
@@ -481,27 +412,16 @@ object RelationalQueries {
           "CAST(l_orderkey AS VARCHAR) || '_' || CAST(l_linenumber AS VARCHAR)")} % 20 = 0"""), timed = false),
 
     // ===== Joins (SURVEY §2.4)
-    Q("join_inner_broadcast",
-      (s, d) => ord(s, d)
-        .join(broadcast(cust(s, d)), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(nat(s, d)), col("c_nationkey") === col("n_nationkey"))
-        .groupBy("n_name")
-        .agg(count(lit(1)).as("n_orders"), sum("o_totalprice").as("revenue")),
-      Some("""SELECT n_name, count(*) AS n_orders,
+    Q.sql("join_inner_broadcast",
+      """SELECT /*+ BROADCAST(customer, nation) */ n_name, count(*) AS n_orders,
         sum(o_totalprice) AS revenue
         FROM orders JOIN customer ON o_custkey = c_custkey
-        JOIN nation ON c_nationkey = n_nationkey GROUP BY n_name""")),
+        JOIN nation ON c_nationkey = n_nationkey GROUP BY n_name"""),
 
-    Q("join_left_outer",
-      (s, d) => cust(s, d)
-        .join(ord(s, d), col("c_custkey") === col("o_custkey"), "left")
-        .groupBy("c_custkey")
-        .agg(count(col("o_orderkey")).as("n_orders"),
-          round(coalesce(sum("o_totalprice"), lit(0.0)), 4).as("total")),
-      Some("""SELECT c_custkey, count(o_orderkey) AS n_orders,
+    Q.sql("join_left_outer", """SELECT c_custkey, count(o_orderkey) AS n_orders,
         round(coalesce(sum(o_totalprice), 0), 4) AS total
         FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-        GROUP BY c_custkey"""), timed = false),
+        GROUP BY c_custkey""", timed = false),
 
     Q("join_semi",
       (s, d) => cust(s, d).join(
@@ -519,23 +439,12 @@ object RelationalQueries {
       Some("""SELECT c_custkey, c_name FROM customer WHERE NOT EXISTS
         (SELECT 1 FROM orders WHERE o_custkey = c_custkey)"""), timed = false),
 
-    Q("join_full_outer",
-      (s, d) => {
-        val c = cust(s, d).groupBy(col("c_nationkey").as("nk"))
-          .agg(count(lit(1)).as("n_cust"))
-        val su = sup(s, d).groupBy(col("s_nationkey").as("nk"))
-          .agg(count(lit(1)).as("n_supp"))
-        c.join(su, Seq("nk"), "full_outer")
-          .select(col("nk").cast("long").as("nationkey"),
-            coalesce(col("n_cust"), lit(0L)).as("n_cust"),
-            coalesce(col("n_supp"), lit(0L)).as("n_supp"))
-      },
-      Some("""SELECT CAST(coalesce(c.nk, s.nk) AS BIGINT) AS nationkey,
+    Q.sql("join_full_outer", """SELECT CAST(coalesce(c.nk, s.nk) AS BIGINT) AS nationkey,
         coalesce(c.n_cust, 0) AS n_cust, coalesce(s.n_supp, 0) AS n_supp
         FROM (SELECT c_nationkey nk, count(*) n_cust FROM customer GROUP BY 1) c
         FULL OUTER JOIN
         (SELECT s_nationkey nk, count(*) n_supp FROM supplier GROUP BY 1) s
-        USING (nk)"""), timed = false),
+        USING (nk)""", timed = false),
 
     Q("join_multiway",
       (s, d) => li(s, d)
@@ -704,25 +613,14 @@ object RelationalQueries {
         GROUP BY k"""), timed = false),
 
     // ===== OVER-clause window functions (SURVEY §2.7)
-    Q("window_rank",
-      (s, d) => {
-        val w = Window.partitionBy(col("c_nationkey"))
-          .orderBy(col("c_acctbal").desc, col("c_custkey").asc)
-        cust(s, d).select(
-          col("c_custkey"), col("c_nationkey").cast("long").as("nationkey"),
-          row_number().over(w).cast("long").as("rn"),
-          rank().over(w).cast("long").as("rnk"),
-          dense_rank().over(w).cast("long").as("drnk"),
-          round(percent_rank().over(w), 6).as("prnk"))
-      },
-      Some("""SELECT c_custkey, CAST(c_nationkey AS BIGINT) AS nationkey,
+    Q.sql("window_rank", """SELECT c_custkey, CAST(c_nationkey AS BIGINT) AS nationkey,
         CAST(row_number() OVER w AS BIGINT) AS rn,
         CAST(rank() OVER w AS BIGINT) AS rnk,
         CAST(dense_rank() OVER w AS BIGINT) AS drnk,
         round(percent_rank() OVER w, 6) AS prnk
         FROM customer
         WINDOW w AS (PARTITION BY c_nationkey
-                     ORDER BY c_acctbal DESC, c_custkey ASC)"""), timed = false),
+                     ORDER BY c_acctbal DESC, c_custkey ASC)""", timed = false),
 
     Q("window_running",
       (s, d) => {
@@ -745,19 +643,11 @@ object RelationalQueries {
         WINDOW w AS (PARTITION BY o_custkey
                      ORDER BY o_orderdate ASC, o_orderkey ASC)""")),
 
-    Q("window_moving_avg",
-      (s, d) => {
-        val w = Window.partitionBy(col("o_custkey"))
-          .orderBy(col("o_orderdate").asc, col("o_orderkey").asc)
-          .rowsBetween(-3, 0)
-        ord(s, d).select(col("o_custkey"), col("o_orderkey"),
-          round(avg(col("o_totalprice")).over(w), 4).as("moving_avg"))
-      },
-      Some("""SELECT o_custkey, o_orderkey,
+    Q.sql("window_moving_avg", """SELECT o_custkey, o_orderkey,
         round(avg(o_totalprice) OVER (PARTITION BY o_custkey
           ORDER BY o_orderdate ASC, o_orderkey ASC
           ROWS BETWEEN 3 PRECEDING AND CURRENT ROW), 4) AS moving_avg
-        FROM orders"""), timed = false),
+        FROM orders""", timed = false),
 
     // ===== EWMA per key (pandas ewm(alpha).mean(), adjust=False) —
     // the recurrence e_i = α·v_i + (1−α)·e_{i−1} has no O(n) window
@@ -803,26 +693,13 @@ object RelationalQueries {
     // ScaleLintSpec sweep rejects that shape engine-wide. A truly
     // global quantile assignment at 100 TB is approx_percentile /
     // t-digest territory, not a window).
-    Q("window_ntile_cume",
-      (s, d) => {
-        val w = Window.partitionBy(col("c_nationkey"))
-          .orderBy(col("c_acctbal").asc, col("c_custkey").asc)
-        // cd as floor(micros): k/n can land EXACTLY on a .5 at the 6th
-        // decimal (e.g. 333/640 at sf0.1), where Spark's HALF_UP and
-        // DuckDB's HALF_EVEN round() disagree — floor over the same
-        // IEEE double is deterministic on both engines
-        cust(s, d).select(col("c_custkey"),
-          ntile(4).over(w).cast("long").as("quartile"),
-          floor(cume_dist().over(w) * lit(1e6)).cast("long").as("cd_micros"),
-          first(col("c_custkey")).over(w).as("first_in_nation"))
-      },
-      Some("""SELECT c_custkey,
+    Q.sql("window_ntile_cume", """SELECT c_custkey,
         CAST(ntile(4) OVER w AS BIGINT) AS quartile,
         CAST(floor(cume_dist() OVER w * 1e6) AS BIGINT) AS cd_micros,
         first_value(c_custkey) OVER w AS first_in_nation
         FROM customer
         WINDOW w AS (PARTITION BY c_nationkey
-          ORDER BY c_acctbal ASC, c_custkey ASC)"""), timed = false),
+          ORDER BY c_acctbal ASC, c_custkey ASC)""", timed = false),
 
     // ===== Element-wise & scalar functions (SURVEY §2.2, §2.9)
     Q("scalar_string",

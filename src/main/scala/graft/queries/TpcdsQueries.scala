@@ -94,20 +94,13 @@ object TpcdsQueries {
     // q3: the canonical star join — fact ⋈ filtered dimension ⋈ date,
     // grouped by (year, brand). The dimension filter must reach the
     // part scan and prune lineitem BEFORE the orders join.
-    Q("agg_tpcds_q3",
-      (s, d) => li(s, d)
-        .join(prt(s, d).filter(col("p_type") === "PROMO"),
-          col("l_partkey") === col("p_partkey"))
-        .join(ord(s, d), col("l_orderkey") === col("o_orderkey"))
-        .groupBy(year(col("o_orderdate")).as("o_year"), col("p_brand"))
-        .agg(round(sum(rev), 4).as("sum_agg")),
-      Some("""SELECT CAST(year(o_orderdate) AS INT) AS o_year, p_brand,
+    Q.sql("agg_tpcds_q3", """SELECT CAST(year(o_orderdate) AS INT) AS o_year, p_brand,
           round(sum(l_extendedprice * (1 - l_discount)), 4) AS sum_agg
         FROM lineitem
         JOIN part ON l_partkey = p_partkey
         JOIN orders ON l_orderkey = o_orderkey
         WHERE p_type = 'PROMO'
-        GROUP BY 1, 2""")),
+        GROUP BY 1, 2"""),
 
     // q5: multi-channel report — each channel is a branch of a UNION
     // ALL over the same fact (sales vs returns), rolled up with
@@ -149,38 +142,20 @@ object TpcdsQueries {
 
     // q14: GROUPING SETS — (type, brand), (type), () in one pass, with
     // an explicit grouping-id column distinguishing the levels.
-    Q("agg_tpcds_q14",
-      (s, d) => li(s, d)
-        .join(prt(s, d), col("l_partkey") === col("p_partkey"))
-        .groupingSets(
-          Seq(Seq(col("p_type"), col("p_brand")), Seq(col("p_type")), Seq()),
-          col("p_type"), col("p_brand"))
-        .agg(sum(col("l_quantity")).cast("long").as("sum_qty"),
-          (grouping(col("p_type")) * 2 + grouping(col("p_brand")))
-            .cast("long").as("gid")),
-      Some("""SELECT p_type, p_brand,
+    Q.sql("agg_tpcds_q14", """SELECT p_type, p_brand,
           CAST(sum(l_quantity) AS BIGINT) AS sum_qty,
           CAST(GROUPING(p_type) * 2 + GROUPING(p_brand) AS BIGINT) AS gid
         FROM lineitem JOIN part ON l_partkey = p_partkey
-        GROUP BY GROUPING SETS ((p_type, p_brand), (p_type), ())""")),
+        GROUP BY GROUPING SETS ((p_type, p_brand), (p_type), ())"""),
 
     // q38: customers present in ALL THREE channels (order priorities
     // stand in for store/catalog/web) — chained INTERSECT, then count.
-    Q("agg_tpcds_q38",
-      (s, d) => {
-        def chan(p: String) = ord(s, d)
-          .filter(col("o_orderpriority") === p)
-          .select(col("o_custkey")).distinct()
-        chan("1-URGENT").intersect(chan("2-HIGH"))
-          .intersect(chan("3-MEDIUM"))
-          .agg(count(lit(1)).cast("long").as("n"))
-      },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n FROM (
+    Q.sql("agg_tpcds_q38", """SELECT CAST(count(*) AS BIGINT) AS n FROM (
           SELECT DISTINCT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
           INTERSECT
           SELECT DISTINCT o_custkey FROM orders WHERE o_orderpriority = '2-HIGH'
           INTERSECT
-          SELECT DISTINCT o_custkey FROM orders WHERE o_orderpriority = '3-MEDIUM')""")),
+          SELECT DISTINCT o_custkey FROM orders WHERE o_orderpriority = '3-MEDIUM')"""),
 
     // q47: navigation over an aggregate — monthly order volume per
     // nation with the previous/next month alongside (lag/lead over the
@@ -297,36 +272,16 @@ object TpcdsQueries {
 
     // q73: frequency-band customers — order counts in a date range
     // HAVING count in [4, 6], joined back to the dimension for names.
-    Q("agg_tpcds_q73",
-      (s, d) => ord(s, d)
-        .filter(year(col("o_orderdate")).between(1995, 1997))
-        .groupBy(col("o_custkey"))
-        .agg(count(lit(1)).as("n"))
-        .filter(col("n").between(4, 6))
-        .join(cust(s, d), col("o_custkey") === col("c_custkey"))
-        .select(col("c_custkey"), col("c_name"), col("n")),
-      Some("""SELECT c_custkey, c_name, n FROM (
+    Q.sql("agg_tpcds_q73", """SELECT c_custkey, c_name, n FROM (
           SELECT o_custkey, count(*) AS n FROM orders
           WHERE year(o_orderdate) BETWEEN 1995 AND 1997
           GROUP BY 1 HAVING count(*) BETWEEN 4 AND 6)
-        JOIN customer ON o_custkey = c_custkey""")),
+        JOIN customer ON o_custkey = c_custkey"""),
 
     // q74: year-over-year — per-customer totals for two years,
     // self-joined, keeping customers who grew (integer counts: the
     // growth comparison is exact).
-    Q("agg_tpcds_q74",
-      (s, d) => {
-        def yr(y: Int) = ord(s, d)
-          .filter(year(col("o_orderdate")) === y)
-          .groupBy(col("o_custkey"))
-          .agg(count(lit(1)).as(s"n_$y"))
-        yr(1996).join(yr(1997), Seq("o_custkey"))
-          .filter(col("n_1997") > col("n_1996"))
-          .join(cust(s, d), col("o_custkey") === col("c_custkey"))
-          .select(col("c_custkey"), col("c_name"),
-            col("n_1996"), col("n_1997"))
-      },
-      Some("""WITH y96 AS (
+    Q.sql("agg_tpcds_q74", """WITH y96 AS (
           SELECT o_custkey, count(*) AS n_1996 FROM orders
           WHERE year(o_orderdate) = 1996 GROUP BY 1
         ), y97 AS (
@@ -335,7 +290,7 @@ object TpcdsQueries {
         SELECT c_custkey, c_name, n_1996, n_1997
         FROM y96 JOIN y97 USING (o_custkey)
         JOIN customer ON o_custkey = c_custkey
-        WHERE n_1997 > n_1996""")),
+        WHERE n_1997 > n_1996"""),
 
     // q9: the five-scalar-subqueries-over-buckets shape — per
     // quantity-band averages, collapsed to conditional aggregation in
@@ -465,20 +420,7 @@ object TpcdsQueries {
     // correlation key (25 nation rows → broadcast). The 1.2x-avg
     // comparison is algebraized to integers (ctr·cnt·5 > tot·6) so the
     // predicate is EXACT cross-engine — no double-boundary ties.
-    Q("agg_tpcds_q1",
-      (s, d) => {
-        val ctr = li(s, d).filter(col("l_returnflag") === "R")
-          .join(ord(s, d), col("l_orderkey") === col("o_orderkey"))
-          .join(cust(s, d), col("o_custkey") === col("c_custkey"))
-          .groupBy(col("c_custkey"), col("c_nationkey"))
-          .agg(count(lit(1)).as("ctr_total"))
-        val na = ctr.groupBy(col("c_nationkey"))
-          .agg(sum(col("ctr_total")).as("tot"), count(lit(1)).as("cnt"))
-        ctr.join(broadcast(na), Seq("c_nationkey"))
-          .filter(col("ctr_total") * col("cnt") * 5 > col("tot") * 6)
-          .select(col("c_custkey"), col("c_nationkey"), col("ctr_total"))
-      },
-      Some("""WITH ctr AS (
+    Q.sql("agg_tpcds_q1", """WITH ctr AS (
           SELECT c_custkey, c_nationkey, count(*) AS ctr_total
           FROM lineitem JOIN orders ON l_orderkey = o_orderkey
           JOIN customer ON o_custkey = c_custkey
@@ -486,9 +428,9 @@ object TpcdsQueries {
         ), na AS (
           SELECT c_nationkey, sum(ctr_total) AS tot, count(*) AS cnt
           FROM ctr GROUP BY 1)
-        SELECT c_custkey, c_nationkey, CAST(ctr_total AS BIGINT) AS ctr_total
+        SELECT /*+ BROADCAST(na) */ c_custkey, c_nationkey, CAST(ctr_total AS BIGINT) AS ctr_total
         FROM ctr JOIN na USING (c_nationkey)
-        WHERE ctr_total * cnt * 5 > tot * 6""")),
+        WHERE ctr_total * cnt * 5 > tot * 6"""),
 
     // q2: WITH-chain reuse — ONE monthly-sales CTE consumed twice
     // (this month vs the same nation a year earlier) through a
@@ -927,25 +869,7 @@ object TpcdsQueries {
     // round() before the BIGINT cast because Spark truncates
     // double→long where DuckDB rounds), and the 10% test cross-
     // multiplies (|vol·n − tot|·10 > tot) so no division ever runs.
-    Q("agg_tpcds_q89",
-      (s, d) => {
-        val monthly = li(s, d)
-          .join(prt(s, d), col("l_partkey") === col("p_partkey"))
-          .join(ord(s, d), col("l_orderkey") === col("o_orderkey"))
-          .filter(year(col("o_orderdate")) === 1996)
-          .groupBy(col("p_brand"), month(col("o_orderdate")).as("moy"))
-          .agg(sum(round(col("l_quantity") * col("p_retailprice") * 100)
-            .cast("long")).as("vol_c"))
-        val w = Window.partitionBy(col("p_brand"))
-        monthly
-          .withColumn("tot_c", sum(col("vol_c")).over(w))
-          .withColumn("nm", count(lit(1)).over(w))
-          .filter(abs(col("vol_c") * col("nm") - col("tot_c")) * 10 >
-            col("tot_c"))
-          .select(col("p_brand"), col("moy"), col("vol_c"), col("tot_c"),
-            col("nm"))
-      },
-      Some("""WITH monthly AS (
+    Q.sql("agg_tpcds_q89", """WITH monthly AS (
           SELECT p_brand, CAST(month(o_orderdate) AS INT) AS moy,
             sum(CAST(round(l_quantity * p_retailprice * 100) AS BIGINT)) AS vol_c
           FROM lineitem
@@ -960,7 +884,7 @@ object TpcdsQueries {
             sum(vol_c) OVER (PARTITION BY p_brand) AS tot_c,
             count(*) OVER (PARTITION BY p_brand) AS nm
           FROM monthly)
-        WHERE abs(vol_c * nm - tot_c) * 10 > tot_c""")),
+        WHERE abs(vol_c * nm - tot_c) * 10 > tot_c"""),
 
     // q98: RATIO-TO-REPORT — each part type's share of its
     // brand's list-price revenue: a partition-sum window over an
@@ -999,23 +923,7 @@ object TpcdsQueries {
     // aggregation scan (never two passes over the fact), and the band
     // test cross-multiplies integer quantities (the q31 idiom) so no
     // division — and no float boundary — ever runs.
-    Q("agg_tpcds_q21",
-      (s, d) => {
-        val pivot = lit("1996-07-01").cast("timestamp")
-        li(s, d)
-          .join(Tables.supplier(s, d), col("l_suppkey") === col("s_suppkey"))
-          .join(prt(s, d), col("l_partkey") === col("p_partkey"))
-          .groupBy(col("s_name"), col("p_brand"))
-          .agg(
-            sum(when(col("l_shipdate") < pivot, col("l_quantity"))
-              .otherwise(lit(0))).cast("long").as("qty_before"),
-            sum(when(col("l_shipdate") >= pivot, col("l_quantity"))
-              .otherwise(lit(0))).cast("long").as("qty_after"))
-          .filter(col("qty_before") > 0 &&
-            col("qty_after") * 2 <= col("qty_before") * 3 &&
-            col("qty_before") * 2 <= col("qty_after") * 3)
-      },
-      Some("""SELECT s_name, p_brand,
+    Q.sql("agg_tpcds_q21", """SELECT s_name, p_brand,
           CAST(sum(CASE WHEN l_shipdate < TIMESTAMP '1996-07-01'
                         THEN l_quantity ELSE 0 END) AS BIGINT) AS qty_before,
           CAST(sum(CASE WHEN l_shipdate >= TIMESTAMP '1996-07-01'
@@ -1026,7 +934,7 @@ object TpcdsQueries {
         GROUP BY 1, 2
         HAVING qty_before > 0
           AND qty_after * 2 <= qty_before * 3
-          AND qty_before * 2 <= qty_after * 3""")),
+          AND qty_before * 2 <= qty_after * 3"""),
 
     // q35: PRESENCE/ABSENCE SEGMENTATION — customers with EXISTS
     // urgent orders AND (EXISTS high OR EXISTS medium) AND NOT EXISTS
@@ -1182,23 +1090,7 @@ object TpcdsQueries {
     // per-customer-year cent sums (~1e8 here), products ~1e16 ≪ 2⁶³;
     // at fills where a cell nears 3e9 cents move the comparison into
     // DECIMAL(38,0).
-    Q("agg_tpcds_q4",
-      (s, d) => {
-        val cents = round(col("o_totalprice") * 100).cast("long")
-        val fast = col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-        val y = year(col("o_orderdate"))
-        ord(s, d)
-          .filter(y.isin(1995, 1996))
-          .groupBy(col("o_custkey"))
-          .agg(
-            sum(when(y === 1995 && fast, cents).otherwise(0L)).as("fast_y1"),
-            sum(when(y === 1996 && fast, cents).otherwise(0L)).as("fast_y2"),
-            sum(when(y === 1995 && !fast, cents).otherwise(0L)).as("slow_y1"),
-            sum(when(y === 1996 && !fast, cents).otherwise(0L)).as("slow_y2"))
-          .filter(col("fast_y1") > 0 && col("slow_y1") > 0 &&
-            col("fast_y2") * col("slow_y1") > col("slow_y2") * col("fast_y1"))
-      },
-      Some("""SELECT o_custkey,
+    Q.sql("agg_tpcds_q4", """SELECT o_custkey,
           CAST(sum(CASE WHEN year(o_orderdate) = 1995
               AND o_orderpriority IN ('1-URGENT', '2-HIGH')
             THEN CAST(round(o_totalprice * 100) AS BIGINT) ELSE 0 END)
@@ -1219,7 +1111,7 @@ object TpcdsQueries {
         WHERE year(o_orderdate) IN (1995, 1996)
         GROUP BY 1
         HAVING fast_y1 > 0 AND slow_y1 > 0
-          AND fast_y2 * slow_y1 > slow_y2 * fast_y1""")),
+          AND fast_y2 * slow_y1 > slow_y2 * fast_y1"""),
 
     // q95: SEMI-JOIN ON A SELF-DERIVED KEY SET + NOT EXISTS — orders
     // in 1996 whose line items span at least TWO distinct suppliers
@@ -1801,42 +1693,18 @@ object TpcdsQueries {
     // the other two (q38 covers the INTERSECT triple; EXCEPT is the
     // remaining multi-channel set operator, planned as chained
     // anti key-set joins over distinct key sets).
-    Q("agg_tpcds_q87",
-      (s, d) => {
-        def chan(p: String) = ord(s, d)
-          .filter(col("o_orderpriority") === p)
-          .select(col("o_custkey")).distinct()
-        chan("1-URGENT").except(chan("2-HIGH"))
-          .except(chan("3-MEDIUM"))
-          .agg(count(lit(1)).cast("long").as("n"))
-      },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n FROM (
+    Q.sql("agg_tpcds_q87", """SELECT CAST(count(*) AS BIGINT) AS n FROM (
           SELECT DISTINCT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
           EXCEPT
           SELECT DISTINCT o_custkey FROM orders WHERE o_orderpriority = '2-HIGH'
           EXCEPT
-          SELECT DISTINCT o_custkey FROM orders WHERE o_orderpriority = '3-MEDIUM')""")),
+          SELECT DISTINCT o_custkey FROM orders WHERE o_orderpriority = '3-MEDIUM')"""),
 
     // q97: the channel OVERLAP MATRIX — two distinct customer key sets
     // FULL OUTER joined, with both/left-only/right-only counted from
     // the join's null pattern in one aggregation (the generic
     // set-reconciliation report shape).
-    Q("agg_tpcds_q97",
-      (s, d) => {
-        val ch1 = ord(s, d).filter(year(col("o_orderdate")) === 1995)
-          .select(col("o_custkey").as("k1")).distinct()
-        val ch2 = ord(s, d).filter(year(col("o_orderdate")) === 1996)
-          .select(col("o_custkey").as("k2")).distinct()
-        ch1.join(ch2, col("k1") === col("k2"), "full_outer")
-          .agg(
-            sum(when(col("k1").isNotNull && col("k2").isNotNull, 1)
-              .otherwise(0)).as("both_ch"),
-            sum(when(col("k1").isNotNull && col("k2").isNull, 1)
-              .otherwise(0)).as("only_1"),
-            sum(when(col("k1").isNull && col("k2").isNotNull, 1)
-              .otherwise(0)).as("only_2"))
-      },
-      Some("""WITH ch1 AS (SELECT DISTINCT o_custkey AS k FROM orders
+    Q.sql("agg_tpcds_q97", """WITH ch1 AS (SELECT DISTINCT o_custkey AS k FROM orders
             WHERE year(o_orderdate) = 1995),
           ch2 AS (SELECT DISTINCT o_custkey AS k FROM orders
             WHERE year(o_orderdate) = 1996)
@@ -1844,7 +1712,7 @@ object TpcdsQueries {
           CAST(sum(CASE WHEN ch1.k IS NOT NULL AND ch2.k IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS both_ch,
           CAST(sum(CASE WHEN ch1.k IS NOT NULL AND ch2.k IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS only_1,
           CAST(sum(CASE WHEN ch1.k IS NULL AND ch2.k IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS only_2
-        FROM ch1 FULL OUTER JOIN ch2 ON ch1.k = ch2.k""")),
+        FROM ch1 FULL OUTER JOIN ch2 ON ch1.k = ch2.k"""),
 
     // q45: DISJUNCTIVE admission across a dimension predicate and a
     // fact-derived key set — customers in a nation short-list OR
@@ -1892,21 +1760,7 @@ object TpcdsQueries {
     // emits 24 such columns; the shape is the 12-way CASE pivot, which
     // the generic `pivot_wide` operator covers dynamically but no
     // TPC-DS analog exercised as a static plan). Integer cents.
-    Q("agg_tpcds_q66",
-      (s, d) => {
-        val cents = round(col("o_totalprice") * 100).cast("long")
-        val monthCols = (1 to 12).map(m =>
-          sum(when(month(col("o_orderdate")) === m, cents).otherwise(0L))
-            .as(s"m${m}_c"))
-        ord(s, d)
-          .filter(year(col("o_orderdate")) === 1996)
-          .join(cust(s, d), col("o_custkey") === col("c_custkey"))
-          .join(broadcast(nat(s, d)), col("c_nationkey") === col("n_nationkey"))
-          .groupBy(col("n_name"))
-          .agg(monthCols.head,
-            (monthCols.tail :+ sum(cents).as("total_c")): _*)
-      },
-      Some("SELECT n_name,\n" +
+    Q.sql("agg_tpcds_q66", "SELECT /*+ BROADCAST(nation) */ n_name,\n" +
         (1 to 12).map(m =>
           s"  CAST(sum(CASE WHEN month(o_orderdate) = $m THEN " +
           s"CAST(round(o_totalprice * 100) AS BIGINT) ELSE 0 END) AS BIGINT) AS m${m}_c,")
@@ -1915,7 +1769,7 @@ object TpcdsQueries {
         FROM orders JOIN customer ON o_custkey = c_custkey
         JOIN nation ON c_nationkey = n_nationkey
         WHERE year(o_orderdate) = 1996
-        GROUP BY 1""")),
+        GROUP BY 1"""),
 
     // q11: the year-over-year TWO-CHANNEL self-compare (query11.sql —
     // store vs web customer totals, web growth ratio beating store
@@ -1929,29 +1783,7 @@ object TpcdsQueries {
     // customer grain (pre-pivoted, 2 cells/customer), the join carries
     // one row per customer per side; the customer dim joins back
     // AFTER the filter for the attribute output, never before.
-    Q("agg_tpcds_q11",
-      (s, d) => {
-        val y = year(col("o_orderdate"))
-        val oCents = round(col("o_totalprice") * 100).cast("long")
-        val lCents = round(rev * 100).cast("long")
-        val store = ord(s, d).filter(y.isin(1995, 1996))
-          .groupBy(col("o_custkey"))
-          .agg(sum(when(y === 1995, oCents).otherwise(0L)).as("s_y1"),
-            sum(when(y === 1996, oCents).otherwise(0L)).as("s_y2"))
-        val web = li(s, d)
-          .join(ord(s, d).filter(y.isin(1995, 1996)),
-            col("l_orderkey") === col("o_orderkey"))
-          .groupBy(col("o_custkey"))
-          .agg(sum(when(y === 1995, lCents).otherwise(0L)).as("w_y1"),
-            sum(when(y === 1996, lCents).otherwise(0L)).as("w_y2"))
-        store.join(web, Seq("o_custkey"))
-          .filter(col("s_y1") > 0 && col("w_y1") > 0 &&
-            col("w_y2") * col("s_y1") > col("s_y2") * col("w_y1"))
-          .join(cust(s, d), col("o_custkey") === col("c_custkey"))
-          .select(col("o_custkey"), col("c_mktsegment"),
-            col("s_y1"), col("s_y2"), col("w_y1"), col("w_y2"))
-      },
-      Some("""WITH store AS (
+    Q.sql("agg_tpcds_q11", """WITH store AS (
           SELECT o_custkey,
             sum(CASE WHEN year(o_orderdate) = 1995
               THEN CAST(round(o_totalprice * 100) AS BIGINT) ELSE 0 END) AS s_y1,
@@ -1973,7 +1805,7 @@ object TpcdsQueries {
           CAST(w_y1 AS BIGINT) AS w_y1, CAST(w_y2 AS BIGINT) AS w_y2
         FROM store JOIN web USING (o_custkey)
         JOIN customer ON o_custkey = c_custkey
-        WHERE s_y1 > 0 AND w_y1 > 0 AND w_y2 * s_y1 > s_y2 * w_y1""")),
+        WHERE s_y1 > 0 AND w_y1 > 0 AND w_y2 * s_y1 > s_y2 * w_y1"""),
 
     // q30: correlated scalar subquery vs the PER-GROUP AVERAGE
     // (query30.sql — customers whose web-return total exceeds 1.2x the
@@ -1986,25 +1818,7 @@ object TpcdsQueries {
     // threshold is the integer cross-multiply total*cnt*5 > tot*6;
     // customer attributes join back AFTER the filter (query30's
     // c_first_name... emission).
-    Q("agg_tpcds_q30",
-      (s, d) => {
-        val ret = li(s, d).filter(col("l_returnflag") === "R")
-          .join(ord(s, d), col("l_orderkey") === col("o_orderkey"))
-          .join(cust(s, d), col("o_custkey") === col("c_custkey"))
-          .groupBy(col("c_custkey"), col("c_nationkey"))
-          .agg(sum(round(rev * 100).cast("long")).as("ret_c"))
-        val byNation = Window.partitionBy(col("c_nationkey"))
-        ret
-          .withColumn("tot", sum(col("ret_c")).over(byNation))
-          .withColumn("cnt", count(lit(1)).over(byNation))
-          .filter(col("ret_c") * col("cnt") * 5 > col("tot") * 6)
-          .join(cust(s, d).select(col("c_custkey"), col("c_name"),
-            col("c_acctbal")), Seq("c_custkey"))
-          .select(col("c_custkey"), col("c_name"),
-            round(col("c_acctbal"), 2).as("c_acctbal"),
-            col("c_nationkey"), col("ret_c"))
-      },
-      Some("""WITH ret AS (
+    Q.sql("agg_tpcds_q30", """WITH ret AS (
           SELECT c_custkey, c_nationkey,
             sum(CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT))
               AS ret_c
@@ -2018,7 +1832,7 @@ object TpcdsQueries {
         SELECT w.c_custkey, c_name, round(c_acctbal, 2) AS c_acctbal,
           w.c_nationkey, CAST(ret_c AS BIGINT) AS ret_c
         FROM w JOIN customer ON w.c_custkey = customer.c_custkey
-        WHERE ret_c * cnt * 5 > tot * 6""")),
+        WHERE ret_c * cnt * 5 > tot * 6"""),
 
     // q93: RETURNS-ADJUSTED net quantity (query93.sql — store_sales
     // LEFT JOIN store_returns on (item, ticket), quantity replaced by
@@ -2131,22 +1945,7 @@ object TpcdsQueries {
     // longs (9·b ≤ 10·a ≤ 11·b both ways) — no float boundary can
     // diverge cross-engine. Scale: each channel is one pre-aggregated
     // pass at part grain; the join carries one row per part per side.
-    Q("agg_tpcds_q58",
-      (s, d) => {
-        val cents = round(rev * 100).cast("long")
-        def yr(y: Int, out: String) = li(s, d)
-          .filter(year(col("l_shipdate")) === y)
-          .groupBy(col("l_partkey"))
-          .agg(sum(cents).as(out))
-        yr(1995, "rev95_c").join(yr(1996, "rev96_c"), Seq("l_partkey"))
-          .filter(
-            col("rev95_c") * 10 >= col("rev96_c") * 9 &&
-            col("rev95_c") * 10 <= col("rev96_c") * 11 &&
-            col("rev96_c") * 10 >= col("rev95_c") * 9 &&
-            col("rev96_c") * 10 <= col("rev95_c") * 11)
-          .select(col("l_partkey"), col("rev95_c"), col("rev96_c"))
-      },
-      Some("""WITH y95 AS (
+    Q.sql("agg_tpcds_q58", """WITH y95 AS (
           SELECT l_partkey,
             sum(CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT))
               AS rev95_c
@@ -2160,7 +1959,7 @@ object TpcdsQueries {
           CAST(rev96_c AS BIGINT) AS rev96_c
         FROM y95 JOIN y96 USING (l_partkey)
         WHERE rev95_c * 10 >= rev96_c * 9 AND rev95_c * 10 <= rev96_c * 11
-          AND rev96_c * 10 >= rev95_c * 9 AND rev96_c * 10 <= rev95_c * 11""")),
+          AND rev96_c * 10 >= rev95_c * 9 AND rev96_c * 10 <= rev95_c * 11"""),
 
     // q92: EXCESS DISCOUNT (query92.sql — web sales whose discount
     // exceeds 1.3x the item's average discount over a 90-day window,
@@ -2173,21 +1972,7 @@ object TpcdsQueries {
     // in cents. Scale: the per-item average frame is part-grain
     // (broadcast-sized vs the fact); one fact scan feeds both sides
     // under exchange reuse.
-    Q("agg_tpcds_q92",
-      (s, d) => {
-        val inWin = col("l_shipdate") >= lit("1995-01-01") &&
-          col("l_shipdate") < lit("1995-07-01")
-        val bp = round(col("l_discount") * 100).cast("long")
-        val win = li(s, d).filter(inWin)
-        val avgF = win.groupBy(col("l_partkey").as("a_partkey"))
-          .agg(sum(bp).as("sum_bp"), count(lit(1)).as("cnt"))
-        win.join(avgF, col("l_partkey") === col("a_partkey"))
-          .filter(bp * col("cnt") * 10 > col("sum_bp") * 13)
-          .agg(sum(round(col("l_extendedprice") * col("l_discount") * 100)
-            .cast("long")).as("excess_c"),
-            count(lit(1)).as("n_lines"))
-      },
-      Some("""WITH win AS (
+    Q.sql("agg_tpcds_q92", """WITH win AS (
           SELECT * FROM lineitem
           WHERE l_shipdate >= TIMESTAMP '1995-01-01'
             AND l_shipdate < TIMESTAMP '1995-07-01'
@@ -2201,7 +1986,7 @@ object TpcdsQueries {
           count(*) AS n_lines
         FROM win JOIN avgf ON l_partkey = a_partkey
         WHERE CAST(round(l_discount * 100) AS BIGINT) * cnt * 10
-          > sum_bp * 13""")),
+          > sum_bp * 13"""),
 
     // q13: the DISJUNCTIVE MULTI-BAND scan (query13.sql — one
     // store_sales pass filtered by an OR of three (demographic x
@@ -2213,23 +1998,7 @@ object TpcdsQueries {
     // quantity sums / counts), so no avg-rounding can diverge
     // cross-engine. Scale: predicate evaluates rowwise post-join;
     // nothing shuffles but the final single-row fold.
-    Q("agg_tpcds_q13",
-      (s, d) => {
-        def band(seg: String, pLo: Int, pHi: Int, qLo: Int, qHi: Int) =
-          col("c_mktsegment") === seg &&
-            col("l_extendedprice") >= pLo && col("l_extendedprice") < pHi &&
-            col("l_quantity") >= qLo && col("l_quantity") <= qHi
-        li(s, d)
-          .join(ord(s, d), col("l_orderkey") === col("o_orderkey"))
-          .join(cust(s, d), col("o_custkey") === col("c_custkey"))
-          .filter(band("BUILDING", 1000, 20000, 1, 15) ||
-            band("AUTOMOBILE", 5000, 40000, 10, 35) ||
-            band("MACHINERY", 20000, 60000, 25, 50))
-          .agg(sum(round(rev * 100).cast("long")).as("rev_c"),
-            sum(col("l_quantity")).cast("long").as("sum_qty"),
-            count(lit(1)).as("n_lines"))
-      },
-      Some("""SELECT
+    Q.sql("agg_tpcds_q13", """SELECT
           CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 100)
             AS BIGINT)) AS BIGINT) AS rev_c,
           CAST(sum(l_quantity) AS BIGINT) AS sum_qty,
@@ -2242,7 +2011,7 @@ object TpcdsQueries {
           OR (c_mktsegment = 'AUTOMOBILE' AND l_extendedprice >= 5000
             AND l_extendedprice < 40000 AND l_quantity BETWEEN 10 AND 35)
           OR (c_mktsegment = 'MACHINERY' AND l_extendedprice >= 20000
-            AND l_extendedprice < 60000 AND l_quantity BETWEEN 25 AND 50)""")),
+            AND l_extendedprice < 60000 AND l_quantity BETWEEN 25 AND 50)"""),
 
     // q61: the PROMOTIONAL-REVENUE RATIO (query61.sql — promotional
     // sales over total sales for one store/month, two correlated
@@ -2295,41 +2064,23 @@ object TpcdsQueries {
     // data's retail prices are uniform within ~±5% of the mean, so
     // 1.2x selects nothing — same shape, tightened constant), as the
     // exact integer cross-multiply price_c*cnt*100 > sum_c*103.
-    Q("agg_tpcds_q6",
-      (s, d) => {
-        val priceC = round(col("p_retailprice") * 100).cast("long")
-        val typAvg = prt(s, d).groupBy(col("p_type").as("t_type"))
-          .agg(sum(priceC).as("sum_c"), count(lit(1)).as("cnt"))
-        val richParts = prt(s, d)
-          .join(broadcast(typAvg), col("p_type") === col("t_type"))
-          .filter(priceC * col("cnt") * 100 > col("sum_c") * 103)
-          .select(col("p_partkey"))
-        li(s, d)
-          .join(broadcast(richParts), col("l_partkey") === col("p_partkey"))
-          .join(ord(s, d), col("l_orderkey") === col("o_orderkey"))
-          .join(cust(s, d), col("o_custkey") === col("c_custkey"))
-          .join(broadcast(nat(s, d)), col("c_nationkey") === col("n_nationkey"))
-          .groupBy(col("n_name"))
-          .agg(count(lit(1)).as("cnt"))
-          .filter(col("cnt") >= 10)
-      },
-      Some("""WITH typavg AS (
+    Q.sql("agg_tpcds_q6", """WITH typavg AS (
           SELECT p_type AS t_type,
             sum(CAST(round(p_retailprice * 100) AS BIGINT)) AS sum_c,
             count(*) AS cnt
           FROM part GROUP BY 1
         ), rich AS (
-          SELECT p_partkey FROM part JOIN typavg ON p_type = t_type
+          SELECT /*+ BROADCAST(typavg) */ p_partkey FROM part JOIN typavg ON p_type = t_type
           WHERE CAST(round(p_retailprice * 100) AS BIGINT) * cnt * 100
             > sum_c * 103)
-        SELECT n_name, count(*) AS cnt
+        SELECT /*+ BROADCAST(rich, nation) */ n_name, count(*) AS cnt
         FROM lineitem
         JOIN rich ON l_partkey = p_partkey
         JOIN orders ON l_orderkey = o_orderkey
         JOIN customer ON o_custkey = c_custkey
         JOIN nation ON c_nationkey = n_nationkey
         GROUP BY 1
-        HAVING count(*) >= 10""")),
+        HAVING count(*) >= 10"""),
 
     // ================= round 19 additions (VERDICT r18 #4) =========
 
@@ -2409,20 +2160,7 @@ object TpcdsQueries {
     // CONJUNCTIVE date filter to the orders scan below the joins
     // (never a union of three filtered passes — q13's single-scan
     // discipline, now across tables).
-    Q("agg_tpcds_q15",
-      (s, d) => ord(s, d)
-        .filter(year(col("o_orderdate")) === 1996 &&
-          quarter(col("o_orderdate")) === 2)
-        .join(cust(s, d), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(nat(s, d)), col("c_nationkey") === col("n_nationkey"))
-        .filter(col("c_mktsegment").isin("BUILDING", "AUTOMOBILE") ||
-          col("n_name").isin("NATION_3", "NATION_7", "NATION_11") ||
-          col("o_totalprice") > 300000)
-        .groupBy(col("n_name"))
-        .agg(round(sum(col("o_totalprice").cast("decimal(38,2)"))
-            .cast("double"), 2).as("total_sales"),
-          count(lit(1)).as("n_orders")),
-      Some("""SELECT n_name,
+    Q.sql("agg_tpcds_q15", """SELECT /*+ BROADCAST(nation) */ n_name,
           round(CAST(sum(CAST(o_totalprice AS DECIMAL(38,2))) AS DOUBLE), 2)
             AS total_sales,
           count(*) AS n_orders
@@ -2433,7 +2171,7 @@ object TpcdsQueries {
           AND (c_mktsegment IN ('BUILDING', 'AUTOMOBILE')
             OR n_name IN ('NATION_3', 'NATION_7', 'NATION_11')
             OR o_totalprice > 300000)
-        GROUP BY 1""")),
+        GROUP BY 1"""),
 
     // q16 (query16.sql): order-count report with TWO correlated
     // existence predicates on the SAME fact — EXISTS (another line of
@@ -2728,20 +2466,7 @@ object TpcdsQueries {
     // display attributes. Differs from q73 (plain HAVING range) in the
     // dual-disjunction filter shape: (month band OR month band) AND
     // priority set must collapse into ONE scan predicate.
-    Q("agg_tpcds_q34",
-      (s, d) => li(s, d)
-        .join(ord(s, d)
-          .filter((month(col("o_orderdate")).isin(1, 2) ||
-            month(col("o_orderdate")).isin(11, 12)) &&
-            col("o_orderpriority").isin("1-URGENT", "2-HIGH")),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_orderkey"), col("o_custkey"))
-        .agg(count(lit(1)).as("cnt"))
-        .filter(col("cnt").between(3, 5))
-        .join(cust(s, d), col("o_custkey") === col("c_custkey"))
-        .select(col("c_name"), col("c_mktsegment"), col("o_orderkey"),
-          col("cnt")),
-      Some("""WITH dn AS (
+    Q.sql("agg_tpcds_q34", """WITH dn AS (
           SELECT o_orderkey, o_custkey, count(*) AS cnt
           FROM lineitem JOIN orders ON l_orderkey = o_orderkey
           WHERE (month(o_orderdate) IN (1, 2)
@@ -2750,7 +2475,7 @@ object TpcdsQueries {
           GROUP BY 1, 2
           HAVING count(*) BETWEEN 3 AND 5)
         SELECT c_name, c_mktsegment, o_orderkey, cnt
-        FROM dn JOIN customer ON o_custkey = c_custkey""")),
+        FROM dn JOIN customer ON o_custkey = c_custkey"""),
 
     // q40 (query40.sql): BEFORE/AFTER pivot split with RETURNS
     // NETTING — per brand, net quantity (returned lines subtract)
@@ -2758,21 +2483,7 @@ object TpcdsQueries {
     // scan: the q21 pivot-split composed with q75's returns netting,
     // never a sales-pass + returns-pass union. Net quantities are
     // exact integers.
-    Q("agg_tpcds_q40",
-      (s, d) => {
-        val pivot = lit("1996-07-01").cast("timestamp")
-        val net = when(col("l_returnflag") === "R", -col("l_quantity"))
-          .otherwise(col("l_quantity"))
-        li(s, d)
-          .join(prt(s, d), col("l_partkey") === col("p_partkey"))
-          .groupBy(col("p_brand"))
-          .agg(
-            sum(when(col("l_shipdate") < pivot, net).otherwise(lit(0)))
-              .cast("long").as("net_before"),
-            sum(when(col("l_shipdate") >= pivot, net).otherwise(lit(0)))
-              .cast("long").as("net_after"))
-      },
-      Some("""SELECT p_brand,
+    Q.sql("agg_tpcds_q40", """SELECT p_brand,
           CAST(sum(CASE WHEN l_shipdate < TIMESTAMP '1996-07-01'
             THEN CASE WHEN l_returnflag = 'R' THEN -l_quantity
                  ELSE l_quantity END ELSE 0 END) AS BIGINT) AS net_before,
@@ -2780,7 +2491,7 @@ object TpcdsQueries {
             THEN CASE WHEN l_returnflag = 'R' THEN -l_quantity
                  ELSE l_quantity END ELSE 0 END) AS BIGINT) AS net_after
         FROM lineitem JOIN part ON l_partkey = p_partkey
-        GROUP BY 1""")),
+        GROUP BY 1"""),
 
     // q43 (query43.sql): the DAY-OF-WEEK pivot — seven conditional
     // sums per nation in one scan. Calendar mapping is the
@@ -2836,21 +2547,7 @@ object TpcdsQueries {
     // (bought_city <> current ca_city in the reference). The nation
     // dim binds twice through different fact FKs; the inequality can
     // only evaluate after the join-back.
-    Q("agg_tpcds_q46",
-      (s, d) => li(s, d)
-        .join(ord(s, d).filter(col("o_orderpriority") === "1-URGENT"),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(sup(s, d), col("l_suppkey") === col("s_suppkey"))
-        .groupBy(col("l_orderkey"), col("o_custkey"),
-          col("s_nationkey").as("bought_nation"))
-        .agg(round(sum(rev.cast("decimal(38,4)")).cast("double"), 4)
-          .as("amt"))
-        .join(cust(s, d), col("o_custkey") === col("c_custkey"))
-        .filter(col("bought_nation") =!= col("c_nationkey"))
-        .select(col("c_name"), col("bought_nation"),
-          col("c_nationkey").as("home_nation"), col("l_orderkey"),
-          col("amt")),
-      Some("""WITH dn AS (
+    Q.sql("agg_tpcds_q46", """WITH dn AS (
           SELECT l_orderkey, o_custkey, s_nationkey AS bought_nation,
             round(CAST(sum(CAST(l_extendedprice * (1 - l_discount)
               AS DECIMAL(38,4))) AS DOUBLE), 4) AS amt
@@ -2862,7 +2559,7 @@ object TpcdsQueries {
         SELECT c_name, bought_nation,
           CAST(c_nationkey AS INTEGER) AS home_nation, l_orderkey, amt
         FROM dn JOIN customer ON o_custkey = c_custkey
-        WHERE bought_nation <> c_nationkey""")),
+        WHERE bought_nation <> c_nationkey"""),
 
     // q69 (query69.sql): THREE existence predicates on the same fact
     // (EXISTS store ∧ NOT EXISTS web ∧ NOT EXISTS catalog) —
@@ -2870,28 +2567,7 @@ object TpcdsQueries {
     // channel flags per customer at once, where q35's shape (the r11
     // analog) spends a semi/anti join per predicate. Demographic
     // group counts over the surviving customers.
-    Q("agg_tpcds_q69",
-      (s, d) => {
-        val flags = ord(s, d)
-          .filter(year(col("o_orderdate")) === 1996 &&
-            month(col("o_orderdate")).between(1, 3))
-          .groupBy(col("o_custkey"))
-          .agg(
-            max(when(col("o_orderpriority") === "1-URGENT", 1)
-              .otherwise(0)).as("has_s"),
-            max(when(col("o_orderpriority") === "2-HIGH", 1)
-              .otherwise(0)).as("has_w"),
-            max(when(col("o_orderpriority") === "3-MEDIUM", 1)
-              .otherwise(0)).as("has_c"))
-          .filter(col("has_s") === 1 && col("has_w") === 0 &&
-            col("has_c") === 0)
-        cust(s, d)
-          .join(flags, col("c_custkey") === col("o_custkey"))
-          .join(broadcast(nat(s, d)), col("c_nationkey") === col("n_nationkey"))
-          .groupBy(col("n_name"), col("c_mktsegment"))
-          .agg(count(lit(1)).as("cnt"))
-      },
-      Some("""WITH flags AS (
+    Q.sql("agg_tpcds_q69", """WITH flags AS (
           SELECT o_custkey,
             max(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END)
               AS has_s,
@@ -2906,11 +2582,11 @@ object TpcdsQueries {
           HAVING max(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END) = 1
             AND max(CASE WHEN o_orderpriority = '2-HIGH' THEN 1 ELSE 0 END) = 0
             AND max(CASE WHEN o_orderpriority = '3-MEDIUM' THEN 1 ELSE 0 END) = 0)
-        SELECT n_name, c_mktsegment, count(*) AS cnt
+        SELECT /*+ BROADCAST(nation) */ n_name, c_mktsegment, count(*) AS cnt
         FROM customer
         JOIN flags ON c_custkey = o_custkey
         JOIN nation ON c_nationkey = n_nationkey
-        GROUP BY 1, 2""")),
+        GROUP BY 1, 2"""),
 
     // q72 (query72.sql — the notorious MANY-JOIN fact chain): sales ⋈
     // orders (date role 1) ⋈ part ⋈ supplier ⋈ INVENTORY (a second

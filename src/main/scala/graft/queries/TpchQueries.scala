@@ -176,18 +176,7 @@ object TpchQueries {
     // Q9 (product type profit): profit per supplier nation and year
     // for a part-name family; supply cost proxied at 60% of the
     // part's retail price (no partsupp.ps_supplycost in the schema).
-    Q("agg_tpch_q9",
-      (s, d) => li(s, d)
-        .join(prt(s, d).filter(col("p_name").contains("bolt")),
-          col("l_partkey") === col("p_partkey"))
-        .join(sup(s, d), col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(nat(s, d)), col("s_nationkey") === col("n_nationkey"))
-        .join(ord(s, d), col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("n_name").as("nation"), year(col("o_orderdate")).as("o_year"))
-        .agg(round(sum(col("l_extendedprice") * disc -
-          lit(0.6) * col("p_retailprice") * col("l_quantity")), 4)
-          .as("sum_profit")),
-      Some("""SELECT n_name AS nation,
+    Q.sql("agg_tpch_q9", """SELECT /*+ BROADCAST(nation) */ n_name AS nation,
           CAST(year(o_orderdate) AS INT) AS o_year,
           round(sum(l_extendedprice * (1 - l_discount)
             - 0.6 * p_retailprice * l_quantity), 4) AS sum_profit
@@ -197,7 +186,7 @@ object TpchQueries {
         JOIN nation ON s_nationkey = n_nationkey
         JOIN orders ON l_orderkey = o_orderkey
         WHERE p_name LIKE '%bolt%'
-        GROUP BY 1, 2""")),
+        GROUP BY 1, 2"""),
 
     // Q11 (important stock): per-part value from one nation's
     // suppliers, kept where above a fraction of the total — the
@@ -233,21 +222,13 @@ object TpchQueries {
     // ON-clause filter, then a two-level aggregation (count per
     // customer → histogram of counts). Customers with zero matching
     // orders must appear in the c_count=0 bucket.
-    Q("agg_tpch_q13",
-      (s, d) => cust(s, d)
-        .join(ord(s, d).filter(col("o_orderpriority") =!= "1-URGENT"),
-          col("c_custkey") === col("o_custkey"), "left")
-        .groupBy(col("c_custkey"))
-        .agg(count(col("o_orderkey")).as("c_count"))
-        .groupBy(col("c_count"))
-        .agg(count(lit(1)).as("custdist")),
-      Some("""SELECT c_count, count(*) AS custdist FROM (
+    Q.sql("agg_tpch_q13", """SELECT c_count, count(*) AS custdist FROM (
           SELECT c_custkey, count(o_orderkey) AS c_count
           FROM customer
           LEFT JOIN orders ON c_custkey = o_custkey
             AND o_orderpriority <> '1-URGENT'
           GROUP BY c_custkey)
-        GROUP BY c_count""")),
+        GROUP BY c_count"""),
 
     // Q15 (top supplier): quarterly revenue per supplier, keep the
     // max — the revenue-view + scalar-MAX-subquery shape.
@@ -350,18 +331,7 @@ object TpchQueries {
 
     // Q19 (discounted revenue): three disjunctive brand/size/quantity
     // branches — the all-OR predicate a scan must still push down.
-    Q("agg_tpch_q19",
-      (s, d) => li(s, d)
-        .join(prt(s, d), col("l_partkey") === col("p_partkey"))
-        .filter(
-          (col("p_brand") === "Brand#12" && col("p_size").between(1, 5) &&
-            col("l_quantity").between(1, 11)) ||
-          (col("p_brand") === "Brand#23" && col("p_size").between(1, 10) &&
-            col("l_quantity").between(10, 20)) ||
-          (col("p_brand") === "Brand#4" && col("p_size").between(1, 15) &&
-            col("l_quantity").between(20, 30)))
-        .agg(round(sum(col("l_extendedprice") * disc), 4).as("revenue")),
-      Some("""SELECT round(sum(l_extendedprice * (1 - l_discount)), 4)
+    Q.sql("agg_tpch_q19", """SELECT round(sum(l_extendedprice * (1 - l_discount)), 4)
           AS revenue
         FROM lineitem JOIN part ON l_partkey = p_partkey
         WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5
@@ -369,7 +339,7 @@ object TpchQueries {
           OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 10
             AND l_quantity BETWEEN 10 AND 20)
           OR (p_brand = 'Brand#4' AND p_size BETWEEN 1 AND 15
-            AND l_quantity BETWEEN 20 AND 30)""")),
+            AND l_quantity BETWEEN 20 AND 30)"""),
 
     // Q20 (potential part promotion): nested IN chain → semi joins;
     // suppliers who moved serious volume of a part-name family in a

@@ -123,6 +123,29 @@ class ScaleLintSpec extends SparkSpec {
     assert(stale.isEmpty, s"stale allowlist entries: $stale")
   }
 
+  test("createOrReplaceTempView( appears under graft/queries only in Q.run") {
+    // a registry text names its base tables, and Q.run registers them
+    // and drops them again. Allowed: the runner, and views of a query's
+    // own intermediate frame, for which no base table can stand
+    val allow = Seq(
+      "graft/queries/Registry.scala" -> ".createOrReplaceTempView(n)",
+      "graft/queries/CurationQueries.scala" -> "\"tfr_src\"",
+      "graft/queries/PipelineQueries.scala" -> "\"graft_stmt_events\"",
+      "graft/queries/CoverageQueries.scala" -> "\"v_nation_raw\"")
+    val calls = mainSources.filter(_._1.toString.contains("graft/queries/")).flatMap {
+      case (p, lines) => lines.zipWithIndex.collect {
+        case (line, i) if line.contains("createOrReplaceTempView(") => (p.toString, line, s"$p:${i + 1}")
+      }
+    }
+    def allowed(p: String, line: String, e: (String, String)) = p.endsWith(e._1) && line.contains(e._2)
+    val outside = calls.collect { case (p, line, at) if !allow.exists(allowed(p, line, _)) => at }
+    assert(outside.isEmpty,
+      s"run registry SQL through Q.run or Q.sql; temp views:\n${outside.mkString("\n")}")
+    // the allowlist must not rot: every entry still registers a view
+    val stale = allow.filterNot(e => calls.exists { case (p, line, _) => allowed(p, line, e) })
+    assert(stale.isEmpty, s"stale allowlist entries: $stale")
+  }
+
   test("no flatMapGroupsWithState / mapGroupsWithState call under src/main") {
     // one per-key state API: transformWithState (streaming/StatefulV2)
     val calls = mainSources.flatMap { case (p, lines) =>
