@@ -627,6 +627,156 @@ class PipelineOpsSpec extends SparkSpec {
     }
   }
 
+  test("DEFINE predicate property: 150 random predicates match a reference evaluator") {
+    import graft.operators.MatchRecognizeSql
+    // PATTERN (A B B C) with A and B undefined (any row) and SKIP TO NEXT
+    // ROW: the attempt at start i maps A = row i, B = rows i+1 and i+2,
+    // and tests C's predicate at row i+3 — so a partition's match count
+    // is the number of starts i at which its predicate holds. Partition
+    // p runs predicate p (DEFINE C AS (C.user_id = p AND pred_p) OR …).
+    val vals: Vector[Option[Double]] = Vector(Some(5.0), Some(3.0), None,
+      Some(8.0), Some(8.0), Some(-2.0), Some(0.0), Some(7.0), Some(4.0),
+      Some(6.0), Some(2.5), Some(9.0))
+    val n = vals.size
+    val starts = 0 until n - 3
+    type V = Option[Double]
+    // a variable's rows at start i: A → [i], B → [i+1, i+2], and the row
+    // under test for C (DEFINE aggregates include it)
+    def rowsOf(v: Char): Int => Seq[Int] = v match {
+      case 'A' => i => Seq(i)
+      case 'B' => i => Seq(i + 1, i + 2)
+      case 'C' => i => Seq(i + 3)
+    }
+    val rnd = new scala.util.Random(20261020)
+    def pick[T](xs: T*): T = xs(rnd.nextInt(xs.size))
+    def at(j: Int): V = if (j >= 0 && j < n) vals(j) else None
+    // leaves: rendered text plus their value at start i (None = SQL NULL)
+    def leaf(): (String, Int => V) = rnd.nextInt(8) match {
+      case 0 => // V.col: the current row for C, LAST(V.col) otherwise
+        val v = pick('A', 'B', 'C')
+        (s"$v.value", i => vals(rowsOf(v)(i).last))
+      case 1 => // PREV/NEXT: physical rows around the row under test
+        val (f, sign) = pick(("PREV", -1), ("NEXT", 1))
+        val k = pick(1, 2, 3, 4)
+        val text = if (k == 1 && rnd.nextBoolean()) s"$f(${pick('A', 'B', 'C')}.value)"
+          else s"$f(${pick('A', 'B', 'C')}.value, $k)"
+        (text, i => at(i + 3 + sign * k))
+      case 2 => // FIRST/LAST(V.col, k) over V's mapped rows (C has none yet)
+        val f = pick("FIRST", "LAST")
+        val v = pick('A', 'B', 'C')
+        val k = pick(0, 0, 1, 2)
+        val text = if (k == 0 && rnd.nextBoolean()) s"$f($v.value)" else s"$f($v.value, $k)"
+        (text, { i =>
+          val rows = if (v == 'C') Seq.empty else rowsOf(v)(i)
+          val ordered = if (f == "FIRST") rows else rows.reverse
+          ordered.lift(k).flatMap(vals)
+        })
+      case 3 => // SUM/AVG/MIN/MAX(V.col): NULL-skipping, empty → NULL
+        val f = pick("SUM", "AVG", "MIN", "MAX")
+        val v = pick('A', 'B', 'C')
+        (s"$f($v.value)", { i =>
+          val xs = rowsOf(v)(i).flatMap(vals)
+          if (xs.isEmpty) None else Some(f match {
+            case "SUM" => xs.foldLeft(0.0)(_ + _)
+            case "AVG" => xs.foldLeft(0.0)(_ + _) / xs.size
+            case "MIN" => xs.min
+            case "MAX" => xs.max
+          })
+        })
+      case 4 => // COUNT(*), COUNT(V.*), COUNT(V.col)
+        pick(0, 1, 2) match {
+          case 0 => ("COUNT(*)", _ => Some(4.0))
+          case 1 =>
+            val v = pick('A', 'B', 'C')
+            (s"COUNT($v.*)", i => Some(rowsOf(v)(i).size.toDouble))
+          case _ =>
+            val v = pick('A', 'B', 'C')
+            (s"COUNT($v.value)", i => Some(rowsOf(v)(i).count(vals(_).isDefined).toDouble))
+        }
+      case _ =>
+        val x = pick(0.0, 1.0, 2.0, 3.0, 5.0, 8.0, 2.5, 0.5)
+        (if (x == x.floor) x.toLong.toString else x.toString, _ => Some(x))
+    }
+    def arith(op: Char)(a: V, b: V): V = (a, b) match {
+      case (Some(x), Some(y)) => op match {
+        case '+' => Some(x + y)
+        case '-' => Some(x - y)
+        case '*' => Some(x * y)
+        case '/' => if (y == 0.0) None else Some(x / y)
+      }
+      case _ => None
+    }
+    // value expressions: random parenthesized trees, unary minus, and
+    // flat chains whose precedence the reference computes in two passes
+    def value(depth: Int): (String, Int => V) =
+      if (depth == 0 || rnd.nextInt(3) == 0) leaf()
+      else rnd.nextInt(6) match {
+        case 4 => val (s, f) = value(depth - 1); (s"-($s)", i => f(i).map(-_))
+        case 5 =>
+          val ls = Vector.fill(2 + rnd.nextInt(2))(leaf())
+          val ops = Vector.fill(ls.size - 1)(pick('+', '-', '*', '/'))
+          val text = ls.head._1 + ops.zip(ls.tail).map { case (o, (s, _)) => s" $o $s" }.mkString
+          (text, { i =>
+            var terms = Vector(ls.head._2(i))
+            var termOps = Vector.empty[Char]
+            ops.zip(ls.tail).foreach { case (o, (_, f)) =>
+              if (o == '*' || o == '/') terms = terms.init :+ arith(o)(terms.last, f(i))
+              else { termOps :+= o; terms :+= f(i) }
+            }
+            termOps.zip(terms.tail).foldLeft(terms.head) { case (acc, (o, v)) => arith(o)(acc, v) }
+          })
+        case k =>
+          val op = "+-*/".charAt(k)
+          val (ls, lf) = value(depth - 1); val (rs, rf) = value(depth - 1)
+          (s"($ls $op $rs)", i => arith(op)(lf(i), rf(i)))
+      }
+    // a comparison with a NULL side is false (the SQL three-valued outcome)
+    def comparison(): (String, Int => Boolean) = {
+      val (ls, lf) = value(2); val (rs, rf) = value(2)
+      val (op, test) = pick[(String, Int => Boolean)](("<", _ < 0), ("<=", _ <= 0),
+        (">", _ > 0), (">=", _ >= 0), ("=", _ == 0), ("<>", _ != 0), ("!=", _ != 0))
+      (s"$ls $op $rs", i => (lf(i), rf(i)) match {
+        case (Some(a), Some(b)) => test(java.lang.Double.compare(a, b))
+        case _ => false
+      })
+    }
+    def predicate(depth: Int): (String, Int => Boolean) =
+      if (depth == 0 || rnd.nextInt(3) == 0) comparison()
+      else {
+        val (ls, lf) = predicate(depth - 1); val (rs, rf) = predicate(depth - 1)
+        rnd.nextInt(3) match {
+          case 0 => (s"(($ls) AND ($rs))", i => lf(i) && rf(i))
+          case 1 => (s"($ls OR $rs)", i => lf(i) || rf(i))
+          case _ => // unparenthesized: AND binds tighter than OR
+            val (ms, mf) = comparison(); val (ns, nf) = comparison()
+            (s"$ls OR $ms AND $ns", i => lf(i) || (mf(i) && nf(i)))
+        }
+      }
+    val preds = Vector.fill(150)(predicate(2))
+    val define = preds.zipWithIndex
+      .map { case ((s, _), p) => s"(C.user_id = $p AND ($s))" }.mkString("\n OR ")
+    val df = preds.indices.flatMap(p => vals.zipWithIndex.map { case (v, i) =>
+      (p.toLong, i.toLong, v) }).toDF("user_id", "seq", "value")
+    val got = MatchRecognizeSql(df, s"""
+      PARTITION BY user_id
+      ORDER BY seq
+      MEASURES COUNT(*) AS n
+      ONE ROW PER MATCH
+      AFTER MATCH SKIP TO NEXT ROW
+      PATTERN (A B B C)
+      DEFINE C AS $define""")
+      .groupBy("user_id").count().collect()
+      .map(r => r.getLong(0).toInt -> r.getLong(1)).toMap
+    val expected = preds.map { case (_, f) => starts.count(f).toLong }
+    preds.zipWithIndex.foreach { case ((s, _), p) =>
+      assert(got.getOrElse(p, 0L) == expected(p),
+        s"predicate $p: '$s' matched ${got.getOrElse(p, 0L)} starts, expected ${expected(p)}")
+    }
+    // the generator must exercise both outcomes, not only all-or-nothing
+    assert(expected.count(c => c > 0 && c < starts.size) >= 30,
+      s"too few discriminating predicates: ${expected.mkString(",")}")
+  }
+
   test("MatchRecognizeSql: unsupported syntax errors, missing sections error") {
     import graft.operators.MatchRecognizeSql
     val df = Seq((1L, 1L, 1.0)).toDF("user_id", "seq", "value")
