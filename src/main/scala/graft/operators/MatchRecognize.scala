@@ -162,21 +162,7 @@ object MatchRecognize {
     * ALL ROWS PER MATCH emits. */
   final case class Match[K, T](key: K, matchSeq: Long,
       captured: Map[String, Seq[T]],
-      ordered: Seq[(String, T)] = Seq.empty) {
-
-    /** RUNNING-semantics view at the (0-based) `uptoIdx`-th row of the
-      * match: `captured`/`ordered` truncated to rows up to AND
-      * including it — SQL:2016's RUNNING measure evaluation point in
-      * ALL ROWS PER MATCH (a RUNNING SUM/COUNT/LAST at output row j
-      * sees only rows 0..j of the match; FINAL sees the whole match,
-      * which is this object unchanged). */
-    def running(uptoIdx: Int): Match[K, T] = {
-      val prefix = ordered.take(uptoIdx + 1)
-      Match(key, matchSeq,
-        prefix.groupBy(_._1).map { case (n, xs) => n -> xs.map(_._2) },
-        prefix)
-    }
-  }
+      ordered: Seq[(String, T)] = Seq.empty)
 
   /** Parse a SQL `PATTERN (...)` clause body into pattern elements —
     * the front-door syntax of `MATCH_RECOGNIZE` (Beam parses it via

@@ -1,6 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction, UnresolvedStar}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, BinaryArithmetic, BinaryComparison, EqualNullSafe, EqualTo, Expression, Literal, Not, Or, UnaryMinus, UnaryPositive}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, First, Last}
+import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
@@ -11,85 +15,116 @@ import org.apache.spark.sql.types._
   * CEPOperation compiler): PARTITION BY, ORDER BY, MEASURES,
   * ONE/ALL ROWS PER MATCH, AFTER MATCH SKIP PAST LAST ROW, PATTERN
   * (via [[MatchRecognize.parsePattern]]: quantifiers + one level of
-  * alternation), and DEFINE with a real predicate grammar —
-  * comparisons over `V.col`, `PREV/NEXT(V.col[, k])`,
-  * `FIRST/LAST(V.col[, k])`, RUNNING aggregates
-  * `SUM/AVG/MIN/MAX(V.col)` / `COUNT(V.col | V.* | *)` over the rows
-  * matched so far (including the row under test when mapped to the
-  * referenced variable — the cumulative-cap family
-  * `B AS SUM(B.amount) <= 100`), numeric/string/boolean literals,
-  * AND/OR, parentheses, and ARITHMETIC value expressions on either
-  * side of a comparison (`B.value < PREV(B.value) * 0.9`, `+ - * /`,
-  * unary minus, NULL-propagating, /0 → NULL → comparison false).
+  * alternation), SUBSET and DEFINE.
+  *
+  * Expressions: each DEFINE predicate and each MEASURES entry is parsed
+  * once, on the driver, by Spark SQL's expression grammar
+  * (`CatalystSqlParser.parseExpression`), and that one Catalyst tree is
+  * interpreted. Accepted nodes:
+  *  - `V.col` (column indices resolve against the input schema at
+  *    compile time), `PREV/NEXT(V.col[, k])`, `FIRST/LAST(V.col[, k])`;
+  *  - `COUNT(*)`, `COUNT(V.*)`, `COUNT(expr)` and `SUM/AVG/MIN/MAX(expr)`,
+  *    where `expr` is a per-row expression over ONE variable's columns
+  *    (`SUM(B.price * B.qty + 1)`; null-skipping, DOUBLE result);
+  *  - `MATCH_NUMBER()` and `CLASSIFIER()` (MEASURES only);
+  *  - numeric and string literals, `+ - * /`, unary minus, `< <= > >=
+  *    = <> !=`, AND/OR and parentheses.
+  * Arithmetic is DOUBLE and NULL-propagating, and division by zero is
+  * NULL (documented deviation from ANSI's error). Two error kinds: a
+  * malformed expression fails with Catalyst's `ParseException` and its
+  * position; a well-formed but unsupported node (BETWEEN, CASE, an
+  * unqualified column, …) fails with an `IllegalArgumentException`
+  * naming it.
   *
   * Semantics notes (SQL:2016 row-pattern matching):
   *  - in DEFINE of variable V, `V.col` is the CURRENT row; another
   *    variable's `W.col` means `LAST(W.col)` (its most recent match);
   *  - PREV/NEXT navigate PHYSICAL partition rows (may cross the match
-  *    start), FIRST/LAST navigate a variable's matched rows;
-  *  - a comparison with a missing navigation target (e.g. PREV at row
-  *    0) is NULL → false, the SQL three-valued outcome;
-  *  - MEASURES support `FIRST(V.col[, k])`, `LAST(V.col[, k])` (SQL:2016
-  *    logical offsets within V's matched rows; out of range → NULL;
-  *    DEFINE honors the same offsets), `V.col`
-  *    (≡ LAST in ONE ROW PER MATCH), `COUNT(V.*)`, `COUNT(*)`,
-  *    `MATCH_NUMBER()`, `CLASSIFIER()`, and numeric aggregates
-  *    `SUM/AVG/MIN/MAX(V.col)` — and over per-row EXPRESSIONS of one
-  *    variable's columns, `SUM(B.price * B.qty + 1)` (DOUBLE result,
-  *    null-skipping); an
-  *    unmatched optional variable yields NULL (COUNT yields 0,
-  *    aggregates yield NULL); measures compose under ARITHMETIC
-  *    (+ - * / with parens, unary minus, numeric literals — e.g.
-  *    `FIRST(A.v) - LAST(B.v)`, `100 * COUNT(B.*) / COUNT(*)`):
-  *    DOUBLE result, NULL-propagating, division by zero → NULL
-  *    (documented deviation from ANSI's error); CLASSIFIER() is
-  *    excluded from arithmetic (non-numeric);
+  *    start), FIRST/LAST navigate a variable's matched rows with a
+  *    logical offset (out of range → NULL); PREV/NEXT are DEFINE-only;
+  *  - a comparison with a NULL side (e.g. PREV at row 0) is false, the
+  *    SQL three-valued outcome;
+  *  - DEFINE aggregates run over the rows matched so far, including the
+  *    row under test when it is mapped to the referenced variable or
+  *    when counting all rows — the cumulative-cap family
+  *    `B AS SUM(B.amount) <= 100`. Each evaluation re-walks those rows:
+  *    O(match²) per match, acceptable because a cap bounds the match
+  *    length (an uncapped `COUNT(*) >= 0` degrades quadratically);
+  *  - MEASURES: `V.col` ≡ `LAST(V.col)`; an unmatched optional variable
+  *    yields NULL (COUNT yields 0); COUNT and MATCH_NUMBER are non-null
+  *    LONG, CLASSIFIER is non-null STRING and may not appear in
+  *    arithmetic, a bare FIRST/LAST/`V.col` keeps its column's type,
+  *    aggregates and arithmetic are DOUBLE;
   *  - ALL ROWS PER MATCH emits one output row per matched input row
   *    (all source columns + measures, CLASSIFIER() per row) — ONE ROW
   *    PER MATCH emits partition cols + measures. Measures accept a
   *    RUNNING or FINAL prefix: RUNNING evaluates over the match prefix
-  *    up to the output row (SQL:2016 §7.2), FINAL over the whole
-  *    match. DEFAULT IS FINAL (deviation: the standard defaults to
-  *    RUNNING in ALL ROWS mode) — write RUNNING explicitly;
+  *    up to the output row (SQL:2016 §7.2) in one incremental pass with
+  *    O(1) state per leaf, FINAL over the whole match. DEFAULT IS FINAL
+  *    (deviation: the standard defaults to RUNNING in ALL ROWS mode) —
+  *    write RUNNING explicitly;
   *  - PATTERN supports reluctant quantifiers (`B+?` `B*?` `B??`
   *    `B{m,n}?` — shortest run first) and `PERMUTE(A, B, …)` (expands
   *    to the alternation of all orderings, Calcite's own rewrite);
   *  - SUBSET U = (A, B) declares union variables usable in MEASURES
   *    (COUNT/FIRST/LAST/aggregates over the union's rows in row order);
   *  - AFTER MATCH SKIP TO FIRST/LAST `var` resume modes, with
-  *    SQL:2016's no-advance and unmatched-variable runtime errors.
+  *    SQL:2016's no-advance and unmatched-variable runtime errors;
+  *  - PARTITION BY keys are compared exactly (NULL is its own key) and
+  *    the streaming paths sort each group as Spark's ORDER BY does.
   *
   * Scale: identical to the DSL path — one shuffle on the partition
   * key, sort-merged groups, tight JVM matcher per group.
   */
 object MatchRecognizeSql {
 
-  // ---- predicate AST over Row + MatchCtx[Row] ----
-  private sealed trait Pred {
-    def eval(t: Row, ctx: MatchRecognize.MatchCtx[Row]): Boolean
-  }
-  private final case class And(l: Pred, r: Pred) extends Pred {
-    def eval(t: Row, c: MatchRecognize.MatchCtx[Row]) = l.eval(t, c) && r.eval(t, c)
-  }
-  private final case class Or(l: Pred, r: Pred) extends Pred {
-    def eval(t: Row, c: MatchRecognize.MatchCtx[Row]) = l.eval(t, c) || r.eval(t, c)
-  }
-  private final case class Cmp(l: Operand, op: String, r: Operand,
-      selfVar: String) extends Pred {
-    def eval(t: Row, c: MatchRecognize.MatchCtx[Row]): Boolean = {
-      val a = l.value(t, c, selfVar)
-      val b = r.value(t, c, selfVar)
-      if (a == null || b == null) return false // SQL NULL comparison
-      val r0 = compareVals(a, b)
-      op match {
-        case "<" => r0 < 0
-        case "<=" => r0 <= 0
-        case ">" => r0 > 0
-        case ">=" => r0 >= 0
-        case "=" => r0 == 0
-        case "<>" | "!=" => r0 != 0
-      }
+  private type Ctx = MatchRecognize.MatchCtx[Row]
+  private type Match = MatchRecognize.Match[String, Row]
+
+  // ---- the leaves of a parsed expression, classified once ----
+  private sealed trait Leaf
+  /** `V.col`; `i` is the column's index in the input schema. */
+  private final case class Col(v: String, i: Int) extends Leaf
+  /** PREV/NEXT (physical rows) or FIRST/LAST (V's matched rows), `k`
+    * rows away. */
+  private final case class Nav(kind: String, v: String, i: Int, k: Int) extends Leaf
+  /** COUNT/SUM/AVG/MIN/MAX of `arg` over V's rows ("" = all rows). */
+  private final case class Agg(kind: String, v: String, arg: Row => Any) extends Leaf
+  private case object MatchNumber extends Leaf
+  private case object Classifier extends Leaf
+
+  private def unsupported(e: Expression): Nothing = {
+    val what = e match {
+      case f: UnresolvedFunction => s"function ${f.nameParts.mkString(".")}"
+      case UnresolvedAttribute(Seq(c)) => s"unqualified column '$c' (write VAR.$c)"
+      case other => s"${other.nodeName} `$other`"
     }
+    throw new IllegalArgumentException(s"unsupported in MATCH_RECOGNIZE: $what")
+  }
+
+  /** A function call as (upper-case name, arguments). The parser turns
+    * FIRST/LAST without an offset into aggregate expressions. */
+  private object Call {
+    def unapply(e: Expression): Option[(String, Seq[Expression])] = e match {
+      case UnresolvedFunction(Seq(n), args, false, None, false, Seq(), _) =>
+        Some((n.toUpperCase(java.util.Locale.ROOT), args))
+      case AggregateExpression(First(c, false), _, false, None, _) => Some(("FIRST", Seq(c)))
+      case AggregateExpression(Last(c, false), _, false, None, _) => Some(("LAST", Seq(c)))
+      case _ => None
+    }
+  }
+
+  private def isPredicate(e: Expression): Boolean = e match {
+    case _: And | _: Or | Not(_: EqualTo) => true
+    case c: BinaryComparison => !c.isInstanceOf[EqualNullSafe]
+    case _ => false
+  }
+
+  private def num(a: Any): java.lang.Double = a match {
+    case null => null
+    case n: Number => n.doubleValue
+    case other => throw new IllegalArgumentException(
+      s"non-numeric value in MATCH_RECOGNIZE arithmetic: $other")
   }
 
   private def compareVals(a: Any, b: Any): Int = (a, b) match {
@@ -100,570 +135,260 @@ object MatchRecognizeSql {
     case _ => String.valueOf(a).compareTo(String.valueOf(b))
   }
 
-  // ---- operands: literals and navigation references ----
-  private sealed trait Operand {
-    /** null ⇔ SQL NULL (missing navigation target / null cell). */
-    def value(t: Row, ctx: MatchRecognize.MatchCtx[Row], selfVar: String): Any
-  }
-  private final case class NumLit(v: Double) extends Operand {
-    def value(t: Row, c: MatchRecognize.MatchCtx[Row], s: String): Any =
-      java.lang.Double.valueOf(v)
-  }
-  /** Arithmetic over operands inside DEFINE comparisons (SQL:2016
-    * allows full value expressions — `B.value < PREV(B.value) * 0.9`
-    * is the canonical CEP percentage-drop condition). NULL-propagating;
-    * /0 → NULL (→ comparison false, the SQL outcome). */
-  private final case class Arith(op: Char, l: Operand, r: Operand)
-      extends Operand {
-    def value(t: Row, ctx: MatchRecognize.MatchCtx[Row], s: String): Any = {
-      def num(a: Any): java.lang.Double = a match {
-        case null => null
-        case n: Number => n.doubleValue()
-        case other => throw new IllegalArgumentException(
-          s"non-numeric value in DEFINE arithmetic: $other")
-      }
-      val a = num(l.value(t, ctx, s))
-      val b = num(r.value(t, ctx, s))
-      if (a == null || b == null) null
-      else op match {
-        case '+' => a + b
-        case '-' => a - b
-        case '*' => a * b
-        case '/' => if (b == 0.0) null else a / b
+  /** Compile a parsed expression into a function of an environment X.
+    * The combinators live here once: arithmetic (DOUBLE,
+    * NULL-propagating, /0 → NULL), comparisons (a NULL side is false)
+    * and AND/OR; every other node means what `leaf` makes of it. */
+  private def interpret[X](e: Expression, leaf: Expression => X => Any): X => Any = {
+    def go(e: Expression): X => Any = e match {
+      case Literal(v, _: NumericType) =>
+        val d = v match {
+          case x: Decimal => x.toJavaBigDecimal.doubleValue
+          case x: Number => x.doubleValue
+        }
+        _ => d
+      case Literal(v, _: StringType) => val s = v.toString; _ => s
+      case UnaryPositive(c) => go(c)
+      case UnaryMinus(c, _) =>
+        val f = go(c)
+        x => { val a = num(f(x)); if (a == null) null else -a }
+      case b: BinaryArithmetic if b.symbol.length == 1 && "+-*/".contains(b.symbol) =>
+        val (l, r, op) = (go(b.left), go(b.right), b.symbol.head)
+        x => {
+          val p = num(l(x)); val q = num(r(x))
+          if (p == null || q == null) null
+          else op match {
+            case '+' => p + q
+            case '-' => p - q
+            case '*' => p * q
+            case '/' => if (q == 0.0) null else p / q
+          }
+        }
+      case And(l, r) => val (p, q) = (bool(l), bool(r)); x => p(x) && q(x)
+      case Or(l, r) => val (p, q) = (bool(l), bool(r)); x => p(x) || q(x)
+      case Not(EqualTo(l, r)) => comparison(l, r, _ != 0)
+      case c: BinaryComparison if isPredicate(c) =>
+        comparison(c.left, c.right, c.symbol match {
+          case "<" => _ < 0
+          case "<=" => _ <= 0
+          case ">" => _ > 0
+          case ">=" => _ >= 0
+          case "=" => _ == 0
+        })
+      case _ => leaf(e)
+    }
+    def bool(e: Expression): X => Boolean = {
+      if (!isPredicate(e)) unsupported(e)
+      val f = go(e)
+      x => f(x).asInstanceOf[Boolean]
+    }
+    def comparison(l: Expression, r: Expression, test: Int => Boolean): X => Any = {
+      val (p, q) = (go(l), go(r))
+      x => {
+        val a = p(x); val b = q(x)
+        a != null && b != null && test(compareVals(a, b))
       }
     }
+    go(e)
   }
-  private final case class NegOp(x: Operand) extends Operand {
-    def value(t: Row, ctx: MatchRecognize.MatchCtx[Row], s: String): Any =
-      x.value(t, ctx, s) match {
-        case null => null
-        case n: Number => -n.doubleValue()
-        case other => throw new IllegalArgumentException(
-          s"non-numeric value under unary minus: $other")
+
+  /** COUNT/SUM/AVG/MIN/MAX over the values added so far: NULLs are
+    * skipped, COUNT is a LONG and an empty numeric aggregate is NULL. */
+  private final class Acc(kind: String) {
+    private var n = 0L
+    private var sum, min, max = 0.0
+    def add(a: Any): Unit = if (a != null) {
+      if (kind != "COUNT") {
+        val d: Double = num(a)
+        if (n == 0 || d < min) min = d
+        if (n == 0 || d > max) max = d
+        sum += d
       }
-  }
-  private final case class StrLit(v: String) extends Operand {
-    def value(t: Row, c: MatchRecognize.MatchCtx[Row], s: String): Any = v
-  }
-  /** SQL:2016 RUNNING aggregate in DEFINE: `SUM/AVG/MIN/MAX(V.col)`,
-    * `COUNT(V.col)`, `COUNT(V.*)`, `COUNT(*)` over the rows matched SO
-    * FAR in this attempt — including the row under test when it is
-    * (tentatively) mapped to the referenced variable (`varName ==
-    * selfVar`) or when counting all rows (`varName == ""`). The
-    * cumulative-cap predicate family (`B AS SUM(B.amount) <= 100`)
-    * hangs off this. Null cells are skipped (empty → SQL NULL →
-    * comparison false).
-    *
-    * Complexity: each evaluation re-walks the rows matched so far —
-    * O(match²) per match, same bound SCALE.md documents. Acceptable
-    * BECAUSE the predicate family that wants this is cap-shaped: the
-    * cap bounds the match length by construction. A predicate that
-    * lets matches grow unboundedly (e.g. `COUNT(*) >= 0`) degrades
-    * quadratically — cap it or use the incremental MEASURES path. */
-  private final case class AggOp(kind: String, varName: String,
-      colName: String) extends Operand {
-    def value(t: Row, ctx: MatchRecognize.MatchCtx[Row], selfVar: String): Any = {
-      val base = if (varName == "") ctx.allRows else ctx.rowsOf(varName)
-      val rows = if (varName == "" || varName == selfVar) base :+ t else base
-      if (kind == "count") {
-        if (colName == "*") return java.lang.Long.valueOf(rows.size.toLong)
-        return java.lang.Long.valueOf(rows.count { r =>
-          !r.isNullAt(r.fieldIndex(colName))
-        }.toLong)
-      }
-      val xs = rows.flatMap { r =>
-        val i = r.fieldIndex(colName)
-        if (r.isNullAt(i)) None
-        else r.get(i) match {
-          case n: Number => Some(n.doubleValue())
-          case other => throw new IllegalArgumentException(
-            s"$kind($varName.$colName) over non-numeric value: $other")
-        }
-      }
-      if (xs.isEmpty) null
+      n += 1
+    }
+    def value: Any =
+      if (kind == "COUNT") n
+      else if (n == 0) null
       else kind match {
-        case "sum" => xs.sum
-        case "avg" => xs.sum / xs.size
-        case "min" => xs.min
-        case "max" => xs.max
+        case "SUM" => sum
+        case "AVG" => sum / n
+        case "MIN" => min
+        case "MAX" => max
       }
-    }
   }
 
-  /** kind ∈ cur | prev | next | first | last */
-  private final case class Nav(kind: String, varName: String, colName: String,
-      k: Int) extends Operand {
-    def value(t: Row, ctx: MatchRecognize.MatchCtx[Row], selfVar: String): Any = {
-      val row: Option[Row] = kind match {
-        case "cur" =>
-          if (varName == selfVar) Some(t) else ctx.last(varName)
-        case "prev" => ctx.prev(k)
-        case "next" => ctx.next(k)
-        case "first" => ctx.first(varName, k)
-        case "last" => ctx.last(varName, k)
-      }
-      row match {
-        case Some(r) =>
-          val i = r.fieldIndex(colName)
-          if (r.isNullAt(i)) null else r.get(i)
-        case None => null
-      }
-    }
-  }
+  private def cell(r: Row, i: Int): Any = if (r.isNullAt(i)) null else r.get(i)
 
-  // ---- predicate tokenizer/parser (recursive descent) ----
-  private final class PredParser(input: String, selfVar: String) {
-    private val toks: Vector[String] = {
-      // note: numbers carry no sign — '-' lexes as an operator and
-      // negative literals parse via unary minus in factor()
-      val pat = ("""\s*(<=|>=|<>|!=|<|>|=|\(|\)|,|'[^']*'|""" +
-        """[A-Za-z_][A-Za-z_0-9]*(?:\.(?:[A-Za-z_][A-Za-z_0-9]*|\*))?|""" +
-        """\d+(?:\.\d+)?|[-+*/])""").r
-      var pos = 0
-      val out = Vector.newBuilder[String]
-      while (pos < input.length) {
-        pat.findPrefixMatchOf(input.subSequence(pos, input.length)) match {
-          case Some(m) if m.group(1) != null =>
-            out += m.group(1); pos += m.end
-          case _ =>
-            if (input.substring(pos).trim.isEmpty) pos = input.length
-            else throw new IllegalArgumentException(
-              s"DEFINE parse error at '${input.substring(pos).take(20)}'")
+  /** Classify a node that is not a combinator, against `schema`. */
+  private def leafOf(schema: StructType)(e: Expression): Leaf = {
+    def ref(a: Expression): (String, Int) = a match {
+      case UnresolvedAttribute(Seq(v, c)) => (v, schema.fieldIndex(c))
+      case _: UnresolvedAttribute => unsupported(a)
+      case _ => throw new IllegalArgumentException(s"expected VAR.col, got `$a` in `$e`")
+    }
+    e match {
+      case UnresolvedAttribute(Seq(_, _)) => val (v, i) = ref(e); Col(v, i)
+      case Call(f @ ("PREV" | "NEXT" | "FIRST" | "LAST"), a +: offset) =>
+        val (v, i) = ref(a)
+        val k = offset match {
+          case Seq() => if (f == "PREV" || f == "NEXT") 1 else 0
+          case Seq(Literal(k: Int, IntegerType)) if k >= 0 => k
+          case _ => throw new IllegalArgumentException(
+            s"$f offset must be a non-negative integer literal: `$e`")
         }
+        Nav(f, v, i, k)
+      case Call(f @ ("COUNT" | "SUM" | "AVG" | "MIN" | "MAX"), Seq(arg)) => arg match {
+        case UnresolvedStar(target) =>
+          require(f == "COUNT", s"only COUNT aggregates V.* or *: `$e`")
+          Agg(f, target.map(_.mkString(".")).getOrElse(""), r => r)
+        case _: Literal if f == "COUNT" => Agg(f, "", r => r) // COUNT(*) parses as COUNT(1)
+        case _ =>
+          val vars = scala.collection.mutable.LinkedHashSet.empty[String]
+          val fn = interpret[Row](arg, {
+            case a: UnresolvedAttribute => val (v, i) = ref(a); vars += v; r => cell(r, i)
+            case other => unsupported(other)
+          })
+          require(vars.size == 1, if (vars.isEmpty) s"$f needs a VAR.col argument: `$e`"
+            else s"aggregate mixes variables ${vars.mkString(" and ")} — aggregate " +
+              s"over ONE pattern variable's rows: `$e`")
+          Agg(f, vars.head, fn)
       }
-      out.result()
-    }
-    private var i = 0
-    private def peek: String = if (i < toks.length) toks(i) else ""
-    private def take(): String = { val t = peek; i += 1; t }
-    private def expect(t: String): Unit = {
-      val got = take()
-      require(got.equalsIgnoreCase(t), s"expected '$t', got '$got' in: $input")
-    }
-
-    def parse(): Pred = {
-      val p = orExpr()
-      require(i == toks.length, s"trailing tokens after predicate: $input")
-      p
-    }
-    private def orExpr(): Pred = {
-      var l = andExpr()
-      while (peek.equalsIgnoreCase("OR")) { take(); l = Or(l, andExpr()) }
-      l
-    }
-    private def andExpr(): Pred = {
-      var l = cmpExpr()
-      while (peek.equalsIgnoreCase("AND")) { take(); l = And(l, cmpExpr()) }
-      l
-    }
-    private def cmpExpr(): Pred = {
-      if (peek == "(") {
-        // '(' is ambiguous: boolean group `(x < 1 OR y < 2)` vs
-        // arithmetic group `(x + 1) < 2`. Try boolean first; on parse
-        // failure rewind the token index and re-read as arithmetic —
-        // the recursive descent's only state IS the index.
-        val save = i
-        try { take(); val p = orExpr(); expect(")"); return p }
-        catch { case _: IllegalArgumentException => i = save }
-      }
-      val l = arith()
-      val op = take()
-      require(Set("<", "<=", ">", ">=", "=", "<>", "!=").contains(op),
-        s"expected comparison operator, got '$op' in: $input")
-      Cmp(l, op, arith(), selfVar)
-    }
-    private def arith(): Operand = {
-      var l = term()
-      while (peek == "+" || peek == "-") {
-        val o = take(); l = Arith(o.charAt(0), l, term())
-      }
-      l
-    }
-    private def term(): Operand = {
-      var l = factor()
-      while (peek == "*" || peek == "/") {
-        val o = take(); l = Arith(o.charAt(0), l, factor())
-      }
-      l
-    }
-    private def factor(): Operand = {
-      if (peek == "-") { take(); return NegOp(factor()) }
-      if (peek == "+") { take(); return factor() }
-      if (peek == "(") { take(); val x = arith(); expect(")"); return x }
-      operand()
-    }
-    private def operand(): Operand = {
-      val t = take()
-      if (t.startsWith("'")) return StrLit(t.substring(1, t.length - 1))
-      if (t.matches("""-?\d+(\.\d+)?""")) return NumLit(t.toDouble)
-      val up = t.toUpperCase
-      if (Set("SUM", "AVG", "MIN", "MAX", "COUNT").contains(up)) {
-        expect("(")
-        val ref = take()
-        val (v, c) =
-          if (ref == "*") ("", "*")
-          else {
-            require(ref.contains("."),
-              s"$up() in DEFINE needs VAR.col${if (up == "COUNT") ", VAR.* or *" else ""}, got '$ref'")
-            val Array(v0, c0) = ref.split("\\.", 2)
-            (v0, c0)
-          }
-        require(c != "*" || up == "COUNT",
-          s"only COUNT aggregates V.* or *: $input")
-        expect(")")
-        return AggOp(up.toLowerCase, v, c)
-      }
-      if (Set("PREV", "NEXT", "FIRST", "LAST").contains(up)) {
-        expect("(")
-        val ref = take()
-        require(ref.contains("."), s"$up() needs VAR.col, got '$ref'")
-        val Array(v, c) = ref.split("\\.", 2)
-        // SQL:2016 defaults: PREV/NEXT step 1 physical row; FIRST/LAST
-        // offset 0 (the earliest / most recent mapped row itself)
-        val dflt = if (up == "PREV" || up == "NEXT") 1 else 0
-        val k = if (peek == ",") { take(); take().toInt } else dflt
-        expect(")")
-        return Nav(up.toLowerCase, v, c, k)
-      }
-      require(t.contains("."), s"expected VAR.col reference, got '$t' in: $input")
-      val Array(v, c) = t.split("\\.", 2)
-      Nav("cur", v, c, 0)
+      case Call("MATCH_NUMBER", Seq()) => MatchNumber
+      case Call("CLASSIFIER", Seq()) => Classifier
+      case other => unsupported(other)
     }
   }
 
-  // ---- measure spec ----
-  private sealed trait Measure { def name: String }
-  private final case class MCount(name: String, varName: String) extends Measure // "" = *
-  // kind ∈ first | last; off = SQL:2016 logical offset WITHIN the
-  // variable's matched rows (FIRST(V.c, 1) = V's second row, LAST(V.c,
-  // 1) = second-to-last; out of range → NULL)
-  private final case class MNav(name: String, kind: String, varName: String,
-      colName: String, off: Int = 0) extends Measure
-  private final case class MMatchNum(name: String) extends Measure
-  // SQL:2016 running aggregates over one variable's matched rows
-  // (ONE ROW PER MATCH ⇒ final semantics); DOUBLE out. The aggregated
-  // quantity is a per-ROW expression over that variable's columns —
-  // `SUM(B.value)` or `SUM(B.price * B.qty + 1)` alike.
-  private final case class MAgg(name: String, kind: String, varName: String,
-      rowExpr: RExpr) extends Measure // kind ∈ sum | avg | min | max
+  // ---- what a leaf means in DEFINE and in MEASURES ----
 
-  // per-row numeric expression inside an aggregate: columns of ONE
-  // pattern variable, literals, + - * /, unary minus; NULL-propagating
-  private sealed trait RExpr { def eval(r: Row): Any }
-  private final case class RCol(c: String) extends RExpr {
-    def eval(r: Row): Any = {
-      val i = r.fieldIndex(c)
-      if (r.isNullAt(i)) null else r.get(i)
+  /** DEFINE of variable `self`: over the row under test and the match
+    * so far. */
+  private def defineLeaf(self: String)(leaf: Leaf): ((Row, Ctx)) => Any = leaf match {
+    case Col(v, i) if v == self => { case (t, _) => cell(t, i) }
+    case Col(v, i) => defineLeaf(self)(Nav("LAST", v, i, 0))
+    case Nav(kind, v, i, k) => { case (_, c) =>
+      (kind match {
+        case "PREV" => c.prev(k)
+        case "NEXT" => c.next(k)
+        case "FIRST" => c.first(v, k)
+        case "LAST" => c.last(v, k)
+      }).map(cell(_, i)).orNull
     }
-  }
-  private final case class RLit(v: Double) extends RExpr {
-    def eval(r: Row): Any = java.lang.Double.valueOf(v)
-  }
-  private final case class RNeg(x: RExpr) extends RExpr {
-    def eval(r: Row): Any = x.eval(r) match {
-      case null => null
-      case n: Number => -n.doubleValue()
-      case other => throw new IllegalArgumentException(
-        s"non-numeric value under unary minus in aggregate: $other")
+    case Agg(kind, v, arg) => { case (t, c) =>
+      val acc = new Acc(kind)
+      (if (v == "") c.allRows else c.rowsOf(v)).foreach(r => acc.add(arg(r)))
+      if (v == "" || v == self) acc.add(arg(t))
+      acc.value
     }
-  }
-  private final case class RBin(op: Char, l: RExpr, r0: RExpr) extends RExpr {
-    def eval(r: Row): Any = {
-      def num(a: Any): java.lang.Double = a match {
-        case null => null
-        case n: Number => n.doubleValue()
-        case other => throw new IllegalArgumentException(
-          s"non-numeric value in aggregate expression: $other")
-      }
-      val a = num(l.eval(r)); val b = num(r0.eval(r))
-      if (a == null || b == null) null
-      else op match {
-        case '+' => a + b
-        case '-' => a - b
-        case '*' => a * b
-        case '/' => if (b == 0.0) null else a / b
-      }
-    }
+    case MatchNumber | Classifier => throw new IllegalArgumentException(
+      s"MATCH_NUMBER() and CLASSIFIER() are MEASURES-only (DEFINE $self)")
   }
 
-  /** Parse the inside of `SUM(...)`: a per-row expression whose column
-    * refs (`V.col`) must all name ONE variable — returns (V, expr). */
-  private def parseAggInner(inner: String): (String, RExpr) = {
-    val pat = ("""\s*(\(|\)|[A-Za-z_][A-Za-z_0-9]*\.[A-Za-z_][A-Za-z_0-9]*|""" +
-      """\d+(?:\.\d+)?|[-+*/])""").r
-    val toks = {
-      var pos = 0
-      val out = Vector.newBuilder[String]
-      while (pos < inner.length) {
-        pat.findPrefixMatchOf(inner.subSequence(pos, inner.length)) match {
-          case Some(m) if m.group(1) != null => out += m.group(1); pos += m.end
-          case _ =>
-            if (inner.substring(pos).trim.isEmpty) pos = inner.length
-            else throw new IllegalArgumentException(
-              s"aggregate expression parse error at '${inner.substring(pos).take(20)}'")
+  /** MEASURES: given the match number, a fresh incremental state that
+    * takes each match row (with its variable) in order and returns the
+    * value over the rows so far — O(1) per row. That is the RUNNING
+    * value; FINAL is the value after the match's last row. `in(v)` tells
+    * which variables' rows count as V's (V itself, or a SUBSET's
+    * members). */
+  private def measureLeaf(in: String => String => Boolean)(leaf: Leaf)
+      : Long => (String, Row) => Any = leaf match {
+    case Col(v, i) => measureLeaf(in)(Nav("LAST", v, i, 0))
+    case Nav("FIRST", v, i, k) => _ => {
+      // the (k+1)-th mapped row's value once it arrives; NULL until then
+      val mine = in(v); var seen = 0; var value: Any = null
+      (vn, r) => {
+        if (seen <= k && mine(vn)) {
+          if (seen == k) value = cell(r, i)
+          seen += 1
         }
-      }
-      out.result()
-    }
-    var i = 0
-    var varName: String = null
-    def peek = if (i < toks.length) toks(i) else ""
-    def take() = { val t = peek; i += 1; t }
-    def factor(): RExpr = peek match {
-      case "-" => take(); RNeg(factor())
-      case "+" => take(); factor()
-      case "(" =>
-        take(); val x = sum()
-        require(take() == ")", s"unbalanced parens in aggregate: $inner")
-        x
-      case t if t.matches("""\d+(\.\d+)?""") => take(); RLit(t.toDouble)
-      case t if t.contains(".") =>
-        take()
-        val Array(v, c) = t.split("\\.", 2)
-        require(varName == null || varName == v,
-          s"aggregate mixes variables '$varName' and '$v' — aggregate " +
-            s"over ONE pattern variable's rows: $inner")
-        varName = v
-        RCol(c)
-      case other => throw new IllegalArgumentException(
-        s"unsupported aggregate term '$other' in: $inner")
-    }
-    def term(): RExpr = {
-      var l = factor()
-      while (peek == "*" || peek == "/") {
-        val o = take(); l = RBin(o.charAt(0), l, factor())
-      }
-      l
-    }
-    def sum(): RExpr = {
-      var l = term()
-      while (peek == "+" || peek == "-") {
-        val o = take(); l = RBin(o.charAt(0), l, term())
-      }
-      l
-    }
-    val e = sum()
-    require(i == toks.length, s"trailing tokens in aggregate: $inner")
-    require(varName != null,
-      s"aggregate needs at least one V.col reference: $inner")
-    (varName, e)
-  }
-  // CLASSIFIER(): the row's pattern variable in ALL ROWS PER MATCH
-  // (the LAST row's variable in ONE ROW PER MATCH)
-  private final case class MClassifier(name: String) extends Measure
-  // Arithmetic over primitive measures and numeric literals (SQL:2016
-  // measures are full value expressions; this covers + - * / with
-  // parens and unary minus, e.g. FIRST(A.v) - LAST(B.v), numeric
-  // output, NULL-propagating, DOUBLE result). CLASSIFIER() is the one
-  // primitive excluded (non-numeric).
-  private final case class MExpr(name: String, node: MNode) extends Measure
-  private sealed trait MNode
-  private final case class MNLit(v: Double) extends MNode
-  private final case class MNPrim(m: Measure) extends MNode
-  private final case class MNNeg(x: MNode) extends MNode
-  private final case class MNBin(op: Char, l: MNode, r: MNode) extends MNode
-
-  /** Measure + its evaluation semantics: `running = true` ⇔ the SQL
-    * RUNNING prefix — in ALL ROWS PER MATCH the measure at output row j
-    * sees only match rows 0..j (FINAL, the default here, sees the whole
-    * match; in ONE ROW PER MATCH the two coincide).
-    *
-    * NOTE a deliberate deviation: SQL:2016 defaults to RUNNING in ALL
-    * ROWS PER MATCH — this engine defaults to FINAL (the more common
-    * analytical want, and the pre-existing contract of `pattern_all_
-    * rows`); write RUNNING explicitly to get prefix semantics. */
-  private final case class MSpec(measure: Measure, running: Boolean)
-
-  private def parseMeasures(text: String): Seq[MSpec] =
-    splitTopLevel(text, ',').map(_.trim).filter(_.nonEmpty).map { m0 =>
-      val up0 = m0.toUpperCase
-      val (m, running) =
-        if (up0.startsWith("RUNNING ")) (m0.substring(8).trim, true)
-        else if (up0.startsWith("FINAL ")) (m0.substring(6).trim, false)
-        else (m0, false)
-      val asIdx = findKeyword(m, "AS")
-      require(asIdx >= 0, s"MEASURES entry needs AS: $m")
-      val expr = m.substring(0, asIdx).trim
-      val name = m.substring(asIdx + 2).trim
-      require(name.matches("""[A-Za-z_][A-Za-z_0-9]*"""),
-        s"bad measure name '$name'")
-      MSpec(parseMeasureExpr(expr, name), running)
-    }
-
-  /** True iff the first '(' in `s` closes exactly at the final char —
-    * i.e. the WHOLE string is one call, not `F(..) - G(..)`. */
-  private def oneCall(s: String): Boolean = {
-    val open = s.indexOf('(')
-    if (open < 0 || !s.endsWith(")")) return false
-    var depth = 0
-    var i = open
-    while (i < s.length) {
-      if (s.charAt(i) == '(') depth += 1
-      else if (s.charAt(i) == ')') {
-        depth -= 1
-        if (depth == 0) return i == s.length - 1
-      }
-      i += 1
-    }
-    false
-  }
-
-  /** A single primitive measure form, or None if `expr` is not one. */
-  private def parsePrimMeasure(expr: String, name: String): Option[Measure] = {
-    val up = expr.toUpperCase
-    if (!up.contains("(")) {
-      return if (expr.matches("""[A-Za-z_][A-Za-z_0-9]*\.[A-Za-z_][A-Za-z_0-9]*"""))
-        Some(MNav(name, "last", expr.split("\\.", 2)(0),
-          expr.split("\\.", 2)(1))) // ONE ROW PER MATCH: V.col ≡ LAST(V.col)
-      else None
-    }
-    if (!oneCall(expr)) return None
-    if (up == "MATCH_NUMBER()") Some(MMatchNum(name))
-    else if (up == "CLASSIFIER()") Some(MClassifier(name))
-    else if (up.startsWith("COUNT(") && expr.endsWith(")")) {
-      val inner = expr.substring(6, expr.length - 1).trim
-      if (inner == "*") Some(MCount(name, ""))
-      else {
-        require(inner.endsWith(".*"), s"COUNT takes V.* or *: $expr")
-        Some(MCount(name, inner.dropRight(2)))
-      }
-    } else if ((up.startsWith("FIRST(") || up.startsWith("LAST(")) &&
-        expr.endsWith(")")) {
-      val kind = if (up.startsWith("FIRST(")) "first" else "last"
-      val inner = expr.substring(expr.indexOf('(') + 1, expr.length - 1).trim
-      // optional logical offset: FIRST(V.col, k) / LAST(V.col, k)
-      val (ref, off) = inner.split(",", 2) match {
-        case Array(r, k) =>
-          val kk = k.trim
-          require(kk.matches("""\d+"""),
-            s"$kind offset must be a non-negative integer literal: $expr")
-          (r.trim, kk.toInt)
-        case Array(r) => (r.trim, 0)
-      }
-      val Array(v, c) = ref.split("\\.", 2)
-      Some(MNav(name, kind, v, c, off))
-    } else if (Seq("SUM(", "AVG(", "MIN(", "MAX(").exists(up.startsWith) &&
-        expr.endsWith(")")) {
-      val kind = up.substring(0, 3).toLowerCase
-      val inner = expr.substring(expr.indexOf('(') + 1, expr.length - 1).trim
-      val (v, rowExpr) = parseAggInner(inner)
-      Some(MAgg(name, kind, v, rowExpr))
-    } else None
-    // (the bare V.col form can't reach here: the no-paren early return
-    // at the top of this method already handled it)
-  }
-
-  /** Primitive measure, or an arithmetic [[MExpr]] over primitives and
-    * numeric literals. */
-  private def parseMeasureExpr(expr: String, name: String): Measure =
-    parsePrimMeasure(expr, name).getOrElse {
-      val toks = lexMeasure(expr)
-      val (node, rest) = parseSum(toks)
-      require(rest.isEmpty, s"unsupported MEASURES expression: $expr")
-      require(!collectPrims(node).exists(_.isInstanceOf[MClassifier]),
-        s"CLASSIFIER() is not numeric — cannot appear in arithmetic: $expr")
-      MExpr(name, node)
-    }
-
-  // -- measure arithmetic: lexer + precedence-climbing parser --
-  private sealed trait MTok
-  private final case class TNum(v: Double) extends MTok
-  private final case class TPrim(m: Measure) extends MTok
-  private final case class TOp(c: Char) extends MTok
-  private case object TLpar extends MTok
-  private case object TRpar extends MTok
-
-  private def lexMeasure(s: String): List[MTok] = {
-    val out = List.newBuilder[MTok]
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c.isWhitespace) i += 1
-      else if ("+-*/".indexOf(c) >= 0) { out += TOp(c); i += 1 }
-      else if (c == '(') { out += TLpar; i += 1 }
-      else if (c == ')') { out += TRpar; i += 1 }
-      else if (c.isDigit || c == '.') {
-        val j0 = i
-        while (i < s.length && (s.charAt(i).isDigit || s.charAt(i) == '.'))
-          i += 1
-        out += TNum(s.substring(j0, i).toDouble)
-      } else {
-        // identifier, optionally a call with balanced args, optionally
-        // a dotted column ref — the whole span is ONE primitive
-        val j0 = i
-        while (i < s.length &&
-            (s.charAt(i).isLetterOrDigit || s.charAt(i) == '_')) i += 1
-        if (i < s.length && s.charAt(i) == '(') {
-          var depth = 1
-          i += 1
-          while (i < s.length && depth > 0) {
-            if (s.charAt(i) == '(') depth += 1
-            else if (s.charAt(i) == ')') depth -= 1
-            i += 1
-          }
-          require(depth == 0, s"unbalanced parens in measure term: $s")
-        } else if (i < s.length && s.charAt(i) == '.') {
-          i += 1
-          while (i < s.length &&
-              (s.charAt(i).isLetterOrDigit || s.charAt(i) == '_' ||
-                s.charAt(i) == '*')) i += 1
-        }
-        val span = s.substring(j0, i)
-        val prim = parsePrimMeasure(span, "")
-        require(prim.isDefined, s"unsupported term in MEASURES arithmetic: '$span'")
-        out += TPrim(prim.get)
+        value
       }
     }
-    out.result()
-  }
-
-  private def parseSum(ts: List[MTok]): (MNode, List[MTok]) = {
-    var (l, rest) = parseProduct(ts)
-    var done = false
-    while (!done) rest match {
-      case TOp(op) :: tail if op == '+' || op == '-' =>
-        val (r, rest2) = parseProduct(tail)
-        l = MNBin(op, l, r); rest = rest2
-      case _ => done = true
-    }
-    (l, rest)
-  }
-
-  private def parseProduct(ts: List[MTok]): (MNode, List[MTok]) = {
-    var (l, rest) = parseFactor(ts)
-    var done = false
-    while (!done) rest match {
-      case TOp(op) :: tail if op == '*' || op == '/' =>
-        val (r, rest2) = parseFactor(tail)
-        l = MNBin(op, l, r); rest = rest2
-      case _ => done = true
-    }
-    (l, rest)
-  }
-
-  private def parseFactor(ts: List[MTok]): (MNode, List[MTok]) = ts match {
-    case TOp('-') :: tail =>
-      val (x, rest) = parseFactor(tail); (MNNeg(x), rest)
-    case TOp('+') :: tail => parseFactor(tail)
-    case TNum(v) :: tail => (MNLit(v), tail)
-    case TPrim(m) :: tail => (MNPrim(m), tail)
-    case TLpar :: tail =>
-      val (x, rest) = parseSum(tail)
-      rest match {
-        case TRpar :: t2 => (x, t2)
-        case _ => throw new IllegalArgumentException(
-          "unbalanced parens in MEASURES arithmetic")
+    case Nav(_, v, i, k) => _ => { // LAST: a ring of the k+1 newest values
+      val mine = in(v); val ring = new Array[Any](k + 1); var n = 0L
+      (vn, r) => {
+        if (mine(vn)) { ring((n % (k + 1)).toInt) = cell(r, i); n += 1 }
+        // k back from the newest is the ring's oldest slot
+        if (n <= k) null else ring((n % (k + 1)).toInt)
       }
-    case other => throw new IllegalArgumentException(
-      s"unsupported MEASURES arithmetic at: $other")
+    }
+    case Agg(kind, v, arg) => _ => {
+      val mine = if (v == "") (_: String) => true else in(v)
+      val acc = new Acc(kind)
+      (vn, r) => { if (mine(vn)) acc.add(arg(r)); acc.value }
+    }
+    case MatchNumber => seq => (_, _) => seq
+    case Classifier => _ => (vn, _) => vn
   }
 
-  private def collectPrims(n: MNode): Seq[Measure] = n match {
-    case MNPrim(m) => Seq(m)
-    case MNNeg(x) => collectPrims(x)
-    case MNBin(_, l, r) => collectPrims(l) ++ collectPrims(r)
-    case _ => Seq.empty
+  /** A compiled MEASURES entry: its output field, whether it is RUNNING,
+    * and a per-match factory of its per-row function. The tree compiles
+    * once, over the vector of its leaves' values. */
+  private final case class Measure(field: StructField, running: Boolean,
+      run: Long => (String, Row) => Any) {
+    def fin(m: Match): Any = {
+      val f = run(m.matchSeq)
+      m.ordered.foldLeft(null: Any) { case (_, (vn, r)) => f(vn, r) }
+    }
   }
+
+  private def compileMeasure(text: String, schema: StructType,
+      in: String => String => Boolean): Measure = {
+    val up = text.toUpperCase(java.util.Locale.ROOT)
+    val (body, running) =
+      if (up.startsWith("RUNNING ")) (text.substring(8), true)
+      else if (up.startsWith("FINAL ")) (text.substring(6), false)
+      else (text, false)
+    val (tree, name) = CatalystSqlParser.parseExpression(body) match {
+      case Alias(t, n) => (t, n)
+      case _ => throw new IllegalArgumentException(s"MEASURES entry needs AS: $text")
+    }
+    if (isPredicate(tree)) unsupported(tree)
+    val leaves = scala.collection.mutable.ArrayBuffer.empty[Leaf]
+    var bare: Option[Leaf] = None // the whole entry is one leaf
+    val fn = interpret[IndexedSeq[Any]](tree, { e =>
+      val j = leaves.size
+      leaves += leafOf(schema)(e)
+      if (e eq tree) bare = Some(leaves(j))
+      vals => vals(j)
+    })
+    leaves.foreach {
+      case Nav(k @ ("PREV" | "NEXT"), _, _, _) => throw new IllegalArgumentException(
+        s"$k() navigates physical rows and is DEFINE-only: $text")
+      case _ =>
+    }
+    require(bare.contains(Classifier) || !leaves.contains(Classifier),
+      s"CLASSIFIER() is not numeric — cannot appear in arithmetic: $text")
+    val field = bare match {
+      case Some(Agg("COUNT", _, _) | MatchNumber) => StructField(name, LongType, nullable = false)
+      case Some(Classifier) => StructField(name, StringType, nullable = false)
+      case Some(Col(_, i)) => StructField(name, schema(i).dataType)
+      case Some(Nav(_, _, i, _)) => StructField(name, schema(i).dataType)
+      case _ => StructField(name, DoubleType)
+    }
+    val runs = leaves.map(measureLeaf(in)).toIndexedSeq
+    // CLASSIFIER() is per row in ALL ROWS PER MATCH, FINAL or not
+    Measure(field, running || bare.contains(Classifier),
+      seq => { val states = runs.map(_(seq)); (vn, r) => fn(states.map(_(vn, r))) })
+  }
+
+  /** Injective string key over the PARTITION BY values: a value keeps
+    * its `String.valueOf` form, with U+0000 and U+001F escaped by a
+    * U+0000; NULL is U+0000 'n'; values join with U+001F. So NULL and the
+    * string 'null' are two keys, as are ("a␟b", "c") and ("a", "b␟c")
+    * (␟ = U+001F); a value holding neither character keeps its old key. */
+  private def partitionKey(vals: Seq[Any]): String = vals.map {
+    case null => "\u0000n"
+    case v => String.valueOf(v).replace("\u0000", "\u0000\u0000")
+      .replace("\u001f", "\u0000\u001f")
+  }.mkString("\u001f")
+
+  /** Spark's default ORDER BY over one column's values: NULL sorts lowest
+    * (NULLS FIRST ascending, NULLS LAST descending) and the rest by their
+    * type's natural order — LONG keys exactly, not through a double. */
+  private def sortCompare(a: Any, b: Any): Int =
+    if (a == null || b == null) java.lang.Boolean.compare(b == null, a == null)
+    else a.asInstanceOf[Comparable[Any]].compareTo(b)
 
   /** Split on `sep` at paren depth 0 (so COUNT(a, b) survives). */
   private def splitTopLevel(s: String, sep: Char): Seq[String] = {
@@ -753,15 +478,6 @@ object MatchRecognizeSql {
     }
     val partCols = splitTopLevel(section("PARTITION BY").get, ',')
       .map(_.trim).filter(_.nonEmpty)
-    val sortSpecs: Seq[Column] = splitTopLevel(section("ORDER BY").get, ',')
-      .map(_.trim).filter(_.nonEmpty).map { sp =>
-        val parts = sp.split("\\s+")
-        if (parts.length > 1 && parts(1).equalsIgnoreCase("DESC"))
-          col(parts(0)).desc
-        else col(parts(0))
-      }
-    val measures = parseMeasures(section("MEASURES")
-      .getOrElse(throw new IllegalArgumentException("MEASURES required")))
     val patternText0 = {
       val p = section("PATTERN").get.trim
       require(p.startsWith("(") && p.endsWith(")"), s"PATTERN needs (...): $p")
@@ -808,15 +524,22 @@ object MatchRecognizeSql {
             .map(_.trim).filter(_.nonEmpty).toSet
         }.toMap
       }.getOrElse(Map.empty)
+    val inSchema = df.schema
+    val measures = splitTopLevel(section("MEASURES")
+      .getOrElse(throw new IllegalArgumentException("MEASURES required")), ',')
+      .map(_.trim).filter(_.nonEmpty)
+      .map(compileMeasure(_, inSchema, v => subsets.getOrElse(v, Set(v))))
 
-    val defines: Map[String, (Row, MatchRecognize.MatchCtx[Row]) => Boolean] =
+    val defines: Map[String, (Row, Ctx) => Boolean] =
       section("DEFINE").map { d =>
         splitTopLevel(d, ',').map(_.trim).filter(_.nonEmpty).map { entry =>
           val asIdx = findKeyword(entry, "AS")
           require(asIdx > 0, s"DEFINE entry needs AS: $entry")
           val v = entry.substring(0, asIdx).trim
-          val pred = new PredParser(entry.substring(asIdx + 2).trim, v).parse()
-          v -> ((t: Row, c: MatchRecognize.MatchCtx[Row]) => pred.eval(t, c))
+          val tree = CatalystSqlParser.parseExpression(entry.substring(asIdx + 2))
+          if (!isPredicate(tree)) unsupported(tree)
+          val pred = interpret[(Row, Ctx)](tree, e => defineLeaf(v)(leafOf(inSchema)(e)))
+          v -> ((t: Row, c: Ctx) => pred((t, c)).asInstanceOf[Boolean])
         }.toMap
       }.getOrElse(Map.empty)
 
@@ -839,255 +562,33 @@ object MatchRecognizeSql {
 
     // output schema: ALL ROWS = every input column + measures;
     // ONE ROW = partition cols + measures
-    val inSchema = df.schema
-    def colType(name: String): DataType = inSchema(name).dataType
-    val measureFields = measures.map(_.measure).map {
-      case MCount(n, _) => StructField(n, LongType, nullable = false)
-      case MMatchNum(n) => StructField(n, LongType, nullable = false)
-      case MClassifier(n) => StructField(n, StringType, nullable = false)
-      case MNav(n, _, _, c, _) => StructField(n, colType(c), nullable = true)
-      case MAgg(n, _, _, _) => StructField(n, DoubleType, nullable = true)
-      case MExpr(n, _) => StructField(n, DoubleType, nullable = true)
-    }
     val outFields =
       (if (allRows) inSchema.fields.toSeq
-       else partCols.map(c => StructField(c, colType(c)))) ++ measureFields
+       else partCols.map(c => StructField(c, inSchema(c).dataType))) ++ measures.map(_.field)
     val outSchema = StructType(outFields.toArray)
 
     val partIdx = partCols.map(inSchema.fieldIndex)
-    val keyFn = (r: Row) =>
-      partIdx.map(i => String.valueOf(r.get(i))).mkString("\u001f")
-
-    // SUBSET expansion: add each union variable's rows (row order) to
-    // the captured map, so measure resolution is uniform
-    def withSubsets(m: MatchRecognize.Match[String, Row])
-        : MatchRecognize.Match[String, Row] =
-      if (subsets.isEmpty) m
-      else m.copy(captured = m.captured ++ subsets.map { case (u, vs) =>
-        u -> m.ordered.collect { case (n, r) if vs.contains(n) => r }
-      })
-
-    // measure values: each measure reads from its semantics' view —
-    // `fin` = the whole match (FINAL), `run` = the prefix up to the
-    // current output row (RUNNING; identical to fin in ONE ROW mode).
-    // CLASSIFIER is per-row in ALL ROWS mode, the last row's variable
-    // in ONE ROW.
-    def evalPrim(meas: Measure, m: MatchRecognize.Match[String, Row],
-        classifier: => String): Any = meas match {
-      case MCount(_, "") => m.captured.valuesIterator.map(_.size).sum.toLong
-      case MCount(_, v) => m.captured.get(v).map(_.size).getOrElse(0).toLong
-      case MMatchNum(_) => m.matchSeq
-      case MClassifier(_) => classifier
-      case MNav(_, kind, v, c, off) =>
-        val rows = m.captured.getOrElse(v, Seq.empty)
-        val rOpt =
-          if (kind == "first") rows.lift(off)
-          else rows.lift(rows.size - 1 - off) // last: off back from the end
-        rOpt match {
-          case Some(r) =>
-            val i = r.fieldIndex(c)
-            if (r.isNullAt(i)) null else r.get(i)
-          case None => null // fewer than off+1 mapped rows
-        }
-      case MAgg(_, kind, v, rowExpr) =>
-        val xs = m.captured.get(v).getOrElse(Seq.empty).flatMap { r =>
-          rowExpr.eval(r) match {
-            case null => None
-            case n: Number => Some(n.doubleValue())
-            case other => throw new IllegalArgumentException(
-              s"$kind over non-numeric value: $other")
-          }
-        }
-        if (xs.isEmpty) null // SQL aggregates ignore nulls; empty -> NULL
-        else kind match {
-          case "sum" => xs.sum
-          case "avg" => xs.sum / xs.size
-          case "min" => xs.min
-          case "max" => xs.max
-        }
-      case e: MExpr => throw new IllegalStateException(
-        s"nested MExpr: ${e.name}") // parser never nests MExpr in MExpr
-    }
-    // NULL-propagating numeric coercion + tree eval for MExpr
-    // (division by zero → NULL, the tolerant analytical convention —
-    // documented deviation from ANSI's error)
-    def toD(a: Any): java.lang.Double = a match {
-      case null => null
-      case n: Number => n.doubleValue()
-      case other => throw new IllegalArgumentException(
-        s"non-numeric value in MEASURES arithmetic: $other")
-    }
-    def evalNode(node: MNode, m: MatchRecognize.Match[String, Row],
-        classifier: => String): java.lang.Double = node match {
-      case MNLit(v) => v
-      case MNPrim(p) => toD(evalPrim(p, m, classifier))
-      case MNNeg(x) =>
-        val a = evalNode(x, m, classifier)
-        if (a == null) null else -a
-      case MNBin(op, l, r) =>
-        val a = evalNode(l, m, classifier)
-        val b = evalNode(r, m, classifier)
-        if (a == null || b == null) null
-        else op match {
-          case '+' => a + b
-          case '-' => a - b
-          case '*' => a * b
-          case '/' => if (b == 0.0) null else a / b
-        }
-    }
-    def measureVals(fin: MatchRecognize.Match[String, Row],
-        run: MatchRecognize.Match[String, Row],
-        classifier: => String): Seq[Any] = measures.map { spec =>
-      val m = if (spec.running) run else fin
-      spec.measure match {
-        case MExpr(_, node) => evalNode(node, m, classifier)
-        case prim => evalPrim(prim, m, classifier)
-      }
-    }
-
-    val anyRunning = measures.exists(_.running)
-
-    // Incremental RUNNING evaluation: one forward pass per match with
-    // O(1) state per measure — NOT a prefix-Match per output row (that
-    // re-aggregates every prefix: O(len²) per match, which a
-    // session-sized match at 100 TB cannot afford). Returns per-row
-    // update functions for the RUNNING measures (null slot = measure
-    // is FINAL / per-row and resolved at emit).
-    def mkRunningFns(matchSeq: Long): Seq[(String, Row) => Any] = {
-      def mem(v: String): String => Boolean =
-        subsets.getOrElse(v, Set(v)).contains _
-      def cell(r: Row, c: String): Any = {
-        val i = r.fieldIndex(c)
-        if (r.isNullAt(i)) null else r.get(i)
-      }
-      // one stateful incremental evaluator per PRIMITIVE occurrence
-      // (each arithmetic leaf owns its own state closure; the combined
-      // fn updates every leaf exactly once per row)
-      def primFn(meas: Measure): (String, Row) => Any = meas match {
-        case MCount(_, "") =>
-          var n = 0L
-          (_, _) => { n += 1; n }
-        case MCount(_, v) =>
-          val m = mem(v); var n = 0L
-          (vn, _) => { if (m(vn)) n += 1; n }
-        case MNav(_, "first", v, c, off) =>
-          // capture the (off+1)-th mapped row's value once it arrives;
-          // null until then (RUNNING: navigation beyond rows-so-far)
-          val m = mem(v); var seen = 0; var value: Any = null
-          (vn, r) => {
-            if (seen <= off && m(vn)) {
-              if (seen == off) value = cell(r, c)
-              seen += 1
-            }
-            value
-          }
-        case MNav(_, _, v, c, off) => // last: ring of the off+1 newest
-          val m = mem(v)
-          val ring = new Array[Any](off + 1)
-          var n = 0L
-          (vn, r) => {
-            if (m(vn)) { ring((n % (off + 1)).toInt) = cell(r, c); n += 1 }
-            // off back from the newest = the ring's oldest slot, valid
-            // only once off+1 values have been seen
-            if (n <= off) null else ring((n % (off + 1)).toInt)
-          }
-        case MAgg(_, kind, v, rowExpr) =>
-          val m = mem(v)
-          var sum = 0.0; var n = 0L
-          var mn = Double.PositiveInfinity; var mx = Double.NegativeInfinity
-          (vn, r) => {
-            if (m(vn)) rowExpr.eval(r) match {
-              case null => ()
-              case x: Number =>
-                val d = x.doubleValue()
-                sum += d; n += 1
-                if (d < mn) mn = d
-                if (d > mx) mx = d
-              case other => throw new IllegalArgumentException(
-                s"RUNNING $kind over non-numeric value: $other")
-            }
-            if (n == 0) null
-            else kind match {
-              case "sum" => sum
-              case "avg" => sum / n
-              case "min" => mn
-              case "max" => mx
-            }
-          }
-        case MMatchNum(_) => (_, _) => matchSeq
-        case other => throw new IllegalStateException(
-          s"no incremental form for $other")
-      }
-      def toD(a: Any): java.lang.Double = a match {
-        case null => null
-        case n: Number => n.doubleValue()
-        case other => throw new IllegalArgumentException(
-          s"non-numeric value in MEASURES arithmetic: $other")
-      }
-      def nodeFn(node: MNode): (String, Row) => java.lang.Double = node match {
-        case MNLit(v) => (_, _) => v
-        case MNPrim(p) =>
-          val f = primFn(p)
-          (vn, r) => toD(f(vn, r))
-        case MNNeg(x) =>
-          val f = nodeFn(x)
-          (vn, r) => { val a = f(vn, r); if (a == null) null else -a }
-        case MNBin(op, l, r0) =>
-          val fl = nodeFn(l); val fr = nodeFn(r0)
-          (vn, r) => {
-            val a = fl(vn, r); val b = fr(vn, r)
-            if (a == null || b == null) null
-            else op match {
-              case '+' => a + b
-              case '-' => a - b
-              case '*' => a * b
-              case '/' => if (b == 0.0) null else a / b
-            }
-          }
-      }
-      measures.map { spec =>
-        if (!spec.running) null
-        else spec.measure match {
-          case MExpr(_, node) => nodeFn(node)
-          // MATCH_NUMBER / CLASSIFIER: running ≡ final / per-row —
-          // resolved at emit
-          case MMatchNum(_) | MClassifier(_) => null
-          case prim => primFn(prim)
-        }
-      }
-    }
+    val keyFn = (r: Row) => partitionKey(partIdx.map(r.get))
 
     // per-match emitters, shared by the batch and streaming paths
-    def emitAllRows(m0: MatchRecognize.Match[String, Row]): Seq[Row] = {
+    def emitAllRows(m0: Match): Seq[Row] = {
       // one output row per matched input row: the full source row plus
-      // the measures (FINAL over the whole match, RUNNING via the
-      // incremental pass), CLASSIFIER() varying per row
-      val fin = withSubsets(m0)
-      // FINAL values once per match (classifier slot overridden per
-      // row at emit)
-      val finTemplate = measureVals(fin, fin,
-        if (fin.ordered.nonEmpty) fin.ordered.last._1 else "")
-      val runFns = if (anyRunning) mkRunningFns(m0.matchSeq) else null
+      // the measures — FINAL once per match, RUNNING from a fresh
+      // incremental state per match
+      val vals: Seq[Either[Any, (String, Row) => Any]] = measures.map { s =>
+        if (s.running) Right(s.run(m0.matchSeq)) else Left(s.fin(m0))
+      }
       m0.ordered.flatMap { case (varName, r) =>
         // RUNNING state must advance on EVERY match row — excluded
         // rows ({- X -}) update it but emit nothing
-        val vals = measures.zipWithIndex.map { case (spec, k) =>
-          spec.measure match {
-            case MClassifier(_) => varName
-            case MMatchNum(_) => m0.matchSeq
-            case _ if spec.running => runFns(k)(varName, r)
-            case _ => finTemplate(k)
-          }
-        }
+        val row = vals.map(_.fold(identity, _(varName, r)))
         if (exclVars.contains(varName)) None
-        else Some(Row.fromSeq(r.toSeq ++ vals))
+        else Some(Row.fromSeq(r.toSeq ++ row))
       }
     }
-    def emitOneRow(m0: MatchRecognize.Match[String, Row]): Row = {
-      val fin = withSubsets(m0)
-      val anyRow = fin.captured.valuesIterator.flatten.next()
-      val partVals = partIdx.map(anyRow.get)
-      Row.fromSeq(partVals ++ measureVals(fin, fin, fin.ordered.last._1))
+    def emitOneRow(m0: Match): Row = {
+      val anyRow = m0.ordered.head._2
+      Row.fromSeq(partIdx.map(anyRow.get) ++ measures.map(_.fin(m0)))
     }
     val groupRunner: (String, IndexedSeq[Row]) => Seq[Row] =
       if (allRows)
@@ -1102,8 +603,7 @@ object MatchRecognizeSql {
         val parts = sp.split("\\s+")
         (parts(0), parts.length > 1 && parts(1).equalsIgnoreCase("DESC"))
       }
-    CompiledClause(keyFn, sortSpecs, sortKeys, inSchema, outSchema,
-      groupRunner)
+    CompiledClause(keyFn, sortKeys, inSchema, outSchema, groupRunner)
   }
 
   /** The compiled form of a clause: key/sort extraction plus a
@@ -1112,7 +612,6 @@ object MatchRecognizeSql {
     * in memory). */
   private final case class CompiledClause(
       keyFn: Row => String,
-      sortSpecs: Seq[Column],
       sortKeys: Seq[(String, Boolean)],
       inSchema: StructType,
       outSchema: StructType,
@@ -1123,11 +622,10 @@ object MatchRecognizeSql {
     * exchange's spill-safe machinery. */
   def apply(df: DataFrame, clause: String): DataFrame = {
     val plan = compile(df, clause)
-    // capture ONLY the serializable pieces — the CompiledClause holds
-    // Columns (sortSpecs), which must stay on the driver
     val runner = plan.groupRunner
     df.groupByKey(plan.keyFn)(Encoders.STRING)
-      .flatMapSortedGroups(plan.sortSpecs: _*) {
+      .flatMapSortedGroups(plan.sortKeys.map { case (c, desc) =>
+        if (desc) col(c).desc else col(c) }: _*) {
         (k: String, it: Iterator[Row]) =>
           runner(k, it.toIndexedSeq).iterator
       }(Encoders.row(plan.outSchema))
@@ -1249,7 +747,7 @@ object MatchRecognizeSql {
     val ord: Ordering[Row] = new Ordering[Row] {
       override def compare(a: Row, b: Row): Int = {
         keys.foreach { case (i, desc) =>
-          val c = compareVals(a.get(i), b.get(i))
+          val c = sortCompare(a.get(i), b.get(i))
           if (c != 0) return if (desc) -c else c
         }
         0

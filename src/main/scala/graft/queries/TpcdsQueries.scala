@@ -1051,12 +1051,12 @@ object TpcdsQueries {
         val cur = yearly
           .select(col("o_year"), col("p_brand"), col("net_qty").as("cur_qty"))
         val prev = yearly
-          .select(col("o_year").as("prev_year"), col("p_brand"),
+          .select(col("o_year").as("prev_year"), col("p_brand").as("prev_brand"),
             col("net_qty").as("prev_qty"))
-        cur.join(prev, cur("o_year") === prev("prev_year") + 1 &&
-            cur("p_brand") === prev("p_brand"))
+        cur.join(prev, col("o_year") === col("prev_year") + 1 &&
+            col("p_brand") === col("prev_brand"))
           .filter(col("cur_qty") < col("prev_qty"))
-          .select(cur("o_year"), cur("p_brand"), col("prev_qty"),
+          .select(col("o_year"), col("p_brand"), col("prev_qty"),
             col("cur_qty"), (col("prev_qty") - col("cur_qty")).as("decline"))
       },
       Some("""WITH chans AS (

@@ -790,6 +790,67 @@ class PipelineOpsSpec extends SparkSpec {
     }
   }
 
+  test("MatchRecognizeSql: malformed expressions fail in Catalyst's parser, unsupported nodes by name") {
+    import graft.operators.MatchRecognizeSql
+    import org.apache.spark.sql.catalyst.parser.ParseException
+    val df = Seq((1L, 1L, 1.0)).toDF("user_id", "seq", "value")
+    def clause(measures: String, define: String) = s"""PARTITION BY user_id
+      ORDER BY seq
+      MEASURES $measures
+      PATTERN (A B)
+      DEFINE $define"""
+    // a malformed DEFINE or MEASURES expression: Spark's syntax error
+    // with its position in the expression text
+    val p1 = intercept[ParseException] {
+      MatchRecognizeSql(df, clause("COUNT(*) AS n", "B AS B.value < PREV(B.value"))
+    }
+    assert(p1.getMessage.contains("PARSE_SYNTAX_ERROR") && p1.getMessage.contains("pos"),
+      p1.getMessage)
+    val p2 = intercept[ParseException] {
+      MatchRecognizeSql(df, clause("FIRST(A.value) / / 2 AS d", "B AS B.value > 0"))
+    }
+    assert(p2.getMessage.contains("PARSE_SYNTAX_ERROR") && p2.getMessage.contains("pos"),
+      p2.getMessage)
+    // well-formed SQL the interpreter does not take: named, not mis-run
+    def unsupported(measures: String, define: String): String =
+      intercept[IllegalArgumentException] {
+        MatchRecognizeSql(df, clause(measures, define))
+      }.getMessage
+    assert(unsupported("COUNT(*) AS n", "B AS B.value BETWEEN 1 AND 2")
+      .toLowerCase.contains("between"))
+    assert(unsupported("CASE WHEN LAST(B.value) > 0 THEN 1 ELSE 0 END AS c",
+      "B AS B.value > 0").contains("CASE"))
+    assert(unsupported("COUNT(*) AS n", "B AS value > 0").contains("unqualified column 'value'"))
+    assert(unsupported("COUNT(*) AS n", "B AS B.value > 0 AND B.value")
+      .contains("B.value"))
+    assert(unsupported("PREV(B.value) AS p", "B AS B.value > 0").contains("DEFINE-only"))
+    assert(unsupported("COUNT(*) AS n", "B AS MATCH_NUMBER() > 0").contains("MEASURES-only"))
+  }
+
+  test("MatchRecognizeSql: PARTITION BY keys are injective (NULL vs 'null', embedded separators)") {
+    import graft.operators.MatchRecognizeSql
+    // PATTERN (X Y) matches only when an 'x' row and a 'y' row share one
+    // partition; each pair below is two DIFFERENT partitions
+    def matches(df: org.apache.spark.sql.DataFrame, partitionBy: String): Long =
+      MatchRecognizeSql(df, s"""
+        PARTITION BY $partitionBy
+        ORDER BY seq
+        MEASURES COUNT(*) AS n
+        PATTERN (X Y)
+        DEFINE X AS X.etype = 'x', Y AS Y.etype = 'y'""").count()
+    val nulls = Seq[(Option[String], Long, String)](
+      (None, 1L, "x"), (Some("null"), 2L, "y")).toDF("k", "seq", "etype")
+    assert(matches(nulls, "k") == 0, "NULL and 'null' shared a partition")
+    val seps = Seq(("a\u001fb", "c", 1L, "x"), ("a", "b\u001fc", 2L, "y"))
+      .toDF("k1", "k2", "seq", "etype")
+    assert(matches(seps, "k1, k2") == 0, "embedded separators merged two keys")
+    // equal keys, NULL included, still group
+    val same = Seq[(Option[String], Long, String)](
+      (None, 1L, "x"), (None, 2L, "y"), (Some("a\u0000"), 3L, "x"),
+      (Some("a\u0000"), 4L, "y")).toDF("k", "seq", "etype")
+    assert(matches(same, "k") == 2)
+  }
+
   test("matchRecognize: alternation backtracks into the next branch") {
     // (A A | A) P over [x, purchase]: the two-row first branch cannot
     // leave a row for P — the single-row second branch must be taken
@@ -972,7 +1033,8 @@ class PipelineOpsSpec extends SparkSpec {
       PARTITION BY user_id
       ORDER BY seq
       MEASURES COUNT(E.*) AS n_engage, SUM(E.value) AS v_engage,
-               FIRST(E.etype) AS first_e, LAST(E.etype) AS last_e
+               FIRST(E.etype) AS first_e, LAST(E.etype) AS last_e,
+               COUNT(*) AS n_all
       PATTERN (V C P)
       SUBSET E = (V, C)
       DEFINE V AS V.etype = 'view',
@@ -984,6 +1046,8 @@ class PipelineOpsSpec extends SparkSpec {
     assert(r.getAs[Double]("v_engage") == 5.0)
     assert(r.getAs[String]("first_e") == "view")
     assert(r.getAs[String]("last_e") == "click")
+    // a SUBSET does not count its members' rows twice
+    assert(r.getAs[Long]("n_all") == 3L)
   }
 
   test("MatchRecognizeSql: AFTER MATCH SKIP TO LAST var via SQL text") {

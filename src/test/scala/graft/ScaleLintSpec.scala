@@ -185,6 +185,24 @@ class ScaleLintSpec extends SparkSpec {
       s"keep pane rows in StatefulV2.SessionLog; MapState pane buffers:\n${calls.mkString("\n")}")
   }
 
+  test("no findPrefixMatchOf tokenizer under src/main") {
+    // one expression grammar in the engine: Spark SQL's. MATCH_RECOGNIZE
+    // DEFINE/MEASURES go through CatalystSqlParser, so a hand-rolled
+    // regex tokenizer is a second grammar. Allowed: none
+    val allow = Seq.empty[String]
+    val calls = mainSources.flatMap { case (p, lines) =>
+      lines.zipWithIndex.collect {
+        case (line, i) if line.contains("findPrefixMatchOf") => (p.toString, s"$p:${i + 1}")
+      }
+    }
+    val outside = calls.collect { case (p, at) if !allow.exists(p.endsWith) => at }
+    assert(outside.isEmpty,
+      s"parse expressions with CatalystSqlParser; regex tokenizers:\n${outside.mkString("\n")}")
+    // the allowlist must not rot: every entry still tokenizes
+    val stale = allow.filterNot(a => calls.exists(_._1.endsWith(a)))
+    assert(stale.isEmpty, s"stale allowlist entries: $stale")
+  }
+
   test("every driver-side collect in main sources declares its bound") {
     // 4th job-killer: .collect()/.head()/.first() materializes to the
     // driver — fine ONLY for provably bounded fit artifacts (a 1-row

@@ -2687,6 +2687,46 @@ class StatefulV2Spec extends SparkSpec {
     }
   }
 
+  test("streaming MATCH_RECOGNIZE SQL sorts a session as batch ORDER BY does: NULLs, LONGs above 2^53") {
+    withRocksDb {
+      import graft.operators.MatchRecognizeSql
+      // one timestamp, so the secondary key `seq` orders the session:
+      // NULL, 2^53 and 2^53 + 1 (equal as doubles). Spark sorts NULLS
+      // FIRST ascending and NULLS LAST descending; each pattern matches
+      // only in that order
+      val big = 1L << 53
+      val rows = Seq((1L, t(1), Option(big + 1), "c"), (1L, t(1), Option(big), "b"),
+        (1L, t(1), Option.empty[Long], "a"))
+      Seq("seq" -> "A B C", "seq DESC" -> "C B A").foreach { case (seqOrder, pattern) =>
+        val clause = s"""
+          PARTITION BY user_id
+          ORDER BY ts, $seqOrder
+          MEASURES COUNT(*) AS n
+          ONE ROW PER MATCH
+          PATTERN ($pattern)
+          DEFINE A AS A.etype = 'a', B AS B.etype = 'b', C AS C.etype = 'c'"""
+        val mem = MemoryStream[(Long, java.sql.Timestamp, Option[Long], String)]
+        val df = mem.toDF().toDF("user_id", "ts", "seq", "etype")
+        val out = MatchRecognizeSql.stream(df, clause,
+          tsCol = "ts", delay = "0 seconds", gapMs = 10000L)
+        val table = freshTable()
+        val q = startMemorySink(out, table)
+        mem.addData(rows: _*)
+        q.processAllAvailable()
+        mem.addData((9L, t(50), Option(0L), "noise"))
+        q.processAllAvailable()
+        mem.addData((9L, t(55), Option(0L), "noise"))
+        q.processAllAvailable()
+        val streamed = spark.table(table).as[(Long, Long)].collect().toSet
+        q.stop()
+        val batch = MatchRecognizeSql(rows.toDF("user_id", "ts", "seq", "etype"), clause)
+          .as[(Long, Long)].collect().toSet
+        assert(batch == Set((1L, 3L)), s"ORDER BY ts, $seqOrder: batch $batch")
+        assert(streamed == batch, s"ORDER BY ts, $seqOrder: stream $streamed != batch $batch")
+      }
+    }
+  }
+
   // ===== r19: Multimap / OrderedList user-state KINDS (VERDICT r18
   // #6 — MultimapState.java:33, OrderedListState.java:28 as thin
   // encodings over MapState with range-read support)
