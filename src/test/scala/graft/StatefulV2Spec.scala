@@ -2850,4 +2850,186 @@ class StatefulV2Spec extends SparkSpec {
       q2.stop()
     }
   }
+
+  /** Feeds `chunks` to `op`, one micro-batch each, and returns the
+    * output batches by batch id: each batch's rows with byte arrays
+    * as Seqs, stably sorted by their first column (a key's rows keep
+    * their emission order). `restartAfter = i` stops the query after
+    * chunk i and resumes it from the same checkpoint. */
+  private def replayChunks[I: org.apache.spark.sql.Encoder](
+      chunks: Seq[Seq[I]], restartAfter: Int = -1)(
+      op: org.apache.spark.sql.Dataset[I] => org.apache.spark.sql.Dataset[_])
+      : Seq[(Long, Seq[Seq[Any]])] = {
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt-replay").toString
+    val out = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Seq[Seq[Any]])]()
+    val mem = MemoryStream[I]
+    def start() = op(mem.toDS()).toDF().writeStream
+      .option("checkpointLocation", ckpt)
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+        val rows = b.collect().toSeq.map(_.toSeq.map {
+          case a: Array[Byte] => a.toSeq
+          case x => x
+        })
+        if (rows.nonEmpty) out.add((id, rows.sortBy(_.head.toString)))
+        ()
+      }.start()
+    var q = start()
+    chunks.zipWithIndex.foreach { case (c, i) =>
+      mem.addData(c: _*)
+      q.processAllAvailable()
+      if (i == restartAfter) { q.stop(); q = start() }
+    }
+    q.stop()
+    import scala.jdk.CollectionConverters._
+    out.asScala.toSeq
+  }
+
+  /** A restarted run's output equals a one-shot run's; every key's
+    * revs (column `revCol`, when given) run 1, 2, 3, … */
+  private def assertRestartMatchesOneShot[I: org.apache.spark.sql.Encoder](
+      chunks: Seq[Seq[I]], revCol: Option[Int])(
+      op: org.apache.spark.sql.Dataset[I] => org.apache.spark.sql.Dataset[_]): Unit =
+    withRocksDb {
+      val oneShot = replayChunks(chunks)(op)
+      val restarted = replayChunks(chunks, restartAfter = chunks.length / 2 - 1)(op)
+      assert(oneShot.nonEmpty)
+      assert(restarted == oneShot,
+        s"restart drift:\n restarted=${restarted.take(3)}\n  one-shot=${oneShot.take(3)}")
+      revCol.foreach { c =>
+        oneShot.flatMap(_._2).groupBy(_.head).foreach { case (k, rs) =>
+          assert(rs.map(_(c)) == (1L to rs.length.toLong), s"key $k revs ${rs.map(_(c))}")
+        }
+      }
+    }
+
+  test("tdigestQuantiles: output and rev continuity across a query restart == one-shot run") {
+    val rnd = new scala.util.Random(61L)
+    val rows = IndexedSeq.fill(2000)((1L + rnd.nextInt(3), math.exp(rnd.nextDouble() * 4)))
+    assertRestartMatchesOneShot(rows.grouped(400).toSeq, Some(1)) { ds =>
+      StatefulV2.tdigestQuantiles(ds, compression = 50.0, qs = Seq(0.1, 0.5, 0.9))
+    }
+  }
+
+  test("sampleFixedPerKey: output and rev continuity across a query restart == one-shot run") {
+    val rnd = new scala.util.Random(62L)
+    val rows = IndexedSeq.tabulate(1200)(i => (1L + rnd.nextInt(4), i.toLong))
+    assertRestartMatchesOneShot(rows.grouped(300).toSeq, Some(1)) { ds =>
+      StatefulV2.sampleFixedPerKey(ds, k = 6, seed = 9L)
+    }
+  }
+
+  test("approxDistinct: output and rev continuity across a query restart == one-shot run") {
+    val rnd = new scala.util.Random(63L)
+    val rows = IndexedSeq.fill(2400)((1L + rnd.nextInt(3),
+      if (rnd.nextInt(50) == 0) null else "item" + rnd.nextInt(900)))
+    assertRestartMatchesOneShot(rows.grouped(600).toSeq, Some(1)) { ds =>
+      StatefulV2.approxDistinct(ds, lgK = 10)
+    }
+  }
+
+  test("groupIntoBatchesTws: buffered remainders survive a query restart == one-shot run") {
+    val rnd = new scala.util.Random(64L)
+    val rows = IndexedSeq.tabulate(150)(i => (1L + rnd.nextInt(4), i.toLong))
+    assertRestartMatchesOneShot(rows.grouped(25).toSeq, None) { ds =>
+      StatefulV2.groupIntoBatchesTws(ds, maxSize = 7, flushTimeoutMs = -1L)
+    }
+  }
+
+  test("groupIntoBatchesByWeight: buffered remainders survive a query restart == one-shot run") {
+    val rnd = new scala.util.Random(65L)
+    // value = id * 1000 + weight; weights 0..24 against a budget of 20
+    val rows = IndexedSeq.tabulate(150)(i =>
+      (1L + rnd.nextInt(4), i * 1000L + rnd.nextInt(25)))
+    assertRestartMatchesOneShot(rows.grouped(25).toSeq, None) { ds =>
+      StatefulV2.groupIntoBatchesByWeight(ds, maxWeight = 20L,
+        flushTimeoutMs = -1L)(_ % 1000L)
+    }
+  }
+
+  /** Sequential GroupIntoBatches reference for one key's arrivals, one
+    * micro-batch at a time: (micro-batch index, batch) per flush. The
+    * weight check runs before an element joins (an element at or over
+    * the budget goes out alone), the count check after it joins. */
+  private def referenceBatches(chunks: Seq[Seq[Long]], maxSize: Long,
+      maxWeight: Long, weigh: Long => Long): Seq[(Int, Seq[Long])] = {
+    val out = scala.collection.mutable.ArrayBuffer[(Int, Seq[Long])]()
+    val buf = scala.collection.mutable.ArrayBuffer[Long]()
+    var w = 0L
+    chunks.zipWithIndex.foreach { case (c, b) =>
+      def flush(): Unit = { out += ((b, buf.toList)); buf.clear(); w = 0L }
+      c.foreach { v =>
+        val vw = math.max(0L, weigh(v))
+        if (vw >= maxWeight) {
+          if (buf.nonEmpty) flush()
+          out += ((b, List(v)))
+        } else {
+          if (buf.nonEmpty && w + vw > maxWeight) flush()
+          buf += v; w += vw
+          if (buf.length >= maxSize) flush()
+        }
+      }
+    }
+    out.toSeq
+  }
+
+  test("groupIntoBatches property: count and weight modes == sequential reference, per micro-batch") {
+    withRocksDb {
+      // no flush timeout → TimeMode.None, so every flush is a pure
+      // function of arrival order and the micro-batch split
+      def check(chunks: Seq[Seq[(Long, Long)]], maxSize: Long, maxWeight: Long)(
+          op: org.apache.spark.sql.Dataset[(Long, Long)] =>
+            org.apache.spark.sql.Dataset[_]): Unit = {
+        val got = replayChunks(chunks)(op)
+        val keys = chunks.flatten.map(_._1).distinct
+        val want = keys.flatMap { k =>
+          referenceBatches(chunks.map(_.filter(_._1 == k).map(_._2)),
+            maxSize, maxWeight, _ % 1000L).map { case (b, vs) => (b, k, vs) }
+        }.groupBy(_._1).toSeq.sortBy(_._1).map { case (b, rs) =>
+          (b.toLong, rs.map { case (_, k, vs) => Seq[Any](k, vs) }
+            .sortBy(_.head.toString))
+        }
+        assert(got == want, s"\n got=$got\nwant=$want")
+      }
+      val rnd = new scala.util.Random(66L)
+      (1 to 3).foreach { trial =>
+        val maxSize = 1 + rnd.nextInt(5)
+        val maxWeight = 5L + rnd.nextInt(16)
+        val n = 40 + rnd.nextInt(40)
+        // value = id * 1000 + weight: zero weights, weights at or over
+        // the budget, and ordinary ones
+        val rows = IndexedSeq.tabulate(n) { i =>
+          val wt = rnd.nextInt(10) match {
+            case 0 | 1 => 0L
+            case 2 => maxWeight + rnd.nextInt(3)
+            case _ => 1L + rnd.nextInt(maxWeight.toInt - 1)
+          }
+          (1L + rnd.nextInt(3), i * 1000L + wt)
+        }
+        val chunks = scala.collection.mutable.ArrayBuffer[Seq[(Long, Long)]]()
+        var rest: Seq[(Long, Long)] = rows
+        while (rest.nonEmpty) {
+          val (c, r) = rest.splitAt(1 + rnd.nextInt(15)); chunks += c; rest = r
+        }
+        withClue(s"trial $trial, maxSize $maxSize: ") {
+          check(chunks.toSeq, maxSize, Long.MaxValue) { ds =>
+            StatefulV2.groupIntoBatchesTws(ds, maxSize, flushTimeoutMs = -1L)
+          }
+        }
+        withClue(s"trial $trial, maxWeight $maxWeight: ") {
+          check(chunks.toSeq, Long.MaxValue, maxWeight) { ds =>
+            StatefulV2.groupIntoBatchesByWeight(ds, maxWeight,
+              flushTimeoutMs = -1L)(_ % 1000L)
+          }
+        }
+      }
+      // a micro-batch of exactly maxSize rows on an empty buffer goes
+      // out in that same micro-batch
+      val exact = Seq(Seq((1L, 1L), (1L, 2L), (1L, 3L)), Seq((1L, 4L)))
+      check(exact, 3L, Long.MaxValue) { ds =>
+        StatefulV2.groupIntoBatchesTws(ds, maxSize = 3, flushTimeoutMs = -1L)
+      }
+      assert(referenceBatches(exact.map(_.map(_._2)), 3L, Long.MaxValue, _ => 0L) ==
+        Seq((0, Seq(1L, 2L, 3L))))
+    }
+  }
 }
