@@ -597,8 +597,6 @@ object GraftFunctions {
     case other => other.toString.toInt
   }
 
-  /** name → expression builder, shared by the imperative
-    * [[register]] path and the [[graft.GraftExtensions]] injection. */
   /** Evaluate a plan-time array<array<array<float>>> literal into the
     * flat codebook reference object the PQ expressions loop over. */
   private def litBooks(e: Expression): Array[Array[Array[Float]]] = {
@@ -616,6 +614,8 @@ object GraftFunctions {
     Array.tabulate(ad.numElements())(i => ad.getArray(i).toFloatArray())
   }
 
+  /** name → expression builder, shared by the imperative
+    * [[register]] path and the [[graft.GraftExtensions]] injection. */
   private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "vec_dot" -> ((e: Seq[Expression]) => VectorDot(e(0), e(1))),
     "ivf_cells" -> ((e: Seq[Expression]) =>
@@ -674,10 +674,15 @@ object GraftFunctions {
       org.apache.spark.sql.catalyst.expressions
         .BloomFilterMightContain(e(0), e(1))))
 
+  /** Register every builder as a temporary function. A name whose
+    * registry entry already holds the same builder object (an earlier
+    * call, or a [[graft.GraftExtensions]] session) is left as it is. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     builders.foreach { case (name, b) =>
-      reg.createOrReplaceTempFunction(name, b, "built-in")
+      val id = new org.apache.spark.sql.catalyst.FunctionIdentifier(name)
+      if (!reg.lookupFunctionBuilder(id).exists(_ eq b))
+        reg.createOrReplaceTempFunction(name, b, "built-in")
     }
   }
 
@@ -688,6 +693,6 @@ object GraftFunctions {
         new org.apache.spark.sql.catalyst.FunctionIdentifier(name),
         new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
           "graft.functions", name),
-        (e: Seq[Expression]) => b(e)))
+        b))
     }
 }

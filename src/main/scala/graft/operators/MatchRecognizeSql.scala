@@ -127,12 +127,23 @@ object MatchRecognizeSql {
       s"non-numeric value in MATCH_RECOGNIZE arithmetic: $other")
   }
 
+  /** Two integral numbers compare as LONGs, so values above 2^53 that
+    * are equal as doubles still order; any other numeric pair compares
+    * as DOUBLEs. */
   private def compareVals(a: Any, b: Any): Int = (a, b) match {
+    case (x: Number, y: Number) if isIntegral(x) && isIntegral(y) =>
+      java.lang.Long.compare(x.longValue, y.longValue)
     case (x: Number, y: Number) =>
       java.lang.Double.compare(x.doubleValue, y.doubleValue)
     case (x: java.sql.Timestamp, y: java.sql.Timestamp) => x.compareTo(y)
     case (x: Boolean, y: Boolean) => java.lang.Boolean.compare(x, y)
     case _ => String.valueOf(a).compareTo(String.valueOf(b))
+  }
+
+  private def isIntegral(n: Number): Boolean = n match {
+    case _: java.lang.Long | _: java.lang.Integer | _: java.lang.Short |
+        _: java.lang.Byte => true
+    case _ => false
   }
 
   /** Compile a parsed expression into a function of an environment X.

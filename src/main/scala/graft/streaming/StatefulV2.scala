@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders, KeyValueGroupedDataset}
 import org.apache.spark.sql.streaming._
 
 /** Beam State/Timer parity on Spark 4's `transformWithState` — the
@@ -308,102 +308,25 @@ object StatefulV2 {
       new MultimapGroupProcessor[K](drainMarker),
       TimeMode.None(), OutputMode.Append())
 
-  /** Beam GroupIntoBatches (transforms/GroupIntoBatches.java:108) with
-    * real timers: BagState buffer + ValueState count + a processing-time
-    * flush timer per key — the exact state/timer cell layout of the
-    * Beam implementation. */
-  class BatchingProcessor[K, V](maxSize: Int, flushTimeoutMs: Long)(
-      implicit vEnc: Encoder[V])
-      extends StatefulProcessor[K, (K, V), (K, Seq[V])] {
-
-    @transient private var buf: ListState[V] = _
-    @transient private var cnt: ValueState[Long] = _
-    @transient private var armed: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      buf = getHandle.getListState[V]("buf", vEnc, TTLConfig.NONE)
-      cnt = getHandle.getValueState[Long]("cnt", Encoders.scalaLong, TTLConfig.NONE)
-      armed = getHandle.getValueState[Long]("armed", Encoders.scalaLong,
-        TTLConfig.NONE)
-    }
-
-    override def handleInputRows(key: K, rows: Iterator[(K, V)],
-        timers: TimerValues): Iterator[(K, Seq[V])] = {
-      val out = scala.collection.mutable.ArrayBuffer[(K, Seq[V])]()
-      val n0 = if (cnt.exists()) cnt.get() else 0L
-      var n = n0
-      var sizeFlushed = false
-      // buffer locally, persist the remainder in ONE appendList at the
-      // end (per-row appendValue is O(appends-this-batch) per call —
-      // see SessionLog.flush); the store is only read when the batch
-      // spanning it actually flushes
-      val local = scala.collection.mutable.ArrayBuffer[V]()
-      rows.foreach { case (_, v) =>
-        local += v
-        n += 1
-        if (n >= maxSize) {
-          val head = if (!sizeFlushed && n0 > 0) buf.get().toSeq else Seq.empty
-          out += ((key, head ++ local))
-          local.clear(); n = 0
-          sizeFlushed = true
-        }
-      }
-      if (sizeFlushed) buf.clear()
-      if (local.nonEmpty) buf.appendList(toArr(local))
-      cnt.update(n)
-      // Beam's bufferingTimer contract: the timer covers the CURRENT
-      // remainder. Clear + re-arm whenever a flush emptied the buffer
-      // (a stale timer would otherwise fire early for rows buffered
-      // after a size flush); drop it when nothing is pending.
-      if (flushTimeoutMs > 0) {
-        val hadTimer = armed.exists()
-        if (n == 0) {
-          if (hadTimer) { getHandle.deleteTimer(armed.get()); armed.clear() }
-        } else if (sizeFlushed || !hadTimer) {
-          if (hadTimer) getHandle.deleteTimer(armed.get())
-          val at = timers.getCurrentProcessingTimeInMs() + flushTimeoutMs
-          getHandle.registerTimer(at)
-          armed.update(at)
-        }
-      }
-      out.iterator
-    }
-
-    override def handleExpiredTimer(key: K, timers: TimerValues,
-        timer: ExpiredTimerInfo): Iterator[(K, Seq[V])] = {
-      val pending = buf.get().toSeq
-      buf.clear(); cnt.clear(); armed.clear()
-      if (pending.nonEmpty) Iterator((key, pending)) else Iterator.empty
-    }
-  }
-
-  /** GroupIntoBatches via transformWithState: size-capped batches per
-    * key; the remainder flushes when the per-key processing-time timer
-    * fires. With no flush timeout the query runs in TimeMode.None —
-    * ProcessingTime mode makes the engine schedule continuous no-data
-    * micro-batches to advance the timer clock, which is wasted work
-    * when no timers exist. */
-  def groupIntoBatchesTws[K: Encoder, V: Encoder](
-      ds: Dataset[(K, V)], maxSize: Int, flushTimeoutMs: Long)(
-      implicit outEnc: Encoder[(K, Seq[V])]): Dataset[(K, Seq[V])] =
-    ds.groupByKey(_._1).transformWithState(
-      new BatchingProcessor[K, V](maxSize, flushTimeoutMs),
-      if (flushTimeoutMs > 0) TimeMode.ProcessingTime() else TimeMode.None(),
-      OutputMode.Append())
-
-  /** Beam GroupIntoBatches.ofByteSize
-    * (transforms/GroupIntoBatches.java:149) — WEIGHT-capped batches:
-    * a batch flushes BEFORE adding an element that would push the
-    * accumulated weight past `maxWeight` (batches never exceed the
-    * budget), and an element whose own weight reaches the budget
-    * flushes alone immediately. The remainder flushes on the per-key
-    * processing-time timer, exactly as the count-capped
-    * [[BatchingProcessor]] does. This is the streaming form of the
-    * token-budget sequence packing a training-data loader runs
-    * (`pipeline_seq_packing` is the batch twin): weight = token
-    * count, budget = context length. */
-  class WeightBatchingProcessor[K, V](maxWeight: Long, flushTimeoutMs: Long,
-      weigh: V => Long)(implicit vEnc: Encoder[V])
+  /** Beam GroupIntoBatches (transforms/GroupIntoBatches.java:108,
+    * `ofByteSize` at :149) as ONE processor with the Beam
+    * implementation's state/timer cell layout: a BagState buffer, a
+    * (weight, count) ValueState and a processing-time flush timer per
+    * key. For each element, in arrival order:
+    *   - the weight check runs BEFORE it joins: an element whose own
+    *     weight reaches `maxWeight` closes the open batch (arrival order
+    *     preserved) and goes out alone; one that would push the open
+    *     batch past `maxWeight` closes it first, so batches never
+    *     exceed the budget;
+    *   - the count check runs AFTER it joins: a batch that reaches
+    *     `maxSize` elements goes out in the same micro-batch.
+    * The remainder flushes when the key's timer fires. The timer
+    * covers the CURRENT remainder: it is re-armed whenever a flush
+    * emptied the buffer (a stale timer would fire early for rows
+    * buffered after it) and dropped when nothing is pending.
+    * Negative weights count as zero. */
+  class GroupIntoBatchesProcessor[K, V](maxSize: Long, maxWeight: Long,
+      flushTimeoutMs: Long, weigh: V => Long)(implicit vEnc: Encoder[V])
       extends StatefulProcessor[K, (K, V), (K, Seq[V])] {
     require(maxWeight > 0, s"maxWeight must be positive, got $maxWeight")
 
@@ -430,39 +353,37 @@ object StatefulV2 {
       // O(appends + flushes + 1) per key per batch, never O(buffer)
       val pendingNew = scala.collection.mutable.ArrayBuffer[V]()
       var tail: scala.collection.mutable.ArrayBuffer[V] = null
-      def materialize(): Unit = if (tail == null) {
-        tail = scala.collection.mutable.ArrayBuffer[V]()
-        val it = buf.get()
-        while (it.hasNext) tail += it.next()
-        tail ++= pendingNew
-      }
+      var flushed = false
       def flushTail(): Unit = {
-        materialize()
+        if (tail == null) {
+          tail = scala.collection.mutable.ArrayBuffer[V]()
+          val it = buf.get()
+          while (it.hasNext) tail += it.next()
+          tail ++= pendingNew
+        }
         out += ((key, tail.toSeq))
         tail.clear(); w = 0L; cnt = 0L
+        flushed = true
       }
-      var flushed = false
       rows.foreach { case (_, v) =>
         val vw = math.max(0L, weigh(v))
         if (vw >= maxWeight) {
-          // oversize alone: close the open batch first (arrival order
-          // preserved), then emit the element as its own batch
           if (cnt > 0) flushTail()
           out += ((key, Seq(v)))
           flushed = true
         } else {
-          if (cnt > 0 && w + vw > maxWeight) { flushTail(); flushed = true }
+          if (cnt > 0 && w + vw > maxWeight) flushTail()
           if (tail != null) tail += v else pendingNew += v
           w += vw; cnt += 1
+          if (cnt >= maxSize) flushTail()
         }
       }
-      // flushed && tail == null ⟺ every flush was an oversize landing
-      // on an EMPTY buffer (cnt==0 skips flushTail, so the persisted
-      // buf was never materialized and is known empty) — rows buffered
-      // after it sit only in pendingNew and must still append, or they
-      // are silently lost while wc counts them
-      // persist in ONE put/appendList (per-row appendValue is
-      // O(appends-this-batch) per call — see SessionLog.flush)
+      // flushed && tail == null ⟺ every flush was an oversize element
+      // on an EMPTY buffer (the persisted buf is known empty and was
+      // never read) — rows buffered after it sit only in pendingNew
+      // and must still append. Persist in ONE put/appendList (per-row
+      // appendValue is O(appends-this-batch) per call — see
+      // SessionLog.flush).
       if (flushed && tail != null) {
         if (tail.isEmpty) buf.clear() else buf.put(toArr(tail))
       } else if (pendingNew.nonEmpty) buf.appendList(toArr(pendingNew))
@@ -489,16 +410,38 @@ object StatefulV2 {
     }
   }
 
-  /** GroupIntoBatches.ofByteSize via transformWithState: weight-capped
-    * batches per key under `weigh`; the remainder flushes when the
-    * per-key processing-time timer fires (flushTimeoutMs <= 0 → no
-    * timer, TimeMode.None — see [[groupIntoBatchesTws]]). */
+  /** GroupIntoBatches via transformWithState: batches of `maxSize`
+    * elements per key ([[GroupIntoBatchesProcessor]] with only its
+    * count limit); the remainder flushes when the per-key
+    * processing-time timer fires. With no flush timeout the query runs
+    * in TimeMode.None — ProcessingTime mode makes the engine schedule
+    * continuous no-data micro-batches to advance the timer clock,
+    * which is wasted work when no timers exist. */
+  def groupIntoBatchesTws[K: Encoder, V: Encoder](
+      ds: Dataset[(K, V)], maxSize: Int, flushTimeoutMs: Long)(
+      implicit outEnc: Encoder[(K, Seq[V])]): Dataset[(K, Seq[V])] =
+    groupIntoBatches(ds, maxSize.toLong, Long.MaxValue, flushTimeoutMs)(_ => 0L)
+
+  /** GroupIntoBatches.ofByteSize via transformWithState: batches of at
+    * most `maxWeight` total `weigh` per key ([[GroupIntoBatchesProcessor]]
+    * with only its weight limit; an element at or over the budget goes
+    * out alone). The remainder flushes on the per-key processing-time
+    * timer (flushTimeoutMs <= 0 → no timer, TimeMode.None). This is
+    * the streaming form of the token-budget sequence packing a
+    * training-data loader runs (`pipeline_seq_packing` is the batch
+    * twin): weight = token count, budget = context length. */
   def groupIntoBatchesByWeight[K: Encoder, V: Encoder](
       ds: Dataset[(K, V)], maxWeight: Long, flushTimeoutMs: Long)(
       weigh: V => Long)(
       implicit outEnc: Encoder[(K, Seq[V])]): Dataset[(K, Seq[V])] =
+    groupIntoBatches(ds, Long.MaxValue, maxWeight, flushTimeoutMs)(weigh)
+
+  private def groupIntoBatches[K: Encoder, V: Encoder](ds: Dataset[(K, V)],
+      maxSize: Long, maxWeight: Long, flushTimeoutMs: Long)(weigh: V => Long)(
+      implicit outEnc: Encoder[(K, Seq[V])]): Dataset[(K, Seq[V])] =
     ds.groupByKey(_._1).transformWithState(
-      new WeightBatchingProcessor[K, V](maxWeight, flushTimeoutMs, weigh),
+      new GroupIntoBatchesProcessor[K, V](maxSize, maxWeight, flushTimeoutMs,
+        weigh),
       if (flushTimeoutMs > 0) TimeMode.ProcessingTime() else TimeMode.None(),
       OutputMode.Append())
 
@@ -593,13 +536,55 @@ object StatefulV2 {
       // deterministically in tests)
       TimeMode.None(), OutputMode.Append())
 
+  /** Beam's Combine.perKey (transforms/Combine.java:88) as ONE
+    * rev-stamped processor: a ValueState `(rev, A)` per key holds the
+    * accumulator, `zero` when the key is new (createAccumulator). Each
+    * micro-batch folds a key's rows with `add` (addInput): `None` means
+    * nothing was counted or changed, so the key writes nothing and
+    * emits nothing; `Some(a)` is written in ONE put and emitted as
+    * `emit(key, rev, a)` (extractOutput), `rev` strictly increasing per
+    * key — a changelog whose max-rev row per key is the live state. */
+  class CombineProcessor[K, I, A, O](zero: A,
+      add: (K, A, Iterator[I]) => Option[A], emit: (K, Long, A) => O)(
+      implicit aEnc: Encoder[A])
+      extends StatefulProcessor[K, I, O] {
+
+    @transient private var st: ValueState[(Long, A)] = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      st = getHandle.getValueState[(Long, A)]("acc",
+        Encoders.tuple(Encoders.scalaLong, aEnc), TTLConfig.NONE)
+
+    override def handleInputRows(key: K, rows: Iterator[I],
+        timers: TimerValues): Iterator[O] = {
+      val (rev, acc) = if (st.exists()) st.get() else (0L, zero)
+      add(key, acc, rows) match {
+        case Some(next) =>
+          st.update((rev + 1L, next))
+          Iterator.single(emit(key, rev + 1L, next))
+        case None => Iterator.empty
+      }
+    }
+  }
+
+  /** [[CombineProcessor]] over a grouped stream; no timers, no TTL →
+    * TimeMode.None (see scd2Changes). */
+  private def combine[K, I, A, O](grouped: KeyValueGroupedDataset[K, I],
+      zero: A)(add: (K, A, Iterator[I]) => Option[A])(
+      emit: (K, Long, A) => O)(
+      implicit aEnc: Encoder[A], outEnc: Encoder[O]): Dataset[O] =
+    grouped.transformWithState(new CombineProcessor(zero, add, emit),
+      TimeMode.None(), OutputMode.Append())
+
   /** Streaming step-funnel — the continuous form of the batch
     * `agg_funnel_steps` chained window-mins: per key, three slots
     * (t1, t2, t3) = earliest step-1 time, earliest step-2 time within
-    * `horizonMs` of t1, earliest step-3 time within `horizonMs` of t2.
-    * Beam's state-API funnel pattern (one `@StateId` cell per step,
-    * `sdks/java/core/.../transforms/DoFn.java:516` vocabulary) on ONE
-    * packed ValueState. Emits a (rev, t1, t2, t3) snapshot (-1 =
+    * `horizonMs` of t1, earliest step-3 time within `horizonMs` of t2,
+    * over a keyed step stream (key, ts, step ∈ 1..3; ts in any fixed
+    * unit consistent with `horizonMs`). Beam's state-API funnel pattern
+    * (one `@StateId` cell per step, `sdks/java/core/.../transforms/
+    * DoFn.java:516` vocabulary) on a [[CombineProcessor]] whose
+    * accumulator is the slots. Emits a (rev, t1, t2, t3) snapshot (-1 =
     * unset, rev strictly increasing per key) for each key in each
     * batch where its slots CHANGED — a changelog whose max-rev row per
     * key is the live funnel state, so downstream conversion counts are
@@ -616,34 +601,19 @@ object StatefulV2 {
     * watermark passes t1 + horizon). State is O(keys); write traffic
     * is one 3-slot put per key per batch that changed — the same
     * minimal shape as [[Scd2Processor]]. */
-  class FunnelProcessor[K](horizonMs: Long)
-      extends StatefulProcessor[K, (K, Long, Int), (K, Long, Long, Long, Long)] {
-
-    @transient private var slots: ValueState[(Long, Long, Long, Long)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      slots = getHandle.getValueState[(Long, Long, Long, Long)]("slots",
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
-          Encoders.scalaLong, Encoders.scalaLong),
-        TTLConfig.NONE)
-
-    override def handleInputRows(key: K, rows: Iterator[(K, Long, Int)],
-        timers: TimerValues): Iterator[(K, Long, Long, Long, Long)] = {
-      val (rev, t1, t2, t3) =
-        if (slots.exists()) slots.get() else (0L, -1L, -1L, -1L)
-      val before = (t1, t2, t3)
+  def funnelSteps[K: Encoder](ds: Dataset[(K, Long, Int)], horizonMs: Long)(
+      implicit outEnc: Encoder[(K, Long, Long, Long, Long)]): Dataset[(K, Long, Long, Long, Long)] =
+    combine(ds.groupByKey(_._1), (-1L, -1L, -1L)) { (_, before, rows) =>
       // sort (ts, step): an equal-ts later step must see the earlier
       // step's slot first (batch window-mins allow ts >= t1 / >= t2,
       // so a click at the view's exact timestamp qualifies)
       val after = rows.toVector.sortBy(r => (r._2, r._3)).foldLeft(before) {
         case (st, (_, ts, step)) => funnelStep(st, ts, step, horizonMs)
       }
-      if (after != before) {
-        slots.update((rev + 1L, after._1, after._2, after._3))
-        Iterator.single((key, rev + 1L, after._1, after._2, after._3))
-      } else Iterator.empty
-    }
-  }
+      Option.when(after != before)(after)
+    } { case (k, rev, (t1, t2, t3)) => (k, rev, t1, t2, t3) }(
+      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
+        Encoders.scalaLong), outEnc)
 
   /** One funnel slot transition (pure; property-tested against the
     * batch chained-window-min reference in RandomizedSpec): apply a
@@ -668,16 +638,6 @@ object StatefulV2 {
     }
     (t1, t2, t3)
   }
-
-  /** [[FunnelProcessor]] over a keyed step stream (key, ts, step ∈
-    * 1..3; ts in any fixed unit consistent with `horizonMs`): per-key
-    * funnel-slot changelog, latest row per key = max rev. */
-  def funnelSteps[K: Encoder](ds: Dataset[(K, Long, Int)], horizonMs: Long)(
-      implicit outEnc: Encoder[(K, Long, Long, Long, Long)]): Dataset[(K, Long, Long, Long, Long)] =
-    ds.groupByKey(_._1).transformWithState(
-      new FunnelProcessor[K](horizonMs),
-      // no timers, no TTL → TimeMode.None (see scd2Changes)
-      TimeMode.None(), OutputMode.Append())
 
   /** Streaming heavy hitters per key — a [[graft.functions.MisraGries]]
     * k-counter summary held in per-key state: counters in MapState
@@ -768,65 +728,50 @@ object StatefulV2 {
   private def requireQs(qs: Seq[Double]): Unit =
     require(qs.nonEmpty && qs.forall(q => q >= 0 && q <= 1), s"bad qs: $qs")
 
-  /** Streaming per-key t-digest quantiles — the third mergeable
-    * sketch in the streaming family (with [[HeavyHittersProcessor]]'s
-    * Misra-Gries and native HLL): Beam's TDigestQuantiles
-    * (sdks/java/extensions/sketching/src/main/java/org/apache/beam/
-    * sdk/extensions/sketching/TDigestQuantiles.java:86) as a
-    * `transformWithState` fold over the SAME [[graft.functions.TDigest]]
-    * core the batch aggregates use — one estimator, two execution
-    * modes, so batch and stream agree on the rank-error contract.
-    * State per key is the compressed centroid list (O(compression)
-    * doubles FOREVER, interleaved [mean, weight, …]), one ValueState
-    * put per touched key per batch; each touched key emits a
-    * rev-stamped (rev, n, quantile values at `qs`) snapshot — latest
-    * row per key = max rev, as [[heavyHitters]].
-    * `readOut` turns the packed centroids into the emitted values:
-    * [[packedQuantiles]] per key, the identity for
-    * [[tdigestQuantilesGlobal]]'s stage 1 (the merge needs the
-    * mergeable digest, not its read-out). */
-  class TDigestProcessor[K](compression: Double,
-      readOut: Seq[Double] => Seq[Double])
-      extends StatefulProcessor[K, (K, Double), (K, Long, Long, Seq[Double])] {
+  /** Fold a batch of values into a packed (n, [mean, weight, …])
+    * digest — the [[CombineProcessor]] `add` of both t-digest ops. */
+  private def digestAdd[K](compression: Double)
+      : (K, (Long, Seq[Double]), Iterator[(K, Double)]) => Option[(Long, Seq[Double])] = {
     require(compression >= 20, s"compression too small: $compression")
-
-    @transient private var st: ValueState[(Long, Long, Seq[Double])] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[(Long, Long, Seq[Double])]("digest",
-        Encoders.product[(Long, Long, Seq[Double])], TTLConfig.NONE)
-
-    override def handleInputRows(key: K, rows: Iterator[(K, Double)],
-        timers: TimerValues): Iterator[(K, Long, Long, Seq[Double])] = {
-      val (rev, n0, packed) =
-        if (st.exists()) st.get() else (0L, 0L, Seq.empty[Double])
+    (_, acc, rows) => Option.when(rows.hasNext) {
       val buf = new graft.functions.TDigest.Buf(compression)
-      addPacked(buf, packed)
-      var n = n0
+      addPacked(buf, acc._2)
+      var n = acc._1
       rows.foreach { case (_, v) => buf.add(v, 1.0); n += 1 }
-      if (n == n0) return Iterator.empty
       buf.compact()
       val out = new Array[Double](2 * buf.n)
       var j = 0
       while (j < buf.n) {
         out(2 * j) = buf.means(j); out(2 * j + 1) = buf.weights(j); j += 1
       }
-      val next = out.toSeq
-      st.update((rev + 1L, n, next))
-      Iterator.single((key, rev + 1L, n, readOut(next)))
+      (n, out.toSeq)
     }
   }
 
-  /** [[TDigestProcessor]] over a keyed value stream: per-key
-    * rev-stamped quantile snapshots at `qs`. */
+  private def digestEnc: Encoder[(Long, Seq[Double])] =
+    Encoders.product[(Long, Seq[Double])]
+
+  /** Streaming per-key t-digest quantiles — the third mergeable
+    * sketch in the streaming family (with [[heavyHitters]]'
+    * Misra-Gries and native HLL): Beam's TDigestQuantiles
+    * (sdks/java/extensions/sketching/src/main/java/org/apache/beam/
+    * sdk/extensions/sketching/TDigestQuantiles.java:86) as a
+    * [[CombineProcessor]] fold over the SAME [[graft.functions.TDigest]]
+    * core the batch aggregates use — one estimator, two execution
+    * modes, so batch and stream agree on the rank-error contract.
+    * The accumulator per key is (n, compressed centroid list —
+    * O(compression) doubles FOREVER, interleaved [mean, weight, …]),
+    * one ValueState put per touched key per batch; each touched key
+    * emits a rev-stamped (rev, n, quantile values at `qs`) snapshot —
+    * latest row per key = max rev, as [[heavyHitters]]. */
   def tdigestQuantiles[K: Encoder](ds: Dataset[(K, Double)],
       compression: Double = 100.0, qs: Seq[Double] = Seq(0.5, 0.95, 0.99))(
       implicit outEnc: Encoder[(K, Long, Long, Seq[Double])]): Dataset[(K, Long, Long, Seq[Double])] = {
     requireQs(qs)
-    ds.groupByKey(_._1).transformWithState(
-      new TDigestProcessor[K](compression, packedQuantiles(_, qs)),
-      // no timers, no TTL → TimeMode.None (see scd2Changes)
-      TimeMode.None(), OutputMode.Append())
+    combine(ds.groupByKey(_._1), (0L, Seq.empty[Double]))(
+      digestAdd[K](compression)) {
+      case (k, rev, (n, packed)) => (k, rev, n, packedQuantiles(packed, qs))
+    }(digestEnc, outEnc)
   }
 
   /** GLOBAL (cross-key) streaming t-digest quantiles — Beam's
@@ -844,21 +789,9 @@ object StatefulV2 {
       compression: Double = 100.0, qs: Seq[Double] = Seq(0.5, 0.95, 0.99),
       shards: Int = 32)(
       implicit outEnc: Encoder[(Long, Long, Seq[Double])]): Dataset[(Long, Long, Seq[Double])] = {
-    require(shards >= 1, s"shards must be >= 1, got $shards")
     requireQs(qs)
-    implicit val keyedEnc: Encoder[(Long, Double)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble)
-    implicit val longEnc: Encoder[Long] = Encoders.scalaLong
-    implicit val midEnc: Encoder[(Long, Long, Long, Seq[Double])] =
-      Encoders.product[(Long, Long, Long, Seq[Double])]
-    implicit val digestEnc: Encoder[(Long, Seq[Double])] =
-      Encoders.product[(Long, Seq[Double])]
-    val digests = ds.map(v => (shardOf(v, shards), v))
-      .groupByKey(_._1)
-      .transformWithState(new TDigestProcessor[Long](compression, identity),
-        TimeMode.None(), OutputMode.Append())
-      .map { case (shard, srev, n, packed) => (shard, srev, (n, packed)) }(
-        snapshotEnc[(Long, Seq[Double])])
+    val digests = shardSnapshots(ds, shards, (0L, Seq.empty[Double]))(
+      digestAdd[Long](compression))(Encoders.scalaDouble, digestEnc)
     mergeShards(digests) { (rev, perShard: Seq[(Long, Seq[Double])]) =>
       val buf = new graft.functions.TDigest.Buf(compression)
       perShard.foreach { case (_, packed) => addPacked(buf, packed) }
@@ -867,7 +800,7 @@ object StatefulV2 {
       val weights = java.util.Arrays.copyOf(buf.weights, buf.n)
       (rev, perShard.iterator.map(_._1).sum,
         qs.map(q => graft.functions.TDigest.quantile(means, weights, q)))
-    }
+    }(digestEnc, outEnc)
   }
 
   /** Exact k-sample of the UNION of per-shard uniform reservoirs —
@@ -926,7 +859,7 @@ object StatefulV2 {
     * Sample.fixedSizeGlobally (sdks/java/core/src/main/java/org/
     * apache/beam/sdk/transforms/Sample.java:47) in the two-stage
     * form: value-hash shards each hold a deterministic Algorithm R
-    * reservoir ([[ReservoirProcessor]] — ANY deterministic partition
+    * reservoir (as [[sampleFixedPerKey]] — ANY deterministic partition
     * is valid, since hypergeometric merge allocation is exact over
     * disjoint shard populations), then [[mergeShards]] keeps the
     * latest (n, reservoir) per shard (≤ shards × k values FOREVER) and
@@ -936,23 +869,14 @@ object StatefulV2 {
     * (rev, n, sample). */
   def sampleFixedGlobal[V: Encoder](ds: Dataset[V], k: Int,
       seed: Long = 42L, shards: Int = 32)(
-      implicit midEnc: Encoder[(Long, Long, Long, Seq[V])],
-      shardEnc: Encoder[(Long, Seq[V])],
-      // serves BOTH the per-shard packed state and the global output
-      // (same shape (rev-or-n, n, sample))
-      stEnc: Encoder[(Long, Long, Seq[V])]): Dataset[(Long, Long, Seq[V])] = {
-    require(shards >= 1, s"shards must be >= 1, got $shards")
-    implicit val keyedEnc: Encoder[(Long, V)] =
-      Encoders.tuple(Encoders.scalaLong, implicitly[Encoder[V]])
-    implicit val longEnc: Encoder[Long] = Encoders.scalaLong
-    val reservoirs = sampleFixedPerKey[Long, V](
-        ds.map(v => (shardOf(v, shards), v)), k, seed)(longEnc, midEnc, stEnc)
-      .map { case (shard, srev, n, sample) => (shard, srev, (n, sample)) }(
-        snapshotEnc[(Long, Seq[V])])
+      implicit shardEnc: Encoder[(Long, Seq[V])],
+      outEnc: Encoder[(Long, Long, Seq[V])]): Dataset[(Long, Long, Seq[V])] = {
+    val reservoirs = shardSnapshots(ds, shards, (0L, Seq.empty[V]))(
+      reservoirAdd[Long, V](k, seed))
     mergeShards(reservoirs) { (rev, perShard: Seq[(Long, Seq[V])]) =>
       (rev, perShard.iterator.map(_._1).sum,
         mergeReservoirs(perShard, k, seed, rev))
-    }(shardEnc, stEnc)
+    }
   }
 
   /** SplitMix64 finalizer — the deterministic pseudo-random mix behind
@@ -968,7 +892,7 @@ object StatefulV2 {
   /** 64-bit per-key draw-stream seed: value hash in the low word,
     * string-form hash in the high word, mixed through [[mix64]] — two
     * independent 32-bit hashes must BOTH collide before two keys share
-    * a draw sequence (see [[ReservoirProcessor]]'s determinism note). */
+    * a draw sequence (see [[sampleFixedPerKey]]'s determinism note). */
   private[graft] def keyDrawHash(key: Any): Long =
     mix64(key.hashCode().toLong ^ (key.toString.hashCode.toLong << 32))
 
@@ -980,14 +904,36 @@ object StatefulV2 {
   private[graft] def reservoirDraw(seed: Long, keyHash: Long, n: Long): Long =
     Math.floorMod(mix64(seed ^ keyHash ^ (n * 0x632be59bd9b4e019L)), n + 1)
 
+  /** Algorithm R over a batch into an (n, k-slot reservoir)
+    * accumulator — the [[CombineProcessor]] `add` of both reservoir
+    * ops; draws from [[reservoirDraw]] under the key's [[keyDrawHash]]. */
+  private def reservoirAdd[K, V](k: Int, seed: Long)
+      : (K, (Long, Seq[V]), Iterator[(K, V)]) => Option[(Long, Seq[V])] = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    (key, acc, rows) => Option.when(rows.hasNext) {
+      var n = acc._1
+      val kh = keyDrawHash(key)
+      val buf = scala.collection.mutable.ArrayBuffer[V](acc._2: _*)
+      rows.foreach { case (_, v) =>
+        if (n < k) buf += v
+        else {
+          val j = reservoirDraw(seed, kh, n)
+          if (j < k) buf(j.toInt) = v
+        }
+        n += 1
+      }
+      (n, buf.toSeq)
+    }
+  }
+
   /** Streaming fixed-size uniform sample per key — Beam's
     * Sample.fixedSizePerKey (sdks/java/core/src/main/java/org/apache/
     * beam/sdk/transforms/Sample.java:61) run continuously: classic
-    * Algorithm R (Vitter) per key, state = ONE packed ValueState
-    * (rev, n, k-slot reservoir — O(k) FOREVER). Each batch folds
-    * locally into one state put; each TOUCHED key emits a rev-stamped
-    * (rev, n, sample) snapshot — latest row per key = max rev, the
-    * live uniform sample of everything that key has seen.
+    * Algorithm R (Vitter) per key on a [[CombineProcessor]] whose
+    * accumulator is (n, k-slot reservoir) — O(k) FOREVER. Each batch
+    * folds locally into one state put; each TOUCHED key emits a
+    * rev-stamped (rev, n, sample) snapshot — latest row per key = max
+    * rev, the live uniform sample of everything that key has seen.
     * Draws come from [[reservoirDraw]] (deterministic in (seed, key,
     * index)), so two runs over the same arrival order produce
     * byte-identical samples — the reproducibility contract the batch
@@ -999,60 +945,48 @@ object StatefulV2 {
     * assumes value-stable `hashCode`/`toString` key types (primitives,
     * Strings, case classes — NOT raw arrays, which are also unsound as
     * groupByKey keys for the same identity-hash reason). */
-  class ReservoirProcessor[K, V](k: Int, seed: Long)(
-      implicit stEnc: Encoder[(Long, Long, Seq[V])])
-      extends StatefulProcessor[K, (K, V), (K, Long, Long, Seq[V])] {
-    require(k >= 1, s"k must be >= 1, got $k")
-
-    // ONE packed ValueState (rev, n, reservoir) — one put per touched
-    // key per batch, the repo's minimal-rowsUpdated idiom (the caller
-    // supplies the Seq-bearing encoder, since V is generic here)
-    @transient private var st: ValueState[(Long, Long, Seq[V])] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[(Long, Long, Seq[V])]("reservoir",
-        stEnc, TTLConfig.NONE)
-
-    override def handleInputRows(key: K, rows: Iterator[(K, V)],
-        timers: TimerValues): Iterator[(K, Long, Long, Seq[V])] = {
-      val (rev, n0, res0) =
-        if (st.exists()) st.get() else (0L, 0L, Seq.empty[V])
-      var n = n0
-      val kh = keyDrawHash(key)
-      val buf = scala.collection.mutable.ArrayBuffer[V](res0: _*)
-      rows.foreach { case (_, v) =>
-        if (n < k) buf += v
-        else {
-          val j = reservoirDraw(seed, kh, n)
-          if (j < k) buf(j.toInt) = v
-        }
-        n += 1
-      }
-      if (n == n0) return Iterator.empty
-      st.update((rev + 1L, n, buf.toSeq))
-      Iterator.single((key, rev + 1L, n, buf.toSeq))
-    }
-  }
-
-  /** [[ReservoirProcessor]] over a keyed value stream: per-key
-    * rev-stamped (n, uniform k-sample) snapshots; latest row per key
-    * = max rev. */
   def sampleFixedPerKey[K: Encoder, V](ds: Dataset[(K, V)],
       k: Int, seed: Long = 42L)(
       implicit outEnc: Encoder[(K, Long, Long, Seq[V])],
-      stEnc: Encoder[(Long, Long, Seq[V])]): Dataset[(K, Long, Long, Seq[V])] =
-    ds.groupByKey(_._1).transformWithState(
-      new ReservoirProcessor[K, V](k, seed),
-      // no timers, no TTL → TimeMode.None (see scd2Changes)
-      TimeMode.None(), OutputMode.Append())
+      accEnc: Encoder[(Long, Seq[V])]): Dataset[(K, Long, Long, Seq[V])] =
+    combine(ds.groupByKey(_._1), (0L, Seq.empty[V]))(
+      reservoirAdd[K, V](k, seed)) { case (key, rev, (n, sample)) =>
+      (key, rev, n, sample)
+    }
+
+  /** Fold a batch of items into an (n, compact HLL image) accumulator
+    * — the [[CombineProcessor]] `add` of both distinct-count ops. Null
+    * items are skipped AND excluded from n, matching
+    * COUNT(DISTINCT x)'s NULL semantics; a batch of only nulls counts
+    * nothing. The compact image is smaller than the updatable form (no
+    * warm-up coupon headroom / aux slack) and equally heapify-able by
+    * this fold and the native hll_* functions. */
+  private def hllAdd[K](lgK: Int)
+      : (K, (Long, Array[Byte]), Iterator[(K, String)]) => Option[(Long, Array[Byte])] = {
+    require(lgK >= 4 && lgK <= 21, s"lgK out of range: $lgK")
+    (_, acc, rows) => {
+      val (n0, bytes) = acc
+      val sk =
+        if (bytes.isEmpty) new org.apache.datasketches.hll.HllSketch(lgK)
+        else org.apache.datasketches.hll.HllSketch.heapify(bytes)
+      var n = n0
+      rows.foreach { case (_, item) =>
+        if (item != null) { sk.update(item); n += 1 }
+      }
+      Option.when(n != n0)((n, sk.toCompactByteArray))
+    }
+  }
+
+  private def hllEnc: Encoder[(Long, Array[Byte])] =
+    Encoders.tuple(Encoders.scalaLong, Encoders.BINARY)
 
   /** Streaming per-key approximate distinct count — Beam's
     * ApproximateUnique.perKey (sdks/java/core/src/main/java/org/
     * apache/beam/sdk/transforms/ApproximateUnique.java:82) run
     * continuously under the global window: a DataSketches HllSketch
-    * folds per key in ONE ValueState (compact bytes, O(2^lgK) FOREVER
-    * — never O(distinct items)), one put per touched key per batch,
-    * each touched key emitting a rev-stamped
+    * folds per key in a [[CombineProcessor]] accumulator (n, compact
+    * bytes — O(2^lgK) FOREVER, never O(distinct items)), one put per
+    * touched key per batch, each touched key emitting a rev-stamped
     * (rev, n, estimate, sketch bytes) snapshot. The bytes are the
     * SAME library/format Spark's native `hll_sketch_agg` family uses
     * (org.apache.datasketches.hll), so downstream SQL can
@@ -1061,49 +995,12 @@ object StatefulV2 {
     * distincts — stream state composes with batch analytics instead
     * of dead-ending (spec-asserted both ways). Standard HLL rsd
     * ≈ 1.04/√2^lgK (~1.6% at the lgK=12 default). */
-  class ApproxDistinctProcessor[K](lgK: Int)
-      extends StatefulProcessor[K, (K, String), (K, Long, Long, Long, Array[Byte])] {
-    require(lgK >= 4 && lgK <= 21, s"lgK out of range: $lgK")
-
-    @transient private var st: ValueState[(Long, Long, Array[Byte])] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[(Long, Long, Array[Byte])]("hll",
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
-          Encoders.BINARY), TTLConfig.NONE)
-
-    override def handleInputRows(key: K, rows: Iterator[(K, String)],
-        timers: TimerValues): Iterator[(K, Long, Long, Long, Array[Byte])] = {
-      val (rev, n0, bytes) =
-        if (st.exists()) st.get() else (0L, 0L, Array.empty[Byte])
-      val sk =
-        if (bytes.isEmpty) new org.apache.datasketches.hll.HllSketch(lgK)
-        else org.apache.datasketches.hll.HllSketch.heapify(bytes)
-      var n = n0
-      // null items are skipped AND excluded from n, matching
-      // COUNT(DISTINCT x)'s NULL semantics (the sketch ignores them)
-      rows.foreach { case (_, item) =>
-        if (item != null) { sk.update(item); n += 1 }
-      }
-      if (n == n0) return Iterator.empty
-      // compact image: smaller than the updatable form (no warm-up
-      // coupon headroom / aux slack) and equally heapify-able by both
-      // this processor and the native hll_* functions
-      val out = sk.toCompactByteArray
-      st.update((rev + 1L, n, out))
-      Iterator.single((key, rev + 1L, n, Math.round(sk.getEstimate), out))
-    }
-  }
-
-  /** [[ApproxDistinctProcessor]] over a keyed item stream: per-key
-    * rev-stamped (n, distinct estimate, sketch bytes) snapshots;
-    * latest row per key = max rev. */
   def approxDistinct[K: Encoder](ds: Dataset[(K, String)], lgK: Int = 12)(
       implicit outEnc: Encoder[(K, Long, Long, Long, Array[Byte])]): Dataset[(K, Long, Long, Long, Array[Byte])] =
-    ds.groupByKey(_._1).transformWithState(
-      new ApproxDistinctProcessor[K](lgK),
-      // no timers, no TTL → TimeMode.None (see scd2Changes)
-      TimeMode.None(), OutputMode.Append())
+    combine(ds.groupByKey(_._1), (0L, Array.empty[Byte]))(hllAdd[K](lgK)) {
+      case (k, rev, (n, bytes)) => (k, rev, n, Math.round(
+        org.apache.datasketches.hll.HllSketch.heapify(bytes).getEstimate), bytes)
+    }(hllEnc, outEnc)
 
   /** The merge half of Beam's `Combine.globally(fn).withFanout(n)`
     * (transforms/Combine.java:88) for the GLOBAL streaming sketches:
@@ -1162,6 +1059,20 @@ object StatefulV2 {
   private def snapshotEnc[S](implicit sEnc: Encoder[S]): Encoder[(Long, Long, S)] =
     Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, sEnc)
 
+  /** Stage 1 of a GLOBAL sketch: [[combine]] over value-hash shards
+    * ([[shardOf]]), emitting the `(shard, srev, A)` snapshots that
+    * [[mergeShards]] merges. */
+  private def shardSnapshots[V: Encoder, A](ds: Dataset[V], shards: Int,
+      zero: A)(add: (Long, A, Iterator[(Long, V)]) => Option[A])(
+      implicit aEnc: Encoder[A]): Dataset[(Long, Long, A)] = {
+    require(shards >= 1, s"shards must be >= 1, got $shards")
+    implicit val longEnc: Encoder[Long] = Encoders.scalaLong
+    implicit val keyedEnc: Encoder[(Long, V)] =
+      Encoders.tuple(longEnc, implicitly[Encoder[V]])
+    combine(ds.map(v => (shardOf(v, shards), v)).groupByKey(_._1), zero)(add)(
+      (shard, srev, a) => (shard, srev, a))(aEnc, snapshotEnc[A])
+  }
+
   /** Shard assignment for the GLOBAL sketch forms: the item's own
     * value routes it — hash-sharding by item means an item's ENTIRE
     * count lands in exactly one shard, which is what lets per-shard
@@ -1218,37 +1129,17 @@ object StatefulV2 {
     }
   }
 
-  /** Streaming per-key top-K by comparator — Beam's Top.perKey
-    * (sdks/java/core/src/main/java/org/apache/beam/sdk/transforms/
-    * Top.java:58, the Top.of comparator form) run continuously under
-    * the global window: the k GREATEST elements per key under `ord`,
-    * held in ONE packed ValueState (rev, n, top-k descending — O(k)
-    * FOREVER). Batches fold as buffer-and-compact (amortized
-    * O(log k) per element, buffer bounded at k + 1024 regardless of
-    * batch size), one state put and one rev-stamped
-    * (key, rev, n, topK) snapshot per touched key per batch — latest
-    * row per key = max rev. Top-k is a mergeable fold, so the result
-    * is EXACT for any arrival order; tie order among ord-equal
-    * elements is unspecified (pass a total order for replay-stable
-    * output — same contract as Beam's comparator). */
-  class TopKProcessor[K, V](k: Int, ord: Ordering[V])(
-      implicit stEnc: Encoder[(Long, Long, Seq[V])])
-      extends StatefulProcessor[K, (K, V), (K, Long, Long, Seq[V])] {
+  /** Fold a batch into an (n, top-k descending under `ord`)
+    * accumulator — the [[CombineProcessor]] `add` of both top-K ops:
+    * buffer-and-compact, amortized O(log k) per element, buffer bounded
+    * at k + 1024 regardless of batch size. */
+  private def topKAdd[K, V](k: Int, ord: Ordering[V])
+      : (K, (Long, Seq[V]), Iterator[(K, V)]) => Option[(Long, Seq[V])] = {
     require(k >= 1, s"k must be >= 1, got $k")
-
-    @transient private var st: ValueState[(Long, Long, Seq[V])] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[(Long, Long, Seq[V])]("topk", stEnc,
-        TTLConfig.NONE)
-
-    override def handleInputRows(key: K, rows: Iterator[(K, V)],
-        timers: TimerValues): Iterator[(K, Long, Long, Seq[V])] = {
-      val (rev, n0, top0) =
-        if (st.exists()) st.get() else (0L, 0L, Seq.empty[V])
-      var n = n0
+    (_, acc, rows) => Option.when(rows.hasNext) {
+      var n = acc._1
       val desc = ord.reverse
-      val buf = scala.collection.mutable.ArrayBuffer[V](top0: _*)
+      val buf = scala.collection.mutable.ArrayBuffer[V](acc._2: _*)
       rows.foreach { case (_, v) =>
         buf += v
         // periodic compaction keeps memory bounded on huge batches
@@ -1259,24 +1150,28 @@ object StatefulV2 {
         }
         n += 1
       }
-      if (n == n0) return Iterator.empty
-      val top = buf.sorted(desc).take(k).toSeq
-      st.update((rev + 1L, n, top))
-      Iterator.single((key, rev + 1L, n, top))
+      (n, buf.sorted(desc).take(k).toSeq)
     }
   }
 
-  /** [[TopKProcessor]] over a keyed value stream: per-key rev-stamped
-    * (n, k greatest under `ord`, descending) snapshots; latest row per
-    * key = max rev. */
+  /** Streaming per-key top-K by comparator — Beam's Top.perKey
+    * (sdks/java/core/src/main/java/org/apache/beam/sdk/transforms/
+    * Top.java:58, the Top.of comparator form) run continuously under
+    * the global window: the k GREATEST elements per key under `ord`,
+    * held in a [[CombineProcessor]] accumulator (n, top-k descending —
+    * O(k) FOREVER), one state put and one rev-stamped
+    * (key, rev, n, topK) snapshot per touched key per batch — latest
+    * row per key = max rev. Top-k is a mergeable fold, so the result
+    * is EXACT for any arrival order; tie order among ord-equal
+    * elements is unspecified (pass a total order for replay-stable
+    * output — same contract as Beam's comparator). */
   def topKPerKey[K: Encoder, V](ds: Dataset[(K, V)], k: Int)(
       implicit ord: Ordering[V],
       outEnc: Encoder[(K, Long, Long, Seq[V])],
-      stEnc: Encoder[(Long, Long, Seq[V])]): Dataset[(K, Long, Long, Seq[V])] =
-    ds.groupByKey(_._1).transformWithState(
-      new TopKProcessor[K, V](k, ord),
-      // no timers, no TTL → TimeMode.None (see scd2Changes)
-      TimeMode.None(), OutputMode.Append())
+      accEnc: Encoder[(Long, Seq[V])]): Dataset[(K, Long, Long, Seq[V])] =
+    combine(ds.groupByKey(_._1), (0L, Seq.empty[V]))(topKAdd[K, V](k, ord)) {
+      case (key, rev, (n, top)) => (key, rev, n, top)
+    }
 
   /** GLOBAL (cross-key) streaming top-K by comparator — Beam's
     * Top.of/largest/smallest on unbounded input (sdks/java/core/src/
@@ -1293,55 +1188,34 @@ object StatefulV2 {
     * whichever shard it landed in. */
   def topKGlobal[V: Encoder](ds: Dataset[V], k: Int, shards: Int = 32)(
       implicit ord: Ordering[V],
-      midEnc: Encoder[(Long, Long, Long, Seq[V])],
       shardEnc: Encoder[(Long, Seq[V])],
       outEnc: Encoder[(Long, Long, Seq[V])]): Dataset[(Long, Long, Seq[V])] = {
-    require(shards >= 1, s"shards must be >= 1, got $shards")
-    implicit val keyedEnc: Encoder[(Long, V)] =
-      Encoders.tuple(Encoders.scalaLong, implicitly[Encoder[V]])
-    implicit val longEnc: Encoder[Long] = Encoders.scalaLong
-    // outEnc doubles as the packed-state encoder (same
-    // (Long, Long, Seq[V]) shape) — passed explicitly to avoid
-    // same-type implicit ambiguity
-    val tops = topKPerKey[Long, V](ds.map(v => (shardOf(v, shards), v)), k)(
-        implicitly[Encoder[Long]], ord, midEnc, outEnc)
-      .map { case (shard, srev, n, top) => (shard, srev, (n, top)) }(
-        snapshotEnc(shardEnc))
+    val tops = shardSnapshots(ds, shards, (0L, Seq.empty[V]))(
+      topKAdd[Long, V](k, ord))
     mergeShards(tops) { (rev, perShard: Seq[(Long, Seq[V])]) =>
       (rev, perShard.iterator.map(_._1).sum,
         perShard.flatMap(_._2).sorted(ord.reverse).take(k))
-    }(shardEnc, outEnc)
+    }
   }
 
   /** GLOBAL (cross-key) streaming approximate distinct count — Beam's
     * ApproximateUnique.globally (sdks/java/core/src/main/java/org/
     * apache/beam/sdk/transforms/ApproximateUnique.java:82) in the same
-    * two-stage form as [[heavyHittersGlobal]]: per-shard
-    * [[ApproxDistinctProcessor]] HLLs, then [[mergeShards]] keeps the
-    * latest sketch bytes per shard (≤ `shards` compact images FOREVER)
-    * and runs one DataSketches union over them per batch. Item-value
-    * sharding makes shard item sets disjoint, but HLL union is exact
-    * under ANY overlap — the bound is the plain union-sketch rsd.
-    * Emits rev-stamped (rev, n, estimate, union sketch bytes) — the
-    * bytes compose with the native hll_* SQL functions exactly like
-    * the per-key form. */
+    * two-stage form as [[heavyHittersGlobal]]: per-shard HLLs (as
+    * [[approxDistinct]]), then [[mergeShards]] keeps the latest sketch
+    * bytes per shard (≤ `shards` compact images FOREVER) and runs one
+    * DataSketches union over them per batch. Item-value sharding makes
+    * shard item sets disjoint, but HLL union is exact under ANY
+    * overlap — the bound is the plain union-sketch rsd. Emits
+    * rev-stamped (rev, n, estimate, union sketch bytes) — the bytes
+    * compose with the native hll_* SQL functions exactly like the
+    * per-key form. */
   def approxDistinctGlobal(ds: Dataset[String], lgK: Int = 12,
       shards: Int = 32)(
       implicit outEnc: Encoder[(Long, Long, Long, Array[Byte])]): Dataset[(Long, Long, Long, Array[Byte])] = {
-    require(shards >= 1, s"shards must be >= 1, got $shards")
-    implicit val keyedEnc: Encoder[(Long, String)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.STRING)
-    implicit val midEnc: Encoder[(Long, Long, Long, Long, Array[Byte])] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
-        Encoders.scalaLong, Encoders.scalaLong, Encoders.BINARY)
-    implicit val longEnc: Encoder[Long] = Encoders.scalaLong
-    implicit val sketchEnc: Encoder[(Long, Array[Byte])] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.BINARY)
-    val sharded = ds.filter((i: String) => i != null)
-      .map(i => (shardOf(i, shards), i))
-    val sketches = approxDistinct[Long](sharded, lgK)
-      .map { case (shard, srev, n, _, bytes) => (shard, srev, (n, bytes)) }(
-        snapshotEnc[(Long, Array[Byte])])
+    val sketches = shardSnapshots(ds.filter((i: String) => i != null),
+      shards, (0L, Array.empty[Byte]))(hllAdd[Long](lgK))(
+      Encoders.STRING, hllEnc)
     mergeShards(sketches) { (rev, perShard: Seq[(Long, Array[Byte])]) =>
       val union = new org.apache.datasketches.hll.Union(lgK)
       perShard.foreach { case (_, bytes) =>
@@ -1350,7 +1224,7 @@ object StatefulV2 {
       val sk = union.getResult
       (rev, perShard.iterator.map(_._1).sum, Math.round(sk.getEstimate),
         sk.toCompactByteArray)
-    }
+    }(hllEnc, outEnc)
   }
 
   /** Streaming per-key z-score anomaly detection — the continuous

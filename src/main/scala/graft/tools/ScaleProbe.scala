@@ -262,8 +262,8 @@ object ScaleProbe {
     // one per MapState ENTRY, one per packed ValueState):
     //   heavy hitters: ≤ k Misra-Gries counter entries + mgMeta in
     //     stage 1, + its stage-2 summary entry (+rev amortized) ⇒ k+3
-    //   reservoir: ONE packed (rev, n, sample) row in stage 1 + its
-    //     stage-2 entry ⇒ 3
+    //   reservoir: ONE StatefulV2.CombineProcessor (rev, (n, sample))
+    //     row in stage 1 + its stage-2 entry ⇒ 3
     val globalDefs: Seq[(String, Int, (Int, Int) => Probe)] = Seq(
       ("heavy_hitters_global", 16 + 3, { (n: Int, shards: Int) =>
         // items = the cubic-skewed key population (hot items ~30× the
@@ -281,10 +281,11 @@ object ScaleProbe {
         }
       }),
       // r17 (VERDICT r16 #4): the remaining three two-stage members.
-      // All share the reservoir's state shape — ONE packed ValueState
-      // per shard in stage 1, one stage-2 MapState entry per shard
-      // (+rev amortized) ⇒ footprint 3 — but "shares the idiom" is a
-      // by-construction claim, and this probe exists to measure it.
+      // All share the reservoir's state shape — ONE CombineProcessor
+      // (rev, (n, X)) ValueState per shard in stage 1, one stage-2
+      // MapState entry per shard (+rev amortized) ⇒ footprint 3 — but
+      // "shares the idiom" is a by-construction claim, and this probe
+      // exists to measure it.
       ("topk_global", 3, { (n: Int, shards: Int) =>
         implicit val ord: Ordering[(Double, Long)] =
           Ordering.by[(Double, Long), Double](_._1).orElseBy(_._2)

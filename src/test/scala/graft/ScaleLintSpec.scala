@@ -203,6 +203,37 @@ class ScaleLintSpec extends SparkSpec {
     assert(stale.isEmpty, s"stale allowlist entries: $stale")
   }
 
+  test("the snapshot stamp `rev + 1L` lives only in the rev-stamped processors") {
+    // one per-key snapshot protocol: a new per-key sketch is an `add`
+    // and an `emit` on StatefulV2.CombineProcessor, not another
+    // processor that reads, folds, writes and stamps its own state.
+    // Allowed: the combine processor itself, and HeavyHittersProcessor,
+    // whose counters live in a MapState written as deltas
+    val allow = Seq("StatefulV2.scala" -> "CombineProcessor",
+      "StatefulV2.scala" -> "HeavyHittersProcessor")
+    val stamp = java.util.regex.Pattern.compile("""\brev\s*\+\s*1L\b""")
+    val classDecl = """^\s*(?:final |abstract |private\[\w+\] )*class (\w+)""".r
+    val stamps = mainSources.flatMap { case (p, lines) =>
+      lines.zipWithIndex.collect {
+        case (line, i) if stamp.matcher(line).find() =>
+          val owner = lines.take(i).reverseIterator
+            .flatMap(l => classDecl.findFirstMatchIn(l).map(_.group(1)))
+            .nextOption().getOrElse("")
+          (p.toString, owner, s"$p:${i + 1} (in $owner)")
+      }
+    }
+    def allowed(p: String, owner: String) =
+      allow.exists { case (f, c) => p.endsWith(f) && owner == c }
+    val outside = stamps.collect { case (p, o, at) if !allowed(p, o) => at }
+    assert(outside.isEmpty,
+      s"stamp per-key snapshots through StatefulV2.CombineProcessor:\n${outside.mkString("\n")}")
+    // the allowlist must not rot: every entry still stamps
+    val stale = allow.filterNot { case (f, c) =>
+      stamps.exists { case (p, o, _) => p.endsWith(f) && o == c }
+    }
+    assert(stale.isEmpty, s"stale allowlist entries: $stale")
+  }
+
   test("every driver-side collect in main sources declares its bound") {
     // 4th job-killer: .collect()/.head()/.first() materializes to the
     // driver — fine ONLY for provably bounded fit artifacts (a 1-row

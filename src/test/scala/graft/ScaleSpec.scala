@@ -823,11 +823,31 @@ class ScaleSpec extends SparkSpec {
       assert(math.abs(got - 9.0) < 1e-12)
       val sh = s2.sql("SELECT simhash(array('hello'), 16)").head().getLong(0)
       assert(sh != 0L)
+      // the injected builders are the ones register would install, so
+      // register re-registers nothing in an extension session
+      val reg2 = s2.sessionState.functionRegistry
+      val id = org.apache.spark.sql.catalyst.FunctionIdentifier("vec_dot")
+      val injected = reg2.lookupFunction(id).get
+      graft.functions.GraftFunctions.register(s2)
+      assert(reg2.lookupFunction(id).get eq injected,
+        "register replaced an injected function")
     } finally {
       prevActive.foreach(org.apache.spark.sql.SparkSession.setActiveSession)
       prevDefault.foreach(org.apache.spark.sql.SparkSession.setDefaultSession)
       assert(spark0 eq spark)
     }
+  }
+
+  test("GraftFunctions.register a second time leaves every registry entry untouched") {
+    val reg = spark.sessionState.functionRegistry
+    graft.functions.GraftFunctions.register(spark)
+    val before = reg.listFunction().map(id => id -> reg.lookupFunction(id).get)
+    assert(before.exists(_._1.funcName == "vec_dot"))
+    graft.functions.GraftFunctions.register(spark)
+    val replaced = before.collect {
+      case (id, info) if !reg.lookupFunction(id).exists(_ eq info) => id
+    }
+    assert(replaced.isEmpty, s"re-registered: ${replaced.mkString(", ")}")
   }
 
   test("AQE coalesces shuffle partitions on small data") {

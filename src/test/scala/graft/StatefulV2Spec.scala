@@ -2727,6 +2727,40 @@ class StatefulV2Spec extends SparkSpec {
     }
   }
 
+  test("MATCH_RECOGNIZE DEFINE compares LONGs above 2^53 exactly, in apply and stream") {
+    withRocksDb {
+      import graft.operators.MatchRecognizeSql
+      // 2^53 and 2^53 + 1 are equal as doubles; B.v > PREV(B.v) holds
+      // for the second row only as LONGs
+      val big = 1L << 53
+      val rows = Seq((1L, t(1), big), (1L, t(2), big + 1))
+      val clause = """
+        PARTITION BY user_id
+        ORDER BY ts
+        MEASURES COUNT(*) AS n
+        ONE ROW PER MATCH
+        PATTERN (A B)
+        DEFINE B AS B.v > PREV(B.v)"""
+      val batch = MatchRecognizeSql(rows.toDF("user_id", "ts", "v"), clause)
+        .as[(Long, Long)].collect().toSeq
+      assert(batch == Seq((1L, 2L)), s"apply: $batch")
+      val mem = MemoryStream[(Long, java.sql.Timestamp, Long)]
+      val out = MatchRecognizeSql.stream(mem.toDF().toDF("user_id", "ts", "v"),
+        clause, tsCol = "ts", delay = "0 seconds", gapMs = 10000L)
+      val table = freshTable()
+      val q = startMemorySink(out, table)
+      mem.addData(rows: _*)
+      q.processAllAvailable()
+      mem.addData((9L, t(50), 0L))
+      q.processAllAvailable()
+      mem.addData((9L, t(55), 0L))
+      q.processAllAvailable()
+      val streamed = spark.table(table).as[(Long, Long)].collect().toSeq
+      q.stop()
+      assert(streamed == Seq((1L, 2L)), s"stream: $streamed")
+    }
+  }
+
   // ===== r19: Multimap / OrderedList user-state KINDS (VERDICT r18
   // #6 — MultimapState.java:33, OrderedListState.java:28 as thin
   // encodings over MapState with range-read support)
