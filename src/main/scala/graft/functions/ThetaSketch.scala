@@ -89,7 +89,7 @@ abstract class KmvAggBase
   }
 }
 
-/** `theta_sketch_agg(value, k)` — build a KMV sketch from raw values. */
+/** `kmv_sketch_agg(value, k)` — build a KMV sketch from raw values. */
 case class ThetaSketchAgg(
     child: Expression,
     k: Int,
@@ -98,12 +98,12 @@ case class ThetaSketchAgg(
     extends KmvAggBase {
 
   override def children: Seq[Expression] = Seq(child)
-  override def prettyName: String = "theta_sketch_agg"
+  override def prettyName: String = "kmv_sketch_agg"
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case StringType => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
-      s"theta_sketch_agg requires string, got ${other.sql}")
+      s"kmv_sketch_agg requires string, got ${other.sql}")
   }
 
   @transient private lazy val md = java.security.MessageDigest.getInstance("MD5")
@@ -125,7 +125,7 @@ case class ThetaSketchAgg(
     copy(child = newChildren.head)
 }
 
-/** `theta_merge_agg(sketch, k)` — merge already-built sketches (the
+/** `kmv_merge_agg(sketch, k)` — merge already-built sketches (the
   * MergePartial / rollup read-out: fine-grained per-segment sketches
   * roll up to coarser ones in O(groups·k), never rescanning rows). */
 case class ThetaMergeAgg(
@@ -136,12 +136,12 @@ case class ThetaMergeAgg(
     extends KmvAggBase {
 
   override def children: Seq[Expression] = Seq(child)
-  override def prettyName: String = "theta_merge_agg"
+  override def prettyName: String = "kmv_merge_agg"
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
-      s"theta_merge_agg requires array<long>, got ${other.sql}")
+      s"kmv_merge_agg requires array<long>, got ${other.sql}")
   }
 
   override def update(buf: java.util.TreeSet[java.lang.Long],
@@ -156,7 +156,7 @@ case class ThetaMergeAgg(
         // every downstream estimate. A null element is corrupt input:
         // fail fast, by name.
         if (arr.isNullAt(i)) throw new IllegalArgumentException(
-          "theta_merge_agg: null element in sketch array — not a valid KMV sketch")
+          "kmv_merge_agg: null element in sketch array — not a valid KMV sketch")
         add(buf, arr.getLong(i)); i += 1
       }
     }

@@ -640,7 +640,7 @@ object GraftFunctions {
       CountMinSketchAgg(e(0), litInt(e(1)), litInt(e(2)))),
     "countmin_est" -> ((e: Seq[Expression]) =>
       CountMinEstimate(e(0), e(1), litInt(e(2)), litInt(e(3)))),
-    "theta_sketch_agg" -> ((e: Seq[Expression]) =>
+    "kmv_sketch_agg" -> ((e: Seq[Expression]) =>
       ThetaSketchAgg(e(0), litInt(e(1)))),
     "hot_item_agg" -> ((e: Seq[Expression]) => HotItemAgg(e(0))),
     "new_users_agg" -> ((e: Seq[Expression]) =>
@@ -649,7 +649,7 @@ object GraftFunctions {
       ZetaHllAgg(e(0), litInt(e(1)))),
     "zeta_hll_merge_agg" -> ((e: Seq[Expression]) => ZetaHllMergeAgg(e(0))),
     "zeta_hll_info" -> ((e: Seq[Expression]) => ZetaHllInfo(e(0))),
-    "theta_merge_agg" -> ((e: Seq[Expression]) =>
+    "kmv_merge_agg" -> ((e: Seq[Expression]) =>
       ThetaMergeAgg(e(0), litInt(e(1)))),
     "tdigest_agg" -> ((e: Seq[Expression]) =>
       TDigestAgg(e(0), litInt(e(1)))),

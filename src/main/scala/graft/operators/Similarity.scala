@@ -99,70 +99,10 @@ object Similarity {
       .select(col("id_a"), col("id_b"), sim.as("sim"))
   }
 
-  /** [[cosinePairsAbove]] as a compiled kernel: the corpus rides an
-    * explicit broadcast as primitive arrays and the pair loop runs in
-    * one tight `mapPartitions` pass — no per-pair expression-tree
-    * dispatch (the BNLJ form evaluates round/div/vec_dot nodes per
-    * candidate). Arithmetic is bit-identical to the declarative form:
-    * sequential double fold for dot and norm, HALF_UP rounding applied
-    * only to near-threshold candidates. Same O(n²) semantics — the
-    * exact baseline; LSH remains the scale path. */
-  def cosinePairsAboveKernel(df: DataFrame, idCol: String, vecCol: String,
-      threshold: Double, maxRows: Long = 200000L): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val rows = df.select(col(idCol).cast("long"), col(vecCol))
-      .as[(Long, Array[Float])]
-    // ENFORCED contract, not advisory: this kernel collects the corpus
-    // to the driver (broadcast-sized exact baseline only). A 100 TB
-    // input must fail fast here, not OOM the driver.
-    val n = rows.count()
-    require(n <= maxRows,
-      s"cosinePairsAboveKernel: corpus has $n rows > maxRows=$maxRows; " +
-        "this kernel collects the corpus to the driver — use " +
-        "cosinePairsAboveBlocked (distributed block kernel) or the LSH " +
-        "path for large inputs")
-    val corpus = rows.collect().sortBy(_._1) // bounded: maxRows-guarded kernel (require above)
-    def norm(v: Array[Float]): Double = {
-      var s = 0.0; var i = 0
-      while (i < v.length) { val x = v(i).toDouble; s += x * x; i += 1 }
-      math.sqrt(s)
-    }
-    val norms = corpus.map(c => norm(c._2))
-    val bc = spark.sparkContext.broadcast((corpus, norms))
-    val margin = threshold - 5e-7 // below this, rounding can't reach it
-    rows.mapPartitions { it =>
-      val (corp, ns) = bc.value
-      val ids = corp.map(_._1)
-      it.flatMap { case (idA, va) =>
-        val na = norm(va)
-        // corpus sorted by id: binary-search the first id_b > id_a
-        var lo = java.util.Arrays.binarySearch(ids, idA)
-        lo = if (lo >= 0) lo + 1 else -lo - 1
-        val out = scala.collection.mutable.ArrayBuffer[(Long, Long, Double)]()
-        var j = lo
-        while (j < corp.length) {
-          val (idB, vb) = corp(j)
-          var s = 0.0; var i = 0
-          val n = math.min(va.length, vb.length)
-          while (i < n) { s += va(i).toDouble * vb(i).toDouble; i += 1 }
-          val sim = s / (na * ns(j))
-          if (sim >= margin) {
-            val rounded = java.math.BigDecimal.valueOf(sim)
-              .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-            if (rounded >= threshold) out += ((idA, idB, rounded))
-          }
-          j += 1
-        }
-        out
-      }
-    }.toDF("id_a", "id_b", "sim")
-  }
-
   /** [[cosinePairsAbove]] as a DISTRIBUTED block kernel: rows hash into
     * `nBlocks` blocks (`id % nBlocks`), every unordered block pair
-    * {x, y} (x <= y) becomes one task, and each task runs the same tight
-    * primitive pair loop as the single-node kernel over its two blocks.
+    * {x, y} (x <= y) becomes one task, and each task runs one tight
+    * primitive pair loop over its two blocks.
     * Nothing is ever materialized on the driver: blocks are built by a
     * `collect_list` aggregation on the executors and the block-pair
     * cross join replicates each block only `nBlocks` times. At 100 TB

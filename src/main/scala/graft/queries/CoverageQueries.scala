@@ -803,17 +803,7 @@ object CoverageQueries {
     // counts, exact distinct cardinalities, min/max/mean per column —
     // one partial-agg shuffle of a single row (count_distinct expands
     // to the expand-operator plan; still one pass over the scan).
-    Q("profile_columns",
-      (s, d) => li(s, d).agg(
-        count(lit(1)).as("n_rows"),
-        sum(when(col("l_shipdate").isNull, 1L).otherwise(0L)).as("null_shipdate"),
-        countDistinct(col("l_returnflag")).as("d_returnflag"),
-        countDistinct(col("l_partkey")).as("d_partkey"),
-        min("l_extendedprice").as("min_price"),
-        max("l_extendedprice").as("max_price"),
-        round(avg("l_extendedprice"), 4).as("avg_price"),
-        round(avg("l_quantity"), 4).as("avg_qty")),
-      Some("""SELECT count(*) AS n_rows,
+    Q.sql("profile_columns", """SELECT count(*) AS n_rows,
         CAST(sum(CASE WHEN l_shipdate IS NULL THEN 1 ELSE 0 END) AS BIGINT)
           AS null_shipdate,
         count(DISTINCT l_returnflag) AS d_returnflag,
@@ -822,24 +812,16 @@ object CoverageQueries {
         max(l_extendedprice) AS max_price,
         round(avg(l_extendedprice), 4) AS avg_price,
         round(avg(l_quantity), 4) AS avg_qty
-        FROM lineitem""")),
+        FROM lineitem"""),
 
     // Fixed-bin histogram with literal bounds: bin = min(floor(x/w), K)
     // — zero-shuffle binning then one tiny partial-agg exchange of at
     // most K+1 rows. Literal bin edges (not a data-dependent fit) are
     // the 100 TB form: no extra pass, reproducible across drops.
-    Q("profile_histogram",
-      (s, d) => li(s, d)
-        .withColumn("bin",
-          least(floor(col("l_extendedprice") / 5000), lit(19)).cast("long"))
-        .groupBy("bin")
-        .agg(count(lit(1)).as("n"),
-          round(min("l_extendedprice"), 2).as("lo"),
-          round(max("l_extendedprice"), 2).as("hi")),
-      Some("""SELECT CAST(least(floor(l_extendedprice / 5000), 19) AS BIGINT) AS bin,
+    Q.sql("profile_histogram", """SELECT CAST(least(floor(l_extendedprice / 5000), 19) AS BIGINT) AS bin,
         count(*) AS n,
         round(min(l_extendedprice), 2) AS lo,
         round(max(l_extendedprice), 2) AS hi
-        FROM lineitem GROUP BY 1""")),
+        FROM lineitem GROUP BY 1"""),
   )
 }

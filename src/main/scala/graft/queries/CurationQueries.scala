@@ -36,6 +36,7 @@ object CurationQueries {
     // structure ⇒ the oracle gates the CONTRACT: zero false negatives
     // (bloom guarantee) and a false-positive rate under the configured
     // bound, alongside the exact member count both engines agree on.
+    // Body kept: the registry's only caller of Pruning.bloomFit/bloomContains.
     Q("bloom_prune",
       (s, d) => {
         val keys = Tables.customer(s, d).filter(col("c_nationkey") < 5)
@@ -370,6 +371,7 @@ object CurationQueries {
     // keys ≡0 mod 9 delete, other ≡0 mod 3 double the price (exact in binary — no
     // HALF_UP-vs-HALF_EVEN rounding divergence),
     // keys ≡0 mod 7 that the snapshot lacks insert.
+    // Body kept: the registry's only caller of Relational.applyChangelog.
     Q("pipeline_cdc_apply",
       (s, d) => {
         val o = Tables.orders(s, d)
@@ -416,7 +418,7 @@ object CurationQueries {
         val e = ev(s, d).filter(col("event_type").isin("click", "view"))
           .select(col("event_type"), col("user_id").cast("string").as("u"))
         val sk = e.groupBy("event_type")
-          .agg(call_function("theta_sketch_agg", col("u"), lit(k)).as("sk"),
+          .agg(call_function("kmv_sketch_agg", col("u"), lit(k)).as("sk"),
             count_distinct(col("u")).as("n_exact"))
         val wide = sk.agg(
           first(when(col("event_type") === "click", col("sk")),

@@ -1641,21 +1641,7 @@ object PipelineQueries {
     // Pure codegen'd CASE arithmetic — zero shuffles, embarrassingly
     // parallel at any scale. Boundaries are compile-time literals (the
     // fit artifact of a prior quantile pass).
-    Q("ml_buckets_interp",
-      (s, d) => {
-        val bs = Seq(25000.0, 100000.0, 250000.0, 400000.0)
-        val x = col("o_totalprice")
-        val k = bs.size - 1 // number of interior intervals
-        val interp = (0 until k).foldLeft(
-          when(x < bs.head, 0.0).when(x >= bs.last, 1.0)) { (acc, i) =>
-            val (lo, hi) = (bs(i), bs(i + 1))
-            acc.when(x >= lo && x < hi,
-              (lit(i) + (x - lit(lo)) / lit(hi - lo)) / lit(k))
-          }
-        Tables.orders(s, d).select(col("o_orderkey"),
-          round(interp, 6).as("pos"))
-      },
-      Some("""SELECT o_orderkey, round(CASE
+    Q.sql("ml_buckets_interp", """SELECT o_orderkey, round(CASE
           WHEN o_totalprice < 25000 THEN 0.0
           WHEN o_totalprice >= 400000 THEN 1.0
           WHEN o_totalprice < 100000
@@ -1664,7 +1650,7 @@ object PipelineQueries {
             THEN (1 + (o_totalprice - 100000) / 150000.0) / 3
           ELSE (2 + (o_totalprice - 250000) / 150000.0) / 3
         END, 6) AS pos
-        FROM orders""")),
+        FROM orders"""),
 
     // ===== MLTransform NGrams + BagOfWords (ml/transforms/tft.py:564,
     // :609 with compute_word_count): unigram+bigram vocabulary over the

@@ -122,18 +122,7 @@ object RelationalQueries {
 
     // TPC-H Q12 shape (shipping modes / priority): join + conditional
     // CASE aggregation — both branches in one pass.
-    Q("agg_tpch_q12",
-      (s, d) => li(s, d)
-        .filter(col("l_shipdate") >= lit("1997-01-01").cast("timestamp") &&
-          col("l_shipdate") < lit("1998-01-01").cast("timestamp"))
-        .join(ord(s, d), col("l_orderkey") === col("o_orderkey"))
-        .groupBy("l_linestatus")
-        .agg(
-          sum(when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1L)
-            .otherwise(0L)).as("high_line_count"),
-          sum(when(!col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1L)
-            .otherwise(0L)).as("low_line_count")),
-      Some("""SELECT l_linestatus,
+    Q.sql("agg_tpch_q12", """SELECT l_linestatus,
         CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
             THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
         CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
@@ -141,7 +130,7 @@ object RelationalQueries {
         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         WHERE l_shipdate >= TIMESTAMP '1997-01-01'
           AND l_shipdate < TIMESTAMP '1998-01-01'
-        GROUP BY l_linestatus""")),
+        GROUP BY l_linestatus"""),
 
     // TPC-H Q10 shape (returned-item reporting): 3-table join filtered
     // to returned lineitems, revenue agg per customer, top 20.
@@ -272,15 +261,10 @@ object RelationalQueries {
         count(*) AS n, sum(l_quantity) AS qty
         FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)"""),
 
-    Q("agg_count_distinct",
-      (s, d) => li(s, d).agg(
-        countDistinct(col("l_partkey")).as("n_parts"),
-        countDistinct(col("l_suppkey")).as("n_supps"),
-        countDistinct(col("l_returnflag"), col("l_linestatus")).as("n_flag_status")),
-      Some("""SELECT count(DISTINCT l_partkey) AS n_parts,
+    Q.sql("agg_count_distinct", """SELECT count(DISTINCT l_partkey) AS n_parts,
         count(DISTINCT l_suppkey) AS n_supps,
         count(DISTINCT (l_returnflag, l_linestatus)) AS n_flag_status
-        FROM lineitem"""), timed = false),
+        FROM lineitem""", timed = false),
 
     // Beam ApproximateDistinct/HllCount (sketches) — approximate values
     // are engine-specific, so this entry is rows-only checked.
@@ -446,6 +430,7 @@ object RelationalQueries {
         (SELECT s_nationkey nk, count(*) n_supp FROM supplier GROUP BY 1) s
         USING (nk)""", timed = false),
 
+    // Body kept: a Bench calibration member, so cal_version 2 stays comparable.
     Q("join_multiway",
       (s, d) => li(s, d)
         .join(ord(s, d), col("l_orderkey") === col("o_orderkey"))
@@ -731,25 +716,7 @@ object RelationalQueries {
         regexp_replace(p_type, ' ', '_', 'g') AS type_u
         FROM part"""), timed = false),
 
-    Q("scalar_math",
-      (s, d) => li(s, d).limit(0).unionByName(li(s, d)) // no-op shape guard
-        .filter(col("l_linenumber") <= 3)
-        .select(
-          col("l_orderkey"), col("l_linenumber").cast("long").as("ln"),
-          round(abs(-col("l_quantity")), 6).as("aq"),
-          round(ceil(col("l_extendedprice") / 100), 6).cast("long").as("cl"),
-          round(floor(col("l_extendedprice") / 100), 6).cast("long").as("fl"),
-          round(pow(col("l_quantity"), 2), 6).as("sq"),
-          round(sqrt(col("l_quantity")), 6).as("rt"),
-          round(exp(col("l_discount")), 6).as("ex"),
-          round(log(col("l_quantity")), 6).as("ln_q"),
-          round(log10(col("l_quantity")), 6).as("lg"),
-          pmod(col("l_linenumber"), lit(3)).cast("long").as("md"),
-          signum(col("l_quantity") - 25).cast("long").as("sg"),
-          round(sinh(col("l_discount")), 6).as("sh"),
-          round(cosh(col("l_discount")), 6).as("ch"),
-          round(tanh(col("l_discount")), 6).as("th")),
-      Some("""SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS ln,
+    Q.sql("scalar_math", """SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS ln,
         round(abs(-l_quantity), 6) AS aq,
         CAST(round(ceil(l_extendedprice / 100), 6) AS BIGINT) AS cl,
         CAST(round(floor(l_extendedprice / 100), 6) AS BIGINT) AS fl,
@@ -763,7 +730,7 @@ object RelationalQueries {
         round((exp(l_discount) - exp(-l_discount)) / 2, 6) AS sh,
         round((exp(l_discount) + exp(-l_discount)) / 2, 6) AS ch,
         round((exp(2 * l_discount) - 1) / (exp(2 * l_discount) + 1), 6) AS th
-        FROM lineitem WHERE l_linenumber <= 3"""), timed = false),
+        FROM lineitem WHERE l_linenumber <= 3""", timed = false),
 
     Q("scalar_datetime",
       (s, d) => ord(s, d).select(

@@ -258,6 +258,7 @@ object TextQueries {
     // deterministically from (source, doc_id) — mixed-case host and
     // interleaved utm params prove the normalization is real. All
     // native parse_url/HOF codegen, zero shuffle.
+    // Body kept: the registry's only caller of the TextAnalysis.url* functions.
     Q("text_url_canonicalize",
       (s, d) => {
         val url = concat(lit("https://WWW."), upper(col("source")),

@@ -77,7 +77,6 @@ object TpcdsQueries {
   private def nat(s: SparkSession, d: String) = Tables.nation(s, d)
   private def prt(s: SparkSession, d: String) = Tables.part(s, d)
   private def sup(s: SparkSession, d: String) = Tables.supplier(s, d)
-  private def ev(s: SparkSession, d: String) = Tables.events(s, d)
 
   private val rev = col("l_extendedprice") * (lit(1) - col("l_discount"))
 
@@ -296,21 +295,13 @@ object TpcdsQueries {
     // quantity-band averages, collapsed to conditional aggregation in
     // ONE scan (the original runs 15 correlated scalar subqueries;
     // a columnar engine evaluates all bands in a single pass).
-    Q("agg_tpcds_q9",
-      (s, d) => {
-        def band(lo: Int, hi: Int) =
-          round(avg(when(col("l_quantity").between(lo, hi),
-            col("l_extendedprice"))), 4).as(s"avg_b$lo")
-        li(s, d).agg(band(1, 10), band(11, 20), band(21, 30),
-          band(31, 40), band(41, 50))
-      },
-      Some("""SELECT
+    Q.sql("agg_tpcds_q9", """SELECT
           round(avg(l_extendedprice) FILTER (WHERE l_quantity BETWEEN 1 AND 10), 4) AS avg_b1,
           round(avg(l_extendedprice) FILTER (WHERE l_quantity BETWEEN 11 AND 20), 4) AS avg_b11,
           round(avg(l_extendedprice) FILTER (WHERE l_quantity BETWEEN 21 AND 30), 4) AS avg_b21,
           round(avg(l_extendedprice) FILTER (WHERE l_quantity BETWEEN 31 AND 40), 4) AS avg_b31,
           round(avg(l_extendedprice) FILTER (WHERE l_quantity BETWEEN 41 AND 50), 4) AS avg_b41
-        FROM lineitem""")),
+        FROM lineitem"""),
 
     // q28: six bucketed aggregate "subqueries" over one fact table —
     // the textbook form cross-joins six separate scalar-subquery
@@ -320,29 +311,7 @@ object TpcdsQueries {
     // multi-distinct witness: Catalyst plans the six distinct groups
     // through ONE Expand (+ two-level aggregate) — still a single
     // fact scan at 100 TB where the textbook form pays six.
-    Q("agg_tpcds_q28",
-      (s, d) => {
-        def bucket(tag: String, qLo: Int, qHi: Int, pLo: Int, pHi: Int,
-            dLo: Double, dHi: Double): Seq[org.apache.spark.sql.Column] = {
-          val cond = col("l_quantity").between(qLo, qHi) &&
-            (col("l_extendedprice").between(pLo, pHi) ||
-              col("l_discount").between(dLo, dHi))
-          Seq(
-            round(avg(when(cond, col("l_extendedprice"))), 4)
-              .as(s"${tag}_avg"),
-            count(when(cond, col("l_extendedprice"))).as(s"${tag}_cnt"),
-            countDistinct(when(cond, col("l_extendedprice")))
-              .as(s"${tag}_cntd"))
-        }
-        val aggs = bucket("b1", 1, 8, 1000, 20000, 0.00, 0.02) ++
-          bucket("b2", 9, 16, 5000, 30000, 0.02, 0.04) ++
-          bucket("b3", 17, 24, 10000, 40000, 0.04, 0.06) ++
-          bucket("b4", 25, 32, 20000, 50000, 0.05, 0.07) ++
-          bucket("b5", 33, 40, 30000, 60000, 0.06, 0.08) ++
-          bucket("b6", 41, 50, 40000, 80000, 0.08, 0.10)
-        li(s, d).agg(aggs.head, aggs.tail: _*)
-      },
-      Some {
+    Q.sql("agg_tpcds_q28", {
         def b(tag: String, qLo: Int, qHi: Int, pLo: Int, pHi: Int,
             dLo: Double, dHi: Double): String = {
           val c = s"l_quantity BETWEEN $qLo AND $qHi AND " +
@@ -393,16 +362,7 @@ object TpcdsQueries {
     // q88: one scan, eight disjoint conditional counts (time-of-day
     // bands) — the multi-scan-collapsed-to-conditional-aggregation
     // shape; Catalyst evaluates all eight in a single pass.
-    Q("agg_tpcds_q88",
-      (s, d) => {
-        def band(i: Int) = sum(when(hour(col("ts")) >= i * 3 &&
-          hour(col("ts")) < (i + 1) * 3, 1).otherwise(0))
-          .cast("long").as(s"h$i")
-        ev(s, d).filter(col("event_type") === "click")
-          .agg(band(0), band(1), band(2), band(3), band(4), band(5),
-            band(6), band(7))
-      },
-      Some("""SELECT
+    Q.sql("agg_tpcds_q88", """SELECT
           CAST(count(*) FILTER (WHERE hour(ts) >= 0  AND hour(ts) < 3)  AS BIGINT) AS h0,
           CAST(count(*) FILTER (WHERE hour(ts) >= 3  AND hour(ts) < 6)  AS BIGINT) AS h1,
           CAST(count(*) FILTER (WHERE hour(ts) >= 6  AND hour(ts) < 9)  AS BIGINT) AS h2,
@@ -411,7 +371,7 @@ object TpcdsQueries {
           CAST(count(*) FILTER (WHERE hour(ts) >= 15 AND hour(ts) < 18) AS BIGINT) AS h5,
           CAST(count(*) FILTER (WHERE hour(ts) >= 18 AND hour(ts) < 21) AS BIGINT) AS h6,
           CAST(count(*) FILTER (WHERE hour(ts) >= 21 AND hour(ts) < 24) AS BIGINT) AS h7
-        FROM events WHERE event_type = 'click'""")),
+        FROM events WHERE event_type = 'click'"""),
 
     // q1: the correlated-scalar-subquery-per-group filter — customers
     // whose return count exceeds 1.2x the AVERAGE return count of
@@ -570,6 +530,7 @@ object TpcdsQueries {
     // instances over DISJOINT-purpose date windows (sold in 1995,
     // returned 1995-96, bought again 1996-97), joined on the
     // composite (item, customer) key, reported per brand.
+    // Body kept: one fact pass; the text joins lineitem ⋈ orders three times.
     Q("agg_tpcds_q29",
       (s, d) => {
         // ONE fact pass (r19 opt, guide §1.2/§2.3) — the q17/q25
@@ -670,23 +631,8 @@ object TpcdsQueries {
     // q59: the same-CTE-two-epochs comparison — monthly order volume
     // per nation, 1996 vs 1997 joined on MONTH-OF-YEAR (q59's
     // week-over-week shape on this schema's calendar).
-    Q("agg_tpcds_q59",
-      (s, d) => {
-        val mss = ord(s, d)
-          .join(cust(s, d), col("o_custkey") === col("c_custkey"))
-          .join(broadcast(nat(s, d)), col("c_nationkey") === col("n_nationkey"))
-          .filter(year(col("o_orderdate")).isin(1996, 1997))
-          .groupBy(col("n_name"), year(col("o_orderdate")).as("y"),
-            month(col("o_orderdate")).as("moy"))
-          .agg(count(lit(1)).as("n"))
-        val a = mss.filter(col("y") === 1996)
-          .select(col("n_name"), col("moy"), col("n").as("n_1996"))
-        val b = mss.filter(col("y") === 1997)
-          .select(col("n_name"), col("moy"), col("n").as("n_1997"))
-        a.join(b, Seq("n_name", "moy"))
-      },
-      Some("""WITH mss AS (
-          SELECT n_name, CAST(year(o_orderdate) AS INT) AS y,
+    Q.sql("agg_tpcds_q59", """WITH mss AS (
+          SELECT /*+ BROADCAST(nation) */ n_name, CAST(year(o_orderdate) AS INT) AS y,
             CAST(month(o_orderdate) AS INT) AS moy, count(*) AS n
           FROM orders
           JOIN customer ON o_custkey = c_custkey
@@ -697,7 +643,7 @@ object TpcdsQueries {
           CAST(a.n AS BIGINT) AS n_1996, CAST(b.n AS BIGINT) AS n_1997
         FROM mss a JOIN mss b
           ON a.n_name = b.n_name AND a.moy = b.moy
-         AND a.y = 1996 AND b.y = 1997""")),
+         AND a.y = 1996 AND b.y = 1997"""),
 
     // q62: the shipping-lag band report — days between order and ship
     // date bucketed into lateness bands, one conditional-aggregation
@@ -988,24 +934,7 @@ object TpcdsQueries {
     // while n ≲ 10⁵ rows per (supplier, month) cell; at larger fills
     // move the comparison into DECIMAL(38,0) — the cell count grows
     // with the supplier dimension, not with total fact rows.
-    Q("agg_tpcds_q39",
-      (s, d) => {
-        val q = col("l_quantity").cast("long")
-        def moy(m: Int, suf: String) = li(s, d)
-          .filter(year(col("l_shipdate")) === 1996 &&
-            month(col("l_shipdate")) === m)
-          .groupBy(col("l_suppkey"))
-          .agg(count(lit(1)).as(s"n$suf"), sum(q).as(s"sx$suf"),
-            sum(q * q).as(s"sx2$suf"))
-          .filter(col(s"n$suf") > 1 &&
-            col(s"n$suf") * (col(s"n$suf") * col(s"sx2$suf") -
-              col(s"sx$suf") * col(s"sx$suf")) * 4 >
-            col(s"sx$suf") * col(s"sx$suf") * (col(s"n$suf") - 1))
-        moy(3, "_mar").join(moy(4, "_apr"), Seq("l_suppkey"))
-          .select(col("l_suppkey"), col("n_mar"), col("sx_mar"),
-            col("sx2_mar"), col("n_apr"), col("sx_apr"), col("sx2_apr"))
-      },
-      Some("""WITH m AS (
+    Q.sql("agg_tpcds_q39", """WITH m AS (
           SELECT l_suppkey, CAST(month(l_shipdate) AS INT) AS moy,
             count(*) AS n, sum(CAST(l_quantity AS BIGINT)) AS sx,
             sum(CAST(l_quantity AS BIGINT) * CAST(l_quantity AS BIGINT)) AS sx2
@@ -1019,7 +948,7 @@ object TpcdsQueries {
           CAST(b.n AS BIGINT) AS n_apr, CAST(b.sx AS BIGINT) AS sx_apr,
           CAST(b.sx2 AS BIGINT) AS sx2_apr
         FROM m a JOIN m b ON a.l_suppkey = b.l_suppkey
-        WHERE a.moy = 3 AND b.moy = 4""")),
+        WHERE a.moy = 3 AND b.moy = 4"""),
 
     // q75: CHANNEL UNION + RETURNS NETTING + YEAR-OVER-YEAR DECLINE —
     // each channel nets returns from sales per (year, brand), the
@@ -1341,50 +1270,25 @@ object TpcdsQueries {
     // and only the (channel, nation) AGGREGATE frames are unioned and
     // rolled up. Customer nation vs supplier nation play the two
     // channels. All money in integer cents (exact cross-engine).
-    Q("agg_tpcds_q77",
-      (s, d) => {
-        val cents = sum(round(rev * 100).cast("long"))
-        def chan(name: String, joined: DataFrame): DataFrame = {
-          val sales = joined.filter(col("l_returnflag") =!= "R")
-            .groupBy(col("n_name")).agg(cents.as("sales_c"))
-          val rets = joined.filter(col("l_returnflag") === "R")
-            .groupBy(col("n_name")).agg(cents.as("ret_c"))
-          sales.join(rets, Seq("n_name"), "left")
-            .select(lit(name).as("channel"), col("n_name"),
-              col("sales_c"), coalesce(col("ret_c"), lit(0L)).as("ret_c"))
-        }
-        val byCust = chan("cust", li(s, d)
-          .join(ord(s, d), col("l_orderkey") === col("o_orderkey"))
-          .join(cust(s, d), col("o_custkey") === col("c_custkey"))
-          .join(broadcast(nat(s, d)), col("c_nationkey") === col("n_nationkey")))
-        val bySupp = chan("supp", li(s, d)
-          .join(sup(s, d), col("l_suppkey") === col("s_suppkey"))
-          .join(broadcast(nat(s, d)), col("s_nationkey") === col("n_nationkey")))
-        byCust.unionByName(bySupp)
-          .rollup(col("channel"), col("n_name"))
-          .agg(sum(col("sales_c")).as("sales_c"),
-            sum(col("ret_c")).as("ret_c"),
-            (sum(col("sales_c")) - sum(col("ret_c"))).as("profit_c"))
-      },
-      Some("""WITH cust_sales AS (
-          SELECT n_name, sum(CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)) AS sales_c
+    Q.sql("agg_tpcds_q77", """WITH cust_sales AS (
+          SELECT /*+ BROADCAST(nation) */ n_name, sum(CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)) AS sales_c
           FROM lineitem JOIN orders ON l_orderkey = o_orderkey
           JOIN customer ON o_custkey = c_custkey
           JOIN nation ON c_nationkey = n_nationkey
           WHERE l_returnflag <> 'R' GROUP BY 1),
         cust_returns AS (
-          SELECT n_name, sum(CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)) AS ret_c
+          SELECT /*+ BROADCAST(nation) */ n_name, sum(CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)) AS ret_c
           FROM lineitem JOIN orders ON l_orderkey = o_orderkey
           JOIN customer ON o_custkey = c_custkey
           JOIN nation ON c_nationkey = n_nationkey
           WHERE l_returnflag = 'R' GROUP BY 1),
         supp_sales AS (
-          SELECT n_name, sum(CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)) AS sales_c
+          SELECT /*+ BROADCAST(nation) */ n_name, sum(CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)) AS sales_c
           FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
           JOIN nation ON s_nationkey = n_nationkey
           WHERE l_returnflag <> 'R' GROUP BY 1),
         supp_returns AS (
-          SELECT n_name, sum(CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)) AS ret_c
+          SELECT /*+ BROADCAST(nation) */ n_name, sum(CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)) AS ret_c
           FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
           JOIN nation ON s_nationkey = n_nationkey
           WHERE l_returnflag = 'R' GROUP BY 1),
@@ -1397,7 +1301,7 @@ object TpcdsQueries {
         SELECT channel, n_name, CAST(sum(sales_c) AS BIGINT) AS sales_c,
           CAST(sum(ret_c) AS BIGINT) AS ret_c,
           CAST(sum(sales_c) - sum(ret_c) AS BIGINT) AS profit_c
-        FROM channels GROUP BY ROLLUP(channel, n_name)""")),
+        FROM channels GROUP BY ROLLUP(channel, n_name)"""),
 
     // q57: deviation BANDS over a monthly series — q47's lag/lead
     // navigation PLUS the selection q57 adds: months whose volume
@@ -1405,28 +1309,8 @@ object TpcdsQueries {
     // neighboring months alongside. Two window frames (yearly
     // partition sum/count + ordered lag/lead) over ONE aggregate; the
     // 10% test in exact integer cross-multiplication, never division.
-    Q("agg_tpcds_q57",
-      (s, d) => {
-        val monthly = ordByNationMonth(s, d)
-          .groupBy(col("n_name"), year(col("o_orderdate")).as("yr"),
-            col("ym"))
-          .agg(sum(round(col("o_totalprice") * 100).cast("long"))
-            .as("vol_c"))
-        val wYear = Window.partitionBy(col("n_name"), col("yr"))
-        val wNav = Window.partitionBy(col("n_name")).orderBy(col("ym"))
-        monthly
-          .withColumn("tot_c", sum(col("vol_c")).over(wYear))
-          .withColumn("nm", count(lit(1)).over(wYear))
-          .withColumn("psum", lag(col("vol_c"), 1).over(wNav))
-          .withColumn("nsum", lead(col("vol_c"), 1).over(wNav))
-          .filter(abs(col("vol_c") * col("nm") - col("tot_c")) * 10 >
-            col("tot_c") &&
-            col("psum").isNotNull && col("nsum").isNotNull)
-          .select(col("n_name"), col("ym"), col("vol_c"), col("tot_c"),
-            col("nm"), col("psum"), col("nsum"))
-      },
-      Some("""WITH monthly AS (
-          SELECT n_name, CAST(year(o_orderdate) AS INT) AS yr,
+    Q.sql("agg_tpcds_q57", """WITH monthly AS (
+          SELECT /*+ BROADCAST(nation) */ n_name, CAST(year(o_orderdate) AS INT) AS yr,
             CAST(year(o_orderdate) * 100 + month(o_orderdate) AS INT) AS ym,
             sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS vol_c
           FROM orders JOIN customer ON o_custkey = c_custkey
@@ -1444,7 +1328,7 @@ object TpcdsQueries {
           CAST(psum AS BIGINT) AS psum, CAST(nsum AS BIGINT) AS nsum
         FROM dev
         WHERE abs(vol_c * nm - tot_c) * 10 > tot_c
-          AND psum IS NOT NULL AND nsum IS NOT NULL""")),
+          AND psum IS NOT NULL AND nsum IS NOT NULL"""),
 
     // q10: multi-EXISTS customer PROFILE — active customers (an order
     // in the period) who ALSO bought big (quantity > 45) OR spent big
@@ -1717,34 +1601,16 @@ object TpcdsQueries {
     // q45: DISJUNCTIVE admission across a dimension predicate and a
     // fact-derived key set — customers in a nation short-list OR
     // buyers of small parts. The OR cannot be a semi join (it would
-    // drop the dim-only rows), so the key set enters as a LEFT join
-    // against the DISTINCT buyer keys and the disjunction is one
-    // filter — never two unioned scans of the fact.
-    Q("agg_tpcds_q45",
-      (s, d) => {
-        val buyers = li(s, d)
-          .join(prt(s, d).filter(col("p_size").isin(1, 2, 3)),
-            col("l_partkey") === col("p_partkey"), "left_semi")
-          .join(ord(s, d), col("l_orderkey") === col("o_orderkey"))
-          .select(col("o_custkey").as("b_cust")).distinct()
-        ord(s, d)
-          .join(cust(s, d), col("o_custkey") === col("c_custkey"))
-          .join(broadcast(nat(s, d)), col("c_nationkey") === col("n_nationkey"))
-          .join(buyers, col("o_custkey") === col("b_cust"), "left")
-          .filter(col("n_name").isin("NATION_1", "NATION_5", "NATION_9") ||
-            col("b_cust").isNotNull)
-          .groupBy(col("n_name"), col("c_mktsegment"))
-          .agg(sum(round(col("o_totalprice") * 100).cast("long"))
-            .as("rev_c"),
-            count(lit(1)).as("n"))
-      },
-      Some("""WITH wanted_parts AS (
+    // drop the dim-only rows), so the IN under the OR plans as an
+    // existence join against the DISTINCT buyer keys and the
+    // disjunction is one filter — never two unioned scans of the fact.
+    Q.sql("agg_tpcds_q45", """WITH wanted_parts AS (
           SELECT p_partkey FROM part WHERE p_size IN (1, 2, 3)),
         buyers AS (
           SELECT DISTINCT o_custkey FROM lineitem
           JOIN orders ON l_orderkey = o_orderkey
           WHERE l_partkey IN (SELECT p_partkey FROM wanted_parts))
-        SELECT n_name, c_mktsegment,
+        SELECT /*+ BROADCAST(nation) */ n_name, c_mktsegment,
           CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS rev_c,
           CAST(count(*) AS BIGINT) AS n
         FROM orders
@@ -1752,7 +1618,7 @@ object TpcdsQueries {
         JOIN nation ON c_nationkey = n_nationkey
         WHERE n_name IN ('NATION_1', 'NATION_5', 'NATION_9')
            OR o_custkey IN (SELECT o_custkey FROM buyers)
-        GROUP BY 1, 2""")),
+        GROUP BY 1, 2"""),
 
     // q66: the WIDE HORIZONTAL PIVOT report — one year's sales spread
     // into twelve per-month columns plus a total, ALL as conditional
@@ -1852,6 +1718,7 @@ object TpcdsQueries {
     // join), not per-line apportionment. Net quantities are
     // integer-valued doubles summed per customer (exact under any
     // summation order).
+    // Body kept: a Bench calibration member, so cal_version 2 stays comparable.
     Q("agg_tpcds_q93",
       (s, d) => {
         val rets = li(s, d).filter(col("l_returnflag") === "R")
@@ -2497,6 +2364,7 @@ object TpcdsQueries {
     // sums per nation in one scan. Calendar mapping is the
     // cross-engine trap: Spark dayofweek() is 1=Sunday..7=Saturday,
     // DuckDB's is 0=Sunday..6=Saturday — the oracle shifts by one.
+    // Body kept: the text's dayofweek counts Sunday as 0, Spark's as 1.
     Q("agg_tpcds_q43",
       (s, d) => {
         val dow = dayofweek(col("o_orderdate"))

@@ -261,6 +261,7 @@ object TpchQueries {
 
     // Q16 (parts/supplier relationship): NOT-IN as an anti join +
     // count-distinct over part attribute groups.
+    // Body kept: the text's NOT IN is a null-aware anti join, which only broadcasts.
     Q("agg_tpch_q16",
       (s, d) => li(s, d)
         .join(prt(s, d).filter(col("p_brand") =!= "Brand#3" &&
@@ -283,23 +284,11 @@ object TpchQueries {
 
     // Q17 (small-quantity-order revenue): correlated per-part AVG
     // subquery → per-part aggregate joined back on the key.
-    Q("agg_tpch_q17",
-      (s, d) => {
-        val partAvg = li(s, d).groupBy(col("l_partkey").as("pa_key"))
-          .agg((avg(col("l_quantity")) * 0.2).as("qty_cap"))
-        li(s, d)
-          .join(prt(s, d).filter(col("p_brand") === "Brand#5" &&
-              col("p_type") === "SMALL"),
-            col("l_partkey") === col("p_partkey"))
-          .join(partAvg, col("l_partkey") === col("pa_key"))
-          .filter(col("l_quantity") < col("qty_cap"))
-          .agg(round(sum(col("l_extendedprice")) / 7.0, 4).as("avg_yearly"))
-      },
-      Some("""SELECT round(sum(l_extendedprice) / 7.0, 4) AS avg_yearly
+    Q.sql("agg_tpch_q17", """SELECT round(sum(l_extendedprice) / 7.0, 4) AS avg_yearly
         FROM lineitem JOIN part ON l_partkey = p_partkey
         WHERE p_brand = 'Brand#5' AND p_type = 'SMALL'
           AND l_quantity < (SELECT 0.2 * avg(l_quantity)
-            FROM lineitem l2 WHERE l2.l_partkey = p_partkey)""")),
+            FROM lineitem l2 WHERE l2.l_partkey = p_partkey)"""),
 
     // Q18 (large-volume customers): IN over a HAVING subquery → semi
     // join against the qualifying-order aggregate.
@@ -345,23 +334,7 @@ object TpchQueries {
     // suppliers who moved serious volume of a part-name family in a
     // year (availqty has no analog — the HAVING threshold keeps the
     // shape: inner agg feeding an outer semi join).
-    Q("agg_tpch_q20",
-      (s, d) => {
-        val movers = li(s, d)
-          .filter(col("l_shipdate") >= lit("1997-01-01").cast("timestamp") &&
-            col("l_shipdate") < lit("1998-01-01").cast("timestamp"))
-          .join(prt(s, d).filter(col("p_name").startsWith("red")),
-            col("l_partkey") === col("p_partkey"), "left_semi")
-          .groupBy(col("l_suppkey"))
-          .agg(sum("l_quantity").as("qty"))
-          .filter(col("qty") > 350)
-        sup(s, d)
-          .join(broadcast(nat(s, d).filter(col("n_name") === "NATION_9")),
-            col("s_nationkey") === col("n_nationkey"))
-          .join(movers, col("s_suppkey") === col("l_suppkey"), "left_semi")
-          .select(col("s_name"), col("s_acctbal"))
-      },
-      Some("""SELECT s_name, s_acctbal
+    Q.sql("agg_tpch_q20", """SELECT /*+ BROADCAST(nation) */ s_name, s_acctbal
         FROM supplier JOIN nation ON s_nationkey = n_nationkey
         WHERE n_name = 'NATION_9' AND s_suppkey IN (
           SELECT l_suppkey FROM lineitem
@@ -369,7 +342,7 @@ object TpchQueries {
             AND l_shipdate < TIMESTAMP '1998-01-01'
             AND l_partkey IN
               (SELECT p_partkey FROM part WHERE p_name LIKE 'red%')
-          GROUP BY l_suppkey HAVING sum(l_quantity) > 350)""")),
+          GROUP BY l_suppkey HAVING sum(l_quantity) > 350)"""),
 
     // Q21 (suppliers who kept orders waiting): the EXISTS/NOT-EXISTS
     // pair rewritten relationally — "some other supplier in the

@@ -83,8 +83,7 @@ object VectorQueries {
     // distribution (max observed 0.51), so the oracle compares a
     // non-empty result set and actually exercises the value path.
     // Registered form is the distributed block kernel — no driver
-    // materialization anywhere in the plan (the single-node collect
-    // kernel remains available for ≤broadcast-size corpora).
+    // materialization anywhere in the plan.
     Q("dedup_embedding_cosine",
       (s, d) => Similarity.cosinePairsAboveBlocked(emb(s, d), "vec_id", "embedding",
         threshold = 0.35),

@@ -199,4 +199,21 @@ class BenchLineSpec extends AnyFunSuite {
     assert(kept == qs.map(_._1).take(kept.size),
       "queries block must be a prefix of the priority order")
   }
+
+  test("bench_diff.py's calibration lists mirror Bench.calibration") {
+    // bench_diff.py host-normalizes with these lists; a drifted copy
+    // normalizes against the wrong members. Python evaluates the
+    // script's own definitions (CAL_QUERIES_V1 is a comprehension).
+    val out = scala.sys.process.Process(Seq("python3", "-c",
+      "import json, runpy; m = runpy.run_path('scripts/bench_diff.py'); " +
+        "print(json.dumps([m['CAL_QUERIES'], m['CAL_QUERIES_V1']]))")).!!
+    val lists = mapper.readTree(out)
+    def names(i: Int): Seq[String] =
+      (0 until lists.get(i).size()).map(lists.get(i).get(_).asText())
+    assert(names(0) == Bench.calibration,
+      s"CAL_QUERIES ${names(0)} != Bench.calibration ${Bench.calibration}")
+    val v1 = Bench.calibration.map(q =>
+      if (q == "agg_tpcds_q93") "agg_tpcds_q78" else q)
+    assert(names(1) == v1, s"CAL_QUERIES_V1 ${names(1)} != $v1")
+  }
 }

@@ -1332,15 +1332,6 @@ class PipelineOpsSpec extends SparkSpec {
 
   // ---- Similarity kernel parity ----
 
-  test("cosinePairsAboveKernel == declarative cosinePairsAbove") {
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val a = Similarity.cosinePairsAbove(emb, "vec_id", "embedding", 0.3)
-      .collect().map(_.toSeq).toSet
-    val b = Similarity.cosinePairsAboveKernel(emb, "vec_id", "embedding", 0.3)
-      .collect().map(_.toSeq).toSet
-    assert(a.nonEmpty && a == b)
-  }
-
   test("cosinePairsAboveBlocked == declarative cosinePairsAbove") {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val a = Similarity.cosinePairsAbove(emb, "vec_id", "embedding", 0.3)
@@ -1368,17 +1359,6 @@ class PipelineOpsSpec extends SparkSpec {
     assert(got == Set((1L, 2L)))
   }
 
-  test("cosinePairsAboveKernel enforces the broadcast-size contract") {
-    // the collect-to-driver kernel must fail FAST on a too-large
-    // corpus, pointing at the distributed block kernel
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val e = intercept[IllegalArgumentException] {
-      Similarity.cosinePairsAboveKernel(emb, "vec_id", "embedding", 0.3,
-        maxRows = 10)
-    }
-    assert(e.getMessage.contains("cosinePairsAboveBlocked"))
-  }
-
   test("exactByKeyAgg == exactByKey on the keep-smallest contract") {
     val ev = graft.sources.Tables.events(spark, sfDir)
     val win = graft.operators.Dedup.exactByKey(ev,
@@ -1404,7 +1384,7 @@ class PipelineOpsSpec extends SparkSpec {
     assert(graft.operators.Dedup.minHashCandidates(
       emptyDocs, "doc_id", "text").count() == 0)
     val emptyVecs = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
-    assert(Similarity.cosinePairsAboveKernel(
+    assert(Similarity.cosinePairsAboveBlocked(
       emptyVecs, "vec_id", "embedding", 0.5).count() == 0)
     val noMatches = matches(Seq.empty, vPlusP)
     assert(noMatches.isEmpty)

@@ -650,7 +650,7 @@ class ScaleSpec extends SparkSpec {
     val ds97 = plan("agg_tpcds_q97")
     assert(ds97.contains("FullOuter") && !ds97.contains("Union"),
       "tpcds q97 overlap matrix lost its single full-outer form")
-    // q45: the disjunctive admission is a LEFT join against the
+    // q45: the disjunctive admission is an existence join against the
     // distinct buyer key set + ONE filter — the fact is never
     // scanned twice and unioned to express the OR
     val ds45 = plan("agg_tpcds_q45")
@@ -850,6 +850,14 @@ class ScaleSpec extends SparkSpec {
     assert(replaced.isEmpty, s"re-registered: ${replaced.mkString(", ")}")
   }
 
+  test("GraftFunctions.register leaves Spark's built-in theta_sketch_agg in place") {
+    graft.functions.GraftFunctions.register(spark)
+    val n = spark.sql(
+      "SELECT theta_sketch_estimate(theta_sketch_agg(id)) FROM range(1000)")
+      .head().getLong(0)
+    assert(n == 1000L)
+  }
+
   test("AQE coalesces shuffle partitions on small data") {
     val prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
@@ -1034,7 +1042,7 @@ class ScaleSpec extends SparkSpec {
     val df = (a ++ b).toDF("tag", "u")
     graft.functions.GraftFunctions.register(spark)
     val sk = df.groupBy("tag")
-      .agg(call_function("theta_sketch_agg", col("u"), lit(k)).as("s"))
+      .agg(call_function("kmv_sketch_agg", col("u"), lit(k)).as("s"))
       .collect().map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
     def est(s: Seq[Long]): Double =
       if (s.size < k) s.size.toDouble else (k - 1) / (s(k - 1) / MAXH)
@@ -1048,13 +1056,13 @@ class ScaleSpec extends SparkSpec {
     val common = sk("a").toSet.intersect(sk("b").toSet).count(_ < theta)
     val estI = common / (theta / MAXH)
     assert(math.abs(estI - 40000) < 40000 * 0.25, s"estI=$estI")
-    // rollup: 16 sub-sketches merged with theta_merge_agg must equal
+    // rollup: 16 sub-sketches merged with kmv_merge_agg must equal
     // the single-pass sketch BIT FOR BIT (KMV merge is exact)
     val merged = df.filter(col("tag") === "a")
       .withColumn("sub", abs(hash(col("u"))) % 16)
       .groupBy("sub")
-      .agg(call_function("theta_sketch_agg", col("u"), lit(k)).as("s"))
-      .agg(call_function("theta_merge_agg", col("s"), lit(k)).as("m"))
+      .agg(call_function("kmv_sketch_agg", col("u"), lit(k)).as("s"))
+      .agg(call_function("kmv_merge_agg", col("s"), lit(k)).as("m"))
       .collect().head.getSeq[Long](0)
     assert(merged == sk("a"), "merge-of-partials must equal single-pass KMV")
   }

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
 
-/** [[Q.run]]'s table walk: every base table a text names gets a temp
-  * view, wherever in the text it is named, and no other name does. */
+/** [[Q.run]]'s table walk: every base table a text names is bound,
+  * wherever in the text it is named, and no other name is. */
 class SqlTextSpec extends graft.SparkSpec {
 
   private def n(text: String): Long = Q.run(spark, sfDir, text).head().getLong(0)
@@ -40,6 +40,10 @@ class SqlTextSpec extends graft.SparkSpec {
     assert(Q.tables(spark.sessionState.sqlParser.parsePlan(
       "WITH ghost AS (SELECT * FROM region) SELECT * FROM ghost")) == Set("ghost", "region"))
     assert(n("WITH ghost AS (SELECT * FROM region) SELECT count(*) FROM ghost") == regions)
+  }
+
+  test("a CTE named like a base table shadows the table") {
+    assert(n("WITH nation AS (SELECT * FROM region) SELECT count(*) FROM nation") == regions)
   }
 
   test("an unknown table fails with TABLE_OR_VIEW_NOT_FOUND") {
