@@ -417,11 +417,13 @@ object RelationalQueries {
          AND o_orderstatus = 'F')"""), timed = false),
 
     Q("join_anti",
-      (s, d) => cust(s, d).join(ord(s, d).select("o_custkey"),
+      (s, d) => cust(s, d).join(
+          ord(s, d).filter(col("o_orderpriority") === "1-URGENT").select("o_custkey"),
           col("c_custkey") === col("o_custkey"), "left_anti")
         .select("c_custkey", "c_name"),
       Some("""SELECT c_custkey, c_name FROM customer WHERE NOT EXISTS
-        (SELECT 1 FROM orders WHERE o_custkey = c_custkey)"""), timed = false),
+        (SELECT 1 FROM orders WHERE o_custkey = c_custkey
+         AND o_orderpriority = '1-URGENT')"""), timed = false),
 
     Q.sql("join_full_outer", """SELECT CAST(coalesce(c.nk, s.nk) AS BIGINT) AS nationkey,
         coalesce(c.n_cust, 0) AS n_cust, coalesce(s.n_supp, 0) AS n_supp

@@ -7,7 +7,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.SparkEnv
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{classic, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -20,32 +21,37 @@ import org.apache.spark.sql.types._
   * pushdown, column pruning and partition planning, so these are thin
   * wrappers that only normalize types.
   *
-  * '''Schema memo.''' In Beam a PCollection's schema is fixed when the
-  * pipeline is built; here a table's schema is inferred once, not on
+  * '''Relation memo.''' In Beam a source is resolved once, when the
+  * pipeline is built; here a table is resolved once per session, not on
   * every query build, where Spark's parquet inference costs one Spark job
-  * per table. [[parquet]] keeps one JVM-wide entry per absolute table
-  * path, so the memo is bounded by the number of tables and a new key for
-  * a path replaces its entry. The key is
+  * per table and every resolution lists the files again. [[parquet]]
+  * keeps one JVM-wide entry per absolute table path, so the memo is
+  * bounded by the number of tables and a new key for a path replaces its
+  * entry. The key is
   *  - a `java.nio` listing stamp of every file under the path (relative
   *    name, size, mtime), so an in-place overwrite misses: Spark writes
   *    new part-file names (as `tools.DegenerateTables` does); and
-  *  - the session's explicitly set confs that change inference:
-  *    `spark.sql.parquet.*`, `spark.sql.legacy.parquet.*` (`nanosAsLong`
-  *    turns `events.ts` into a long), `spark.sql.caseSensitive` and
-  *    `spark.sql.files.ignoreCorruptFiles`.
+  *  - the session's explicitly set confs that change inference or
+  *    listing: `spark.sql.parquet.*`, `spark.sql.legacy.parquet.*`
+  *    (`nanosAsLong` turns `events.ts` into a long), `spark.sql.files.*`
+  *    and `spark.sql.caseSensitive`.
   *
-  * A miss runs Spark's own inference, with no lock held, and stores its
-  * schema. A path that is missing, a glob, or on another file system is
-  * read as before, without the memo, so its errors (`PATH_NOT_FOUND`)
-  * are Spark's own. Only the schema is cached: every read still lists
-  * and scans the files.
+  * An entry holds the table's schema and its resolved `LogicalRelation`
+  * (file index included) with the session that built it. A load with the
+  * same stamp from the same session (`eq`) returns that relation with
+  * fresh attribute ids (`newInstance`), so two loads of one table still
+  * self-join; another session reuses only the schema and replaces the
+  * entry, since scan planning reads the relation's own session conf. A
+  * miss runs Spark's own inference, with no lock held. A path that is
+  * missing, a glob, or on another file system is read as before, without
+  * the memo, so its errors (`PATH_NOT_FOUND`) are Spark's own.
   */
 object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     normalizeNtz(parquet(spark, s"$dir/$name.parquet"))
 
-  /** `spark.read.parquet(path)`, with the schema from the memo when the
-    * path's stamp matches its entry. Also applies
+  /** `spark.read.parquet(path)`, resolved once per session and stamp
+    * (see the memo above). Also applies
     * [[graft.Session.BroadcastBlockSize]] to sessions the engine did not
     * build, unless the application set a block size itself. */
   def parquet(spark: SparkSession, path: String): DataFrame = {
@@ -58,11 +64,17 @@ object Tables {
     stamped match {
       case None => spark.read.parquet(path)
       case Some((p, stamp)) =>
-        Option(memo.get(p)).filter(_._1 == stamp) match {
-          case Some((_, schema)) => spark.read.schema(schema).parquet(path)
-          case None =>
-            val df = spark.read.parquet(path)
-            memo.put(p, stamp -> df.schema)
+        Option(memo.get(p)).filter(_.stamp == stamp) match {
+          case Some(e) if e.session eq spark =>
+            new classic.Dataset[Row](spark.asInstanceOf[classic.SparkSession],
+              e.relation.newInstance(), Encoders.row(e.relation.schema))
+          case hit =>
+            val df = hit.fold(spark.read.parquet(path))(
+              e => spark.read.schema(e.relation.schema).parquet(path))
+            df.queryExecution.analyzed match {
+              case r: LogicalRelation => memo.put(p, Entry(stamp, spark, r))
+              case _ => memo.remove(p)
+            }
             df
         }
     }
@@ -71,12 +83,15 @@ object Tables {
   private final case class Stamp(files: Seq[(String, Long, Long)],
       confs: Seq[(String, String)])
 
-  private val memo = new ConcurrentHashMap[Path, (Stamp, StructType)]()
+  private final case class Entry(stamp: Stamp, session: SparkSession,
+      relation: LogicalRelation)
+
+  private val memo = new ConcurrentHashMap[Path, Entry]()
 
   private def inferenceConfs(spark: SparkSession): Seq[(String, String)] =
     spark.conf.getAll.toSeq.filter { case (k, _) =>
       k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") ||
-        k == "spark.sql.caseSensitive" || k == "spark.sql.files.ignoreCorruptFiles"
+        k.startsWith("spark.sql.files.") || k == "spark.sql.caseSensitive"
     }.sorted
 
   /** The absolute local path that Spark reads for `path`; None for a

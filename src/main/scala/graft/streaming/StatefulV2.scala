@@ -1611,16 +1611,21 @@ object StatefulV2 {
       // rights buffer locally; ONE appendList persists the batch's
       // still-unjoined remainder — see SessionLog.flush
       val local = scala.collection.mutable.ArrayBuffer[R]()
+      // one state read per key per batch: `get()` is null when absent,
+      // which is all `exists()` tests
+      var current: Option[L] = Option(person.get())
       rows.foreach {
-        case (_, Some(l), _) if !person.exists() =>
+        case (_, Some(l), _) if current.isEmpty =>
           person.update(l)
+          current = Some(l)
           val buffered = pending.get().toSeq ++ local
           pending.clear(); local.clear()
           buffered.foreach(r => out += ((key, l, r)))
         case (_, Some(_), _) => // duplicate person: first wins
-        case (_, None, Some(r)) =>
-          if (person.exists()) out += ((key, person.get(), r))
-          else local += r
+        case (_, None, Some(r)) => current match {
+          case Some(l) => out += ((key, l, r))
+          case None => local += r
+        }
         case _ => // (None, None): ignore
       }
       if (local.nonEmpty) pending.appendList(toArr(local))

@@ -482,6 +482,57 @@ class IoSpec extends SparkSpec {
     assertRows(back, Seq(Seq(2L, "b", 2.5)))
   }
 
+  /** The file relation under a loaded table. */
+  private def fileRelation(df: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    df.queryExecution.analyzed.collectFirst { case r: LogicalRelation => r }.get
+  }
+
+  test("Tables.load resolves a table once per session: shared relation, fresh exprIds") {
+    import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+    val base = Files.createTempDirectory("graft-memo").toString
+    Seq((1L, "a")).toDF("id", "s").write.parquet(s"$base/t.parquet")
+    val a = fileRelation(graft.sources.Tables.load(spark, base, "t"))
+    val b = fileRelation(graft.sources.Tables.load(spark, base, "t"))
+    assert(a.relation.isInstanceOf[HadoopFsRelation])
+    assert(a.relation eq b.relation, "the second load reuses the first load's file relation")
+    assert(a.output.map(_.exprId).intersect(b.output.map(_.exprId)).isEmpty,
+      "each load gets its own attribute ids")
+  }
+
+  test("two loads of one table self-join without an ambiguity error") {
+    val base = Files.createTempDirectory("graft-memo").toString
+    Seq((1L, -1L), (2L, 1L), (3L, 1L), (4L, 2L)).toDF("id", "parent")
+      .write.parquet(s"$base/t.parquet")
+    val child = graft.sources.Tables.load(spark, base, "t")
+    val parent = graft.sources.Tables.load(spark, base, "t")
+    val joined = child.join(parent, child("parent") === parent("id"))
+      .select(child("id").as("child"), parent("id").as("parent"), parent("parent").as("grand"))
+    assertRows(joined, Seq(Seq(2L, 1L, -1L), Seq(3L, 1L, -1L), Seq(4L, 2L, 1L)))
+  }
+
+  test("Tables.load sees an in-place overwrite that keeps the schema") {
+    val base = Files.createTempDirectory("graft-memo").toString
+    Seq((1L, "a")).toDF("id", "s").write.parquet(s"$base/t.parquet")
+    assertRows(graft.sources.Tables.load(spark, base, "t"), Seq(Seq(1L, "a")))
+    Seq((2L, "b"), (3L, "c")).toDF("id", "s").write.mode("overwrite").parquet(s"$base/t.parquet")
+    assertRows(graft.sources.Tables.load(spark, base, "t"), Seq(Seq(2L, "b"), Seq(3L, "c")))
+  }
+
+  test("Tables.load never hands one session's relation to another session") {
+    import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+    val base = Files.createTempDirectory("graft-memo").toString
+    Seq((1L, "a")).toDF("id", "s").write.parquet(s"$base/t.parquet")
+    def session(df: org.apache.spark.sql.DataFrame) =
+      fileRelation(df).relation.asInstanceOf[HadoopFsRelation].sparkSession
+    assert(session(graft.sources.Tables.load(spark, base, "t")) eq spark)
+    val other = spark.newSession()
+    val there = graft.sources.Tables.load(other, base, "t")
+    assert(session(there) eq other)
+    assertRows(there, Seq(Seq(1L, "a")))
+    assert(session(graft.sources.Tables.load(spark, base, "t")) eq spark)
+  }
+
   test("Tables.load keys its schema memo on the parquet inference confs") {
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
     import org.apache.parquet.hadoop.example.ExampleParquetWriter

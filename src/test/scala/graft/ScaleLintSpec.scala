@@ -104,7 +104,7 @@ class ScaleLintSpec extends SparkSpec {
   }
 
   test("read.parquet( appears under src/main only in graft/sources/Tables.scala") {
-    // every table read goes through the schema memo of Tables. Allowed:
+    // every table read goes through the relation memo of Tables. Allowed:
     // the table copiers, which read a source directory to rewrite it, and
     // Similarity's reads of the temp files it wrote itself
     val allow = Seq("graft/sources/Tables.scala", "graft/tools/DegenerateTables.scala",
